@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract → BENCH_r{N}.json).
@@ -178,7 +179,9 @@ object Bench {
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
       s"""{"detail":$detailJson,"compact":$compact}\n""".getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    spark.stop()
+    // a failing shutdown must not cost the contract line below
+    try spark.stop()
+    catch { case NonFatal(e) => System.err.println(s"spark.stop() failed: $e") }
     // The ONE driver-parsed JSON line, printed LAST — after spark.stop()
     // so no engine shutdown output can ever follow it on stdout (build.sbt
     // StdoutOutput + showSuccess:=false remove sbt's framing around it).

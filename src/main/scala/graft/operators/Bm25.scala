@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** BM25 full-text scoring (SURVEY.md §2.9 T1).
@@ -8,18 +8,85 @@ import org.apache.spark.sql.functions._
   * Parity with the reference (index/bm25.rs): tokenizer = lowercase,
   * split on non-alphanumeric, drop tokens of length ≤ 1 (bm25.rs:114-120);
   * k1 = 1.2, b = 0.75 (bm25.rs:45-58); idf = ln((N − df + 0.5)/(df + 0.5)
-  * + 1) (bm25.rs:294-305). All math in f64.
+  * + 1) (bm25.rs:294-305). All math in f64. N and avgdl count only docs
+  * with at least one token, in both shapes below.
   *
-  * Distributed shape: tokenize is a flatMap (no shuffle); doc/term stats
-  * are partial+final aggregations; scoring joins the tf table (already
-  * keyed by doc) with a broadcast term-stats side. The per-query term set
-  * is tiny, so everything after tokenization is proportional to matching
-  * docs, not the corpus.
+  * Distributed shape, query time ([[scoreColumns]]): one aggregate job
+  * folds (N, Σ dlen, df per query term) per partition and sums the
+  * partials on the driver — no shuffle. The stats become literals of a
+  * per-row score expression over the row's own token array, so a ranked
+  * top-k is one scan plus TakeOrderedAndProject: no shuffle, no join
+  * back for the payload. Batch-built shape ([[buildIndex]],
+  * [[materializedIndex]]): posting lists + doc stats as tables, scored by
+  * joining the query-term-pruned postings against the doc-length side.
   */
 object Bm25 {
 
   val K1 = 1.2
   val B = 0.75
+
+  /** Distinct query terms under the reference tokenizer. */
+  def queryTerms(queryText: String): Seq[String] =
+    queryText.toLowerCase.split("[^a-z0-9]+").filter(_.length > 1).toSeq.distinct
+
+  /** A row's token array under the reference tokenizer; null text has
+    * no tokens. */
+  def tokenArray(text: Column): Column =
+    filter(split(coalesce(lower(text), lit("")), "[^a-z0-9]+"), t => length(t) > 1)
+
+  /** Whether a row's text holds any of `terms` (MATCH membership); an
+    * empty term set matches nothing. */
+  def matches(text: Column, terms: Seq[String]): Column =
+    if (terms.isEmpty) lit(false)
+    else arrays_overlap(tokenArray(text), array(terms.map(lit): _*))
+
+  /** Per-row BM25 for `queryText` over `docs`: the (score, match)
+    * columns. The corpus stats come from ONE aggregate job over `docs`
+    * ([[corpusStats]]), so the columns apply to `docs` or to any frame
+    * filtered from it that still carries `textCol`, and score it with
+    * the stats of `docs`. A row holding no query term has match = false
+    * and score = 0.0. tf and dlen read the row's own token array. */
+  def scoreColumns(docs: DataFrame, queryText: String,
+      textCol: String = "text"): (Column, Column) = {
+    val terms = queryTerms(queryText)
+    val tok = tokenArray(col(textCol))
+    val (n, avgdl, dfs) =
+      if (terms.isEmpty) (0L, 0.0, Nil) else corpusStats(docs, tok, terms)
+    // a term no doc of `docs` holds adds 0.0 to every score: drop it
+    val live = terms.zip(dfs).filter(_._2 > 0)
+    if (live.isEmpty) return (lit(0.0), lit(false))
+    val dlen = size(tok)
+    val score = live.map { case (t, df) =>
+      val tf = dlen - size(array_remove(tok, t))
+      val idf = log((lit(n) - df + 0.5) / (lit(df) + 0.5) + 1.0)
+      idf * (tf * (lit(K1) + 1.0)) /
+        (tf + lit(K1) * (lit(1.0) - B + lit(B) * dlen / avgdl))
+    }.reduce(_ + _)
+    val hit = matches(col(textCol), live.map(_._1))
+    (when(hit, score).otherwise(lit(0.0)), hit)
+  }
+
+  /** (N, avgdl, df per term) of `docs`, N and avgdl over docs with at
+    * least one token. One job: each partition folds its rows into a
+    * count vector and the driver sums them, so nothing shuffles. */
+  private def corpusStats(docs: DataFrame, tok: Column,
+      terms: Seq[String]): (Long, Double, Seq[Long]) = {
+    val nt = terms.size
+    val acc = docs.select(size(tok) +: terms.map(t => array_contains(tok, t).cast("int")): _*)
+      .queryExecution.toRdd
+      .aggregate(new Array[Long](nt + 2))(
+        (a, r) => {
+          val dl = r.getInt(0)
+          if (dl > 0) {
+            a(0) += 1; a(1) += dl
+            var i = 0
+            while (i < nt) { a(2 + i) += r.getInt(1 + i); i += 1 }
+          }
+          a
+        },
+        (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+    (acc(0), if (acc(0) == 0) 0.0 else acc(1).toDouble / acc(0), acc.toSeq.drop(2))
+  }
 
   /** Join the query-term-pruned tf side against the corpus-sized
     * doc-length side, broadcasting tf only when Spark's OWN size
@@ -46,33 +113,15 @@ object Bm25 {
 
   /** (doc_id, term) token stream under the reference tokenizer. */
   def tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      explode(filter(split(lower(col(textCol)), "[^a-z0-9]+"),
-        t => length(t) > 1)).as("term"))
+    docs.select(col(idCol).as("doc_id"), explode(tokenArray(col(textCol))).as("term"))
 
-  /** BM25 scores for `queryText` over `docs(idCol, textCol)`:
-    * returns (doc_id, score) for every matching doc, top-k when k > 0. */
+  /** BM25 scores for `queryText` over `docs(idCol, textCol)`: returns
+    * (doc_id, score) for every matching row, the top k by (score desc,
+    * doc_id) when k > 0 — [[scoreColumns]] applied to `docs`. */
   def score(docs: DataFrame, queryText: String, k: Int = 0,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val queryTerms = queryText.toLowerCase.split("[^a-z0-9]+")
-      .filter(_.length > 1).toSeq.distinct
-    val tok = tokens(docs, idCol, textCol)
-    val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dlen"))
-    val stats = dl.agg(count(lit(1)).as("n"),
-      avg(col("dlen").cast("double")).as("avgdl"))
-    val tf = tok.where(col("term").isin(queryTerms: _*))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
-    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    // tf (query-term-pruned) broadcasts into the corpus-sized doc-length
-    // table when its estimate is small — no shuffle of dl, agg over
-    // matching docs only; big tf sides keep the shuffling join
-    val scored = joinDocSide(dl, tf.join(broadcast(dfreq), "term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score",
-        idf * (col("tf") * (lit(K1) + 1.0))
-          / (col("tf") + lit(K1) * (lit(1.0) - B + lit(B) * col("dlen") / col("avgdl"))))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
+    val (s, hit) = scoreColumns(docs, queryText, textCol)
+    val scored = docs.where(hit).select(col(idCol).as("doc_id"), s.as("score"))
     if (k > 0) scored.orderBy(col("score").desc, col("doc_id")).limit(k)
     else scored
   }
@@ -137,8 +186,7 @@ object Bm25 {
     * stays a join input rather than a materialization. */
   def searchIndexFiltered(index: Index, keepIds: DataFrame,
       queryText: String, k: Int = 0): DataFrame = {
-    val queryTerms = queryText.toLowerCase.split("[^a-z0-9]+")
-      .filter(_.length > 1).toSeq.distinct
+    val queryTerms = Bm25.queryTerms(queryText)
     // DISTINCT: a keep set built from a join/explode filter can carry
     // duplicate doc_ids, which would double-count dl rows into n/avgdl
     // and tf rows into every score (r15 review finding)
@@ -192,8 +240,7 @@ object Bm25 {
     * count, not countDistinct (which would plan an expand over the
     * same rows). */
   def searchIndex(index: Index, queryText: String, k: Int = 0): DataFrame = {
-    val queryTerms = queryText.toLowerCase.split("[^a-z0-9]+")
-      .filter(_.length > 1).toSeq.distinct
+    val queryTerms = Bm25.queryTerms(queryText)
     val tf = index.postings.where(col("term").isin(queryTerms: _*))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)

@@ -52,10 +52,6 @@ object TextQueries {
       |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS u(t)
       |  WHERE len(u.t) > 1""".stripMargin
 
-  /** BM25 top-k via the shared operator (arbitrary pre-filtered frame). */
-  private def bm25(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame =
-    graft.operators.Bm25.score(docs, queryTerms.mkString(" "), k)
-
   /** BM25 top-k over the MATERIALIZED documents index (unfiltered
     * corpus — identical scores, no per-query tokenize+stats pass). */
   private def bm25Idx(s: SparkSession, d: String, queryTerms: Seq[String],

@@ -31,7 +31,8 @@ import scala.jdk.CollectionConverters._
   *   - `POST /collections/{n}/search/batch`   → `{searches: [SearchRequest…]}`
   *   - `POST /collections/{n}/search/multi`   → `{vectors, top_k, strategy, …}`
   *     (multi-query fused search → NEAR_FUSED; types.rs:214-234)
-  *   - `POST /collections/{n}/search/text`    → `{query, top_k}` (BM25)
+  *   - `POST /collections/{n}/search/text`    → `{query, top_k}` (ranked
+  *     BM25: the top_k rows by score desc, id asc)
   *   - `POST /collections/{n}/search/hybrid`  → `{query, vector, top_k}` (RRF)
   *   - `POST /collections/{n}/match`          → `{match}` (MATCH … RETURN … —
   *     covers the reference's graph traverse/degree routes via the language)

@@ -183,7 +183,7 @@ class Compiler(
     }
 
     // Set when a branch below already applied `residualCond` (the
-    // filter-before-top-k contract) / left-joined a BM25 match flag.
+    // filter-before-top-k contract) / scored a MATCH (its match flag).
     var residualApplied = false
     var scoredTm: Option[(TextMatch, Column)] = None
 
@@ -217,9 +217,9 @@ class Compiler(
           .select(col("__vid"), row_number().over(
             Window.partitionBy(graft.operators.Ranks.one(col("__vid")))
               .orderBy(vOrd, col("__vid"))).as("__vrank"))
-        // text leg: BM25 scores come from the corpus-wide materialized
-        // postings, and the top-kCand fetch + rank run over the FILTERED
-        // doc set. Corpus-wide (not filtered-N/avgdl/df like q61's
+        // text leg: BM25 stats are corpus-wide (over `df`), and the
+        // top-kCand fetch + rank run over the FILTERED doc set.
+        // Corpus-wide (not filtered-N/avgdl/df like q61's
         // searchIndexFiltered) is DELIBERATE reference fidelity: the
         // reference's own hybrid_search_with_filter ranks against the
         // global text index and applies the filter afterwards
@@ -228,13 +228,20 @@ class Compiler(
         // post-filter (candidates draw from the filtered frame so a
         // selective filter can't starve the legs) without changing the
         // scoring contract.
-        val tScores =
-          if (residualApplied)
-            bm25Scores(df, sel, meta, hybridText.get.query, 0)
+        val qtext = hybridText.get.query
+        val tScores = bm25Index(sel, meta) match {
+          case Some(idx) if residualApplied =>
+            Bm25.searchIndex(idx, qtext)
               .join(dfH.select(col(meta.idCol).as("__fsel")),
                 col("doc_id") === col("__fsel"), "left_semi")
               .orderBy(col("score").desc, col("doc_id")).limit(kCand)
-          else bm25Scores(df, sel, meta, hybridText.get.query, kCand)
+          case Some(idx) => Bm25.searchIndex(idx, qtext, kCand)
+          case None =>
+            // per-row scores: one scan + TakeOrderedAndProject, no shuffle
+            val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
+            dfH.where(hit).select(col(meta.idCol).as("doc_id"), score.as("score"))
+              .orderBy(col("score").desc, col("doc_id")).limit(kCand)
+        }
         val tLeg = tScores
           .select(col("doc_id").as("__tid"), row_number().over(
             Window.partitionBy(graft.operators.Ranks.one(col("doc_id")))
@@ -721,19 +728,28 @@ class Compiler(
             val (fn, _) = VectorFunctions.metrics(meta.metric)
             df.withColumn("score", fn(col(field), VectorFunctions.vecLit(vecOf(v))))
           case (None, Some(tm @ TextMatch(_, qtext))) =>
-            // MATCH is an ordinary boolean leaf of WHERE: LEFT-join the
-            // BM25 scores so rows with no matching term survive for
-            // NOT/OR branches (reference filter semantics evaluate MATCH
-            // per-row); score falls back to 0.0 when the text leg missed.
-            // The `__tm` flag feeds the residual filter, so a top-level
-            // AND MATCH lets Catalyst convert the join back to inner.
-            val scores = bm25Scores(df, sel, meta, qtext, 0)
-              .select(col("doc_id").as("__bm25_id"), col("score"))
-            scoredTm = Some((tm, col("__tm")))
-            df.join(scores, df(meta.idCol) === col("__bm25_id"), "left")
-              .withColumn("__tm", col("__bm25_id").isNotNull)
-              .withColumn("score", coalesce(col("score"), lit(0.0)))
-              .drop("__bm25_id")
+            // MATCH is an ordinary boolean leaf of WHERE: every row keeps
+            // a score (0.0 when no query term is present) and a match
+            // flag, so rows with no matching term survive for NOT/OR
+            // branches (reference filter semantics evaluate MATCH
+            // per-row). The flag feeds the residual filter.
+            bm25Index(sel, meta) match {
+              case Some(idx) =>
+                // indexed collections LEFT-join the index scores; a
+                // top-level AND MATCH lets Catalyst convert the join back
+                // to inner
+                val scores = Bm25.searchIndex(idx, qtext)
+                  .select(col("doc_id").as("__bm25_id"), col("score"))
+                scoredTm = Some((tm, col("__tm")))
+                df.join(scores, df(meta.idCol) === col("__bm25_id"), "left")
+                  .withColumn("__tm", col("__bm25_id").isNotNull)
+                  .withColumn("score", coalesce(col("score"), lit(0.0)))
+                  .drop("__bm25_id")
+              case None =>
+                val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
+                scoredTm = Some((tm, hit))
+                df.withColumn("score", score)
+            }
           case _ => df.withColumn("score", lit(1.0)) // scan score (S6)
         }
     }
@@ -779,6 +795,11 @@ class Compiler(
       val (_, hib) = VectorFunctions.metrics(meta.metric)
       val ord = if (hib || fusedScore) col("score").desc else col("score").asc
       out = out.orderBy(ord, col(meta.idCol).asc)
+    } else if (!hasAggs && sel.groupBy.isEmpty && scoredTm.exists { case (tm, _) =>
+        sel.where.exists(w => flattenAnd(w).contains(tm)) }) {
+      // ranked text search: a top-level AND MATCH orders by BM25 score
+      // like NEAR orders by similarity, so MATCH … LIMIT k is the top k
+      out = out.orderBy(col("score").desc, col(meta.idCol).asc)
     }
 
     // projection (after ORDER BY so sort can reference unselected cols)
@@ -905,19 +926,21 @@ class Compiler(
     }
   }
 
-  /** BM25 scores for a text leg: known text collections go through a
-    * MATERIALIZED index (build once per dataset — T2, index/bm25.rs
-    * posting lists); anything else tokenizes in-query. The corpus
-    * collection needs its own index: its doc set (docs WITH embeddings)
-    * has different N/avgdl/df stats than the full documents table. */
-  private def bm25Scores(df: DataFrame, sel: Select, meta: CollectionMeta,
-      qtext: String, k: Int): DataFrame =
-    if (sel.from == "documents" && meta.textCol.contains("text"))
-      Bm25.searchIndex(Bm25.indexFor(spark, catalog.dir), qtext, k)
-    else if (sel.from == "corpus" && meta.textCol.contains("text"))
-      Bm25.searchIndex(Bm25.materializedIndex(spark, catalog.dir, "bm25corpus",
-        Seq("documents", "embeddings"))(catalog.table("corpus")), qtext, k)
-    else Bm25.score(df, qtext, k, meta.idCol, meta.textCol.getOrElse("text"))
+  /** The BM25 index of a known text collection: a MATERIALIZED index
+    * (built once per dataset — T2, index/bm25.rs posting lists). The
+    * corpus collection needs its own: its doc set (docs WITH embeddings)
+    * has different N/avgdl/df stats than the full documents table. Every
+    * other frame (user collections) scores per row instead
+    * ([[Bm25.scoreColumns]]): one stats job, then a plain scan. */
+  private def bm25Index(sel: Select, meta: CollectionMeta): Option[Bm25.Index] =
+    if (!meta.textCol.contains("text")) None
+    else if (sel.from == "documents") Some(Bm25.indexFor(spark, catalog.dir))
+    else if (sel.from == "corpus")
+      Some(Bm25.materializedIndex(spark, catalog.dir, "bm25corpus",
+        Seq("documents", "embeddings"))(catalog.table("corpus")))
+    else None
+
+  private def textColOf(meta: CollectionMeta): String = meta.textCol.getOrElse("text")
 
   // =================== conditions ===================
 
@@ -1014,14 +1037,10 @@ class Compiler(
       cmp(score, effOp, lit(t))
     case t: TextMatch if scoredTm.exists(_._1 == t) =>
       // the scored frame already carries this MATCH's membership flag
-      // (left-joined BM25 hit) — no per-row re-tokenization
       scoredTm.get._2
     case TextMatch(_, qtext) =>
       // membership in the BM25 match set (any query term present)
-      val terms = qtext.toLowerCase.split("[^a-z0-9]+").filter(_.length > 1)
-      val toks = filter(split(lower(col(meta.textCol.getOrElse("text"))), "[^a-z0-9]+"),
-        t => length(t) > 1)
-      terms.map(t => array_contains(toks, t)).reduce(_ || _)
+      Bm25.matches(col(textColOf(meta)), Bm25.queryTerms(qtext))
     case _: VectorNear | _: VectorNearFused =>
       fail("NEAR must be AND-composed at the top level of WHERE")
   }

@@ -1,0 +1,179 @@
+package graft
+
+import graft.operators.Bm25
+import graft.server.RestServer
+
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
+/** Query-time BM25 on user collections: per-row scores from one stats
+  * job ([[Bm25.scoreColumns]]) must equal the posting-list index on
+  * adversarial text, MATCH … LIMIT k must be the BM25 top k, an
+  * all-short-token query must match nothing, and the text leg must stay
+  * within its job budget with no shuffle. */
+class TextSearchSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  /** The reference tokenizer on the driver (bm25.rs:114-120). */
+  private def tokens(text: String): Seq[String] =
+    if (text == null) Nil
+    else text.toLowerCase.split("[^a-z0-9]+").filter(_.length > 1).toSeq
+
+  /** Brute-force BM25 over (id, text), best first (score desc, id asc). */
+  private def bruteForce(docs: Seq[(Long, String)], query: String): Seq[(Long, Double)] = {
+    val toks = docs.map { case (id, t) => id -> tokens(t) }.filter(_._2.nonEmpty)
+    val n = toks.size
+    val avgdl = toks.map(_._2.size).sum.toDouble / n
+    val terms = tokens(query).distinct
+    val df = terms.map(t => t -> toks.count(_._2.contains(t))).toMap
+    toks.flatMap { case (id, ts) =>
+      val parts = terms.filter(ts.contains).map { t =>
+        val tf = ts.count(_ == t).toDouble
+        val idf = math.log((n - df(t) + 0.5) / (df(t) + 0.5) + 1.0)
+        idf * (tf * (Bm25.K1 + 1.0)) /
+          (tf + Bm25.K1 * (1.0 - Bm25.B + Bm25.B * ts.size / avgdl))
+      }
+      if (parts.isEmpty) None else Some(id -> parts.sum)
+    }.sortBy { case (id, s) => (-s, id) }
+  }
+
+  private val vocab = Seq("spark", "stream", "join", "parquet", "merge",
+    "index", "vector", "graph", "query", "data", "a", "x", "7", "42")
+
+  /** Adversarial text: null, empty, punctuation-only, 1-char tokens,
+    * mixed case, repeated terms. */
+  private def genDocs(seed: Long, n: Int): Seq[(Long, String)] = {
+    val r = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val text = r.nextInt(10) match {
+        case 0 => null
+        case 1 => ""
+        case 2 => "!!! ,,, --- ..."
+        case 3 => "a b c x 7"
+        case _ =>
+          val words = Seq.fill(1 + r.nextInt(12)) {
+            val w = vocab(r.nextInt(vocab.size))
+            if (r.nextInt(4) == 0) w.toUpperCase else w
+          }
+          words.mkString(if (r.nextBoolean()) " " else ", ")
+      }
+      (i.toLong * 7 + 3, text)
+    }
+  }
+
+  private val queries = Seq("spark join", "SPARK spark Spark", "stream, merge! index",
+    "a x 7", "", "!!", "zzzz never", "data data query 42")
+
+  test("per-row scores equal the posting-list index on adversarial text") {
+    for (seed <- Seq(1L, 2L)) {
+      val docs = genDocs(seed, 300).toDF("doc_id", "text")
+      val idx = Bm25.buildIndex(docs)
+      for (q <- queries) {
+        val got = Bm25.score(docs, q).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val exp = Bm25.searchIndex(idx, q).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(got.keySet == exp.keySet, s"seed $seed query '$q'")
+        got.foreach { case (id, s) =>
+          assert(math.abs(s - exp(id)) < 1e-12, s"seed $seed query '$q' doc $id: $s vs ${exp(id)}")
+        }
+      }
+    }
+    // an empty collection scores nothing, by both shapes
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    assert(Bm25.score(empty, "spark join").count() == 0)
+    assert(Bm25.searchIndex(Bm25.buildIndex(empty), "spark join").count() == 0)
+  }
+
+  /** A user collection of `docs` with 4-d vectors, in a fresh data dir. */
+  private def withCollection(docs: Seq[(Long, String)])(body: Graft => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-text").toString
+    val g = Graft(spark, dir)
+    g.collections.create("docs", idCol = "id", vectorCol = Some("vector"), buckets = 4)
+    val r = new scala.util.Random(7)
+    g.collections.upsert("docs", docs.map { case (id, t) =>
+      (id, Seq.fill(4)(r.nextFloat()), t)
+    }.toDF("id", "vector", "text").repartition(4))
+    try body(g) finally g.collections.drop("docs")
+  }
+
+  test("REST search/text top_k on a user collection is the BM25 ranking") {
+    val docs = genDocs(3, 400)
+    withCollection(docs) { g =>
+      val srv = new RestServer(g, port = 0).start()
+      val client = HttpClient.newHttpClient()
+      try {
+        for (q <- Seq("spark join", "merge parquet vector", "GRAPH")) {
+          val resp = client.send(HttpRequest.newBuilder(
+              URI.create(s"http://127.0.0.1:${srv.boundPort}/collections/docs/search/text"))
+            .POST(HttpRequest.BodyPublishers.ofString(s"""{"query": "$q", "top_k": 10}"""))
+            .header("Content-Type", "application/json").build(),
+            HttpResponse.BodyHandlers.ofString())
+          assert(resp.statusCode() == 200, resp.body().take(300))
+          val it = new com.fasterxml.jackson.databind.ObjectMapper().readTree(resp.body()).get("results").elements()
+          val got = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+            .map(n => n.get("id").asLong -> n.get("score").asDouble).toSeq
+          val exp = bruteForce(docs, q).take(10)
+          assert(got.map(_._1) == exp.map(_._1), s"query '$q'")
+          got.zip(exp).foreach { case ((_, s), (_, e)) => assert(math.abs(s - e) < 1e-9) }
+        }
+      } finally srv.stop()
+    }
+  }
+
+  test("a MATCH with no token longer than one character matches nothing") {
+    val docs = genDocs(4, 50)
+    withCollection(docs) { g =>
+      // scored (the only MATCH) and unscored (a second MATCH) leaves
+      assert(g.sql("SELECT id FROM docs WHERE text MATCH 'a'").count() == 0)
+      assert(g.sql("SELECT id FROM docs WHERE text MATCH 'spark' AND text MATCH 'a x'")
+        .count() == 0)
+      assert(g.sql("SELECT id FROM docs WHERE text MATCH '!!' OR NOT text MATCH 'a'")
+        .count() == 50)
+      // a collection emptied by deletes: no rows, no error
+      g.collections.delete("docs", docs.map(_._1))
+      assert(g.sql("SELECT id FROM docs WHERE text MATCH 'spark join' LIMIT 10").count() == 0)
+    }
+  }
+
+  /** (jobs, shuffle bytes written + read) of `f`. */
+  private def measured(f: => Unit): (Long, Long) = {
+    val jobs = new AtomicLong
+    val shuffle = new AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach { m =>
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten +
+            m.shuffleReadMetrics.totalBytesRead)
+        }
+    }
+    org.apache.spark.sql.graft.ListenerDrain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.sql.graft.ListenerDrain(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    (jobs.get, shuffle.get)
+  }
+
+  test("job budget: BM25 top-k is one stats job plus one shuffle-free scan") {
+    withCollection(genDocs(5, 400)) { g =>
+      g.sql("SELECT * FROM docs WHERE text MATCH 'index' LIMIT 10").collect() // warm
+      // fresh query text: a plan-memo miss, so the stats job is counted
+      val (jobs, shuffle) = measured {
+        g.sql("SELECT * FROM docs WHERE text MATCH 'spark stream' LIMIT 10").collect()
+      }
+      assert(jobs <= 3, s"BM25 MATCH … LIMIT 10 ran $jobs jobs")
+      assert(shuffle == 0, s"BM25 MATCH … LIMIT 10 shuffled $shuffle bytes")
+      val q = Seq(0.1f, 0.2f, 0.3f, 0.4f).toList
+      val hybrid = "SELECT * FROM docs WHERE text MATCH 'merge vector' AND vector NEAR $v " +
+        "LIMIT 10 USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)"
+      g.sql(hybrid.replace("merge vector", "graph"), Map("v" -> q)).collect() // warm
+      val (hJobs, _) = measured(g.sql(hybrid, Map("v" -> q)).collect())
+      assert(hJobs <= 5, s"hybrid ran $hJobs jobs")
+    }
+  }
+}
