@@ -293,11 +293,9 @@ class Graft(
 
   /** k-core over the same graph surface, undirected (optionally
     * restricted to `relTypes`) — iterative peeling, see
-    * [[operators.Graph.kCore]]. Returns a bare checkpoint — or, when
-    * the peel finished on the driver below the local-finish gate, a
-    * plain local-relation frame — so `CheckpointBlocks.unpersist`
-    * after consuming is correct either way (a safe no-op on the
-    * local-path result). */
+    * [[operators.Graph.kCore]]. Returns a projection over a checkpoint,
+    * or a parallelized frame when the peel finished on the driver:
+    * `CheckpointBlocks.unpersist` after consuming is right either way. */
   def kCore(k: Int, relTypes: Seq[String] = Nil,
       graphScope: Option[String] = None): DataFrame =
     operators.Graph.kCore(undirectedPairs(relTypes, graphScope), k)

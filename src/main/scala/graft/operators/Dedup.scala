@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection operators for training-data pipelines
@@ -85,15 +85,13 @@ object Dedup {
     * if `maxIters` rounds don't converge (a component with diameter >
     * maxIters — not a near-dup shape; raise the cap explicitly).
     *
-    * When the distinct symmetrized edge set fits the
-    * `graft.components.localFinishEdges` gate (default 1M edges =
-    * 16 MB, broadcast-relation class) and ids are longs, the whole
-    * fixpoint runs as driver-side union-find with min-root union —
-    * bit-identical labels (R5FeaturesSpec pin), zero loop jobs
-    * (ComponentsLab: 3.2-4.9 s / 18 jobs → 0.3-0.7 s at sf0.1;
-    * 2.5-6.7 s → 1.3-1.9 s on the 10× tile's 501k edges). Union-find
-    * always reaches the fixpoint, so `maxIters` guards only the
-    * distributed path. */
+    * Within `graft.localFinishEdges` (and with long ids) the whole
+    * fixpoint runs as driver-side union-find with min-root union over
+    * [[LocalFixpoint]]'s edge index — comp(id) = min id of the
+    * component, the exact value min-label propagation converges to
+    * (OPTIMIZATION_r17.md: 3.2-4.9 s / 18 jobs → 0.3-0.7 s at sf0.1).
+    * Union-find always reaches the fixpoint, so `maxIters` guards only
+    * the distributed path. */
   def components(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
       maxIters: Int = 20): DataFrame = {
     // materialize the edge list ONCE — the pair source is an expensive
@@ -104,84 +102,17 @@ object Dedup {
     // setup checkpoint cancels the saved rounds.
     // The distinct STAYS (unlike kCore/lpa the pair source here is any
     // caller's similarity join output, with no canonical-distinct
-    // contract). LAZY checkpoint whose immediate count() is the
-    // materializing action (one job, not checkpoint-job + count-job):
-    // the r17 eager-revert concern — round 1's two consumers racing a
-    // lazy checkpoint into recomputing the expensive dedup — is void
-    // here because this single count persists every block BEFORE any
-    // loop consumer plans a stage.
+    // contract). The gate job materializes the LAZY checkpoint before
+    // any loop consumer plans a stage (no recomputed dedup).
     val edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionAll(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
       .distinct()
       .localCheckpoint(false)
-    val nEdges = edges.count()
-    // Driver-local finish (r17 phase 3, guide §1.1/§1.2; the kCore
-    // pattern): near-dup pair graphs at any scale funnel into a SMALL
-    // edge set relative to the corpus — ComponentsLab at sf0.1 measured
-    // the distributed loop at 3.2-4.9 s / 18 jobs over 255 pairs, pure
-    // job-scheduling floor; at the 10× tile (501k symmetrized edges)
-    // the local path still wins 2.5-6.7 s → 1.3-1.9 s. Below the size
-    // gate (exact count from the checkpoint — a broadcast-class bounded
-    // transfer, never an unbounded collect) the fixpoint runs as driver
-    // union-find with min-root union: comp(id) = min id of the
-    // component, the exact value min-label propagation converges to,
-    // over exact integers — bit-identical results (R5FeaturesSpec pins
-    // local ≡ distributed). Gate default 1M symmetrized edges = 16 MB
-    // on the wire and a transient ≤~200 MB boxed parent map at the
-    // extreme — the same resource class as building a broadcast-join
-    // relation (8g driver heap here; size down via
-    // graft.components.localFinishEdges on thin drivers).
-    // Non-long id types keep the distributed loop: local parity would
-    // have to replicate Spark's per-type ordering for `min`.
-    val localFinish = pairs.sparkSession.conf
-      .get("graft.components.localFinishEdges", "1000000").toLong
-    if (nEdges <= localFinish &&
-        edges.schema("u").dataType == org.apache.spark.sql.types.LongType &&
-        edges.schema("v").dataType == org.apache.spark.sql.types.LongType) {
-      val rows0 = edges.collect()
-      // Null endpoints fall through to the distributed loop: there a
-      // null is inert (null never joins, its label stays null), while
-      // Row.getLong would silently unbox it to 0L and merge it into
-      // component 0 (r17 ADVICE). Pair generators join on ids, so this
-      // path is not expected to fire — correctness guard, not a perf
-      // branch.
-      if (rows0.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val es = rows0.map(r => (r.getLong(0), r.getLong(1)))
+    LocalFixpoint.gate(edges).local match {
+      case Some(g) =>
         org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        es.foreach { case (u, v) =>
-          parent.getOrElseUpdate(u, u)
-          parent.getOrElseUpdate(v, v)
-          val ru = find(u); val rv = find(v)
-          if (ru != rv) {
-            if (ru < rv) parent(rv) = ru else parent(ru) = rv
-          }
-        }
-        val spark = pairs.sparkSession
-        val rows = parent.keys.toSeq.map(id => org.apache.spark.sql.Row(id, find(id)))
-        // label rows are ~2 per edge at the extreme — slice so the
-        // downstream artifact write/join doesn't run as ONE task at the
-        // 1M-edge gate (r17 ADVICE); small maps still get one slice
-        val slices = math.max(1, math.min(
-          spark.sparkContext.defaultParallelism, rows.size / 100000))
-        // nullable=true mirrors the distributed labels frame (clustersTab
-        // materializes this to parquet — keep the artifact schema stable
-        // across paths)
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, slices),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField("comp",
-              org.apache.spark.sql.types.LongType, nullable = true))))
-      }
+        return unionFind(pairs.sparkSession, g)
+      case None => // distributed rounds below
     }
     var labels = edges.select(col("u").as("id")).distinct()
       .withColumn("comp", col("id"))
@@ -215,7 +146,22 @@ object Dedup {
     if (changed > 0)
       throw new IllegalStateException(
         s"components: no convergence after $maxIters rounds (diameter > $maxIters)")
-    labels
+    LocalFixpoint.nullable(labels)
+  }
+
+  /** [[components]] on the driver: union-find with min-root union (a
+    * root is its set's min index, i.e. min id) and path halving. */
+  private def unionFind(spark: SparkSession, g: LocalFixpoint.Local): DataFrame = {
+    val parent = Array.range(0, g.nodes)
+    @scala.annotation.tailrec
+    def find(x: Int): Int =
+      if (parent(x) == x) x else { parent(x) = parent(parent(x)); find(parent(x)) }
+    for (e <- 0 until g.edges) {
+      val ru = find(g.src(e)); val rv = find(g.dst(e))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    LocalFixpoint.frame(spark, "id", "comp")(
+      g.ids, g.ids.indices.map(i => g.ids(find(i))).toArray)
   }
 
   /** Winnowing fingerprint selection (the MOSS scheme) over ORDERED

@@ -41,10 +41,8 @@ object Graph {
     * doubles the sequential job count (q149: 9 → 5 jobs). Above the
     * gate — the 1000-executor shape — AQE stays on for skew splits and
     * partition coalescing. */
-  def pinIfSmall(out: DataFrame, probe: DataFrame, factor: Long = 8): DataFrame = {
-    if (sys.env.get("GRAFT_PIN_STATIC").contains("0")) return out // A/B probe
+  def pinIfSmall(out: DataFrame, probe: DataFrame, factor: Long = 8): DataFrame =
     if (smallEnough(probe, factor)) graft.SessionTuning.pinStaticPlan(out) else out
-  }
 
   /** THE broadcast-class size gate (one implementation — five
     * hand-rolled copies with drifting margins invited a wrong-margin
@@ -74,8 +72,7 @@ object Graph {
     * way). */
   def orderedIfSmall(out: DataFrame, probe: DataFrame, factor: Long = 8)(
       sortCols: Column*): DataFrame = {
-    if (!sys.env.get("GRAFT_SMALL_SORT").contains("0") && // A/B escape
-        smallEnough(probe, factor))
+    if (smallEnough(probe, factor))
       out.coalesce(1).sortWithinPartitions(sortCols: _*)
     else out.orderBy(sortCols: _*)
   }
@@ -166,9 +163,8 @@ object Graph {
     * family). Under the gate the per-depth frontier (deduped, so
     * bounded by |starts|×|nodes| of an ≤80MB graph) is safely hintable;
     * past it the shuffling joins + AQE remain (the 1000-executor
-    * path). GRAFT_BFS_BC=0 disables for A/B. */
-  private def smallGraphGate(edges: DataFrame): Boolean =
-    sys.env.getOrElse("GRAFT_BFS_BC", "1") != "0" && smallEnough(edges, 8.0)
+    * path). */
+  private def smallGraphGate(edges: DataFrame): Boolean = smallEnough(edges, 8.0)
 
   /** Var-length BFS `-[*1..maxDepth]->` from `starts(start)` over
     * `edges(src,dst,label)`: returns (start, node, depth) with the MINIMUM
@@ -225,7 +221,6 @@ object Graph {
       // 1000-executor path) the shuffling joins + AQE stay exactly as
       // before. A/B: q82-shape 0.54→0.39 s, q83-shape 0.30→0.25 s
       // (BfsLab, sf0.1, min of 5, value parity asserted).
-      // GRAFT_BFS_BC=0 escapes the hint.
       val frontierHint: DataFrame => DataFrame =
         if (smallGraphGate(edges)) broadcast else identity
       var level = startsFrontier
@@ -597,14 +592,11 @@ object Graph {
     * Scale shape: each peel round is one degree agg + one semi-join
     * edge restriction — the superstep shape, shuffled on the node key;
     * round count is bounded by the graph's degeneracy ordering depth
-    * (typically ≲ 10 on real graphs). Each round materializes a lazy
-    * checkpoint through its convergence count (one job per sync point),
-    * superseded blocks are freed in-loop ([[bfsVarLength]] discipline),
-    * and once the exactly-known remainder fits the
-    * `graft.kcore.localFinishEdges` gate (default 100k edges) the
-    * fixpoint tail finishes on the driver — the long floor-round tail
-    * of the peel costs zero jobs, and nothing unbounded reaches the
-    * driver. */
+    * (typically ≲ 10 on real graphs). Every round's lazy checkpoint is
+    * one [[LocalFixpoint.gate]] job, superseded blocks freed in-loop
+    * ([[bfsVarLength]] discipline); once the remainder is within
+    * `graft.localFinishEdges` the peel finishes on the driver, so at
+    * scale only the convergence tail collapses. */
   def kCore(undirected: DataFrame, k: Int, maxIters: Int = 30,
       aCol: String = "a", bCol: String = "b"): DataFrame = {
     require(k >= 1, "k must be >= 1")
@@ -622,34 +614,17 @@ object Graph {
     // Graft.undirectedPairs) dedups — so the swapped half is disjoint
     // from the original and the union is already a set; the defensive
     // distinct paid a full exchange + dedup inside the materializing
-    // job for nothing (r17, guide §2.4). LAZY checkpoint + count fuses
-    // materialization and the convergence read into ONE job (the eager
-    // form ran a checkpoint job, then a second count job over the
-    // fresh blocks — 2 jobs per sync point; r17, guide §1.2).
+    // job for nothing (r17, guide §2.4).
     var edges = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(false)
-    var nEdges = edges.count()
+    var gate = LocalFixpoint.gate(edges)
     var it = 0
-    var converged = nEdges == 0L
+    var converged = gate.rows == 0L
     // (measured and NOT adopted: fusing two peel rounds per
     // checkpoint+count halves the sync points but doubles each plan's
     // join depth — a QTime A/B read as a wash inside host noise, so the
     // simpler one-round loop stays)
-    //
-    // Local tail finish (r17, guide §1.1/§1.2): peeling shrinks the
-    // edge set monotonically, and every sync point KNOWS the exact
-    // remaining count — once it is broadcast-class small the later
-    // rounds are pure job-scheduling floor (KcoreLab at sf0.1: rounds
-    // 2-6 each ran 4 jobs over ≤726 edges, ~1.1 s of the row's 1.5 s
-    // for microseconds of arithmetic). Below the bound the fixpoint
-    // finishes on the driver over the collected (u,v) longs — the same
-    // size-gated driver transfer as a broadcast-join build side, NOT an
-    // unbounded collect: the gate is the checkpoint's own exact count.
-    // At scale the early (data-sized) rounds stay distributed and only
-    // the convergence tail collapses.
-    val localFinish = edges.sparkSession.conf
-      .get("graft.kcore.localFinishEdges", "100000").toLong
-    while (!converged && it < maxIters && nEdges > localFinish) {
+    while (!converged && it < maxIters && gate.local.isEmpty) {
       val keep = keepHint(edges.groupBy("u").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("u").as("__n")))
       val pruned = edges
@@ -657,53 +632,46 @@ object Graph {
         .join(keep, edges("v") === col("__n")).drop("__n")
         .localCheckpoint(false)
       // the convergence count doubles as the checkpoint materializer
-      val n = pruned.count()
+      val next = LocalFixpoint.gate(pruned)
       org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
-      converged = n == nEdges || n == 0L
+      converged = next.rows == gate.rows || next.rows == 0L
       edges = pruned
-      nEdges = n
+      gate = next
       it += 1
     }
-    if (!converged && nEdges <= localFinish) {
-      // ≤ localFinish symmetrized edges (two longs each) — bounded,
-      // exact-integer arithmetic, so results are bit-identical to the
-      // distributed rounds
-      var es = edges.select(col("u"), col("v")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
-      while (!converged && it < maxIters) {
-        val deg = es.groupBy(_._1).map { case (u, g) => (u, g.length) }
-        val keep = deg.collect { case (u, d) if d >= k => u }.toSet
-        val pruned = es.filter(e => keep(e._1) && keep(e._2))
-        converged = pruned.length == es.length || pruned.isEmpty
-        es = pruned
-        it += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"kCore: no fixpoint after $maxIters rounds")
-      val spark = undirected.sparkSession
-      val rows = es.groupBy(_._1).toSeq
-        .map { case (u, g) => org.apache.spark.sql.Row(u, g.length.toLong) }
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("core_deg",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    gate.local match {
+      case Some(g) =>
+        org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
+        // the same peel over edge indexes: exact integer degrees, so
+        // bit-identical to the distributed rounds
+        def degrees(alive: Array[Int]): Array[Long] = {
+          val d = new Array[Long](g.nodes); alive.foreach(e => d(g.src(e)) += 1); d
+        }
+        var alive = Array.range(0, g.edges)
+        while (!converged && it < maxIters) {
+          val deg = degrees(alive)
+          val pruned = alive.filter(e => deg(g.src(e)) >= k && deg(g.dst(e)) >= k)
+          converged = pruned.length == alive.length || pruned.isEmpty
+          alive = pruned
+          it += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(s"kCore: no fixpoint after $maxIters rounds")
+        val deg = degrees(alive)
+        val core = deg.indices.filter(deg(_) > 0).toArray
+        LocalFixpoint.frame(undirected.sparkSession, "node", "core_deg")(
+          core.map(g.ids), core.map(deg))
+      case None if converged =>
+        // materialize the result BEFORE freeing the edge blocks it reads
+        val out = edges.groupBy(col("u").as("node"))
+          .agg(count(lit(1)).as("core_deg"))
+          .localCheckpoint(true)
+        org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
+        LocalFixpoint.nullable(out)
+      case None =>
+        org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
+        throw new IllegalStateException(s"kCore: no fixpoint after $maxIters rounds")
     }
-    if (!converged) {
-      org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
-      throw new IllegalStateException(
-        s"kCore: no fixpoint after $maxIters rounds")
-    }
-    // materialize the result BEFORE freeing the edge blocks it reads
-    val out = edges.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("core_deg"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.CheckpointBlocks.unpersist(edges)
-    out
   }
 
   /** Per-node triangle counts over an UNDIRECTED simple graph given as
@@ -855,14 +823,9 @@ object Graph {
     * lineage, each skipped checkpoint saving a full local job floor
     * ([[pageRank]]'s discipline).
     *
-    * Below the `graft.lpa.localFinishEdges` gate (default 1M
-    * symmetrized edges — exact count from the checkpoint, a
-    * broadcast-class bounded transfer) ALL rounds run on the driver
-    * with exact-integer votes and the identical plurality/tie-break —
-    * the kCore/components pattern (r18, guide §1.1/§1.2): at
-    * projected-graph sizes each distributed round is 1 join + 2
-    * aggregation exchanges of pure job-scheduling floor. TriangleSpec
-    * pins local ≡ distributed (gate 0 forces every round distributed). */
+    * Within `graft.localFinishEdges` ALL rounds run on the driver over
+    * [[LocalFixpoint]]'s primitive edge index, with exact-integer votes
+    * and the identical plurality/tie-break. */
   def lpaCommunities(undirected: DataFrame, iters: Int,
       aCol: String = "a", bCol: String = "b"): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
@@ -870,65 +833,14 @@ object Graph {
       col(bCol).cast("long").as("v"))
     // no distinct (input contract: canonical distinct pairs — the
     // swapped half is disjoint, see kCore); LAZY checkpoint whose
-    // materializing action is the gate count below (1 job — the r17
-    // shape materialized inside round 1's sync job instead, so the
-    // distributed path pays the same job count, r18)
+    // materializing action is the gate job
     val adj = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(false)
-    val localFinish = undirected.sparkSession.conf
-      .get("graft.lpa.localFinishEdges", "1000000").toLong
-    val nEdges = adj.count()
-    if (nEdges <= localFinish) {
-      val rows0 = adj.collect()
-      // null endpoints: the distributed loop carries them inertly (null
-      // never joins) — fall through rather than unbox null to 0L (the
-      // components discipline)
-      if (rows0.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+    LocalFixpoint.gate(adj).local match {
+      case Some(g) =>
         org.apache.spark.sql.graft.CheckpointBlocks.unpersist(adj)
-        // adjacency WITH multiplicity: the distributed rounds count one
-        // vote per adj ROW, so duplicate edges (off-contract input)
-        // double votes identically on both paths
-        val nbrs = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-        rows0.foreach { r =>
-          nbrs.getOrElseUpdate(r.getLong(0),
-            new scala.collection.mutable.ArrayBuffer[Long]) += r.getLong(1)
-        }
-        var lab = scala.collection.mutable.HashMap.empty[Long, Long]
-        nbrs.keysIterator.foreach(k => lab.update(k, k))
-        for (_ <- 1 to iters) {
-          // synchronous: every vote reads the PREVIOUS round's labels
-          val next = scala.collection.mutable.HashMap.empty[Long, Long]
-          nbrs.foreach { case (u, vs) =>
-            val cnt = scala.collection.mutable.HashMap.empty[Long, Long]
-            vs.foreach { v =>
-              val l = lab(v); cnt.update(l, cnt.getOrElse(l, 0L) + 1L)
-            }
-            // plurality, ties → smallest label: exactly the distributed
-            // min(struct(-count, label)) ordering
-            var bestL = Long.MaxValue; var bestC = 0L
-            cnt.foreach { case (l, c) =>
-              if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
-            }
-            next.update(u, bestL)
-          }
-          lab = next
-        }
-        val spark = undirected.sparkSession
-        val rows = lab.iterator
-          .map { case (n, l) => org.apache.spark.sql.Row(n, l) }.toSeq
-        val slices = math.max(1, math.min(
-          spark.sparkContext.defaultParallelism, rows.size / 100000))
-        // nullable=true mirrors the distributed frame (communitiesTab
-        // materializes this to parquet — keep the artifact schema stable)
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, slices),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField("community",
-              org.apache.spark.sql.types.LongType, nullable = true))))
-      }
+        return pluralityVote(undirected.sparkSession, g, iters)
+      case None => // distributed rounds below
     }
     var labels = adj.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
@@ -953,7 +865,35 @@ object Graph {
       } else labels = updated0
     }
     org.apache.spark.sql.graft.CheckpointBlocks.unpersist(adj)
-    labels.select(col("node"), col("label").as("community"))
+    LocalFixpoint.nullable(labels.select(col("node"), col("label").as("community")))
+  }
+
+  /** [[lpaCommunities]]' rounds on the driver: sort the edge rows by
+    * (node, neighbor's label) and take each node's longest run, the
+    * first (smallest label) on ties — one vote per row, exactly the
+    * distributed min(struct(-count, label)) ordering. */
+  private def pluralityVote(spark: SparkSession, g: LocalFixpoint.Local,
+      iters: Int): DataFrame = {
+    var lab = Array.range(0, g.nodes)
+    for (_ <- 1 to iters) {
+      // synchronous: every vote reads the PREVIOUS round's labels
+      val votes = Array.tabulate(g.edges)(e => g.src(e).toLong << 32 | lab(g.dst(e)))
+      java.util.Arrays.sort(votes)
+      val next = new Array[Int](g.nodes)
+      val best = new Array[Int](g.nodes)
+      var i = 0
+      while (i < votes.length) {
+        var j = i
+        while (j < votes.length && votes(j) == votes(i)) j += 1
+        val u = (votes(i) >>> 32).toInt
+        if (j - i > best(u)) { best(u) = j - i; next(u) = votes(i).toInt }
+        i = j
+      }
+      lab = next
+    }
+    val voters = g.src.distinct
+    LocalFixpoint.frame(spark, "node", "community")(
+      voters.map(g.ids), voters.map(u => g.ids(lab(u))))
   }
 
   /** Newman modularity, per community, of a node partition over an

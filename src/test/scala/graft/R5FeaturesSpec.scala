@@ -214,12 +214,12 @@ class R5FeaturesSpec extends SparkSpecBase {
     // non-convergence guard: a 5-chain can't settle in 1 round —
     // DISTRIBUTED path only (the driver-local union-find finish always
     // reaches the fixpoint; gate 0 forces every round distributed)
-    spark.conf.set("graft.components.localFinishEdges", "0")
+    spark.conf.set("graft.localFinishEdges", "0")
     try intercept[IllegalStateException](
       graft.operators.Dedup.components(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b"),
         maxIters = 1).collect())
-    finally spark.conf.unset("graft.components.localFinishEdges")
+    finally spark.conf.unset("graft.localFinishEdges")
   }
 
   test("Dedup.components: local union-find finish ≡ distributed rounds (r17 path parity)") {
@@ -233,9 +233,9 @@ class R5FeaturesSpec extends SparkSpecBase {
       graft.operators.Dedup.components(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run() // default gate: whole fixpoint on the driver
-    spark.conf.set("graft.components.localFinishEdges", "0")
+    spark.conf.set("graft.localFinishEdges", "0")
     val dist = try run() // gate 0: every round distributed
-      finally spark.conf.unset("graft.components.localFinishEdges")
+      finally spark.conf.unset("graft.localFinishEdges")
     assert(local == dist)
     assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))

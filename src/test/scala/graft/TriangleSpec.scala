@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import graft.operators.Graph
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.{CheckpointBlocks, ListenerDrain}
+import org.apache.spark.sql.types.StructType
 
 /** [[Graph.triangleCounts]] — degree-ordered triangle enumeration vs a
   * brute-force oracle, plus shape cases (complete graph, triangle-free
@@ -98,9 +104,9 @@ class TriangleSpec extends SparkSpecBase {
       (4L, 9L), (9L, 10L), (8L, 11L))
     def run(): Map[Long, Long] = core(g, 2)
     val local = run() // default threshold: whole fixpoint on the driver
-    spark.conf.set("graft.kcore.localFinishEdges", "0")
+    spark.conf.set("graft.localFinishEdges", "0")
     val dist = try run() // threshold 0: every round distributed
-      finally spark.conf.unset("graft.kcore.localFinishEdges")
+      finally spark.conf.unset("graft.localFinishEdges")
     assert(local == dist)
     assert(local == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 2L, 6L -> 2L, 7L -> 2L, 8L -> 2L))
@@ -186,10 +192,129 @@ class TriangleSpec extends SparkSpecBase {
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L), (6L, 7L), (7L, 8L))
     for (iters <- 1 to 4) {
       val local = lpa(g, iters) // default gate: driver-local rounds
-      spark.conf.set("graft.lpa.localFinishEdges", "0")
+      spark.conf.set("graft.localFinishEdges", "0")
       val dist = try lpa(g, iters) // gate 0: every round distributed
-        finally spark.conf.unset("graft.lpa.localFinishEdges")
+        finally spark.conf.unset("graft.localFinishEdges")
       assert(local == dist, s"iters=$iters: local $local != distributed $dist")
+    }
+  }
+
+  /** `f` with `graft.localFinishEdges` at `gate` (None: the default). */
+  private def withGate[T](gate: Option[String])(f: => T): T = {
+    gate.foreach(spark.conf.set("graft.localFinishEdges", _))
+    try f finally spark.conf.unset("graft.localFinishEdges")
+  }
+
+  private val GateJob = "graft local-finish gate"
+
+  /** `f`'s value and the descriptions of the jobs it scheduled. */
+  private def withJobs[T](f: => T): (T, Seq[String]) = {
+    val jobs = new ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        ()
+      }
+    }
+    ListenerDrain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { val r = f; ListenerDrain(spark); (r, jobs.asScala.toSeq) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Sorted rows (nulls kept) and schema of an operator result, freed
+    * after reading. */
+  private def rowsAndSchema(res: DataFrame): (Seq[Row], StructType) =
+    try (res.collect().toSeq.sortBy(_.toString), res.schema)
+    finally CheckpointBlocks.unpersist(res)
+
+  private def asMap(rows: Seq[Row]): Map[Long, Long] =
+    rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // clique 1-4 (3-core) + cycle 5-8 (2-core) + tails that cascade-peel
+  private val kcoreGraph = Seq(
+    (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+    (5L, 6L), (6L, 7L), (7L, 8L), (5L, 8L),
+    (4L, 9L), (9L, 10L), (8L, 11L))
+  // chain (diameter 4 — multi-round distributed), triangle, pair
+  private val componentsGraph = Seq(
+    (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
+    (10L, 11L), (11L, 12L), (10L, 12L),
+    (20L, 21L))
+  // bridged triangles + a pendant chain: plurality ties (every vote
+  // count 1 on the chain) AND real majorities in one graph
+  private val lpaGraph = Seq((1L, 2L), (1L, 3L), (2L, 3L),
+    (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L), (6L, 7L), (7L, 8L))
+
+  test("local finish ≡ distributed: kCore, components and LPA on the parity table") {
+    val graphs: Seq[(String, DataFrame)] = Seq(
+      "kCore graph" -> kcoreGraph.toDF("a", "b"),
+      "components graph" -> componentsGraph.toDF("a", "b"),
+      "LPA graph" -> lpaGraph.toDF("a", "b"),
+      "null endpoint" -> Seq((Some(1L), Some(2L)), (Some(1L), Some(3L)), (Some(2L), Some(3L)),
+        (Some(3L), Option.empty[Long])).toDF("a", "b"),
+      "duplicate edge" -> Seq((1L, 2L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b"),
+      "self-loop" -> Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 3L)).toDF("a", "b"),
+      "isolated pair" -> Seq((1L, 2L), (1L, 3L), (2L, 3L), (20L, 21L)).toDF("a", "b"),
+      "empty" -> Seq.empty[(Long, Long)].toDF("a", "b"))
+    def ops(g: String): Seq[(String, DataFrame => DataFrame)] = Seq(
+      "kCore k=2" -> ((e: DataFrame) => Graph.kCore(e, 2)),
+      "components" -> ((e: DataFrame) => operators.Dedup.components(e))) ++
+      // the LPA graph over the iters values the tests above hand-traced
+      (if (g == "LPA graph") 1 to 4 else Seq(3))
+        .map(i => s"LPA iters=$i" -> ((e: DataFrame) => Graph.lpaCommunities(e, i)))
+    val local = (for ((g, in) <- graphs; (op, f) <- ops(g)) yield {
+      val (res, jobs) = withGate(None)(withJobs(f(in)))
+      val atDefault = rowsAndSchema(res)
+      // the default gate finishes every null-free graph on the driver
+      if (g != "null endpoint")
+        assert(jobs.lastOption.contains(GateJob), s"$op on $g ran distributed: $jobs")
+      // gate 0 sends every non-empty graph down the distributed loop;
+      // -1 does so for the empty one too
+      for (gate <- if (g == "empty") Seq("0", "-1") else Seq("0")) {
+        val dist = withGate(Some(gate))(rowsAndSchema(f(in)))
+        assert(atDefault == dist, s"$op on $g: default gate $atDefault != gate $gate $dist")
+      }
+      assert(atDefault._2.forall(_.nullable), s"$op on $g: ${atDefault._2}")
+      (g, op) -> atDefault._1
+    }).toMap
+    assert(asMap(local(("kCore graph", "kCore k=2"))) == Map(1L -> 3L, 2L -> 3L,
+      3L -> 3L, 4L -> 3L, 5L -> 2L, 6L -> 2L, 7L -> 2L, 8L -> 2L))
+    assert(asMap(local(("components graph", "components"))) == Map(1L -> 1L, 2L -> 1L,
+      3L -> 1L, 4L -> 1L, 5L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L,
+      20L -> 20L, 21L -> 20L))
+    // a null endpoint is peeled like any degree-1 node: the driver
+    // finish used to unbox it and throw
+    assert(asMap(local(("null endpoint", "kCore k=2"))) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+  }
+
+  test("local finish: one gate job per operator, none until the result is consumed") {
+    val e = lpaGraph.toDF("a", "b")
+    for ((op, f) <- Seq[(String, DataFrame => DataFrame)](
+        "kCore" -> (Graph.kCore(_, 2)),
+        "components" -> (operators.Dedup.components(_)),
+        "LPA" -> (Graph.lpaCommunities(_, 3)))) {
+      val (res, jobs) = withJobs(f(e))
+      // jobs before the gate belong to the input's own plan (components'
+      // distinct shuffle); the gate must be the only one and the last
+      assert(jobs.count(_ == GateJob) == 1, s"$op: $jobs")
+      assert(jobs.last == GateJob, s"$op: $jobs")
+      assert(rowsAndSchema(res)._1.nonEmpty)
+    }
+  }
+
+  test("local finish: a graph exactly at the gate finishes on the driver, one edge over does not") {
+    // 9 pairs = 18 symmetrized edges over 8 partitions, some holding
+    // more than their share (18 / 8) of the gate: the gate job cannot
+    // ship them all, so one more gate job re-reads the blocks
+    val e = lpaGraph.toDF("a", "b")
+    val expected = rowsAndSchema(Graph.lpaCommunities(e, 3))
+    for ((gate, driver) <- Seq("18" -> true, "17" -> false)) {
+      val (res, jobs) = withGate(Some(gate))(withJobs(Graph.lpaCommunities(e, 3)))
+      assert(rowsAndSchema(res) == expected, s"gate $gate")
+      assert(jobs.lastOption.contains(GateJob) == driver, s"gate $gate: $jobs")
+      assert(jobs.count(_ == GateJob) == (if (driver) 2 else 1), s"gate $gate: $jobs")
     }
   }
 
