@@ -60,7 +60,8 @@ import scala.jdk.CollectionConverters._
   * `Collections.createIndex`; with that, every reference route is
   * served).
   *
-  * Driver-sided by design: results are collected to JSON, so routes are
+  * Driver-sided by design: each result row is rendered to JSON inside the
+  * query plan ([[RestServer.jsonRows]]) and collected, so routes are
   * for top-k/aggregate-sized answers, not bulk export — identical to the
   * reference's HTTP contract. Bulk reads go through KEYSET scroll
   * pagination (`GET /collections/{n}/points?limit=&after_id=`, the
@@ -71,7 +72,15 @@ import scala.jdk.CollectionConverters._
   */
 class RestServer(g: Graft, port: Int = 0) {
 
+  import RestServer.jsonRows
+
   private val mapper = new ObjectMapper()
+  // TCP_NODELAY on every accepted connection: a response leaves as two
+  // writes (headers, then body), and with Nagle on the body waits for
+  // the client's delayed ACK of the headers (~40 ms per request). The
+  // JDK's ServerConfig reads this property once, at class init, i.e. at
+  // the first HttpServer.create in the JVM — so it is set before it.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
   // small pool: a long Spark query must not block /health or /metrics
   // (and concurrent mutation is what the Collections lock serializes)
@@ -244,7 +253,7 @@ class RestServer(g: Graft, port: Int = 0) {
           catch { case e: IllegalArgumentException => badRequest(e.getMessage) }
         try {
           val shaped = df.orderBy(df.columns.map(col).toIndexedSeq: _*).limit(limit)
-          val rows = shaped.toJSON.collect()
+          val rows = jsonRows(shaped)
           s"""{"op":"$op","mode":"$mode","count":${rows.length},""" +
             s""""timing_ms":${ms()},"results":[${rows.mkString(",")}]}"""
         } finally
@@ -388,8 +397,8 @@ class RestServer(g: Graft, port: Int = 0) {
               else col(idCol) > a
             }
             // limit+1 probes has-more without a count pass
-            val page = cursor.fold(t)(t.where(_))
-              .orderBy(col(idCol)).limit(limit + 1).toJSON.collect()
+            val page = jsonRows(cursor.fold(t)(t.where(_))
+              .orderBy(col(idCol)).limit(limit + 1))
             val hasMore = page.length > limit
             val out = if (hasMore) page.dropRight(1) else page
             val nextId =
@@ -410,10 +419,10 @@ class RestServer(g: Graft, port: Int = 0) {
         val cn = existingUserCollection(name)
         val (idc, stringIds) = idColInfo(cn)
         val rows = (if (stringIds) None else id.toLongOption) match {
-          case Some(l) => g.collections.get(cn, Seq(l)).toJSON.collect()
+          case Some(l) => jsonRows(g.collections.get(cn, Seq(l)))
           case None =>
             g.collections.table(cn)
-              .map(_.where(col(idc).cast("string") === id).limit(2).toJSON.collect())
+              .map(t => jsonRows(t.where(col(idc).cast("string") === id).limit(2)))
               .getOrElse(Array.empty[String])
         }
         if (rows.isEmpty) error(404, s"point $id not found in $name")
@@ -596,7 +605,8 @@ class RestServer(g: Graft, port: Int = 0) {
         val e = edgesFor(existing(name)).where(col("label") === label)
         // EdgeResponse shape: src/dst → source/target, remaining columns
         // nest under properties (the reference's open HashMap); derived
-        // dataset edges carry no id → field omitted by toJSON null rules
+        // dataset edges carry no id → field omitted (to_json's generator
+        // skips null fields, JSONOptions ignoreNullFields)
         val others = e.columns.filterNot(Set("id", "src", "dst", "label")).toSeq
         val idCol = if (e.columns.contains("id")) col("id") else lit(null).cast("long")
         val lim = math.min(
@@ -625,11 +635,11 @@ class RestServer(g: Graft, port: Int = 0) {
             badRequest("after_id requires after_target")
           case _ => e
         }
-        val page = cursored.select(idCol.as("id"), col("src").as("source"),
+        val page = jsonRows(cursored.select(idCol.as("id"), col("src").as("source"),
             col("dst").as("target"), col("label"),
             struct(others.map(col): _*).as("properties"))
           .orderBy(col("source"), col("target"), col("id").asc_nulls_first)
-          .limit(lim + 1).toJSON.collect()
+          .limit(lim + 1))
         val hasMore = page.length > lim
         val rows = if (hasMore) page.dropRight(1) else page
         val nextCursor =
@@ -644,7 +654,7 @@ class RestServer(g: Graft, port: Int = 0) {
       case ("GET", "collections" :: name :: "graph" :: "edges" :: id :: Nil) =>
         // get_edge (graph_api.rs:270) — edge row by id
         val rows = g.collections.edges(existingUserCollection(name))
-          .map(_.where(col("id") === id.toLong).toJSON.collect())
+          .map(e => jsonRows(e.where(col("id") === id.toLong)))
           .getOrElse(Array.empty[String])
         if (rows.isEmpty) error(404, s"edge $id not found in $name")
         else ok(rows.head)
@@ -662,7 +672,7 @@ class RestServer(g: Graft, port: Int = 0) {
         val byLabel = qs.get("label").fold(base)(l => base.where(col("label") === l))
         val lim = math.min(
           posInt("limit", qs.get("limit").map(_.toInt).getOrElse(100)), 10000)
-        val rows = byLabel.orderBy(col("src"), col("dst")).limit(lim).toJSON.collect()
+        val rows = jsonRows(byLabel.orderBy(col("src"), col("dst")).limit(lim))
         ok(s"""{"edges":[${rows.mkString(",")}],"count":${rows.length}}""")
       case ("GET", "collections" :: name :: "graph" :: "nodes" :: id :: "degree" :: Nil) =>
         // DegreeResponse shape (handlers/graph/types.rs:84-89)
@@ -695,8 +705,8 @@ class RestServer(g: Graft, port: Int = 0) {
             .localCheckpoint(true)
           try {
             val visited = res.count()
-            val rows = res.orderBy(col("depth"), col("node"))
-              .select(col("node"), col("depth")).limit(limit).toJSON.collect()
+            val rows = jsonRows(res.orderBy(col("depth"), col("node"))
+              .select(col("node"), col("depth")).limit(limit))
             s"""{"results":[${rows.mkString(",")}],"next_cursor":null,""" +
               s""""has_more":${visited > limit},"stats":{"visited":$visited,"timing_ms":${ms()}}}"""
           } finally org.apache.spark.sql.graft.CheckpointBlocks.unpersist(res)
@@ -727,9 +737,8 @@ class RestServer(g: Graft, port: Int = 0) {
           val res = graft.operators.Graph.shortestPaths(
             edgesFor(name), starts.toDF("start"), maxHops, rels)
           try {
-            val rows = res
-              .orderBy(col("start"), col("cost"), col("node")).limit(limit)
-              .toJSON.collect()
+            val rows = jsonRows(res
+              .orderBy(col("start"), col("cost"), col("node")).limit(limit))
             s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
           } finally org.apache.spark.sql.graft.CheckpointBlocks.unpersist(res)
         }
@@ -766,8 +775,7 @@ class RestServer(g: Graft, port: Int = 0) {
           val res = graft.operators.Graph.pageRank(edgesFor(name), iters,
             damping, restart)
           try {
-            val rows = res.orderBy(col("rank").desc, col("node")).limit(limit)
-              .toJSON.collect()
+            val rows = jsonRows(res.orderBy(col("rank").desc, col("node")).limit(limit))
             s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
           } finally org.apache.spark.sql.graft.CheckpointBlocks.unpersist(res)
         }
@@ -791,8 +799,7 @@ class RestServer(g: Graft, port: Int = 0) {
             e.select(col("src").as("a"), col("dst").as("b")),
             maxIters = maxIters)
           try {
-            val rows = res.orderBy(col("comp"), col("id")).limit(limit)
-              .toJSON.collect()
+            val rows = jsonRows(res.orderBy(col("comp"), col("id")).limit(limit))
             s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
           } finally org.apache.spark.sql.graft.CheckpointBlocks.unpersist(res)
         }
@@ -809,8 +816,7 @@ class RestServer(g: Graft, port: Int = 0) {
         timed { ms =>
           val res = g.communities(iters, rels, graphScopeFor(name))
           try {
-            val rows = res.orderBy(col("community"), col("node"))
-              .limit(limit).toJSON.collect()
+            val rows = jsonRows(res.orderBy(col("community"), col("node")).limit(limit))
             s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
           } finally org.apache.spark.sql.graft.CheckpointBlocks.unpersist(res)
         }
@@ -830,8 +836,8 @@ class RestServer(g: Graft, port: Int = 0) {
           // edgeless graph yields an empty report and Q = 0, not a 500
           val rep = g.modularityReport(iters, rels, graphScopeFor(name))
           try {
-            val rows = rep.orderBy(col("contribution").desc, col("community"))
-              .limit(limit).toJSON.collect()
+            val rows = jsonRows(rep.orderBy(col("contribution").desc, col("community"))
+              .limit(limit))
             val q = rep.agg(org.apache.spark.sql.functions
                 .coalesce(org.apache.spark.sql.functions.sum("contribution"),
                   org.apache.spark.sql.functions.lit(0.0)))
@@ -852,8 +858,7 @@ class RestServer(g: Graft, port: Int = 0) {
         timed { ms =>
           val res = g.kCore(k, rels, graphScopeFor(name))
           try {
-            val rows = res.orderBy(col("core_deg").desc, col("node"))
-              .limit(limit).toJSON.collect()
+            val rows = jsonRows(res.orderBy(col("core_deg").desc, col("node")).limit(limit))
             s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
           } finally org.apache.spark.sql.graft.CheckpointBlocks.unpersist(res)
         }
@@ -869,9 +874,9 @@ class RestServer(g: Graft, port: Int = 0) {
           .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
         val limit = posInt("limit", intOr(b, "limit", 100))
         timed { ms =>
-          val rows = g.linkPredict(minCommon, rels, graphScopeFor(name), maxDeg.toLong)
+          val rows = jsonRows(g.linkPredict(minCommon, rels, graphScopeFor(name), maxDeg.toLong)
             .orderBy(col("score_micros").desc, col("a"), col("b"))
-            .limit(limit).toJSON.collect()
+            .limit(limit))
           s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
         }
       case ("POST", "collections" :: name :: "graph" :: "triangles" :: Nil) =>
@@ -889,9 +894,8 @@ class RestServer(g: Graft, port: Int = 0) {
           val pairs = e.select(least(col("src"), col("dst")).as("a"),
               greatest(col("src"), col("dst")).as("b"))
             .where(col("a") =!= col("b")).distinct()
-          val rows = graft.operators.Graph.triangleCounts(pairs)
-            .orderBy(col("n_triangles").desc, col("node")).limit(limit)
-            .toJSON.collect()
+          val rows = jsonRows(graft.operators.Graph.triangleCounts(pairs)
+            .orderBy(col("n_triangles").desc, col("node")).limit(limit))
           s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
         }
       case ("POST", "collections" :: name :: "indexes" :: Nil) =>
@@ -968,7 +972,7 @@ class RestServer(g: Graft, port: Int = 0) {
         }
         val ordered = if (snap.columns.contains(idCol))
           cursored.orderBy(col(idCol)) else cursored
-        val page = ordered.limit(limit + 1).toJSON.collect()
+        val page = jsonRows(ordered.limit(limit + 1))
         val hasMore = page.length > limit
         val rows = if (hasMore) page.dropRight(1) else page
         val nextId =
@@ -1018,7 +1022,7 @@ class RestServer(g: Graft, port: Int = 0) {
             struct(rest.map(col).toIndexedSeq: _*).as("payload"))
         else df.select(col(idCol).as("id"), lit(1.0).as("score"),
           struct(rest.map(col).toIndexedSeq: _*).as("payload"))
-      val rows = shaped.toJSON.collect()
+      val rows = jsonRows(shaped)
       s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
     }
 
@@ -1026,7 +1030,7 @@ class RestServer(g: Graft, port: Int = 0) {
       graphScope: Option[String] = None)(
       render: (Array[String], Double) => String): (Int, String) =
     timed { ms =>
-      val rows = g.sql(vql, params, graphScope = graphScope).toJSON.collect()
+      val rows = jsonRows(g.sql(vql, params, graphScope = graphScope))
       render(rows, ms())
     }
 
@@ -1299,4 +1303,17 @@ class RestServer(g: Graft, port: Int = 0) {
     * the BM25 tokenizer only keeps [a-z0-9]+ runs — so quotes are noise
     * and are replaced with spaces rather than escaped. */
   private def matchLit(q: String): String = s"'${q.replace('\'', ' ')}'"
+}
+
+object RestServer {
+
+  /** The rows of `df` as JSON objects, one string per row. The `to_json`
+    * projection is planned with the query: over a top-k it lands in
+    * `TakeOrderedAndProject`'s project list, which collects without an
+    * exchange. `Dataset.toJSON` (a typed `mapPartitions` above the plan)
+    * forces a single-partition shuffle and a second stage. Both render
+    * through `JacksonGenerator` with default `JSONOptions` and the session
+    * time zone, so the bytes are the same (RestServerSpec pins it). */
+  private[graft] def jsonRows(df: DataFrame): Array[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0))
 }

@@ -7,15 +7,17 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Query-time BM25 on user collections: per-row scores from one stats
   * job ([[Bm25.scoreColumns]]) must equal the posting-list index on
   * adversarial text, MATCH … LIMIT k must be the BM25 top k, an
-  * all-short-token query must match nothing, and the text leg must stay
-  * within its job budget with no shuffle. */
+  * all-short-token query must match nothing, and the text leg and the
+  * REST search routes must stay within their job budgets with no
+  * shuffle. */
 class TextSearchSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -101,27 +103,38 @@ class TextSearchSpec extends SparkSpecBase {
     try body(g) finally g.collections.drop("docs")
   }
 
+  /** Runs `body` against a REST server over `g`; the function it gets
+    * POSTs a JSON body to a route under /collections/docs and returns
+    * the 200 response body. */
+  private def withRest(g: Graft)(body: ((String, String) => String) => Unit): Unit = {
+    val srv = new RestServer(g, port = 0).start()
+    val client = HttpClient.newHttpClient()
+    def post(route: String, json: String): String = {
+      val resp = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.boundPort}/collections/docs/$route"))
+        .POST(HttpRequest.BodyPublishers.ofString(json))
+        .header("Content-Type", "application/json").build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200, resp.body().take(300))
+      resp.body()
+    }
+    try body(post) finally srv.stop()
+  }
+
   test("REST search/text top_k on a user collection is the BM25 ranking") {
     val docs = genDocs(3, 400)
     withCollection(docs) { g =>
-      val srv = new RestServer(g, port = 0).start()
-      val client = HttpClient.newHttpClient()
-      try {
+      withRest(g) { post =>
         for (q <- Seq("spark join", "merge parquet vector", "GRAPH")) {
-          val resp = client.send(HttpRequest.newBuilder(
-              URI.create(s"http://127.0.0.1:${srv.boundPort}/collections/docs/search/text"))
-            .POST(HttpRequest.BodyPublishers.ofString(s"""{"query": "$q", "top_k": 10}"""))
-            .header("Content-Type", "application/json").build(),
-            HttpResponse.BodyHandlers.ofString())
-          assert(resp.statusCode() == 200, resp.body().take(300))
-          val it = new com.fasterxml.jackson.databind.ObjectMapper().readTree(resp.body()).get("results").elements()
+          val resp = post("search/text", s"""{"query": "$q", "top_k": 10}""")
+          val it = new com.fasterxml.jackson.databind.ObjectMapper().readTree(resp).get("results").elements()
           val got = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
             .map(n => n.get("id").asLong -> n.get("score").asDouble).toSeq
           val exp = bruteForce(docs, q).take(10)
           assert(got.map(_._1) == exp.map(_._1), s"query '$q'")
           got.zip(exp).foreach { case ((_, s), (_, e)) => assert(math.abs(s - e) < 1e-9) }
         }
-      } finally srv.stop()
+      }
     }
   }
 
@@ -140,12 +153,16 @@ class TextSearchSpec extends SparkSpecBase {
     }
   }
 
-  /** (jobs, shuffle bytes written + read) of `f`. */
-  private def measured(f: => Unit): (Long, Long) = {
+  /** (jobs, stages run, shuffle bytes written + read) of `f`. */
+  private def measured(f: => Unit): (Long, Long, Long) = {
     val jobs = new AtomicLong
+    val stages = new AtomicLong
     val shuffle = new AtomicLong
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
+      }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         Option(t.taskMetrics).foreach { m =>
           shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten +
@@ -156,14 +173,14 @@ class TextSearchSpec extends SparkSpecBase {
     spark.sparkContext.addSparkListener(l)
     try { f; org.apache.spark.sql.graft.ListenerDrain(spark) }
     finally spark.sparkContext.removeSparkListener(l)
-    (jobs.get, shuffle.get)
+    (jobs.get, stages.get, shuffle.get)
   }
 
   test("job budget: BM25 top-k is one stats job plus one shuffle-free scan") {
     withCollection(genDocs(5, 400)) { g =>
       g.sql("SELECT * FROM docs WHERE text MATCH 'index' LIMIT 10").collect() // warm
       // fresh query text: a plan-memo miss, so the stats job is counted
-      val (jobs, shuffle) = measured {
+      val (jobs, _, shuffle) = measured {
         g.sql("SELECT * FROM docs WHERE text MATCH 'spark stream' LIMIT 10").collect()
       }
       assert(jobs <= 3, s"BM25 MATCH … LIMIT 10 ran $jobs jobs")
@@ -172,8 +189,30 @@ class TextSearchSpec extends SparkSpecBase {
       val hybrid = "SELECT * FROM docs WHERE text MATCH 'merge vector' AND vector NEAR $v " +
         "LIMIT 10 USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)"
       g.sql(hybrid.replace("merge vector", "graph"), Map("v" -> q)).collect() // warm
-      val (hJobs, _) = measured(g.sql(hybrid, Map("v" -> q)).collect())
+      val (hJobs, _, _) = measured(g.sql(hybrid, Map("v" -> q)).collect())
       assert(hJobs <= 5, s"hybrid ran $hJobs jobs")
+    }
+  }
+
+  test("job budget: REST search routes collect their top-k without an exchange") {
+    withCollection(genDocs(6, 400)) { g =>
+      withRest(g) { post =>
+        // warm each route, then measure a fresh request (a plan-memo miss)
+        post("search", """{"vector": [0.1, 0.2, 0.3, 0.4], "top_k": 10}""")
+        val (jobs, stages, shuffle) =
+          measured(post("search", """{"vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}"""))
+        assert((jobs, stages, shuffle) == ((1L, 1L, 0L)),
+          "POST search: (jobs, stages, shuffle bytes)")
+        post("search/text", """{"query": "index", "top_k": 10}""")
+        val (tJobs, _, tShuffle) =
+          measured(post("search/text", """{"query": "spark stream", "top_k": 10}"""))
+        assert(tJobs <= 2, s"search/text ran $tJobs jobs")
+        assert(tShuffle == 0, s"search/text shuffled $tShuffle bytes")
+        post("search/hybrid", """{"query": "graph", "vector": [0.1, 0.2, 0.3, 0.4], "top_k": 10}""")
+        val (hJobs, _, _) = measured(post("search/hybrid",
+          """{"query": "merge vector", "vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}"""))
+        assert(hJobs <= 3, s"search/hybrid ran $hJobs jobs")
+      }
     }
   }
 }

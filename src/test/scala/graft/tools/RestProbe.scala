@@ -1,0 +1,160 @@
+package graft.tools
+
+import graft.server.RestServer
+
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.SplittableRandom
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Per-kind REST probe over the serving benchmark's shape: one 4-bucket
+  * user collection of 5,000 points × 64-d clustered vectors, texts of
+  * 8–20 Zipf words from a 2,000-word vocabulary, 4 categories, a price,
+  * and 10,000 `link` edges; `local[4]`, one client over HTTP/1.1
+  * keep-alive. For `GET /health` and each of the seven serving read
+  * kinds (exact, category-filtered and `mode: accurate` kNN, BM25
+  * `search/text`, `search/hybrid`, 2-hop MATCH, point GET) it prints one
+  * table row for `reps` hot requests (the kind's first request, repeated)
+  * and one for `reps` fresh ones: median ms, Spark jobs, stages run,
+  * shuffle bytes (written + read) and codegen compiles. Then it prints the
+  * physical plan the exact-kNN route collected.
+  * Usage: sbt "Test/runMain graft.tools.RestProbe [reps=9]"
+  */
+object RestProbe {
+
+  private val Points = 5000
+  private val Dim = 64
+  private val Edges = 10000
+  private val Vocab = 2000
+  private val Clusters = 32
+  private val K = 10
+
+  def main(args: Array[String]): Unit = {
+    val reps = args.headOption.map(_.toInt).getOrElse(9)
+    val spark = graft.SparkSpecBase.session
+    val r = new SplittableRandom(11)
+    def normalize(v: Array[Float]): Array[Float] = {
+      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+      v.map(x => (x / n).toFloat)
+    }
+    val centers = Array.fill(Clusters)(normalize(Array.fill(Dim)(r.nextGaussian().toFloat)))
+    val vectors = Array.fill(Points)(normalize(
+      centers(r.nextInt(Clusters)).map(x => (x + 0.08 * r.nextGaussian()).toFloat)))
+    val zipfCdf = {
+      val w = Array.tabulate(Vocab)(i => 1.0 / (i + 1))
+      w.scanLeft(0.0)(_ + _).tail.map(_ / w.sum)
+    }
+    def word(): String = {
+      val i = java.util.Arrays.binarySearch(zipfCdf, r.nextDouble())
+      s"w${math.min(Vocab - 1, if (i >= 0) i else -i - 1)}"
+    }
+    val categories = Seq("c0", "c1", "c2", "c3")
+    val points = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until Points).map(i => Row(i.toLong, vectors(i).toSeq,
+        Seq.fill(8 + r.nextInt(13))(word()).mkString(" "),
+        categories(r.nextInt(4)), r.nextDouble(1, 1000))), 4),
+      StructType(Seq(StructField("id", LongType),
+        StructField("vector", ArrayType(FloatType, containsNull = false)),
+        StructField("text", StringType), StructField("category", StringType),
+        StructField("price", DoubleType))))
+    val edges = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until Edges).map(i => Row(i.toLong, r.nextInt(Points).toLong,
+        r.nextInt(Points).toLong, "link")), 4),
+      StructType(Seq(StructField("id", LongType), StructField("src", LongType),
+        StructField("dst", LongType), StructField("label", StringType))))
+
+    val dir = java.nio.file.Files.createTempDirectory("restprobe").toString
+    val g = graft.Graft(spark, dir)
+    g.collections.create("docs", idCol = "id", vectorCol = Some("vector"), buckets = 4)
+    g.collections.upsert("docs", points)
+    g.collections.upsertEdges("docs", edges)
+
+    val jobs, stages, shuffle = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach { m =>
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
+        }
+    })
+    @volatile var lastPlan: QueryExecution = null
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = lastPlan = qe
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+
+    /** (method, path, body) of a fresh request of `kind`. */
+    def request(kind: String): (String, String, String) = {
+      val base = "/collections/docs"
+      val v = normalize(vectors(r.nextInt(Points)).map(x => (x + 0.05 * r.nextGaussian()).toFloat))
+      val vq = s""""vector":${v.mkString("[", ",", "]")},"top_k":$K"""
+      // mid-frequency query words: Zipf ranks 10..199
+      val text = s""""query":"w${10 + r.nextInt(190)} w${10 + r.nextInt(190)}""""
+      val node = r.nextInt(Points)
+      kind match {
+        case "health" => ("GET", "/health", null)
+        case "knn_exact" => ("POST", s"$base/search", s"{$vq}")
+        case "knn_filtered" => ("POST", s"$base/search", s"""{$vq,"filter":{"condition":""" +
+          s"""{"type":"eq","field":"category","value":"${categories(r.nextInt(4))}"}}}""")
+        case "knn_ann" => ("POST", s"$base/search", s"""{$vq,"mode":"accurate"}""")
+        case "bm25" => ("POST", s"$base/search/text", s"{$text,\"top_k\":$K}")
+        case "hybrid" => ("POST", s"$base/search/hybrid", s"{$text,$vq}")
+        case "match2" => ("POST", s"$base/match", s"""{"match":"MATCH (a {id: $node})""" +
+          """-[:link]->(b)-[:link]->(c) RETURN c.id AS d"}""")
+        case "get" => ("GET", s"$base/points/$node", null)
+      }
+    }
+
+    val srv = new RestServer(g, port = 0).start()
+    val http = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    /** (ms, jobs, stages, shuffle bytes, codegen compiles) of one request. */
+    def call(req: (String, String, String)): Seq[Double] = {
+      val (method, path, body) = req
+      val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.boundPort}$path"))
+      val built = if (method == "GET") b.GET().build()
+        else b.header("Content-Type", "application/json")
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+      org.apache.spark.sql.graft.ListenerDrain(spark)
+      val before = Seq(jobs.get, stages.get, shuffle.get,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      val t0 = System.nanoTime()
+      val resp = http.send(built, HttpResponse.BodyHandlers.ofString())
+      val ms = (System.nanoTime() - t0) / 1e6
+      require(resp.statusCode() == 200, s"$path: ${resp.body().take(300)}")
+      org.apache.spark.sql.graft.ListenerDrain(spark)
+      val after = Seq(jobs.get, stages.get, shuffle.get,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      ms +: after.zip(before).map { case (a, b) => (a - b).toDouble }
+    }
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    def row(kind: String, runs: Seq[Seq[Double]]): String = {
+      val m = runs.transpose.map(median)
+      f"| $kind%-20s | ${m(0)}%7.1f | ${m(1)}%4.0f | ${m(2)}%6.0f | ${m(3)}%9.0f | ${m(4)}%8.0f |"
+    }
+    try {
+      println(s"median of $reps requests per row")
+      println("| kind                 |      ms | jobs | stages | shuffle B | compiles |")
+      println("|---|---|---|---|---|---|")
+      for (kind <- Seq("health", "knn_exact", "knn_filtered", "knn_ann", "bm25", "hybrid",
+          "match2", "get")) {
+        val hot = request(kind)
+        call(hot) // first request: ANN index build, BM25 postings, codegen
+        println(row(s"$kind hot", Seq.fill(reps)(call(hot))))
+        println(row(s"$kind fresh", Seq.fill(reps)(call(request(kind)))))
+      }
+      call(request("knn_exact"))
+      println(s"---- exact kNN REST plan\n${lastPlan.executedPlan}")
+    } finally { srv.stop(); g.collections.drop("docs"); spark.stop() }
+  }
+}
