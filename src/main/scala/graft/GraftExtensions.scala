@@ -3,18 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{CosineSimilarity, DotProduct, EuclideanDistance, HammingDistance, JaccardSimilarity}
 
-/** Session-extension entry point: injects the five distance metrics into
-  * a session's function registry at build time, so `spark.sql("SELECT
+/** Session-extension entry point: injects the five distance metrics
+  * ([[graft.functions.VectorFunctions.sqlFunctions]]) into a session's
+  * function registry at build time, so `spark.sql("SELECT
   * cosine_sim(a, b) …")` works with no imperative registration call.
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)          // programmatic
-  *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   .getOrCreate()
-  * }}}
+  * Install it on a session builder with `.withExtensions(new
+  * GraftExtensions)`, or with the conf
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -24,11 +20,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       builder)
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(fn("cosine_sim", es => CosineSimilarity(es(0), es(1))))
-    e.injectFunction(fn("dot_product", es => DotProduct(es(0), es(1))))
-    e.injectFunction(fn("l2_dist", es => EuclideanDistance(es(0), es(1))))
-    e.injectFunction(fn("hamming_dist", es => HammingDistance(es(0), es(1))))
-    e.injectFunction(fn("jaccard_sim", es => JaccardSimilarity(es(0), es(1))))
+    graft.functions.VectorFunctions.sqlFunctions.foreach { case (name, f) =>
+      e.injectFunction(fn(name, es => f(es(0), es(1))))
+    }
     // opt-in ANN top-k rewrite (SURVEY §4.3): bucket-prunes similarity
     // sorts over LSH-indexed frames when graft.ann.rewrite=true
     e.injectPreCBORule { session =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection main: dumps `.explain("formatted")` for representative
   * queries so scan pushdown / broadcast / TakeOrderedAndProject /
@@ -12,18 +11,7 @@ object Plans {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_tpch_q1", "q03_filter_cmp", "q16_star_join",
         "q40_knn_cosine", "q43_knn_filtered", "q60_bm25", "q82_bfs_varlength")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver-generated parquet stamps tz-naive timestamp[us]; read as
-      // TIMESTAMP (UTC instants) so unix_micros/watermarks keep working
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = SessionTuning.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>

@@ -1,19 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver-generated parquet stamps tz-naive timestamp[us]; read as
-      // TIMESTAMP (UTC instants) so unix_micros/watermarks keep working
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = SessionTuning.local(32)
     spark.sparkContext.setLogLevel("WARN")
     Tables.All.foreach(n => Tables.table(spark, sfDir, n).count())
     args.drop(1).foreach { q =>

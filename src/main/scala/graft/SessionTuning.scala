@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local-mode session tuning for the harness mains (Bench /
-  * Verify / QTime / probes) and the test base.
+/** The one place a local-mode `SparkSession` is built: [[local]] for the
+  * short-lived mains (Bench, Verify, Plans, QTime), the test tools and
+  * the spec base; [[service]] for the long-running ones (Serve, Repl).
   *
-  * Why (measured on this box, tools/Scratch2): a 32-partition
-  * `groupBy` over 369k in-memory longs took 0.47 s — per-EXCHANGE
-  * floor, not data. Root cause: with ≤200 shuffle partitions Spark
-  * picks the bypass-merge shuffle writer, which opens one file PER
+  * Why the shuffle settings (measured at `local[32]`, PERF_r12.md): a
+  * 32-partition `groupBy` over 369k in-memory longs took 0.47 s — per-
+  * EXCHANGE floor, not data. Root cause: with ≤200 shuffle partitions
+  * Spark picks the bypass-merge shuffle writer, which opens one file PER
   * REDUCE PARTITION per map task (32×32 = 1024 file creates per
   * exchange), and file creation on this VM's disk is milliseconds.
   * `bypassMergeThreshold=1` forces the single-file sort writer (the
@@ -26,9 +27,33 @@ import org.apache.spark.sql.SparkSession
   * 200 partitions, so production shapes are unaffected.
   */
 object SessionTuning {
-  /** Config map for the short-lived HARNESS mains (Bench / Verify /
-    * QTime / probes / tests): sort shuffle writer + tmpfs shuffle dirs.
-    * Chain `.config(SessionTuning.localConfigMap)` into a builder. */
+  /** Session for a short-lived main, tool or spec: `local[cpus]` with
+    * [[localConfigMap]] (tmpfs shuffle dirs). */
+  def local(cpus: Int): SparkSession = session(cpus, localConfigMap)
+
+  /** Session for a long-running service: `local[cpus]` with
+    * [[serviceConfigMap]] (shuffle dirs stay on disk). */
+  def service(cpus: Int): SparkSession = session(cpus, serviceConfigMap)
+
+  /** Adaptive execution and partition coalescing are left at Spark's
+    * defaults (both on). Timestamps: driver-generated parquet stamps
+    * tz-naive timestamp[us], read as TIMESTAMP (UTC instants) so
+    * unix_micros/watermarks keep working; events.parquet carries
+    * TIMESTAMP(NANOS), which vanilla Spark 4 rejects, so it is read as
+    * long and `Tables` re-derives the timestamp. */
+  private def session(cpus: Int, tuning: java.util.Map[String, Any]): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config(tuning)
+      .getOrCreate()
+
+  /** Config map for the short-lived mains, tools and specs: sort
+    * shuffle writer + tmpfs shuffle dirs. */
   def localConfigMap: java.util.Map[String, Any] =
     configMap(tmpfsLocalDir = true)
 
@@ -49,12 +74,6 @@ object SessionTuning {
     m
   }
 
-  def local(b: SparkSession.Builder): SparkSession.Builder =
-    b.config(localConfigMap)
-
-  def service(b: SparkSession.Builder): SparkSession.Builder =
-    b.config(serviceConfigMap)
-
   /** Pin a STATIC physical plan for `df`: plan it now with adaptive
     * execution off, so later actions reuse the cached QueryExecution
     * instead of AQE's stage-at-a-time loop.
@@ -65,7 +84,7 @@ object SessionTuning {
     * chain: node-sized contribution tables, broadcast-hinted joins),
     * that re-planning cannot change anything — the broadcast decisions
     * are already hinted — but doubles the sequential job count (measured
-    * on q149: 9 jobs → 5, 0.79 → 0.60 s warm at sf0.1, PrLab). Callers
+    * on q149: 9 jobs → 5, 0.79 → 0.60 s warm at sf0.1, PERF_r14.md). Callers
     * gate on their own smallness evidence (e.g. pageRank's contribSmall)
     * — large-graph plans keep AQE for skew/coalesce handling.
     *

@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.Graft
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** Interactive VelesQL REPL — the reference's CLI surface
@@ -320,15 +320,7 @@ object Repl {
     // "-c" as the directory; r15 review finding)
     val dataDir = args.headOption.filterNot(_.startsWith("-"))
       .getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.serviceConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.service(8)
     spark.sparkContext.setLogLevel("ERROR")
     val session = new ReplSession(Graft(spark, dataDir), System.out)
     val oneShot = args.sliding(2).collectFirst { case Array("-c", q) => q }

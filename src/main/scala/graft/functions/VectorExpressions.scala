@@ -51,16 +51,21 @@ object VectorFunctions {
     "hamming" -> ((hamming_dist _, false)),
     "jaccard" -> ((jaccard_sim _, true)))
 
+  /** The five distance functions by SQL name — the one list both
+    * [[register]] and [[graft.GraftExtensions]] install. */
+  val sqlFunctions: Seq[(String, (Expression, Expression) => Expression)] = Seq(
+    "cosine_sim" -> (CosineSimilarity(_, _)),
+    "dot_product" -> (DotProduct(_, _)),
+    "l2_dist" -> (EuclideanDistance(_, _)),
+    "hamming_dist" -> (HammingDistance(_, _)),
+    "jaccard_sim" -> (JaccardSimilarity(_, _)))
+
   /** Register the metric expressions for SQL use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def create(name: String, b: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, b, "built-in")
-    create("cosine_sim", es => CosineSimilarity(es(0), es(1)))
-    create("dot_product", es => DotProduct(es(0), es(1)))
-    create("l2_dist", es => EuclideanDistance(es(0), es(1)))
-    create("hamming_dist", es => HammingDistance(es(0), es(1)))
-    create("jaccard_sim", es => JaccardSimilarity(es(0), es(1)))
+    sqlFunctions.foreach { case (name, f) => create(name, es => f(es(0), es(1))) }
     // exact money/quantity sum as SQL: dsum(x, scale) — the int128
     // fixed-point aggregate behind the relational defs. Input is taken
     // as DOUBLE and scaled by the oracle-exact rint cast

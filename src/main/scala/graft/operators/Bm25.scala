@@ -213,7 +213,7 @@ object Bm25 {
     // → probe, strictly sequential. Applied as its own crossJoin AFTER
     // the probe join, the stats agg builds CONCURRENTLY with the tf
     // side (broadcast futures overlap): measured 0.272 vs 0.370 s warm
-    // pinned at sf0.1, min of 5 (tools/BmLab; the r13 fold was the q61
+    // pinned at sf0.1, min of 5 (PERF_r14.md; the r13 fold was the q61
     // regression r13 VERDICT flagged). (A tag-union single-agg variant
     // was also measured and REJECTED earlier: 3 jobs but a costlier
     // merge-joined window plan — 0.58 vs 0.44 s.)

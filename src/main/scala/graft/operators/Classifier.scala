@@ -52,7 +52,7 @@ object Classifier {
     * BYTES by the codegen kernel (bit-parity with the hex/conv chain
     * pinned by TextKernelsSpec). The built-in chain allocated a 32-char
     * hex string + substring + base-16 parse per gram; at ~200 grams/doc
-    * that was q173's whole gap to the oracle (r16 ClassifierLab). */
+    * that was q173's whole gap to the oracle (PERF_r16.md). */
   private def fidOf(g: Column, dim: Int): Column =
     org.apache.spark.sql.graft.Bridge.column(
       org.apache.spark.sql.graft.Md5Fid(

@@ -208,7 +208,7 @@ object Graph {
     // no-visited-set re-expansion is ≤ maxDepth × reached — fine at
     // depth 3 at any scale; deeper walks keep the pruned loop below.
     if (maxDepth <= 3) {
-      // Small-graph broadcast hint (r14, BfsLab-measured): when the
+      // Small-graph broadcast hint (r14, PERF_r14.md): when the
       // edge frame's own size estimate is broadcast-class (≤8× the
       // session threshold — the pinIfSmall gate family), hint each
       // level's frontier broadcast so the per-depth join STREAMS the
@@ -220,7 +220,7 @@ object Graph {
       // (graph/streaming.rs:33). Past the gate (big graphs — the
       // 1000-executor path) the shuffling joins + AQE stay exactly as
       // before. A/B: q82-shape 0.54→0.39 s, q83-shape 0.30→0.25 s
-      // (BfsLab, sf0.1, min of 5, value parity asserted).
+      // (sf0.1, min of 5, value parity asserted; PERF_r14.md).
       val frontierHint: DataFrame => DataFrame =
         if (smallGraphGate(edges)) broadcast else identity
       var level = startsFrontier
@@ -230,7 +230,7 @@ object Graph {
         val lvl = frontierHint(level)
         val joined = lvl.join(eD, lvl("node") === col("__esrc"))
           .select(lvl("start"), col("__edst").as("node"))
-        // Level 1 skips its dedup exchange (r15, BfsLab-measured ~5%
+        // Level 1 skips its dedup exchange (r15, PERF_r15.md: ~5%
         // + one job): the start frontier is already distinct, so a
         // level-1 duplicate requires PARALLEL (src,dst) edges — the
         // final min-depth agg absorbs those unconditionally (result
@@ -522,7 +522,7 @@ object Graph {
     // Exchange count hits the theoretical minimum for fixed-point
     // iteration: `iters` contribution aggs + the final delivery
     // (measured: q149 1.33 → 0.82 s at sf0.1, bit-identical ranks —
-    // PrLab). Arithmetic per edge is unchanged, so results match the
+    // PERF_r14.md §1). Arithmetic per edge is unchanged, so results match the
     // node-frame path exactly. Same broadcast gate: above the threshold
     // the joins shuffle (SMJ) — the 1000-executor scale path.
     if (!derived && iters <= 5 && baseExpr.isDefined) {

@@ -85,11 +85,6 @@ object Pq {
     }
   }
 
-  /** Nearest-centroid code per subspace (build-time UDF over the
-    * broadcast codebooks — same cost shape as [[Ivf]] assignment). */
-  private[operators] def udfEncode(cb: Array[Array[Array[Float]]]) =
-    udf { (v: Seq[Float]) => encodeOne(cb, v.toArray) }
-
   // ---- Residual (IVF-PQ) encoding -----------------------------------
   //
   // Codes quantize v − centroid[cell] instead of v (the FAISS
@@ -236,15 +231,9 @@ object Pq {
       mode == 1)
   }
 
-  /** Calibration helper ([[graft.RecallProbe]]): id + codes frame from
-    * in-memory codebooks, without the Materialize layer. */
-  def encodeForProbe(df: DataFrame, vecCol: String, idCol: String,
-      codebooks: Array[Array[Array[Float]]]): DataFrame =
-    df.select(col(idCol), udfEncode(codebooks)(col(vecCol)).as("codes"))
-
   /** The residual `(id, cell, codes)` projection from in-memory models —
     * the encode step of [[IvfPq.materializedIndexAt]] and the
-    * calibration labs' direct path. */
+    * calibration path of `tools/RecallCurve`. */
   def encodeResidual(df: DataFrame, vecCol: String, idCol: String,
       codebooks: Array[Array[Array[Float]]],
       cents: Array[(Int, Array[Float])]): DataFrame =

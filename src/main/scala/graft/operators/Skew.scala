@@ -34,7 +34,7 @@ object Skew {
     * dominated by broadcasting it — every executor probes a local hash
     * relation, so a hot key's fan-out never concentrates on a reducer
     * (the full skew immunity salting buys) and BOTH exchanges disappear
-    * (TextPipeLab at sf0.1: 0.657 → 0.246 s). Identical rows: same
+    * (sf0.1: 0.657 → 0.246 s, VERDICT.md row 12). Identical rows: same
     * inner equi-join, same output columns. Above the threshold — the
     * 100 TB shape salting exists for — the salted sort-merge path is
     * unchanged. Force the salted path in tests/probes by setting

@@ -338,10 +338,10 @@ object GraphQueries {
         |GROUP BY node ORDER BY node""".stripMargin) { (s, d) =>
       // pinned: the wedge-join chain is fully broadcast-hinted under the
       // small-graph gate, so static planning keeps the same joins and
-      // drops AQE's stage jobs (PinLab: 0.478 → 0.441 s, 6 → 4 jobs).
+      // drops AQE's stage jobs (PERF_r14.md: 0.478 → 0.441 s, 6 → 4 jobs).
       // The BFS/SSSP loops (q82/q83/q148) measured WORSE pinned — their
       // frontier joins need AQE's runtime small-side detection — and are
-      // left adaptive (PinLab, PERF_r14.md).
+      // left adaptive (PERF_r14.md).
       Graph.pinIfSmall(
         Graph.orderedIfSmall(Graph.triangleCounts(coPurchasePairs(s, d)),
           probe = coPurchasePairs(s, d))(col("node")),

@@ -56,7 +56,7 @@ object PipelineQueries {
     * source, capped at the session's shuffle partitions. The flat 2.4 MB
     * testdata file keeps the original 4 (state-file overhead dominates
     * at pin volume); a 10× corpus gets the parallelism its shuffle needs
-    * (StreamLab at 10×/21 MB: q131 ran 4.08 s with 4 partitions, 3.22 s
+    * (PERF_r14.md, 10×/21 MB: q131 ran 4.08 s with 4 partitions, 3.22 s
     * with 32 — the fixed count was the bottleneck, r14 scale probe).
     * Used by the AGGREGATION streams (q127/q131), which shuffle the full
     * event volume; the stream-stream join (q147) keeps its fixed count —

@@ -26,7 +26,7 @@ object RelationalQueries {
     * ([[org.apache.spark.sql.graft.FixedPointSum]]): same per-row
     * decimal rounding as the oracle (rint in double space — DuckDB's
     * own double→decimal cast), same exact sum, with NO decimal values
-    * anywhere in the plan (Q1Lab, 18M rows, one session: stock decimal
+    * anywhere in the plan (PERF_r14.md, 18M rows, one session: stock decimal
     * Sum 1.02 s → int128-over-decimal-cast 0.57 s → int128-over-rint
     * 0.26 s, the plain-double-sum floor while staying exact). */
   private def dsum(c: Column, scale: Int = 2): Column =

@@ -16,7 +16,7 @@ object VelesqlQueries {
     QueryDef(name, oracle) { (s, d) =>
       val out = new Compiler(s, new Catalog(s, d), params, nowEpoch).run(text)
       // pin=true: latency-class defs whose multi-leg chains measured
-      // faster under a static plan (PinLab; q104 0.465→0.321 s, 7→5
+      // faster under a static plan (PERF_r14.md; q104 0.465→0.321 s, 7→5
       // jobs) — gated on the corpus size estimate like every other pin
       if (pin) graft.operators.Graph.pinIfSmall(out,
         probe = graft.Tables.table(s, d, "documents"))
@@ -574,7 +574,7 @@ object VelesqlQueries {
     // resolution beyond a single query's 10). The reference bar is
     // recall ≥ 0.95 (docs/BENCHMARKS.md:96-102, mirror of
     // benches/recall_benchmark.rs): hits ≥ ⌈30×0.95⌉ = 29; measured 29/30
-    // at sf0.01 and 30/30 at sf0.1 (RecallProbe). The oracle row is the
+    // at sf0.01 and 30/30 at sf0.1 (PERF_r17_ann.md). The oracle row is the
     // constant 1 — a recall dip below the bar flips the engine row to 0
     // and turns this red in CORRECTNESS. (The testdata embeddings are
     // near-uniform directions — the ANN worst case; 'balanced'/'fast'
@@ -586,7 +586,7 @@ object VelesqlQueries {
     // ---- V8 via the TRAINED index: same recall pin as q123 but through
     // `WITH (index = 'ivf')` — the k-means cell probe (q59's materialized
     // index) at its accurate tier (nprobe = k-1 of 8 cells; measured
-    // 29/30 at sf0.01, 30/30 at sf0.1 — RecallProbe). Same ≥0.95 bar.
+    // 29/30 at sf0.01, 30/30 at sf0.1 — PERF_r17_ann.md). Same ≥0.95 bar.
     QueryDef("q125_ann_recall_ivf", "SELECT CAST(1 AS INT) AS recall_ok") { (s, d) =>
       recallPin(s, d, "mode = 'accurate', index = 'ivf'")
     },
@@ -595,7 +595,7 @@ object VelesqlQueries {
     // q123/q125 but through `WITH (index = 'hnsw')` — IVF-cell routing +
     // per-cell navigable-graph walk (reference's core structure,
     // index/hnsw/native_index.rs:230, re-expressed as a batch-built
-    // adjacency table). Calibration (RecallProbe, near-uniform
+    // adjacency table). Calibration (PERF_r11.md, near-uniform
     // worst-case testdata): accurate tier (nprobe=7, ef=96) → 29/30 at
     // sf0.01 and 30/30 at sf0.1, scoring ~2.6× FEWER candidates than
     // the ivf tier's full-cell scans (HnswSpec pins the count). Same
@@ -606,7 +606,7 @@ object VelesqlQueries {
 
     // ---- V11+ beyond-reference: PQ ADC recall pin — same shape as
     // q123/q125 but through `WITH (quantization = 'pq')`: narrow-codes
-    // ADC ordering + exact rerank. Calibration (RecallProbe, same
+    // ADC ordering + exact rerank. Calibration (PERF_r17.md, same
     // near-uniform worst-case testdata): m=8 k=32 oversampling=16 →
     // 29/30 at sf0.01. Same ≥0.95 bar as the reference's Accurate tier.
     QueryDef("q133_pq_recall", "SELECT CAST(1 AS INT) AS recall_ok") { (s, d) =>
@@ -617,7 +617,7 @@ object VelesqlQueries {
     // cluster-scale ANN shape (coarse cell probe prunes the scan to
     // nprobe/cells of the NARROW codes table, ADC orders inside, exact
     // rerank). Same shape as q125/q133 but `WITH (mode = 'accurate',
-    // index = 'ivf', quantization = 'pq')`. Calibration (RecallProbe,
+    // index = 'ivf', quantization = 'pq')`. Calibration (PERF_r17_ann.md,
     // near-uniform worst-case testdata): nprobe=7 of 8 cells at the
     // composed default oversampling=64 → 29/30 at sf0.01 and 30/30 at
     // sf0.1. Same ≥0.95 Accurate-tier bar as q123/q125/q133.

@@ -1,7 +1,6 @@
 package graft.server
 
 import graft.Graft
-import org.apache.spark.sql.SparkSession
 
 /** `runMain graft.server.Serve <dataDir> [port]` — stand the REST
   * façade up over a data dir (the reference's `velesdb-server` binary
@@ -10,15 +9,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.drop(1).headOption.map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.serviceConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.service(8)
     spark.sparkContext.setLogLevel("WARN")
     val srv = new RestServer(Graft(spark, dataDir), port = port).start()
     println(s"GRAFT_SERVE listening on port ${srv.boundPort} over $dataDir")

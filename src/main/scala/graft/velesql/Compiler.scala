@@ -323,8 +323,8 @@ class Compiler(
             val kCells = spark.conf.get("graft.ivf.cells", "8").toInt
             val m = spark.conf.get("graft.hnsw.m", "8").toInt
             // nprobe mirrors the ivf tiers; ef is the walk budget
-            // (calibrated via RecallProbe on the near-uniform worst-case
-            // testdata: accurate = nprobe 7, ef 96 → ≥29/30 recall@10)
+            // (calibrated on the near-uniform worst-case testdata,
+            // PERF_r11.md: accurate = nprobe 7, ef 96 → ≥29/30 recall@10)
             val nprobe = t match { case "fast" => 2; case "balanced" => 4; case _ => kCells - 1 }
             // The IVF half is the centroid router AND the cost-aware
             // fallback target; resolving it first yields the corpus
@@ -418,7 +418,7 @@ class Compiler(
                 "written user collection (the trained index is materialized " +
                 "per source; joins/derived frames can't use it)"))
             val k = spark.conf.get("graft.ivf.cells", "8").toInt
-            // nprobe per tier, calibrated like the LSH radii (RecallProbe,
+            // nprobe per tier, calibrated like the LSH radii (PERF_r17_ann.md,
             // same worst-case near-uniform testdata): fast=2 ≈ 0.43-0.53,
             // balanced=4 ≈ 0.77-0.8, accurate=7 ≥ 0.95 — the reference's
             // Accurate bar, oracle-pinned by q125_ann_recall_ivf
@@ -441,8 +441,8 @@ class Compiler(
             import graft.operators.Ann
             val nPlanes = spark.conf.get("graft.ann.planes", "6").toInt
             // Tier → probe radius, calibrated on the testdata embeddings
-            // (near-uniform directions — the ANN worst case; RecallProbe
-            // measured recall@10 over 3 queries): fast r=1 ≈ 0.25,
+            // (near-uniform directions — the ANN worst case; recall@10
+            // over 3 queries, PERF_r17_ann.md): fast r=1 ≈ 0.25,
             // balanced r=2 ≈ 0.45-0.57, accurate r=4 ≥ 0.95 — the
             // reference's Accurate-tier recall bar (docs/BENCHMARKS.md:
             // 96-102), oracle-pinned by q123_ann_recall. On clustered
@@ -536,13 +536,13 @@ class Compiler(
         val isInt8 = quant.exists(q => q == "int8" || q == "sq8" || q == "quantized")
         val isSketch = quant.exists(q => q == "binary" || q == "dual" || q == "hybrid")
         val isPq = quant.contains("pq")
-        // PQ's calibrated operating point (RecallProbe / q133_pq_recall)
+        // PQ's calibrated operating point (PERF_r17.md / q133_pq_recall)
         // only reaches the >=0.95 recall bar at oversampling=16 for the
         // default m=8/k=32 — a plain WITH (quantization='pq') must land
         // there, not at the generic sketch default of 4.
         // composed IVF-PQ loses a little recall to the coarse probe, so
         // its calibrated default is higher: nprobe=7, oversampling=64 →
-        // 29/30 at sf0.01 AND 30/30 at sf0.1 (RecallProbe; 32 measures
+        // 29/30 at sf0.01 AND 30/30 at sf0.1 (PERF_r17_ann.md; 32 measures
         // 29/30 and 28/30 — the pool must grow with the corpus fraction
         // it represents, and 64 holds the bar at both scales)
         val pqProbing = quant.contains("pq") &&
@@ -561,7 +561,7 @@ class Compiler(
           // filtered frame for exact rerank. ADC is ordering-only, so
           // 'pq' is two-phase by construction (rerank implicit). On the
           // near-uniform testdata (the ANN worst case), m=8 k=32
-          // oversampling=16 measures recall@10 = 29/30 (RecallProbe) —
+          // oversampling=16 measures recall@10 = 29/30 (PERF_r17.md) —
           // pinned by q133_pq_recall.
           val pqSrc = (if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None)
             .getOrElse(fail("WITH quantization='pq' needs a dataset table " +

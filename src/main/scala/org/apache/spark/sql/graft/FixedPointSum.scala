@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * `DECIMAL(28,s)`, which exceeds the compact-Long decimal range, so
   * every row's add churns JavaBigDecimal allocations. On TPC-H Q1 at
   * 18M rows that is 3.3× the cost of the same aggregation over
-  * primitive sums (Q1Lab: 0.895 s decimal vs 0.270 s double vs
+  * primitive sums (PERF_r14.md: 0.895 s decimal vs 0.270 s double vs
   * 0.149 s scan floor). The Spark optimizer's own `DecimalAggregates`
   * unscaled-long rewrite only fires at precision ≤ 8 — too narrow for
   * money columns.
@@ -386,7 +386,7 @@ object FixedPointSum {
 
   /** [[dsum]] for a DOUBLE column with the per-row cast done the
     * oracle's way ([[DoubleToScaledLong]]): rint in double space, no
-    * decimal values anywhere in the plan. Q1Lab, 18M rows, one
+    * decimal values anywhere in the plan. PERF_r14.md, 18M rows, one
     * session: stock decimal Sum 1.02 s → int128 over decimal cast
     * 0.57 s → int128 over rint 0.26 s — at the plain-double-sum floor
     * (0.27 s) while staying exact; bit-identical output to all. */

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * which at p > 8 exceeds the compact-long decimal range and churns a
   * JavaBigDecimal per row, while the int128 aggregate's update/merge
   * are a handful of primitive long ops inside whole-stage codegen
-  * (Q1Lab, 18M rows: 1.02 s stock → 0.57 s). Spark's own
+  * (PERF_r14.md, 18M rows: 1.02 s stock → 0.57 s). Spark's own
   * `DecimalAggregates` rule does the same unscaled-long trick but only
   * fires at p ≤ 8 — too narrow for money columns; this rule is its
   * wide-precision sibling.

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The built-in chain allocates a 32-char hex string, a 15-char
   * substring and a base-16 parse PER GRAM — at ~200 grams/doc that
   * chain (not the HOF-vs-explode plan shape) was q173's entire gap to
-  * the DuckDB oracle (r16 ClassifierLab: both plan shapes measured
+  * the DuckDB oracle (PERF_r16.md: both plan shapes measured
   * ~equal). These kernels digest the UTF-8 bytes directly and reduce
   * the top 60 bits mod dim; bit-parity with the built-in chain is
   * pinned by TextKernelsSpec.

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** r14 hardening specs: the folded PageRank superstep's equivalence on
-  * the PERSONALIZED branch (the r13 PrLab cross-check only exercised the
-  * uniform base), the oversized-inline-seed guard, and pinStaticPlan's
-  * thread safety (the shared-conf race from r13 ADVICE).
+  * the PERSONALIZED branch (the r13 cross-check, PERF_r14.md §1, only
+  * exercised the uniform base), the oversized-inline-seed guard, and
+  * pinStaticPlan's thread safety (the shared-conf race from r13 ADVICE).
   */
 class GraphPinSpec extends SparkSpecBase {
 
@@ -31,7 +31,7 @@ class GraphPinSpec extends SparkSpecBase {
     (nodes, eDeg)
   }
 
-  /** e6-snapped ranks keyed by node (the PrLab cross-check idiom: exact
+  /** e6-snapped ranks keyed by node (the PERF_r14.md §1 cross-check idiom: exact
     * integer comparison, robust to partition-order ULP drift). */
   private def snapped(df: DataFrame): Map[Long, Long] =
     df.select(col("node"),

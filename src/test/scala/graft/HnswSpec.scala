@@ -170,24 +170,13 @@ class HnswSpec extends SparkSpecBase {
     // warm pass: index build + the one persisted count (jobs allowed)
     compile(queries(0), "mode = 'accurate', index = 'hnsw'")
     compile(queries(0), "quantization = 'pq'")
-    org.apache.spark.sql.graft.ListenerDrain(spark)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = org.apache.spark.sql.graft.JobMeter(spark) {
       compile(queries(1), "mode = 'accurate', index = 'hnsw'")
       compile(queries(1), "quantization = 'pq'")
-      org.apache.spark.sql.graft.ListenerDrain(spark)
-      assert(jobs.get() == 0,
-        s"a warm adaptive-tier compile scheduled ${jobs.get()} Spark job(s); " +
-          "the corpus count must come from the persisted memo, not a count() job")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }.jobs
+    assert(jobs == 0,
+      s"a warm adaptive-tier compile scheduled $jobs Spark job(s); " +
+        "the corpus count must come from the persisted memo, not a count() job")
   }
 
   test("countMemo: persists across JVMs, recounts only on a content re-stamp") {

@@ -5,11 +5,9 @@ import graft.server.RestServer
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.JobMeter
 import org.apache.spark.sql.types._
 
 /** Query-time BM25 on user collections: per-row scores from one stats
@@ -153,43 +151,21 @@ class TextSearchSpec extends SparkSpecBase {
     }
   }
 
-  /** (jobs, stages run, shuffle bytes written + read) of `f`. */
-  private def measured(f: => Unit): (Long, Long, Long) = {
-    val jobs = new AtomicLong
-    val stages = new AtomicLong
-    val shuffle = new AtomicLong
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten +
-            m.shuffleReadMetrics.totalBytesRead)
-        }
-    }
-    org.apache.spark.sql.graft.ListenerDrain(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { f; org.apache.spark.sql.graft.ListenerDrain(spark) }
-    finally spark.sparkContext.removeSparkListener(l)
-    (jobs.get, stages.get, shuffle.get)
-  }
-
   test("job budget: BM25 top-k is one stats job plus one shuffle-free scan") {
     withCollection(genDocs(5, 400)) { g =>
       g.sql("SELECT * FROM docs WHERE text MATCH 'index' LIMIT 10").collect() // warm
       // fresh query text: a plan-memo miss, so the stats job is counted
-      val (jobs, _, shuffle) = measured {
+      val bm25 = JobMeter(spark) {
         g.sql("SELECT * FROM docs WHERE text MATCH 'spark stream' LIMIT 10").collect()
       }
-      assert(jobs <= 3, s"BM25 MATCH … LIMIT 10 ran $jobs jobs")
-      assert(shuffle == 0, s"BM25 MATCH … LIMIT 10 shuffled $shuffle bytes")
+      assert(bm25.jobs <= 3, s"BM25 MATCH … LIMIT 10 ran ${bm25.jobs} jobs")
+      assert(bm25.shuffleBytes == 0,
+        s"BM25 MATCH … LIMIT 10 shuffled ${bm25.shuffleBytes} bytes")
       val q = Seq(0.1f, 0.2f, 0.3f, 0.4f).toList
       val hybrid = "SELECT * FROM docs WHERE text MATCH 'merge vector' AND vector NEAR $v " +
         "LIMIT 10 USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)"
       g.sql(hybrid.replace("merge vector", "graph"), Map("v" -> q)).collect() // warm
-      val (hJobs, _, _) = measured(g.sql(hybrid, Map("v" -> q)).collect())
+      val hJobs = JobMeter(spark)(g.sql(hybrid, Map("v" -> q)).collect()).jobs
       assert(hJobs <= 5, s"hybrid ran $hJobs jobs")
     }
   }
@@ -199,18 +175,18 @@ class TextSearchSpec extends SparkSpecBase {
       withRest(g) { post =>
         // warm each route, then measure a fresh request (a plan-memo miss)
         post("search", """{"vector": [0.1, 0.2, 0.3, 0.4], "top_k": 10}""")
-        val (jobs, stages, shuffle) =
-          measured(post("search", """{"vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}"""))
-        assert((jobs, stages, shuffle) == ((1L, 1L, 0L)),
+        val knn =
+          JobMeter(spark)(post("search", """{"vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}"""))
+        assert((knn.jobs, knn.stages, knn.shuffleBytes) == ((1L, 1L, 0L)),
           "POST search: (jobs, stages, shuffle bytes)")
         post("search/text", """{"query": "index", "top_k": 10}""")
-        val (tJobs, _, tShuffle) =
-          measured(post("search/text", """{"query": "spark stream", "top_k": 10}"""))
-        assert(tJobs <= 2, s"search/text ran $tJobs jobs")
-        assert(tShuffle == 0, s"search/text shuffled $tShuffle bytes")
+        val text =
+          JobMeter(spark)(post("search/text", """{"query": "spark stream", "top_k": 10}"""))
+        assert(text.jobs <= 2, s"search/text ran ${text.jobs} jobs")
+        assert(text.shuffleBytes == 0, s"search/text shuffled ${text.shuffleBytes} bytes")
         post("search/hybrid", """{"query": "graph", "vector": [0.1, 0.2, 0.3, 0.4], "top_k": 10}""")
-        val (hJobs, _, _) = measured(post("search/hybrid",
-          """{"query": "merge vector", "vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}"""))
+        val hJobs = JobMeter(spark)(post("search/hybrid",
+          """{"query": "merge vector", "vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}""")).jobs
         assert(hJobs <= 3, s"search/hybrid ran $hJobs jobs")
       }
     }

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 import graft.operators.Graph
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.graft.{CheckpointBlocks, ListenerDrain}
+import org.apache.spark.sql.graft.{CheckpointBlocks, JobMeter, Metered}
 import org.apache.spark.sql.types.StructType
 
 /** [[Graph.triangleCounts]] — degree-ordered triangle enumeration vs a
@@ -207,22 +204,6 @@ class TriangleSpec extends SparkSpecBase {
 
   private val GateJob = "graft local-finish gate"
 
-  /** `f`'s value and the descriptions of the jobs it scheduled. */
-  private def withJobs[T](f: => T): (T, Seq[String]) = {
-    val jobs = new ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        ()
-      }
-    }
-    ListenerDrain(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { val r = f; ListenerDrain(spark); (r, jobs.asScala.toSeq) }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** Sorted rows (nulls kept) and schema of an operator result, freed
     * after reading. */
   private def rowsAndSchema(res: DataFrame): (Seq[Row], StructType) =
@@ -265,7 +246,7 @@ class TriangleSpec extends SparkSpecBase {
       (if (g == "LPA graph") 1 to 4 else Seq(3))
         .map(i => s"LPA iters=$i" -> ((e: DataFrame) => Graph.lpaCommunities(e, i)))
     val local = (for ((g, in) <- graphs; (op, f) <- ops(g)) yield {
-      val (res, jobs) = withGate(None)(withJobs(f(in)))
+      val Metered(res, jobs, _, _) = withGate(None)(JobMeter(spark)(f(in)))
       val atDefault = rowsAndSchema(res)
       // the default gate finishes every null-free graph on the driver
       if (g != "null endpoint")
@@ -295,7 +276,7 @@ class TriangleSpec extends SparkSpecBase {
         "kCore" -> (Graph.kCore(_, 2)),
         "components" -> (operators.Dedup.components(_)),
         "LPA" -> (Graph.lpaCommunities(_, 3)))) {
-      val (res, jobs) = withJobs(f(e))
+      val Metered(res, jobs, _, _) = JobMeter(spark)(f(e))
       // jobs before the gate belong to the input's own plan (components'
       // distinct shuffle); the gate must be the only one and the last
       assert(jobs.count(_ == GateJob) == 1, s"$op: $jobs")
@@ -311,7 +292,8 @@ class TriangleSpec extends SparkSpecBase {
     val e = lpaGraph.toDF("a", "b")
     val expected = rowsAndSchema(Graph.lpaCommunities(e, 3))
     for ((gate, driver) <- Seq("18" -> true, "17" -> false)) {
-      val (res, jobs) = withGate(Some(gate))(withJobs(Graph.lpaCommunities(e, 3)))
+      val Metered(res, jobs, _, _) =
+        withGate(Some(gate))(JobMeter(spark)(Graph.lpaCommunities(e, 3)))
       assert(rowsAndSchema(res) == expected, s"gate $gate")
       assert(jobs.lastOption.contains(GateJob) == driver, s"gate $gate: $jobs")
       assert(jobs.count(_ == GateJob) == (if (driver) 2 else 1), s"gate $gate: $jobs")

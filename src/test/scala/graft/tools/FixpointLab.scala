@@ -1,11 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBlocks
+import org.apache.spark.sql.graft.{CheckpointBlocks, JobMeter}
 
 /** Driver finish vs distributed loop for the three iterative graph
   * operators — `Graph.kCore`, `Dedup.components` and
@@ -50,18 +47,13 @@ object FixpointLab {
     println(s"pairs=$n (symmetrized ${2 * n}), " +
       s"partitions=${pairs.rdd.getNumPartitions}, cores=${spark.sparkContext.defaultParallelism}")
 
-    val jobs = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    })
-    /** (seconds, jobs) of `f`. */
-    def phase[T](f: => T): (T, Double, Int) = {
-      org.apache.spark.sql.graft.ListenerDrain(spark)
-      val j0 = jobs.get(); val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ListenerDrain(spark)
-      (r, dt, jobs.get() - j0)
+    /** (value, seconds, jobs) of `f`. */
+    def phase[T](f: => T): (T, Double, Long) = {
+      val m = JobMeter(spark) {
+        val t0 = System.nanoTime()
+        (f, (System.nanoTime() - t0) / 1e9)
+      }
+      (m.value._1, m.value._2, m.jobs)
     }
     val ops = Seq[(String, DataFrame => DataFrame)](
       s"kCore k=$k" -> (graft.operators.Graph.kCore(_, k)),

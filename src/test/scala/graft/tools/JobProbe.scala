@@ -1,9 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
-
-import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.graft.JobMeter
 
 /** Diagnostic main: for each named query, report the WARM wall time and
   * the number of Spark jobs + stages one execution schedules. The job
@@ -17,35 +14,9 @@ import java.util.concurrent.atomic.AtomicInteger
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
     val verbose = sys.env.get("JOBPROBE_VERBOSE").exists(_ == "1")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (verbose) {
-          val desc = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-          val names = j.stageInfos.map(si => s"${si.name.takeWhile(_ != '\n').take(60)}[${si.numTasks}]")
-          println(s"  JOB ${j.jobId}: ${desc.take(60)} stages=${names.mkString(" | ")}")
-        }
-      }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
-    })
 
     graft.Tables.All.foreach(n => graft.Tables.table(spark, sfDir, n).count())
 
@@ -58,15 +29,13 @@ object JobProbe {
         println(s"JOBPROBE ${q.name} FAILED ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       spark.catalog.clearCache()
-      // listener events are async — sleep to drain before sampling
-      Thread.sleep(500)
-      val j0 = jobs.get(); val s0 = stages.get()
-      val t0 = System.nanoTime()
-      try graft.Bench.force(q.fn(spark, sfDir)) catch { case _: Throwable => }
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
+      val m = JobMeter(spark) {
+        val t0 = System.nanoTime()
+        try graft.Bench.force(q.fn(spark, sfDir)) catch { case _: Throwable => }
+        (System.nanoTime() - t0) / 1e9
+      }
       spark.catalog.clearCache()
-      val nJobs = jobs.get() - j0; val nStages = stages.get() - s0
+      if (verbose) m.descriptions.foreach(d => println(s"  JOB ${d.take(60)}"))
       if (sys.env.get("JOBPROBE_EXPLAIN").contains("1"))
         try println(q.fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode))
@@ -76,7 +45,7 @@ object JobProbe {
         try " rows=" + q.fn(spark, sfDir).limit(3).collect().map(_.toString).mkString(";")
         catch { case _: Throwable => " rows=ERR" }
       else ""
-      println(f"JOBPROBE ${q.name}%-28s warm=${sec}%.3fs jobs=$nJobs stages=$nStages$peek")
+      println(f"JOBPROBE ${q.name}%-28s warm=${m.value}%.3fs jobs=${m.jobs} stages=${m.stages}$peek")
     }
     spark.stop()
   }

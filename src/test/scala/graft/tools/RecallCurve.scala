@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.{Ann, Hnsw, Ivf, Knn, Pq}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Reference-scale ANN recall curve (r15 verdict ask #4): a 100K×768D
@@ -25,12 +25,7 @@ object RecallCurve {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
     val dim = args.drop(1).headOption.map(_.toInt).getOrElse(768)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val tile = s"/tmp/graft_recall_tile_${n}_$dim"

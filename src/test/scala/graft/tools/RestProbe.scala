@@ -5,13 +5,11 @@ import graft.server.RestServer
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.SplittableRandom
-import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.JobMeter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -77,17 +75,6 @@ object RestProbe {
     g.collections.upsert("docs", points)
     g.collections.upsertEdges("docs", edges)
 
-    val jobs, stages, shuffle = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
-        }
-    })
     @volatile var lastPlan: QueryExecution = null
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = lastPlan = qe
@@ -125,17 +112,16 @@ object RestProbe {
       val built = if (method == "GET") b.GET().build()
         else b.header("Content-Type", "application/json")
           .POST(HttpRequest.BodyPublishers.ofString(body)).build()
-      org.apache.spark.sql.graft.ListenerDrain(spark)
-      val before = Seq(jobs.get, stages.get, shuffle.get,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
-      val t0 = System.nanoTime()
-      val resp = http.send(built, HttpResponse.BodyHandlers.ofString())
-      val ms = (System.nanoTime() - t0) / 1e6
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val m = JobMeter(spark) {
+        val t0 = System.nanoTime()
+        val resp = http.send(built, HttpResponse.BodyHandlers.ofString())
+        (resp, (System.nanoTime() - t0) / 1e6)
+      }
+      val (resp, ms) = m.value
       require(resp.statusCode() == 200, s"$path: ${resp.body().take(300)}")
-      org.apache.spark.sql.graft.ListenerDrain(spark)
-      val after = Seq(jobs.get, stages.get, shuffle.get,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
-      ms +: after.zip(before).map { case (a, b) => (a - b).toDouble }
+      Seq(ms, m.jobs.toDouble, m.stages.toDouble, m.shuffleBytes.toDouble,
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles).toDouble)
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def row(kind: String, runs: Seq[Seq[Double]]): String = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic ~K× scale-up of a testdata dir (r12/r13 VERDICT ask #1:
@@ -32,15 +32,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/root/repo/target/scaleprobe/sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     val tiles = spark.range(k).select(col("id").as("__tile"))

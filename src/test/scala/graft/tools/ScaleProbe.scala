@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Measures the scaling exponent of selected queries across dataset
   * dirs (r12/r13 VERDICT ask #1). For each (dir, query): one untimed
@@ -21,18 +20,7 @@ object ScaleProbe {
       "/root/testdata/sf0.1,/root/repo/target/scaleprobe/sf1")
       .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     val reps = sys.env.get("SCALEPROBE_REPS").map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val selected = graft.SparkEntry.allDefs.sortBy(_.name)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Where do the streaming pins (q147 stream-stream interval join, q131
@@ -14,15 +13,7 @@ object StreamJoinLab {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val shape = args.drop(1).headOption.getOrElse("join")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.SessionTuning.localConfigMap)
-      .getOrCreate()
+    val spark = graft.SessionTuning.local(32)
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.All.foreach(n => graft.Tables.table(spark, sfDir, n).count())
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
