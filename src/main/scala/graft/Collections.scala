@@ -10,10 +10,11 @@ import scala.jdk.CollectionConverters._
   * Reference: `Database { data_dir, collections }` with create/open/list/
   * delete (lib.rs:230-346) and `Collection::upsert/get/delete`
   * (collection/core/crud.rs:19-341). Spark shape: a collection is a
-  * parquet directory + a JSON meta sidecar; upsert is batch
-  * merge-by-id (latest batch wins), delete is an anti-join — Spark is
-  * batch-first, so index structures (BM25 postings, LSH buckets) are
-  * derived tables rebuilt per batch rather than incrementally mutated.
+  * JSON meta sidecar plus manifest-named parquet frames (points, edges);
+  * upsert is merge-by-id (latest write wins) published as a delta
+  * segment, delete is a tombstone id set ([[Collections.FrameManifest]]).
+  * Index structures (BM25 postings, LSH buckets) are derived tables
+  * built per immutable piece rather than incrementally mutated.
   *
   * Mutations are serialized per instance (the reference's collection
   * RwLock, lib.rs `Arc<RwLock<_>>`): concurrent REST upserts/deletes
@@ -44,45 +45,111 @@ object Collections {
     Files.deleteIfExists(p)
   }
 
-  /** Points-frame manifest (v2 storage): the Iceberg-shaped answer to
+  /** One write layered over a frame's base: `dir` is the write's own
+    * immutable data dir (None for a delete), `ids` the sorted distinct
+    * non-null ids it supersedes — rows with these ids in the base and in
+    * every EARLIER segment are no longer visible. */
+  private[graft] final case class Segment(dir: Option[String], ids: Array[Long])
+
+  /** Frame manifest (points and edges): the Iceberg-shaped answer to
     * "don't rewrite 100 TB per batch". A generation is an immutable set
-    * of parquet dirs NAMED by a manifest file, not a single directory:
+    * of parquet dirs NAMED by a manifest file, not a single directory.
+    * The BASE is one full write of the frame:
     *
-    *  - `buckets > 0` (hash-bucketed layout): `entries` maps bucket index
-    *    → relative leaf dir (`points-g<uuid>/__b=N`). Rows hash-bucket by
-    *    `xxhash64(id)`, so an upsert/delete batch touches only the
-    *    buckets its ids map to — the merge reads and REWRITES exactly
-    *    those leaf dirs and the new manifest re-points them, while every
-    *    untouched bucket keeps addressing its existing immutable dir.
-    *    Per-batch work is O(touched buckets), not O(collection).
-    *  - `buckets == 0` (flat layout): `dirs` lists whole data dirs —
-    *    used for range-clustered indexed collections (the property
-    *    clustering IS the layout, so merges are full rewrites by design)
-    *    and for compacted/empty frames.
+    *  - `buckets > 0` (hash-bucketed points): `entries` maps bucket index
+    *    → relative leaf dir (`points-g<uuid>/__b=N`); rows hash-bucket by
+    *    `xxhash64(id)`, files are id-sorted, so a point get scans only the
+    *    leaf dirs its ids hash to.
+    *  - `buckets == 0` (flat): `dirs` lists whole data dirs — the edge
+    *    frame, range-clustered indexed collections (the property
+    *    clustering IS the layout) and compacted/empty frames.
+    *
+    * `segments` layer the writes since the base in order, the reference's
+    * tombstone model (a Roaring deletion bitmap folded by autovacuum,
+    * column_store/mod.rs:420-573): an upsert publishes ONE small delta
+    * dir holding only its batch plus the ids it supersedes, a delete
+    * publishes ids only — no parquet, no Spark job. A write therefore
+    * costs O(batch), not O(collection). Readers see the base minus every
+    * segment's ids, plus each delta minus the ids of LATER segments
+    * (newest wins); the id sets are manifest-known literals, so no join
+    * is needed. A write that would take the segments' ids past
+    * [[FoldFraction]] of the base's `rows` is a full rewrite instead,
+    * which folds everything into a new base. With no segments the read
+    * plan is the base scan alone.
     *
     * `schema` is the frame's authoritative merged schema (JSON
     * StructType): readers pass it to the parquet scan explicitly, so a
-    * bucket written before a schema-widening batch null-fills without a
+    * file written before a schema-widening batch null-fills without a
     * distributed mergeSchema footer job, and writers detect column-type
-    * conflicts without IO. */
-  private[graft] final case class PointsManifest(
+    * conflicts without IO. `rows` is the base's row count (read from
+    * the parquet footers when the base is written; None on manifests
+    * that predate it). */
+  private[graft] final case class FrameManifest(
       buckets: Int,
       entries: Map[Int, String],
       dirs: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType]) {
-    /** Top-level `points-g*` dir names this manifest references. */
+      schema: Option[org.apache.spark.sql.types.StructType],
+      segments: Seq[Segment] = Nil,
+      rows: Option[Long] = None) {
+    /** Top-level `<frame>-g*` dir names this manifest references. */
     def topDirs: Set[String] =
-      (entries.values.map(_.takeWhile(_ != '/')) ++
-        dirs.map(_.takeWhile(_ != '/'))).toSet
+      (entries.values ++ dirs ++ segments.flatMap(_.dir))
+        .map(_.takeWhile(_ != '/')).toSet
+
+    /** Relative dirs of the base, in bucket order. */
+    def baseDirs: Seq[String] = entries.toSeq.sortBy(_._1).map(_._2) ++ dirs
+
+    /** (ids hidden in the base, ids hidden in each segment): the base
+      * loses every segment's ids, segment i loses those of segments
+      * after it. Computed once per parsed manifest (parses are cached). */
+    lazy val hidden: (Array[Long], IndexedSeq[Array[Long]]) = {
+      val later = new Array[Array[Long]](segments.size)
+      var acc = Array.emptyLongArray
+      for (i <- segments.indices.reverse) {
+        later(i) = acc
+        acc = (acc ++ segments(i).ids).sorted.distinct
+      }
+      (acc, later.toIndexedSeq)
+    }
+
+    /** Ids written or deleted since the base (with repeats). */
+    def segmentIds: Long = segments.map(_.ids.length.toLong).sum
   }
+
+  /** The fold rule: segments fold into a new base once their ids exceed
+    * this fraction of the base's rows — the reference's autovacuum
+    * threshold (20% deleted rows, column_store/mod.rs:420-573). */
+  private[graft] val FoldFraction = 0.2
+
+  /** `df` without the rows whose id is in `hidden` (sorted). Null ids
+    * are never hidden: they sit outside upsert semantics. An empty set
+    * returns `df` itself, so a segment-free read plans exactly as
+    * before. */
+  private[graft] def visible(df: DataFrame, idCol: String,
+      hidden: Array[Long]): DataFrame =
+    if (hidden.isEmpty) df
+    else df.where(col(idCol).isNull || !col(idCol).isin(hidden.toIndexedSeq: _*))
+
+  /** One cached index piece: `index` names it in the `…_p<N>_` kind
+    * family (bucket N of the base, or `buckets + i` for segment i),
+    * `dir` is its immutable source dir and `hidden` the ids the reader
+    * must filter out of it. */
+  final case class Piece(index: Int, dir: Path, hidden: Array[Long])
+
+  /** A frame's pieces with the authoritative read schema and the id
+    * column the `hidden` filters apply to. */
+  final case class Pieces(parts: Seq[Piece],
+      schema: org.apache.spark.sql.types.StructType, idCol: String)
 }
 
 /** @param retainGenerations how many manifest generations (current
-  *   included) survive each publish before [[vacuum]]-style GC removes
-  *   unreferenced data dirs — ≥2 keeps the just-superseded generation
-  *   alive for in-flight readers whose plans resolved file lists
-  *   already (the reference's compaction/autovacuum analog,
-  *   storage/compaction.rs / column_store/mod.rs:420-573).
+  *   included) of each frame survive a publish before [[vacuum]]-style
+  *   GC removes unreferenced data dirs — ≥2 keeps the just-superseded
+  *   generation alive for in-flight readers whose plans resolved file
+  *   lists already. Segment writes (see [[Collections.FrameManifest]])
+  *   leave the base referenced, so only folds, full rewrites and
+  *   compactions retire base dirs (the reference's compaction/autovacuum
+  *   analog, storage/compaction.rs / column_store/mod.rs:420-573).
   * @param generationGraceMs minimum AGE before an unreferenced data dir
   *   is physically deleted. The count-based window alone is not a
   *   correctness guarantee: under rapid successive publishes a reader's
@@ -94,12 +161,13 @@ object Collections {
   *   Manifest files themselves stay count-pruned (cheap, and readers
   *   hold resolved FILE lists, not manifests).
   * @param graceRetainMax hard COUNT cap on grace-retained unreferenced
-  *   generations. Each publish rewrites a full copy of the collection,
-  *   so an age-only grace makes steady-state disk = publish-rate ×
-  *   grace × collection size — a streaming foreachBatch sink or a REST
-  *   upsert storm retained hundreds of full copies where the old count
-  *   window kept 2, and vacuum() no longer reclaimed them either
-  *   (r16 ADVICE). Beyond the cap, the OLDEST unreferenced dirs delete
+  *   data dirs, per frame. A full rewrite (fold, type change, indexed
+  *   layout) leaves a full copy of the frame behind, so an age-only
+  *   grace makes steady-state disk = rewrite-rate × grace × frame size
+  *   — a streaming foreachBatch sink or a REST upsert storm retained
+  *   hundreds of full copies where the old count window kept 2, and
+  *   vacuum() no longer reclaimed them either (r16 ADVICE). Points and
+  *   edges share this GC. Beyond the cap, the OLDEST unreferenced dirs delete
   *   regardless of age: a reader must now fall `graceRetainMax`
   *   publishes behind mid-execution to notice, instead of
   *   `retainGenerations` — bounded disk with the same Delta-style
@@ -108,7 +176,7 @@ class Collections(spark: SparkSession, dataDir: String,
     retainGenerations: Int = 2,
     generationGraceMs: Long = 600000L,
     graceRetainMax: Int = 16) {
-  import Collections.{children, deleteRec, PointsManifest}
+  import Collections.{children, deleteRec, FrameManifest}
 
   private def root: Path = Paths.get(dataDir)
   /** Every name→path resolve goes through here: a name must be ONE
@@ -146,10 +214,11 @@ class Collections(spark: SparkSession, dataDir: String,
     * property value types against it and rejects with a SemanticError. */
   /** `buckets` fixes the id-hash bucket count of the points layout at
     * create time (like the reference's create-time storage regime): each
-    * bucket is one merge/rewrite unit, so size it to ~0.1–1 GB of data
-    * per bucket at the collection's target scale (16 covers request-
-    * sized stores; a 100 TB collection wants 10⁵-ish). More buckets =
-    * finer-grained incremental upserts, more files. */
+    * bucket is one file of a base rewrite, one point-get scan unit and
+    * one index piece, so size it to ~0.1–1 GB of data per bucket at the
+    * collection's target scale (16 covers request-sized stores; a 100 TB
+    * collection wants 10⁵-ish). More buckets = narrower gets and index
+    * pieces, more files. */
   def create(name: String, idCol: String = "id",
       vectorCol: Option[String] = None, metric: String = "cosine",
       storageMode: Option[String] = None,
@@ -237,26 +306,29 @@ class Collections(spark: SparkSession, dataDir: String,
     Option(n.get("buckets")).filter(_.isNumber).map(_.asInt).getOrElse(16)
   }
 
-  // ---- points-frame manifest IO (Collections.PointsManifest scaladoc
-  // has the layout story) ----
+  // ---- frame manifest IO (Collections.FrameManifest scaladoc has the
+  // layout story); `frame` is "points" or "edges" ----
 
-  private def manifestLink(name: String): Path =
-    colDir(name).resolve("points.manifest.json")
+  private def manifestLink(name: String, frame: String = "points"): Path =
+    colDir(name).resolve(s"$frame.manifest.json")
 
   /** The CURRENT manifest, resolved through its symlink (readers that
     * parsed it keep addressing immutable dirs across a concurrent
     * publish — the manifest analog of the old generation-symlink read). */
-  private[graft] def readManifest(name: String): Option[PointsManifest] = {
-    val link = manifestLink(name)
+  private[graft] def readManifest(name: String,
+      frame: String = "points"): Option[FrameManifest] =
+    manifestPath(name, frame).map(parseManifest)
+
+  private def manifestPath(name: String, frame: String): Option[Path] = {
+    val link = manifestLink(name, frame)
     if (!Files.exists(link)) None
-    else Some(parseManifest(
-      if (Files.isSymbolicLink(link))
-        link.getParent.resolve(Files.readSymbolicLink(link))
-      else link))
+    else Some(
+      if (Files.isSymbolicLink(link)) link.getParent.resolve(Files.readSymbolicLink(link))
+      else link)
   }
 
   /** Parsed-manifest LRU: a manifest file is immutable once written (a
-    * publish writes a NEW `points.manifest-*` and re-points the
+    * publish writes a NEW `<frame>.manifest-*` and re-points the
     * symlink), so (path, mtime, size) is a sound identity. REST point
     * routes resolve meta + schema per REQUEST (r16 ADVICE follow-up:
     * the id-type dispatch made the hottest route parse the manifest —
@@ -264,13 +336,13 @@ class Collections(spark: SparkSession, dataDir: String,
     * access-ordered cap keeps retired generations from pinning a
     * long-lived server. */
   private val manifestCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, PointsManifest](16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, FrameManifest](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, PointsManifest]): Boolean =
+          e: java.util.Map.Entry[String, FrameManifest]): Boolean =
         size() > 256
     })
 
-  private def parseManifest(p: Path): PointsManifest = {
+  private def parseManifest(p: Path): FrameManifest = {
     val key = s"$p:${Files.getLastModifiedTime(p).toMillis}:${Files.size(p)}"
     val hit = manifestCache.get(key)
     if (hit != null) return hit
@@ -279,9 +351,8 @@ class Collections(spark: SparkSession, dataDir: String,
     m
   }
 
-  private def parseManifest0(p: Path): PointsManifest = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(p))
+  private def parseManifest0(p: Path): FrameManifest = {
+    val n = Collections.jsonMapper.readTree(Files.readString(p))
     val entries = Option(n.get("entries")).map { e =>
       e.fields().asScala.map(kv => kv.getKey.toInt -> kv.getValue.asText()).toMap
     }.getOrElse(Map.empty[Int, String])
@@ -290,56 +361,67 @@ class Collections(spark: SparkSession, dataDir: String,
     val schema = Option(n.get("schema")).filterNot(_.isNull).map(s =>
       org.apache.spark.sql.types.DataType.fromJson(s.asText())
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-    PointsManifest(n.get("buckets").asInt(), entries, dirs, schema)
+    val segments = Option(n.get("segments")).map(_.elements().asScala.map { s =>
+      Collections.Segment(Option(s.get("dir")).filterNot(_.isNull).map(_.asText()),
+        s.get("ids").elements().asScala.map(_.asLong()).toArray)
+    }.toSeq).getOrElse(Nil)
+    val rows = Option(n.get("rows")).filter(_.isNumber).map(_.asLong())
+    FrameManifest(n.get("buckets").asInt(), entries, dirs, schema, segments, rows)
   }
 
-  private def renderManifest(m: PointsManifest): String = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
+  private def renderManifest(m: FrameManifest): String = {
+    val root = Collections.jsonMapper.createObjectNode()
     root.put("buckets", m.buckets)
     val e = root.putObject("entries")
     m.entries.toSeq.sortBy(_._1).foreach { case (b, d) => e.put(b.toString, d) }
     val ds = root.putArray("dirs")
     m.dirs.foreach(ds.add)
     m.schema.foreach(s => root.put("schema", s.json))
-    om.writeValueAsString(root)
+    m.rows.foreach(r => root.put("rows", r))
+    val segs = root.putArray("segments")
+    m.segments.foreach { s =>
+      val o = segs.addObject()
+      s.dir.foreach(o.put("dir", _))
+      val ids = o.putArray("ids")
+      s.ids.foreach(i => ids.add(i))
+    }
+    Collections.jsonMapper.writeValueAsString(root)
   }
 
   /** Write a new manifest generation and atomically swap the symlink;
     * then GC manifests/dirs beyond the retention window. */
-  private def publishManifest(name: String, m: PointsManifest): Unit = {
+  private def publishManifest(name: String, m: FrameManifest,
+      frame: String = "points"): Unit = {
     val dir = colDir(name)
     val mf = dir.resolve(
-      s"points.manifest-${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}.json")
+      s"$frame.manifest-${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}.json")
     Files.writeString(mf, renderManifest(m))
-    val link = manifestLink(name)
-    val tmp = dir.resolve(s"points.manifest.lnk-${mf.getFileName}")
+    val link = manifestLink(name, frame)
+    val tmp = dir.resolve(s"$frame.manifest.lnk-${mf.getFileName}")
     Files.createSymbolicLink(tmp, mf.getFileName)
     Files.move(tmp, link, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    gcPoints(name, retainGenerations)
+    gcFrame(name, frame, retainGenerations)
   }
 
-  /** Generation retention: keep the `retain` newest manifest files
-    * (always including the one the symlink targets), delete older
-    * manifests, then delete every `points-g*` data dir no retained
-    * manifest references. A legacy pre-manifest `points` symlink/dir is
-    * kept for one manifest cycle (its in-flight readers) and removed on
-    * the next. */
-  private def gcPoints(name: String, retain: Int): Unit = {
+  /** Generation retention, one policy for both frames: keep the
+    * `retain` newest `<frame>.manifest-*` files (always including the
+    * one the symlink targets), delete older manifests, then delete every
+    * base (`<frame>-g*`) and delta (`<frame>-d*`) data dir no retained
+    * manifest references. A legacy
+    * pre-manifest `<frame>` symlink/dir is kept for one manifest cycle
+    * (its in-flight readers) and removed on the next. */
+  private def gcFrame(name: String, frame: String, retain: Int): Unit = {
     val dir = colDir(name)
-    val link = manifestLink(name)
-    val current: Option[Path] =
-      if (Files.isSymbolicLink(link))
-        Some(dir.resolve(Files.readSymbolicLink(link))) else None
+    val current = manifestPath(name, frame)
     val manifests = children(dir)
-      .filter(p => p.getFileName.toString.startsWith("points.manifest-"))
+      .filter(p => p.getFileName.toString.startsWith(s"$frame.manifest-"))
       .sortBy(p => (Files.getLastModifiedTime(p).toMillis, p.getFileName.toString))
       .reverse
     val keep = (current.toSeq ++ manifests).distinct.take(math.max(retain, 1))
     manifests.filterNot(keep.contains).foreach(Files.deleteIfExists(_))
     // legacy single-generation layout: retire it one cycle after the
     // first manifest publish
-    val legacy = dir.resolve("points")
+    val legacy = dir.resolve(frame)
     val legacyTarget: Option[Path] =
       if (Files.isSymbolicLink(legacy)) Some(dir.resolve(Files.readSymbolicLink(legacy)))
       else if (Files.exists(legacy)) Some(legacy)
@@ -358,37 +440,46 @@ class Collections(spark: SparkSession, dataDir: String,
     // they age out on a later publish/vacuum. Generation dirs are
     // immutable after publish, so mtime IS creation time. The grace is
     // COUNT-capped at graceRetainMax (newest-first): beyond the cap the
-    // oldest delete regardless of age, or a publish storm retains a
-    // full collection copy per publish for the whole window (r16
-    // ADVICE — bounded disk beats an unbounded in-flight guarantee).
+    // oldest delete regardless of age, or a rewrite storm retains a
+    // full frame copy per rewrite for the whole window (r16 ADVICE —
+    // bounded disk beats an unbounded in-flight guarantee).
+    // The cap counts BASE dirs (`<frame>-g*`) only: one fold retires
+    // every delta dir (`<frame>-d*`) of its base at once, and counting
+    // those would delete the just-retired base under its in-flight
+    // readers. Deltas are batch-sized, so age alone bounds them.
     val cutoff = System.currentTimeMillis() - generationGraceMs
-    val unreferenced = children(dir)
-      .filter(p => p.getFileName.toString.startsWith("points-g")
-        && !referenced.contains(p.getFileName.toString))
+    val (bases, deltas) = children(dir)
+      .filter { p =>
+        val n = p.getFileName.toString
+        (n.startsWith(s"$frame-g") || n.startsWith(s"$frame-d")) && !referenced.contains(n)
+      }
       .sortBy(p => (Files.getLastModifiedTime(p).toMillis, p.getFileName.toString))
       .reverse
-    val (graced, overCap) = unreferenced.splitAt(math.max(graceRetainMax, 0))
-    graced.filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
+      .partition(_.getFileName.toString.startsWith(s"$frame-g"))
+    val (graced, overCap) = bases.splitAt(math.max(graceRetainMax, 0))
+    (graced ++ deltas).filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
       .foreach(deleteRec)
     overCap.foreach(deleteRec)
   }
 
-  /** Drop every generation but the current one — the explicit vacuum
-    * (reference autovacuum, column_store/mod.rs:420-573). Superseded
-    * manifests are deleted immediately; unreferenced data dirs
-    * additionally honor generationGraceMs (an in-flight reader may
-    * still hold their file paths), aging out on a later pass. Snapshots
-    * are physical copies and unaffected. */
+  /** Drop every generation but the current one, for both frames — the
+    * explicit vacuum (reference autovacuum, column_store/mod.rs:420-573).
+    * Superseded manifests are deleted immediately; unreferenced data
+    * dirs additionally honor generationGraceMs (an in-flight reader may
+    * still hold their file paths), aging out on a later pass. Segments
+    * stay: they are part of the current generation. Snapshots are
+    * physical copies and unaffected. */
   def vacuum(name: String): Unit = this.synchronized {
-    if (Files.exists(manifestLink(name))) gcPoints(name, retain = 1)
+    Seq("points", "edges").filter(f => Files.exists(manifestLink(name, f)))
+      .foreach(gcFrame(name, _, retain = 1))
   }
 
   // ---- trained-index epochs -------------------------------------------
   //
   // Trained ANN models (IVF centroids, PQ codebooks, the HNSW router)
   // are corpus STATISTICS, stable under small batches — so they freeze
-  // per EPOCH, not per content stamp: a publish re-encodes only its
-  // touched buckets against the frozen model instead of re-training and
+  // per EPOCH, not per content stamp: a write encodes only its own
+  // delta segment against the frozen model instead of re-training and
   // re-encoding the whole collection (the r11 ingest scale-killer; the
   // reference's in-place index insert, native_index.rs:317, has the
   // same cost shape). The epoch lives in a sidecar file whose
@@ -448,20 +539,30 @@ class Collections(spark: SparkSession, dataDir: String,
     next
   }
 
-  /** The bucketed layout's pieces — bucket index → RESOLVED immutable
-    * leaf dir — when the current manifest is hash-bucketed; None on
-    * flat/legacy layouts. Derived-index maintenance keys on these: an
-    * index materialized per piece rebuilds only the pieces a publish
-    * actually re-pointed ([[graft.operators.Ann.materializedIndexPieces]]),
-    * the storage-side twin of the bucket-pruned merge. */
-  def bucketPieces(name: String): Option[Seq[(Int, java.nio.file.Path)]] =
+  /** The index pieces of a hash-bucketed points frame — one per base
+    * bucket (bucket index → RESOLVED immutable leaf dir) and one per
+    * delta segment (index `buckets + i`), each carrying the ids its
+    * reader must hide — or None on flat/legacy layouts. Derived indexes
+    * cache one artifact per piece dir ([[graft.Materialize.pieces]]), so
+    * after a write the next indexed query builds only the new delta's
+    * piece and reuses every base piece, filtered. */
+  def bucketPieces(name: String): Option[Collections.Pieces] =
     readManifest(name)
       .filter(m => m.buckets > 0 && m.schema.isDefined && m.entries.nonEmpty)
-      .map(m => m.entries.toSeq.sortBy(_._1)
-        .map { case (b, rel) => b -> colDir(name).resolve(rel) })
+      .map { m =>
+        val dir = colDir(name)
+        val (baseHidden, later) = m.hidden
+        val base = m.entries.toSeq.sortBy(_._1).map { case (b, rel) =>
+          Collections.Piece(b, dir.resolve(rel), baseHidden)
+        }
+        val deltas = m.segments.zipWithIndex.collect {
+          case (Collections.Segment(Some(d), _), i) =>
+            Collections.Piece(m.buckets + i, dir.resolve(d), later(i))
+        }
+        Collections.Pieces(base ++ deltas, m.schema.get, idColOf(name))
+      }
 
-  /** The bucketed layout's authoritative schema (manifest-carried), for
-    * piece readers that must null-fill widened columns. */
+  /** The points frame's authoritative schema (manifest-carried). */
   def manifestSchema(name: String): Option[org.apache.spark.sql.types.StructType] =
     readManifest(name).flatMap(_.schema)
 
@@ -490,11 +591,22 @@ class Collections(spark: SparkSession, dataDir: String,
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
 
-  private def manifestFrame(name: String, m: PointsManifest): DataFrame = {
-    val base = colDir(name)
-    val paths = (m.entries.toSeq.sortBy(_._1).map(_._2) ++ m.dirs)
-      .map(rel => base.resolve(rel).toString)
-    readPaths(paths, m.schema)
+  /** A manifest's rows: the base (or `pruned`, a narrower read of it)
+    * minus every segment's ids, unioned with each delta minus the ids of
+    * later segments. With no segments this is the base scan alone. */
+  private def manifestFrame(name: String, m: FrameManifest, idc: => String,
+      pruned: Option[DataFrame] = None): DataFrame = {
+    val dir = colDir(name)
+    def read(rels: Seq[String]) = readPaths(rels.map(dir.resolve(_).toString), m.schema)
+    val base = pruned.getOrElse(read(m.baseDirs))
+    if (m.segments.isEmpty) base
+    else {
+      val id = idc
+      val (baseHidden, later) = m.hidden
+      m.segments.zipWithIndex.collect {
+        case (Collections.Segment(Some(d), _), i) => Collections.visible(read(Seq(d)), id, later(i))
+      }.foldLeft(Collections.visible(base, id, baseHidden))(_ union _)
+    }
   }
 
   /** S3: read all points (empty frame with no schema if never written).
@@ -504,19 +616,21 @@ class Collections(spark: SparkSession, dataDir: String,
     * Legacy layout: reads the RESOLVED generation directory, not the
     * `points` symlink, for the same reason. */
   def table(name: String): Option[DataFrame] =
-    readManifest(name).map(m => manifestFrame(name, m))
+    readManifest(name).map(m => manifestFrame(name, m, idColOf(name)))
       .orElse(frameTable(name, "points"))
 
   /** The collection's mutable edge frame (graph_api.rs:40-107) — a second
-    * generation-published parquet frame next to `points`; None until the
-    * first [[upsertEdges]]. */
-  def edges(name: String): Option[DataFrame] = frameTable(name, "edges")
+    * manifest-published frame next to `points`, keyed by the long `id`
+    * column; None until the first [[upsertEdges]]. */
+  def edges(name: String): Option[DataFrame] =
+    readManifest(name, "edges").map(m => manifestFrame(name, m, "id"))
+      .orElse(frameTable(name, "edges"))
 
-  /** The RESOLVED current edges generation dir — the edge-side content
-    * stamp (an edge upsert publishes a new generation). None until the
-    * first edge write. */
+  /** The edge-side content stamp: the RESOLVED current edges manifest
+    * (every edge write publishes a new one), or the legacy generation
+    * dir. None until the first edge write. */
   def edgesRealPath(name: String): Option[java.nio.file.Path] =
-    framePath(name, "edges")
+    manifestPath(name, "edges").orElse(framePath(name, "edges"))
 
   private def frameTable(name: String, frame: String): Option[DataFrame] =
     framePath(name, frame).map(real => spark.read.parquet(real.toString))
@@ -526,14 +640,8 @@ class Collections(spark: SparkSession, dataDir: String,
     * manifest file (every publish writes a new one), or the resolved
     * generation directory on the legacy layout. None until the first
     * write. */
-  def pointsRealPath(name: String): Option[java.nio.file.Path] = {
-    val link = manifestLink(name)
-    if (Files.exists(link))
-      Some(
-        if (Files.isSymbolicLink(link)) link.getParent.resolve(Files.readSymbolicLink(link))
-        else link)
-    else framePath(name, "points")
-  }
+  def pointsRealPath(name: String): Option[java.nio.file.Path] =
+    manifestPath(name, "points").orElse(framePath(name, "points"))
 
   private def framePath(name: String, frame: String): Option[java.nio.file.Path] = {
     val p = Paths.get(dataPath(name, frame))
@@ -556,65 +664,130 @@ class Collections(spark: SparkSession, dataDir: String,
     * batch silently becomes a NEW column (old rows null there) instead
     * of an error — same as writing a misspelled key into the reference's
     * payload map. Pinned by MultiModalCrudSpec "upsert widens". */
-  /** MERGE execution is partition-pruned on the bucketed layout: the
-    * batch's ids hash to a set of touched buckets, and ONLY those leaf
-    * dirs are read, merged and rewritten — per-batch cost is
-    * O(batch + touched buckets), not O(collection), which is the one
-    * shape that survives continuous ingest at 100 TB (reference:
-    * in-place id-replace, crud.rs:19-127). Falls back to a full rewrite
-    * when the collection is range-clustered by an index (the clustering
-    * IS the layout), when a shared column's type changes (unionByName
-    * coercion must rewrite every file to keep one type per column), or
-    * on the legacy single-generation layout (migrates it). */
+  /** On the bucketed layout with integral ids, an upsert costs O(batch):
+    * one job collects the batch's ids, then ONE delta file holding only
+    * the batch (deduped by [[mergeById]]'s rules when it repeats an id)
+    * is published as a segment that supersedes those ids — no stored row
+    * is read or rewritten (reference: in-place id-replace,
+    * crud.rs:19-127). A batch that would push the segments past
+    * [[Collections.FoldFraction]] of the base's rows folds instead: a
+    * full rewrite into a new bucketed base. The same full rewrite serves the
+    * first write, collections range-clustered by an index (the
+    * clustering IS the layout), a shared column whose type changes
+    * (unionByName coercion must rewrite every file to keep one type per
+    * column), non-integral ids (segments hold long ids) and the legacy
+    * single-generation layout (migrates it). */
   def upsert(name: String, batch0: DataFrame): Unit = this.synchronized {
     validateNodeBatch(name, batch0)
     val batch = halfRoundIfConfigured(name, batch0)
     val idc = idColOf(name)
+    def rewrite(): Unit = publishPoints(name, mergeById(table(name), batch, idc))
     readManifest(name) match {
       case Some(m) if m.buckets > 0 && listIndexes(name).isEmpty
-          && batch.columns.contains(idc)
+          && batch.columns.contains(idc) && integralIds(m, idc)
           && typesCompatible(m.schema, batch.schema) =>
-        // request-sized result: ≤ buckets distinct values
-        val touched = batch.select(bucketExpr(col(idc), m.buckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        rewriteBuckets(name, m, touched, ex => mergeById(ex, batch, idc))
-      case _ =>
-        publishPoints(name, mergeById(table(name), batch, idc))
+        batchIds(batch, idc, foldBudget(name, m)) match {
+          case Some(ids) =>
+            val superseded = ids.flatten.distinct.sorted
+            writeDelta(name, "points", m,
+              if (superseded.length == ids.count(_.isDefined)) batch
+              else mergeById(None, batch, idc),
+              superseded, Seq(col(idc)))
+          case None => rewrite()
+        }
+      case _ => rewrite()
     }
   }
 
   /** Shared columns must keep their stored type for an incremental
     * merge — a type change rewrites everything (full path) so no two
-    * files ever disagree on a column's type. */
+    * files ever disagree on a column's type. Nullability is not part of
+    * the type here: file scans read every column as nullable, and a
+    * REST batch's `cast("array<float>")` admits null elements where a
+    * bulk load declared none. */
   private def typesCompatible(
       stored: Option[org.apache.spark.sql.types.StructType],
-      batch: org.apache.spark.sql.types.StructType): Boolean =
+      batch: org.apache.spark.sql.types.StructType): Boolean = {
+    import org.apache.spark.sql.types._
+    def loose(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(loose(e), containsNull = true)
+      case MapType(k, v, _) => MapType(loose(k), loose(v), valueContainsNull = true)
+      case StructType(fs) =>
+        StructType(fs.map(f => f.copy(dataType = loose(f.dataType), nullable = true)))
+      case other => other
+    }
     stored.exists { s =>
-      val types = s.fields.map(f => f.name -> f.dataType).toMap
-      batch.fields.forall(f => types.get(f.name).forall(_ == f.dataType))
+      val types = s.fields.map(f => f.name -> loose(f.dataType)).toMap
+      batch.fields.forall(f => types.get(f.name).forall(_ == loose(f.dataType)))
+    }
+  }
+
+  /** Segments record ids as longs: only integral id columns qualify. */
+  private def integralIds(m: FrameManifest, idc: String): Boolean = {
+    import org.apache.spark.sql.types._
+    m.schema.flatMap(_.fields.find(_.name == idc)).exists(_.dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    })
+  }
+
+  /** The batch's ids (None for a null id), collected in ONE job — or
+    * None when the batch has more than `budget` rows: such a write folds
+    * anyway, so the collect never returns more ids than the segments
+    * may take. Each task ships at most `budget + 1` ids. */
+  private def batchIds(batch: DataFrame, idc: String,
+      budget: Long): Option[Array[Option[Long]]] =
+    if (budget <= 0) None
+    else {
+      val cap = budget + 1
+      val parts = batch.select(col(idc).cast("long")).rdd.mapPartitions { rows =>
+        val ids = Array.newBuilder[Option[Long]]
+        var n = 0L
+        rows.foreach { r =>
+          n += 1
+          if (n <= cap) ids += (if (r.isNullAt(0)) None else Some(r.getLong(0)))
+        }
+        Iterator((n, if (n <= cap) ids.result() else Array.empty[Option[Long]]))
+      }.collect()
+      if (parts.map(_._1).sum > budget) None else Some(parts.flatMap(_._2))
     }
 
-  /** Rewrite ONLY `touched` buckets through `transform` (which sees the
-    * touched buckets' current rows, or None when none exist) and publish
-    * a manifest re-pointing them; every untouched bucket keeps its
-    * existing immutable dir. */
-  private def rewriteBuckets(name: String, m: Collections.PointsManifest,
-      touched: Set[Int],
-      transform: Option[DataFrame] => DataFrame): Unit = {
-    val base = colDir(name)
-    val idc = idColOf(name)
-    val existingPaths = touched.toSeq.sorted.flatMap(m.entries.get)
-      .map(rel => base.resolve(rel).toString)
-    val existing =
-      if (existingPaths.isEmpty) None
-      else Some(readPaths(existingPaths, m.schema))
-    val merged = transform(existing)
-    val gen = base.resolve(s"points-g${java.util.UUID.randomUUID()}")
-    writeBucketed(merged, idc, m.buckets, gen)
-    val written = bucketDirsOf(gen)
+  /** The fold rule as a budget: how many more superseded ids the
+    * segments of `m` may take before they pass
+    * [[Collections.FoldFraction]] of the base's rows. */
+  private def foldBudget(name: String, m: FrameManifest): Long =
+    (Collections.FoldFraction *
+      m.rows.getOrElse(footerRows(m.baseDirs.map(colDir(name).resolve)))).toLong -
+      m.segmentIds
+
+  /** Row count of the parquet files under `dirs`, read from their footers
+    * in this JVM (no Spark job). */
+  private def footerRows(dirs: Seq[Path]): Long = {
+    def files(p: Path): Seq[Path] =
+      if (Files.isDirectory(p)) children(p).flatMap(files) else Seq(p)
+    val conf = spark.sessionState.newHadoopConf()
+    dirs.filter(Files.exists(_)).flatMap(files)
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
+
+  /** Publish `rows` as ONE delta segment of `frame` that supersedes
+    * `ids`: a single file sorted by `sortBy`, with the manifest schema
+    * widened by the batch's new columns. */
+  private def writeDelta(name: String, frame: String, m: FrameManifest,
+      rows: DataFrame, ids: Array[Long],
+      sortBy: Seq[org.apache.spark.sql.Column]): Unit = {
+    val gen = colDir(name).resolve(s"$frame-d${java.util.UUID.randomUUID()}")
+    rows.coalesce(1).sortWithinPartitions(sortBy: _*)
+      .write.mode(SaveMode.Overwrite).parquet(gen.toString)
     publishManifest(name, m.copy(
-      entries = (m.entries -- touched) ++ written,
-      schema = Some(unionSchema(m.schema, merged.schema))))
+      segments = m.segments :+ Collections.Segment(Some(gen.getFileName.toString), ids),
+      schema = Some(unionSchema(m.schema, rows.schema))), frame)
   }
 
   /** One file per bucket per write: repartition on the bucket key puts
@@ -635,7 +808,7 @@ class Collections(spark: SparkSession, dataDir: String,
       }.toMap
 
   /** Old columns keep their position and type; genuinely new columns
-    * append. Everything nullable: any bucket written before a widening
+    * append. Everything nullable: any file written before a widening
     * batch null-fills the new columns. */
   private def unionSchema(
       old: Option[org.apache.spark.sql.types.StructType],
@@ -752,14 +925,20 @@ class Collections(spark: SparkSession, dataDir: String,
 
   /** S5: edge upsert (graph_api.rs:40-107 `add_edge`) — merge by edge id
     * into the collection's own `edges` frame: `(id, src, dst, label,
-    * …property columns)`, generation-published exactly like points. A
-    * batch with new property columns widens the schema (missing columns
-    * null-fill — the reference's `properties: HashMap` is open too).
+    * …property columns)`, on the same manifest, segment and GC model as
+    * points ([[Collections.FrameManifest]]): a write publishes one delta
+    * file of its batch sorted by (label, src), superseding the batch's
+    * ids, and folds into a full (label, src)-clustered rewrite past the
+    * same threshold. A type change or the legacy layout rewrites in
+    * full. A batch with new property columns widens the schema (missing
+    * columns null-fill — the reference's `properties: HashMap` is open
+    * too).
     * Rows without an id get one auto-assigned (above both the stored max
     * and the batch's explicit max, like the reference's add_edge id
     * counter) INSIDE the instance lock, so concurrent REST writers can't
     * be handed the same ids and an auto id can't collide with an explicit
-    * id in the same batch. Duplicate EXPLICIT ids remain the caller's
+    * id in the same batch; the stored-max job runs only when the batch
+    * has id-less rows. Duplicate EXPLICIT ids remain the caller's
     * choice — merge-by-id makes that a replace, not corruption.
     * Divergence from the reference, documented: the reference's counter
     * is monotonic for the process lifetime; max-stored+1 means deleting
@@ -768,34 +947,47 @@ class Collections(spark: SparkSession, dataDir: String,
     * pass explicit ids. */
   def upsertEdges(name: String, batch0: DataFrame): Unit = this.synchronized {
     validateEdgeBatch(name, batch0)
-    val existing = edges(name)
-    val batch = {
-      val withId =
-        if (batch0.columns.contains("id")) batch0.withColumn("id", col("id").cast("long"))
-        else batch0.withColumn("id", lit(null).cast("long"))
-      val base = existing
-        .flatMap(df => Option(df.agg(max(col("id"))).first().get(0)))
-        .fold(0L)(_.asInstanceOf[Long] + 1L)
-      import org.apache.spark.sql.expressions.Window
-      // Number ONLY the id-less rows (partition on id-nullness): counting
-      // explicit-id rows too would hand an auto row an offset that can
-      // land exactly on an explicit id in the same batch ([15, auto] over
-      // stored max 13 assigned the auto row 13+2=15). Autos start above
-      // BOTH the stored max and the batch's explicit max, so they can't
-      // collide with either. Single-partition window + 1-row cross join
-      // are fine: edge batches are request-sized.
-      val w = Window.partitionBy(col("id").isNull)
-        .orderBy(monotonically_increasing_id())
-      val batchMax = withId.agg(coalesce(max(col("id")), lit(-1L)).as("__batch_max"))
-      // 1-row global-agg side: bounded by construction, broadcast like
-      // every other stats crossJoin in this codebase
-      withId.crossJoin(broadcast(batchMax))
-        .withColumn("id", coalesce(col("id"),
-          greatest(lit(base), col("__batch_max") + 1L)
-            + row_number().over(w).cast("long") - 1L))
-        .drop("__batch_max")
+    val withId =
+      if (batch0.columns.contains("id")) batch0.withColumn("id", col("id").cast("long"))
+      else batch0.withColumn("id", lit(null).cast("long"))
+    val stored = readManifest(name, "edges").filter(m => typesCompatible(m.schema, withId.schema))
+    val given = stored.flatMap(m => batchIds(withId, "id", foldBudget(name, m)))
+    val (explicitMax, idless) = given match {
+      case Some(g) => (g.flatten.maxOption, g.count(_.isEmpty).toLong)
+      case None => // a bulk or first write: one aggregate instead of a collect
+        val r = withId.agg(max(col("id")),
+          org.apache.spark.sql.functions.count(when(col("id").isNull, 1))).first()
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))
     }
-    publish(name, mergeById(existing, batch, "id"), "edges")
+    // autos start above BOTH the stored max and the batch's explicit max
+    // (numbering the id-less rows only: counting explicit-id rows too
+    // handed an auto row an offset that could land exactly on an
+    // explicit id in the same batch)
+    val start =
+      if (idless == 0) 0L
+      else math.max(
+        edges(name).flatMap(df => Option(df.agg(max(col("id"))).first().get(0)))
+          .fold(0L)(_.asInstanceOf[Long] + 1L),
+        explicitMax.fold(0L)(_ + 1L))
+    val batch =
+      if (idless == 0) withId
+      else {
+        import org.apache.spark.sql.expressions.Window
+        // single-partition window over the id-less rows; a bulk load
+        // pays one sort here, as it did before
+        val w = Window.partitionBy(col("id").isNull)
+          .orderBy(monotonically_increasing_id())
+        withId.withColumn("id", coalesce(col("id"),
+          lit(start) + row_number().over(w).cast("long") - 1L))
+      }
+    (stored, given) match {
+      case (Some(m), Some(g)) =>
+        val superseded = (g.flatten ++ (start until start + idless)).distinct.sorted
+        writeDelta(name, "edges", m,
+          if (superseded.length == g.length) batch else mergeById(None, batch, "id"),
+          superseded, Seq("label", "src").filter(batch.columns.contains).map(col))
+      case _ => publishEdges(name, mergeById(edges(name), batch, "id"))
+    }
   }
 
   /** Strict-schema edge validation (validate_edge_type,
@@ -861,17 +1053,24 @@ class Collections(spark: SparkSession, dataDir: String,
       }
     }
 
-  /** S5: edge removal by id (graph_api.rs `remove_edge`). */
+  /** S5: edge removal by id (graph_api.rs `remove_edge`) — a
+    * manifest-only segment, like [[delete]]. */
   def deleteEdges(name: String, ids: Seq[Long]): Unit = this.synchronized {
-    edges(name).foreach(df =>
-      publish(name, df.where(!col("id").isin(ids: _*)), "edges"))
+    val hide = ids.distinct.sorted.toArray
+    readManifest(name, "edges") match {
+      case Some(m) if hide.nonEmpty && hide.length <= foldBudget(name, m) =>
+        publishManifest(name,
+          m.copy(segments = m.segments :+ Collections.Segment(None, hide)), "edges")
+      case _ => edges(name).foreach(df =>
+        publishEdges(name, df.where(!col("id").isin(ids: _*))))
+    }
   }
 
   /** Delete every edge (keeps the frame's schema). Used by the REST
     * empty route: an emptied collection holds neither points nor edges,
     * so a later MATCH can't traverse edges whose endpoints are gone. */
   def emptyEdges(name: String): Unit = this.synchronized {
-    edges(name).foreach(df => publish(name, df.limit(0), "edges"))
+    edges(name).foreach(df => publishEdges(name, df.limit(0)))
   }
 
   /** Property indexes (G7/G8, reference `collection/graph/property_index
@@ -950,7 +1149,7 @@ class Collections(spark: SparkSession, dataDir: String,
       else before :+ entry
     writeIndexes(name, updated)
     // republish so the new clustering takes effect immediately
-    existing.foreach(df => publish(name, df))
+    existing.foreach(df => publishPoints(name, df))
     cardinality
   }
 
@@ -1006,8 +1205,9 @@ class Collections(spark: SparkSession, dataDir: String,
     }
 
   /** S3: get by ids (crud.rs:250). Bucket-pruned on the manifest
-    * layout: only the leaf dirs the ids hash to are scanned (plus
-    * row-group pruning inside them — files are id-sorted). */
+    * layout: only the base leaf dirs the ids hash to are scanned (plus
+    * row-group pruning inside them — files are id-sorted), with the
+    * request-sized delta files layered over them. */
   def get(name: String, ids: Seq[Long]): DataFrame = {
     val idCol = idColOf(name)
     readManifest(name) match {
@@ -1016,16 +1216,20 @@ class Collections(spark: SparkSession, dataDir: String,
           else bucketsForIds(ids, m.buckets)
         val paths = bs.toSeq.sorted.flatMap(m.entries.get)
           .map(rel => colDir(name).resolve(rel).toString)
-        readPaths(paths, m.schema).where(col(idCol).isin(ids: _*))
+        manifestFrame(name, m, idCol, Some(readPaths(paths, m.schema)))
+          .where(col(idCol).isin(ids: _*))
       case _ =>
         table(name).map(_.where(col(idCol).isin(ids: _*)))
           .getOrElse(spark.emptyDataFrame)
     }
   }
 
-  /** S3: delete by ids (crud.rs:291) — bucket-pruned like [[upsert]]:
-    * only buckets the ids hash to are rewritten (anti-filtered);
-    * indexed/legacy layouts fall back to the full filter-and-rewrite. */
+  /** S3: delete by ids (crud.rs:291). On the bucketed layout with
+    * integral ids this is a manifest-only publish — one segment naming
+    * the ids, no parquet written and no Spark job (the reference's
+    * deletion-bitmap tombstone) — unless it crosses the fold threshold
+    * ([[upsert]]); indexed/legacy layouts and non-integral ids fall
+    * back to the full filter-and-rewrite. */
   def delete(name: String, ids: Seq[Long]): Unit = this.synchronized {
     val idc = idColOf(name)
     // keep = NOT coalesce(id IN ids, false): for a null-id row `isin`
@@ -1034,12 +1238,12 @@ class Collections(spark: SparkSession, dataDir: String,
     // documents; r15 review finding)
     def keep(df: DataFrame) =
       df.where(!coalesce(col(idc).isin(ids: _*), lit(false)))
+    val hide = ids.distinct.sorted.toArray
     readManifest(name) match {
       case Some(m) if m.buckets > 0 && listIndexes(name).isEmpty
-          && ids.nonEmpty =>
-        val touched = bucketsForIds(ids, m.buckets).intersect(m.entries.keySet)
-        if (touched.nonEmpty)
-          rewriteBuckets(name, m, touched, ex => keep(ex.get))
+          && hide.nonEmpty && integralIds(m, idc) && hide.length <= foldBudget(name, m) =>
+        publishManifest(name,
+          m.copy(segments = m.segments :+ Collections.Segment(None, hide)))
       case _ =>
         table(name).foreach(df => publishPoints(name, keep(df)))
     }
@@ -1111,10 +1315,10 @@ class Collections(spark: SparkSession, dataDir: String,
     // pre-edges-coverage snapshots wrote points at the tag root; accept
     // both layouts so existing snapshots stay restorable
     val pts = if (Files.exists(p.resolve("points"))) p.resolve("points") else p
-    publish(name, spark.read.parquet(pts.toString))
+    publishPoints(name, spark.read.parquet(pts.toString))
     if (Files.exists(p.resolve("edges")))
-      publish(name, spark.read.parquet(p.resolve("edges").toString), "edges")
-    else edges(name).foreach(e => publish(name, e.limit(0), "edges"))
+      publishEdges(name, spark.read.parquet(p.resolve("edges").toString))
+    else edges(name).foreach(e => publishEdges(name, e.limit(0)))
   }
 
   def listSnapshots(name: String): Seq[String] =
@@ -1156,11 +1360,10 @@ class Collections(spark: SparkSession, dataDir: String,
   /** L2: compaction — rewrite the collection into `numFiles` parquet
     * files and vacuum superseded generations (the reference's
     * vacuum/compaction, column_store/mod.rs:420-573 /
-    * storage/compaction.rs). On the bucketed layout each bucket is
-    * already exactly one file, so compaction's remaining jobs are
-    * flattening (the result is a FLAT generation — the next upsert
-    * re-buckets with one full rewrite) and reclaiming retained old
-    * generations; ingest-heavy collections usually want [[vacuum]]
+    * storage/compaction.rs). Compaction flattens: the base and every
+    * segment become one FLAT generation (the next upsert re-buckets with
+    * one full rewrite). Segments already fold on their own past the
+    * fold threshold, so ingest-heavy collections usually want [[vacuum]]
     * instead, which reclaims without flattening. */
   def compact(name: String, numFiles: Int = 1): Unit = this.synchronized {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
@@ -1171,83 +1374,54 @@ class Collections(spark: SparkSession, dataDir: String,
       // numFiles (r15 review finding); unindexed frames just coalesce
       val clustered = clusterForIndexes(name, df, partitions = Some(numFiles))
       val flat = if (clustered eq df) df.coalesce(numFiles) else clustered
-      val gen = colDir(name).resolve(s"points-g${java.util.UUID.randomUUID()}")
-      flat.write.mode(SaveMode.Overwrite).parquet(gen.toString)
-      publishManifest(name, Collections.PointsManifest(0, Map.empty,
-        Seq(gen.getFileName.toString),
-        Some(unionSchema(None, df.schema))))
+      publishFlat(name, "points", flat, df.schema)
     }
   }
 
-  /** Full points rewrite into a fresh generation. Unindexed collections
-    * with an id column write the hash-bucketed layout (enabling later
-    * incremental merges); indexed ones write flat range-clustered
-    * (parquet stats ARE the index — IndexStoreSpec invariants). */
+  /** Write `df` as a flat base generation of `frame` and publish it
+    * (no segments); `schema` is the frame's schema before any
+    * clustering projection. */
+  private def publishFlat(name: String, frame: String, df: DataFrame,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    val gen = colDir(name).resolve(s"$frame-g${java.util.UUID.randomUUID()}")
+    df.write.mode(SaveMode.Overwrite).parquet(gen.toString)
+    publishManifest(name, FrameManifest(0, Map.empty,
+      Seq(gen.getFileName.toString), Some(unionSchema(None, schema)),
+      rows = Some(footerRows(Seq(gen)))), frame)
+  }
+
+  /** Full points rewrite into a fresh base generation (folds every
+    * segment). Unindexed collections with an id column write the
+    * hash-bucketed layout (enabling later delta segments); indexed ones
+    * write flat range-clustered (parquet stats ARE the index —
+    * IndexStoreSpec invariants). */
   private def publishPoints(name: String, df0: DataFrame): Unit = {
-    val base = colDir(name)
     val idc = idColOf(name)
-    val gen = base.resolve(s"points-g${java.util.UUID.randomUUID()}")
-    if (listIndexes(name).nonEmpty || !df0.columns.contains(idc)) {
-      clusterForIndexes(name, df0)
-        .write.mode(SaveMode.Overwrite).parquet(gen.toString)
-      publishManifest(name, Collections.PointsManifest(0, Map.empty,
-        Seq(gen.getFileName.toString), Some(unionSchema(None, df0.schema))))
-    } else {
+    if (listIndexes(name).nonEmpty || !df0.columns.contains(idc))
+      publishFlat(name, "points", clusterForIndexes(name, df0), df0.schema)
+    else {
       val buckets = bucketsOf(name)
+      val gen = colDir(name).resolve(s"points-g${java.util.UUID.randomUUID()}")
       writeBucketed(df0, idc, buckets, gen)
-      publishManifest(name, Collections.PointsManifest(buckets,
-        bucketDirsOf(gen), Nil, Some(unionSchema(None, df0.schema))))
+      publishManifest(name, FrameManifest(buckets,
+        bucketDirsOf(gen), Nil, Some(unionSchema(None, df0.schema)),
+        rows = Some(footerRows(Seq(gen)))))
     }
   }
 
-  /** Atomically publish a new frame generation (points or edges). The
-    * frame name is a SYMLINK to a `<frame>-g<uuid>` data dir; swapping it
-    * is one atomic rename, so a
-    * concurrent reader sees the old generation or the new one — never a
-    * half-deleted directory (the old rm-then-move swap had a window where
-    * `table()` returned None and planned scans hit vanishing files).
-    * Because [[table]] resolves the symlink BEFORE planning, an in-flight
-    * reader keeps addressing the immutable superseded directory, which
-    * survives at least one publish AND the generationGraceMs age window
-    * (disk bounded by publish rate × grace); older generations are
-    * removed. */
-  /** Edge frames cluster by (label, src) on every publish: typed MATCH
+  /** Full edge rewrite into a fresh flat base generation (folds every
+    * segment). Edge frames cluster by (label, src): typed MATCH
     * traversals filter on `label` and probe by `src`, so tight per-file/
     * row-group min-max stats prune both — the user-collection mirror of
     * the derived dataset graph's src-clustered Materialize. Request-
     * sized stores pay nothing; at scale this is the layout BFS wants. */
-  private def clusterEdges(df: DataFrame): DataFrame =
-    if (Seq("label", "src").forall(df.columns.contains)) {
-      val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-      df.repartitionByRange(parts, col("label"), col("src"))
-        .sortWithinPartitions(col("label"), col("src"))
-    } else df
-
-  private def publish(name: String, df0: DataFrame, frame: String = "points"): Unit = {
-    if (frame == "points") { publishPoints(name, df0); return }
-    val df = clusterEdges(df0)
-    val dir = colDir(name)
-    val target = Paths.get(dataPath(name, frame))
-    val gen = dir.resolve(s"$frame-g${java.util.UUID.randomUUID()}")
-    df.write.mode(SaveMode.Overwrite).parquet(gen.toString)
-    val previous: Option[Path] =
-      if (Files.isSymbolicLink(target)) Some(dir.resolve(Files.readSymbolicLink(target)))
-      else if (Files.exists(target)) Some(target) // legacy real-dir layout
-      else None
-    // relative link target so the collection dir stays relocatable
-    val link = dir.resolve(s"$frame.lnk-${gen.getFileName}")
-    Files.createSymbolicLink(link, gen.getFileName)
-    if (previous.contains(target)) deleteRec(target) // legacy dir blocks the rename
-    // POSIX rename(2): atomically replaces an existing symlink entry
-    Files.move(link, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // keep the just-superseded generation for in-flight readers; drop
-    // older generations once they age past the grace window (same
-    // rapid-publish race as gcPoints — see generationGraceMs)
-    val cutoff = System.currentTimeMillis() - generationGraceMs
-    children(dir)
-      .filter(p => p.getFileName.toString.startsWith(s"$frame-g")
-        && p != gen && !previous.contains(p)
-        && Files.getLastModifiedTime(p).toMillis < cutoff)
-      .foreach(deleteRec)
+  private def publishEdges(name: String, df: DataFrame): Unit = {
+    val clustered =
+      if (Seq("label", "src").forall(df.columns.contains)) {
+        val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
+        df.repartitionByRange(parts, col("label"), col("src"))
+          .sortWithinPartitions(col("label"), col("src"))
+      } else df
+    publishFlat(name, "edges", clustered, df.schema)
   }
 }

@@ -126,23 +126,26 @@ object Materialize {
     * (name, mtime, size) walk as [[atPaths]] keys, driver-side only. */
   def pathStamp(p: Path): String = listingHash(p)
 
-  /** Per-bucket incremental materialization — the shared maintenance
+  /** Per-piece incremental materialization — the shared maintenance
     * loop of every piece-wise index (LSH buckets, IVF cells, PQ codes,
-    * IVF-PQ combined, HNSW signatures): one cached artifact per
-    * (bucket dir, extraSources), so a publish that re-points K buckets
-    * rebuilds exactly K pieces on next use. `build` receives the
-    * piece's frame read under the manifest's authoritative schema
-    * (null-filling columns a pre-widening bucket file lacks). */
+    * IVF-PQ combined, HNSW signatures): one cached artifact per (piece
+    * dir, extraSources), read back minus the piece's hidden ids. Piece
+    * dirs are immutable (base buckets and delta segments,
+    * [[Collections.FrameManifest]]), so after a write the next use
+    * builds only the new delta's piece and every other piece is a cache
+    * hit with a wider filter; a fold rebuilds all of them. `build`
+    * receives the piece's frame read under the manifest's authoritative
+    * schema (null-filling columns a pre-widening file lacks) and must
+    * keep the id column. */
   def pieces(spark: SparkSession, token: String, kindFor: Int => String,
-      ps: Seq[(Int, Path)],
-      schema: org.apache.spark.sql.types.StructType,
-      extraSources: Seq[Path], partCol: Option[String])(
-      build: DataFrame => DataFrame): DataFrame = {
-    require(ps.nonEmpty, "no bucket pieces to materialize")
-    ps.map { case (b, pdir) =>
-      atPaths(spark, token, kindFor(b), pdir +: extraSources, partCol) {
-        build(spark.read.schema(schema).parquet(pdir.toString))
-      }
+      ps: Collections.Pieces, extraSources: Seq[Path],
+      partCol: Option[String])(build: DataFrame => DataFrame): DataFrame = {
+    require(ps.parts.nonEmpty, "no pieces to materialize")
+    ps.parts.map { p =>
+      Collections.visible(
+        atPaths(spark, token, kindFor(p.index), p.dir +: extraSources, partCol) {
+          build(spark.read.schema(ps.schema).parquet(p.dir.toString))
+        }, ps.idCol, p.hidden)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 

@@ -136,28 +136,25 @@ object Ann {
     graft.Materialize.atPaths(spark, token, s"lsh${nPlanes}_buckets_$name",
       sources, Some("bucket"))(buildIndex(base, vecCol, nPlanes, Some(dim)))
 
-  /** INCREMENTAL index maintenance over a bucketed collection layout
-    * (the storage-side twin of the partition-pruned merge): the LSH
-    * signature is a pure per-row function, so the index decomposes into
-    * one cached piece PER STORAGE BUCKET, each stamped by its immutable
-    * leaf dir. A publish that rewrote 2 of 16 buckets re-points 2 dirs,
-    * so the next indexed query rebuilds exactly 2 pieces — per-batch
-    * index upkeep is O(touched buckets), not O(collection), which is
-    * what the reference's in-place HNSW insert
+  /** INCREMENTAL index maintenance over a collection's immutable
+    * pieces ([[graft.Materialize.pieces]]): the LSH signature is a pure
+    * per-row function, so the index decomposes into one cached piece per
+    * base bucket and per delta segment, each stamped by its own dir and
+    * read back minus the ids later writes superseded. A write adds one
+    * delta dir, so the next indexed query hashes only that batch's rows
+    * and reuses every base piece — per-write index upkeep is O(batch),
+    * which is what the reference's in-place HNSW insert
     * (native_index.rs:317) costs and what a 100 TB ingest needs.
     * Every piece is bucket-clustered parquet, so the probe's pushed
     * `bucket IN (…)` prunes row groups inside each piece of the union.
-    * (Training-based tiers — IVF/PQ/HNSW — get the same per-bucket
+    * (Training-based tiers — IVF/PQ/HNSW — get the same per-piece
     * encoding maintenance against EPOCH-FROZEN models; see
     * [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
   def materializedIndexPieces(spark: org.apache.spark.sql.SparkSession,
-      token: String, pieces: Seq[(Int, java.nio.file.Path)],
-      schema: org.apache.spark.sql.types.StructType, name: String,
-      vecCol: String, nPlanes: Int, dim: Int): DataFrame = {
+      token: String, pieces: graft.Collections.Pieces, name: String,
+      vecCol: String, nPlanes: Int, dim: Int): DataFrame =
     graft.Materialize.pieces(spark, token, b => s"lsh${nPlanes}_p${b}_$name",
-      pieces, schema, Nil, Some("bucket"))(
-      buildIndex(_, vecCol, nPlanes, Some(dim)))
-  }
+      pieces, Nil, Some("bucket"))(buildIndex(_, vecCol, nPlanes, Some(dim)))
 
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

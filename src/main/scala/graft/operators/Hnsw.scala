@@ -405,8 +405,7 @@ object Hnsw {
       vecCol: String, idCol: String, metric: String, kCells: Int,
       m: Int = 8, levelStride: Int = 16,
       modelSources: Option[Seq[java.nio.file.Path]] = None,
-      pieces: Option[(Seq[(Int, java.nio.file.Path)],
-        org.apache.spark.sql.types.StructType)] = None)
+      pieces: Option[graft.Collections.Pieces] = None)
       : (Array[(Int, Array[Float])], DataFrame) = {
     val (cents, cells) = Ivf.materializedIndexAt(spark, token, sources,
       name, base, vecCol, kCells, modelSources = modelSources,
@@ -420,44 +419,43 @@ object Hnsw {
     val graphKind = s"hnswv2m${m}s${levelStride}c${kCells}_${metric}_$name"
     val modelSrcAll = modelSources.getOrElse(sources)
     val graph = pieces match {
-      case Some((ps, schema)) =>
+      case Some(ps) =>
         // PER-CELL incremental maintenance over the epoch-frozen router
         // (the adjacency couples rows WITHIN a cell, across storage
-        // buckets — so the rebuild unit is the cell, not the bucket):
-        //  1. per-(bucket, cell) content signatures cache per
-        //     (bucket dir, model stamp) — a publish recomputes only its
-        //     touched buckets' signature tables;
-        //  2. per-cell hash = order-independent sum over the bucket
-        //     signatures (k-cells-sized, driver-side, memoized);
+        // pieces — so the rebuild unit is the cell, not the piece):
+        //  1. per-row (id, cell, hash) signature tables cache per
+        //     (piece dir, model stamp) — a write computes only its own
+        //     delta's table;
+        //  2. per-cell hash = order-independent XOR over the LIVE rows
+        //     (pieces read minus their superseded ids; k-cells-sized,
+        //     collected once per manifest and memoized);
         //  3. each cell's graph materializes with that hash as its
-        //     extraStamp — ONLY cells whose content changed rebuild,
+        //     extraStamp — ONLY cells whose live rows changed rebuild,
         //     each at the insertion build's O(|cell|·ef·m).
-        // A 2-id upsert therefore rebuilds ≤2 bucket signature tables
-        // and ≤2 cell graphs (IncrementalTrainedIndexSpec pins this at
-        // the file level); the reference's in-place insert
+        // A 1-id upsert therefore computes one small signature table and
+        // rebuilds ≤2 cell graphs (IncrementalTrainedIndexSpec pins this
+        // at the file level); the reference's in-place insert
         // (native_index.rs:317) has the same touched-cells cost shape.
         val modelSrc = modelSources.getOrElse(sources)
-        // sig2: the signature hashes the WHOLE row (to_json of every
-        // manifest column), not just (id, vector) — the cached cell
-        // graph carries all columns (residual __keep predicates and
-        // SELECTed payload evaluate against it), so a payload-only
-        // upsert must dirty its cell or the walk serves stale payload
+        // the signature hashes the WHOLE row (to_json of every manifest
+        // column), not just (id, vector) — the cached cell graph carries
+        // all columns (residual __keep predicates and SELECTed payload
+        // evaluate against it), so a payload-only upsert must dirty its
+        // cell or the walk serves stale payload. Per-row (`_rows_`), so
+        // superseded rows can be filtered out before the XOR.
         val sigs = graft.Materialize.pieces(spark, token,
-          b => s"hnswsig2v${kCells}_${metric}_p${b}_$name", ps, schema,
+          b => s"hnswsig2v${kCells}_${metric}_p${b}_rows_$name", ps,
           modelSrc, None)(
           _.where(col(vecCol).isNotNull)
-            .select(Ivf.udfAssign(cents)(col(vecCol)).as("cell"),
-              xxhash64(to_json(struct(col("*")))).as("h"))
-            .groupBy("cell")
-            // bit_xor: order-independent and overflow-free (an ANSI
-            // sum of 64-bit hashes overflows); rows are unique per
-            // piece (unique ids), so XOR cancellation needs a true
-            // hash collision
-            .agg(expr("bit_xor(h)").as("h"), count(lit(1)).as("n")))
+            .select(col(ps.idCol), Ivf.udfAssign(cents)(col(vecCol)).as("cell"),
+              xxhash64(to_json(struct(col("*")))).as("h")))
         val cellHashes: Seq[(Int, String)] = graft.Materialize.memo(
             s"hnswhashes2v${kCells}_${metric}_$name", token,
-            ps.map(_._2) ++ modelSrc) {
-          sigs.groupBy("cell").agg(expr("bit_xor(h)").as("h"), sum(col("n")).as("n"))
+            (sources ++ modelSrc).distinct) {
+          // bit_xor: order-independent and overflow-free (an ANSI sum of
+          // 64-bit hashes overflows); live ids are unique, so XOR
+          // cancellation needs a true hash collision
+          sigs.groupBy("cell").agg(expr("bit_xor(h)").as("h"), count(lit(1)).as("n"))
             .collect()
             .map(r => (r.getInt(0),
               java.lang.Long.toHexString(r.getLong(1)) + "n" + r.getLong(2)))

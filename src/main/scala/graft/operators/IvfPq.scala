@@ -55,16 +55,14 @@ object IvfPq {
     * the cache kind — see [[Ivf.materializedIndexAt]]'s pruning note.
     * `modelSources`/`pieces` follow the epoch-freeze contract
     * ([[Ivf.materializedIndexAt]]): with pieces, the combined
-    * (id, cell, codes) table materializes PER BUCKET in one pass over
-    * the bucket file (both frozen models applied together — no
-    * collection-wide join per publish), so upkeep is O(touched
-    * buckets). */
+    * (id, cell, codes) table materializes PER PIECE in one pass over
+    * the piece's file (both frozen models applied together — no
+    * collection-wide join per write), so upkeep is O(batch). */
   def materializedIndexAt(spark: SparkSession, token: String,
       sources: Seq[java.nio.file.Path], name: String, base: => DataFrame,
       vecCol: String, idCol: String, dim: Int, cells: Int, m: Int, k: Int,
       modelSources: Option[Seq[java.nio.file.Path]] = None,
-      pieces: Option[(Seq[(Int, java.nio.file.Path)],
-        org.apache.spark.sql.types.StructType)] = None)
+      pieces: Option[graft.Collections.Pieces] = None)
       : (Array[(Int, Array[Float])], Array[Array[Array[Float]]], DataFrame) = {
     import spark.implicits._
     // centroids ONLY — the cells table is neither read by the combined
@@ -100,9 +98,9 @@ object IvfPq {
     def encode(df: DataFrame): DataFrame =
       Pq.encodeResidual(df, vecCol, idCol, cb, cents)
     val combined = pieces match {
-      case Some((ps, schema)) =>
+      case Some(ps) =>
         graft.Materialize.pieces(spark, token,
-          b => s"ivfpqr${cells}_${m}x${k}_codes_p${b}_$name", ps, schema,
+          b => s"ivfpqr${cells}_${m}x${k}_codes_p${b}_$name", ps,
           modelSrc, Some("cell"))(encode)
       case None =>
         graft.Materialize.atPaths(spark, token,

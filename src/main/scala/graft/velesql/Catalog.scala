@@ -25,22 +25,22 @@ final case class CollectionMeta(
 
 object Catalog {
   /** See [[Catalog.indexSource]]. */
-  /** `pieces`: the bucketed layout's (bucket, immutable leaf dir) list
-    * plus the authoritative read schema, when the source supports
-    * per-piece index maintenance (user collections on the manifest
-    * layout) — stateless index tiers materialize one cached piece per
-    * bucket, so a publish rebuilds only the buckets it re-pointed. */
+  /** `pieces`: the bucketed layout's immutable piece dirs (base buckets
+    * and delta segments) with the ids each reader must hide, plus the
+    * authoritative read schema, when the source supports per-piece index
+    * maintenance (user collections on the manifest layout) — index tiers
+    * materialize one cached piece per dir and filter it on read, so a
+    * write builds only its own delta's piece. */
   /** `modelPaths`: the stamp sources for TRAINED model artifacts
     * (IVF centroids, PQ codebooks, the HNSW router) when they freeze
     * independently of content — user collections stamp models on their
     * index-epoch sidecar ([[graft.Collections.indexEpoch]]), so a
-    * publish re-encodes touched buckets against the frozen model
-    * instead of re-training. None = models stamp on `paths` (dataset
+    * write encodes its delta against the frozen model instead of
+    * re-training. None = models stamp on `paths` (dataset
     * tables: content never changes without a full regeneration). */
   final case class IndexSource(token: String,
       paths: Seq[java.nio.file.Path], frame: () => org.apache.spark.sql.DataFrame,
-      pieces: Option[(Seq[(Int, java.nio.file.Path)],
-        org.apache.spark.sql.types.StructType)] = None,
+      pieces: Option[graft.Collections.Pieces] = None,
       modelPaths: Option[Seq[java.nio.file.Path]] = None)
 }
 
@@ -130,9 +130,10 @@ class Catalog(spark: SparkSession, val dir: String) {
   /** Source descriptor for materialized ANN structures (LSH buckets,
     * IVF cells, PQ codes): a stable cache token, the content-stamp
     * paths, and the base frame. Dataset tables stamp on their parquet
-    * file; USER collections stamp on the current points generation —
-    * an upsert publishes a new generation, so the next indexed query
-    * rebuilds (the reference's insert-time index update,
+    * file; USER collections stamp on the current points manifest and,
+    * on the bucketed layout, carry their pieces — the next indexed
+    * query after a write builds only that write's delta piece (the
+    * reference's insert-time index update,
     * index/hnsw/native_index.rs:317, re-expressed as build-on-read).
     * None for joins-free-violations, derived frames (corpus,
     * embeddings_wide), and never-written collections — callers fall
@@ -146,12 +147,8 @@ class Catalog(spark: SparkSession, val dir: String) {
       else None // derived frames: no stable file to stamp
     else if (userCollections.exists(name))
       userCollections.pointsRealPath(name).map { p =>
-        val pieces = for {
-          ps <- userCollections.bucketPieces(name)
-          sch <- userCollections.manifestSchema(name)
-        } yield (ps, sch)
         Catalog.IndexSource(s"${dir}_col_$name", Seq(p), () => table(name),
-          pieces,
+          userCollections.bucketPieces(name),
           modelPaths = Some(Seq(userCollections.ensureIndexEpochFile(name))))
       }
     else None

@@ -461,11 +461,11 @@ class Compiler(
               // an indexSource; derived frames fall to on-the-fly.
               val src = srcOpt.get
               // bucketed user collections maintain the LSH index PER
-              // STORAGE PIECE — a publish rebuilds only the pieces it
-              // re-pointed (Ann.materializedIndexPieces scaladoc)
+              // STORAGE PIECE — a write builds only its own delta's
+              // piece (Ann.materializedIndexPieces scaladoc)
               val idx0 = src.pieces match {
-                case Some((ps, schema)) => Ann.materializedIndexPieces(
-                  spark, src.token, ps, schema, sel.from, vcolName, nPlanes,
+                case Some(ps) => Ann.materializedIndexPieces(
+                  spark, src.token, ps, sel.from, vcolName, nPlanes,
                   vec.length)
                 case None => Ann.materializedIndexAt(spark, src.token,
                   src.paths, sel.from, src.frame(), vcolName, nPlanes,

@@ -47,12 +47,23 @@ class GraftSpec extends SparkSpecBase {
     assert(viaRegistry.count() == 1)
 
     // SparkSessionExtensions path: a sibling session built with
-    // withExtensions shares the SparkContext but gets its own registry
-    val extSession = org.apache.spark.sql.SparkSession.builder()
+    // withExtensions shares the SparkContext but gets its own registry.
+    // getOrCreate would hand back the shared spec session (extensions
+    // ignored, l2_dist resolved through the register call above) —
+    // clear the default and active sessions so a NEW session is built
+    // with the extensions applied, then restore them
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val extSession = try org.apache.spark.sql.SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master("local[2]")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
+    finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+    assert(extSession ne spark, "the extensions check needs its own session")
     try {
       Tables.table(extSession, sfDir, "embeddings").createOrReplaceTempView("emb_ext")
       val r = extSession.sql(

@@ -35,8 +35,9 @@ class IncrementalMergeSpec extends SparkSpecBase {
     val after = files(cols, "c")
     val kept = before.intersect(after)
     val rewritten = before -- after
-    assert(rewritten.nonEmpty && rewritten.size <= 2,
-      s"expected ≤2 bucket files rewritten, got ${rewritten.size}")
+    assert(rewritten.isEmpty && (after -- before).size == 1,
+      s"expected every base file kept and one delta file added, got " +
+        s"${rewritten.size} rewritten, ${(after -- before).size} added")
     assert(kept.size == before.size - rewritten.size,
       "every untouched bucket must keep serving its original file")
 

@@ -23,7 +23,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * table row for `reps` hot requests (the kind's first request, repeated)
   * and one for `reps` fresh ones: median ms, Spark jobs, stages run,
   * shuffle bytes (written + read) and codegen compiles. Then it prints the
-  * physical plan the exact-kNN route collected.
+  * physical plan the exact-kNN route collected, and one row per write
+  * kind — a 50-point upsert (30 replaced ids, 20 new), a 50-edge upsert
+  * and a single-id point delete, `reps` requests each — with median ms,
+  * jobs, stages, shuffle bytes and the files and bytes each request added
+  * under the collection dir.
   * Usage: sbt "Test/runMain graft.tools.RestProbe [reps=9]"
   */
 object RestProbe {
@@ -109,9 +113,12 @@ object RestProbe {
     def call(req: (String, String, String)): Seq[Double] = {
       val (method, path, body) = req
       val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.boundPort}$path"))
-      val built = if (method == "GET") b.GET().build()
-        else b.header("Content-Type", "application/json")
+      val built = method match {
+        case "GET" => b.GET().build()
+        case "DELETE" => b.DELETE().build()
+        case _ => b.header("Content-Type", "application/json")
           .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+      }
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val m = JobMeter(spark) {
         val t0 = System.nanoTime()
@@ -122,6 +129,46 @@ object RestProbe {
       require(resp.statusCode() == 200, s"$path: ${resp.body().take(300)}")
       Seq(ms, m.jobs.toDouble, m.stages.toDouble, m.shuffleBytes.toDouble,
         (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles).toDouble)
+    }
+    val colDir = java.nio.file.Paths.get(dir, "docs")
+    /** Size of every file under the collection dir, by path. */
+    def files(): Map[String, Long] = {
+      val s = java.nio.file.Files.walk(colDir)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => p.toString -> java.nio.file.Files.size(p)).toMap
+      } finally s.close()
+    }
+    var nextPoint = Points.toLong
+    var nextEdge = Edges.toLong
+    val existing = new scala.util.Random(5).shuffle((0 until Points).map(_.toLong))
+    var used = 0
+    def replaced(n: Int): Seq[Long] = { used += n; existing.slice(used - n, used) }
+    /** (method, path, body) of a fresh write of `kind`. */
+    def write(kind: String): (String, String, String) = kind match {
+      case "upsert 50 points" =>
+        val ids = replaced(30) ++ (0 until 20).map { _ => nextPoint += 1; nextPoint }
+        ("POST", "/collections/docs/points", ids.map { id =>
+          val v = normalize(Array.fill(Dim)(r.nextGaussian().toFloat))
+          s"""{"id":$id,"vector":${v.mkString("[", ",", "]")},"payload":""" +
+            s"""{"text":"${word()} ${word()}","category":"c0","price":1.5}}"""
+        }.mkString("""{"points":[""", ",", "]}"))
+      case "upsert 50 edges" =>
+        ("POST", "/collections/docs/graph/edges", (0 until 50).map { _ =>
+          nextEdge += 1
+          s"""{"id":$nextEdge,"source":${r.nextInt(Points)},"target":${r.nextInt(Points)},""" +
+            """"label":"link"}"""
+        }.mkString("""{"edges":[""", ",", "]}"))
+      case "delete 1 point" =>
+        (("DELETE", s"/collections/docs/points/${replaced(1).head}", null))
+    }
+    /** (ms, jobs, stages, shuffle bytes, new files, new bytes) of one write. */
+    def callWrite(req: (String, String, String)): Seq[Double] = {
+      val before = files()
+      val m = call(req)
+      val added = files().filter { case (p, _) => !before.contains(p) }
+      m.take(4) ++ Seq(added.size.toDouble, added.values.sum.toDouble)
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def row(kind: String, runs: Seq[Seq[Double]]): String = {
@@ -141,6 +188,14 @@ object RestProbe {
       }
       call(request("knn_exact"))
       println(s"---- exact kNN REST plan\n${lastPlan.executedPlan}")
+      println(s"---- writes, median of $reps requests per row")
+      println("| write                |      ms | jobs | stages | shuffle B | new files | new B |")
+      println("|---|---|---|---|---|---|---|")
+      for (kind <- Seq("upsert 50 points", "upsert 50 edges", "delete 1 point")) {
+        val m = Seq.fill(reps)(callWrite(write(kind))).transpose.map(median)
+        println(f"| $kind%-20s | ${m(0)}%7.1f | ${m(1)}%4.0f | ${m(2)}%6.0f | ${m(3)}%9.0f |" +
+          f" ${m(4)}%9.0f | ${m(5)}%5.0f |")
+      }
     } finally { srv.stop(); g.collections.drop("docs"); spark.stop() }
   }
 }
