@@ -205,8 +205,8 @@ class Collections(spark: SparkSession, dataDir: String,
     * (an explicit WITH quantization still overrides). "full" is the
     * exact default; "sq8"/"binary" route NEAR through the matching
     * quantized path; "pq" (beyond-reference) routes through the
-    * materialized product-quantization codes index — the collection's
-    * vector dimension must be divisible by `graft.pq.m` (default 8). */
+    * materialized product-quantization codes index, whose subspace
+    * count `Pq.defaultM` picks from the vector dimension. */
   /** `graphSchema` is the reference's create-time graph schema
     * (`CollectionType::Graph { schema }`, types.rs:53-61): a JSON
     * document parsed by [[GraphSchema.parse]]. When strict (schemaless

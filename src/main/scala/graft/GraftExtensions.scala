@@ -26,10 +26,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in ANN top-k rewrite (SURVEY §4.3): bucket-prunes similarity
     // sorts over LSH-indexed frames when graft.ann.rewrite=true
     e.injectPreCBORule { session =>
-      org.apache.spark.sql.graft.AnnTopKRule(() => (
-        session.conf.get("graft.ann.rewrite", "false").toBoolean,
-        session.conf.get("graft.ann.planes", "6").toInt,
-        session.conf.get("graft.ann.radius", "2").toInt))
+      org.apache.spark.sql.graft.AnnTopKRule(() =>
+        session.conf.get("graft.ann.rewrite", "false").toBoolean)
     }
     // exact rewrite, on by default: CAST(sum(CAST(x AS DECIMAL(≤18,s)))
     // AS DOUBLE) → the int128 FixedPointSum (bit-identical, ~2× at 18M

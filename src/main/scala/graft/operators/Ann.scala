@@ -23,6 +23,14 @@ import org.apache.spark.sql.types.LongType
   */
 object Ann {
 
+  /** Hyperplanes per signature: 2⁶ = 64 buckets, the plane count every
+    * probe radius below is calibrated against. */
+  val Planes = 6
+
+  /** Probe radius of the opt-in similarity top-k rewrite
+    * ([[org.apache.spark.sql.graft.AnnTopKRule]]): the balanced tier. */
+  val Radius = 2
+
   /** Deterministic pseudo-random hyperplane component (plane p, dim i):
     * a splitmix64-style integer hash mapped to [-1, 1). Reproducible
     * across engines and runs — no RNG state. */
@@ -129,32 +137,34 @@ object Ann {
       graft.Tables.table(spark, dir, table), vecCol, nPlanes, dim)
 
   /** Path-stamped variant (user collections: stamp = the current points
-    * generation, so a publish rebuilds on next query). */
+    * generation, so a publish rebuilds on next query).
+    *
+    * `pieces` (bucketed collections) maintains the index INCREMENTALLY
+    * over the collection's immutable pieces ([[graft.Materialize.pieces]]):
+    * the LSH signature is a pure per-row function, so the index
+    * decomposes into one cached piece per base bucket and per delta
+    * segment, each stamped by its own dir and read back minus the ids
+    * later writes superseded. A write adds one delta dir, so the next
+    * indexed query hashes only that batch's rows and reuses every base
+    * piece — per-write index upkeep is O(batch), which is what the
+    * reference's in-place HNSW insert (native_index.rs:317) costs and
+    * what a 100 TB ingest needs. Every piece is bucket-clustered
+    * parquet, so the probe's pushed `bucket IN (…)` prunes row groups
+    * inside each piece of the union. (The trained tiers — IVF/PQ/HNSW —
+    * take the same `pieces` against EPOCH-FROZEN models; see
+    * [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
   def materializedIndexAt(spark: org.apache.spark.sql.SparkSession,
       token: String, sources: Seq[java.nio.file.Path], name: String,
-      base: => DataFrame, vecCol: String, nPlanes: Int, dim: Int): DataFrame =
-    graft.Materialize.atPaths(spark, token, s"lsh${nPlanes}_buckets_$name",
-      sources, Some("bucket"))(buildIndex(base, vecCol, nPlanes, Some(dim)))
-
-  /** INCREMENTAL index maintenance over a collection's immutable
-    * pieces ([[graft.Materialize.pieces]]): the LSH signature is a pure
-    * per-row function, so the index decomposes into one cached piece per
-    * base bucket and per delta segment, each stamped by its own dir and
-    * read back minus the ids later writes superseded. A write adds one
-    * delta dir, so the next indexed query hashes only that batch's rows
-    * and reuses every base piece — per-write index upkeep is O(batch),
-    * which is what the reference's in-place HNSW insert
-    * (native_index.rs:317) costs and what a 100 TB ingest needs.
-    * Every piece is bucket-clustered parquet, so the probe's pushed
-    * `bucket IN (…)` prunes row groups inside each piece of the union.
-    * (Training-based tiers — IVF/PQ/HNSW — get the same per-piece
-    * encoding maintenance against EPOCH-FROZEN models; see
-    * [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
-  def materializedIndexPieces(spark: org.apache.spark.sql.SparkSession,
-      token: String, pieces: graft.Collections.Pieces, name: String,
-      vecCol: String, nPlanes: Int, dim: Int): DataFrame =
-    graft.Materialize.pieces(spark, token, b => s"lsh${nPlanes}_p${b}_$name",
-      pieces, Nil, Some("bucket"))(buildIndex(_, vecCol, nPlanes, Some(dim)))
+      base: => DataFrame, vecCol: String, nPlanes: Int, dim: Int,
+      pieces: Option[graft.Collections.Pieces] = None): DataFrame =
+    pieces match {
+      case Some(ps) =>
+        graft.Materialize.pieces(spark, token, b => s"lsh${nPlanes}_p${b}_$name",
+          ps, Nil, Some("bucket"))(buildIndex(_, vecCol, nPlanes, Some(dim)))
+      case None =>
+        graft.Materialize.atPaths(spark, token, s"lsh${nPlanes}_buckets_$name",
+          sources, Some("bucket"))(buildIndex(base, vecCol, nPlanes, Some(dim)))
+    }
 
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

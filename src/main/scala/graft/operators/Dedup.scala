@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** Shingle-hash partitions per shuffle partition on the uncapped
+    * exact-pair join ([[ngramJaccardPairs]]): 4 held q67's 30×
+    * duplicate-factor repeats (8 did too, at more tasks). */
+  val ExactPairPartsFactor = 4
+
   /** n-gram Jaccard pairs from a `(doc_id, sh)` shingle-hash frame:
     * inverted join on the shingle, intersection counts, Jaccard ≥
     * `threshold`.
@@ -51,8 +56,7 @@ object Dedup {
     val spark = shingleHashes.sparkSession
     val joinParts =
       if (dfCap.isDefined) None
-      else Some(spark.sessionState.conf.numShufflePartitions *
-        spark.conf.get("graft.dedup.exactPairPartsFactor", "4").toInt)
+      else Some(spark.sessionState.conf.numShufflePartitions * ExactPairPartsFactor)
     def spread(df: DataFrame): DataFrame =
       joinParts.map(p => df.repartition(p, col("sh"))).getOrElse(df)
     val x = spread(sh.select(col("doc_id").as("a"), col("sh")))

@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   * probed row to the walk's frontier — asserted by HnswSpec.
   *
   * Scale note: a cell's adjacency must fit one task (the same bound the
-  * per-cell k-means/PQ training already assumes); size `graft.ivf.cells`
+  * per-cell k-means/PQ training already assumes); size `Ivf.Cells`
   * so cells stay ~10⁵-10⁶ rows at the target scale. Graph build is the
   * reference's INSERTION algorithm (search-then-link,
   * native_index.rs:317): each node searches the graph built so far with
@@ -414,7 +414,7 @@ object Hnsw {
     // contract-conforming) adjacency than the r11 half-matrix build — a
     // stale same-key cache from the old algorithm must not be served.
     // kCells too: the graph's `cell` column is an assignment under the
-    // CURRENT cell count — without it a graft.ivf.cells change served a
+    // CURRENT cell count — without it a cell-count change served a
     // graph partitioned under the old k (r15 review finding)
     val graphKind = s"hnswv2m${m}s${levelStride}c${kCells}_${metric}_$name"
     val modelSrcAll = modelSources.getOrElse(sources)
@@ -483,18 +483,11 @@ object Hnsw {
     (cents, graph)
   }
 
-  /** Cells nearest the query (same router as [[Ivf.search]]). */
-  def probeCells(centroids: Array[(Int, Array[Float])], query: Array[Float],
-      nprobe: Int): Seq[Int] =
-    centroids.map { case (c, cen) => (c, VectorKernels.l2Squared(query, cen)) }
-      .sortBy { case (c, d) => (d, c) }
-      .take(nprobe).map(_._1).toSeq
-
   /** ANN top-k through the graph: probe cells, walk, exact-rerank. */
   def search(graph: DataFrame, centroids: Array[(Int, Array[Float])],
       vecCol: String, query: Seq[Float], k: Int, nprobe: Int, ef: Int,
       metric: String = "cosine", idCol: String = "id"): DataFrame = {
-    val cells = probeCells(centroids, query.toArray, nprobe)
+    val cells = Ivf.probeCells(centroids, query.toArray, nprobe)
     val cand = walkCandidates(
       graph.where(col("cell").isin(cells: _*)),
       vecCol, idCol, metric, query, ef)

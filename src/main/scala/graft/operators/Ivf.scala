@@ -22,6 +22,10 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
+  /** Coarse cells every materialized cell index trains (IVF, IVF-PQ,
+    * the partitioned HNSW router). */
+  val Cells = 8
+
   /** Deterministic k-means: seeds = hash-spread sample, `iters` Lloyd
     * rounds, each ONE distributed aggregation over the data (no driver
     * loops over rows — only centroids, which are k×dim small). */
@@ -208,16 +212,32 @@ object Ivf {
     (centroids, cells)
   }
 
+  /** The `nprobe` cells nearest the query: l2² to each centroid of
+    * the small in-memory table, ties broken by cell id. The one probe
+    * rule of every cell-routed tier (IVF, IVF-PQ, partitioned HNSW). */
+  def probeCells(centroids: Array[(Int, Array[Float])], query: Array[Float],
+      nprobe: Int): Seq[Int] =
+    centroids.map { case (c, cen) => (c, VectorKernels.l2Squared(query, cen)) }
+      .sortBy { case (c, d) => (d, c) }
+      .take(nprobe).map(_._1).toIndexedSeq
+
+  /** Quality tier → cells probed, calibrated on the near-uniform
+    * testdata (the ANN worst case; PERF_r17_ann.md): fast = 2 ≈
+    * 0.43-0.53 recall@10, balanced = 4 ≈ 0.77-0.8, accurate = all but
+    * one cell ≥ 0.95 — the reference's Accurate bar (vector.rs:84-91),
+    * oracle-pinned by q125_ann_recall_ivf. */
+  def nprobeOf(tier: String): Int = tier match {
+    case "fast" => 2
+    case "balanced" => 4
+    case _ => Cells - 1
+  }
+
   /** ANN top-k: probe the `nprobe` nearest cells, exact-rerank inside. */
   def search(index: DataFrame, vecCol: String, query: Seq[Float], k: Int,
       centroids: Array[(Int, Array[Float])], nprobe: Int,
       metric: String = "cosine", idCol: String = "id"): DataFrame = {
-    val q = query.toArray
-    val cells = centroids
-      .map { case (c, cen) => (c, VectorKernels.l2Squared(q, cen)) }
-      .sortBy { case (c, d) => (d, c) }
-      .take(nprobe).map(_._1)
-    val cands = index.where(col("cell").isin(cells.toIndexedSeq: _*))
+    val cands = index.where(col("cell").isin(
+      probeCells(centroids, query.toArray, nprobe): _*))
     Knn.topK(cands, vecCol, query, k, metric, idCol)
   }
 }

@@ -111,13 +111,4 @@ object IvfPq {
     }
     (cents, cb, combined)
   }
-
-  /** The `nprobe` cells nearest the query — driver-side over the tiny
-    * centroid table, same probe rule as [[Ivf.search]] (ties break on
-    * cell id for determinism). */
-  def probeCells(cents: Array[(Int, Array[Float])], query: Array[Float],
-      nprobe: Int): Seq[Int] =
-    cents.map { case (c, cen) =>
-      (c, graft.functions.VectorKernels.l2Squared(query, cen))
-    }.sortBy { case (c, d) => (d, c) }.take(nprobe).map(_._1).toIndexedSeq
 }

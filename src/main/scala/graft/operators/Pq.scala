@@ -26,6 +26,9 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
+  /** Centroids per subspace codebook: 8-bit codes ([[defaultM]]). */
+  val K = 256
+
   /** Dimension-adaptive subspace count: ~8 dims per subspace with
     * k=256 centroids — the classic 8-bits-per-subquantizer PQ operating
     * point (FAISS IndexPQ/IndexIVFPQ convention) — floor 8 subspaces,
@@ -40,7 +43,7 @@ object Pq {
     * is 96. Calibration at 100K×768D (RecallCurve r17, residual codes):
     * the r16 (m=48, k=32) point needed a corpus-proportional candidate
     * pool; (m=96, k=256) holds recall@10 = 0.96 at the FIXED default
-    * oversampling 64 and 1.00 at 128. `graft.pq.m` still overrides. */
+    * oversampling 64 and 1.00 at 128. */
   def defaultM(dim: Int): Int = {
     val target = math.max(8, dim / 8)
     val down = (target to 1 by -1).find(dim % _ == 0).getOrElse(1)

@@ -1,7 +1,7 @@
 package graft.velesql
 
 import graft.functions.VectorFunctions
-import graft.operators.{Bm25, Graph, Knn}
+import graft.operators.{Ann, Bm25, Graph, Hnsw, Ivf, IvfPq, Knn, Pq, Quantization}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -62,6 +62,67 @@ class Compiler(
     * set: adding a vector key above keeps both checks in sync. */
   private val KnownWithKeys =
     VectorOnlyWithKeys.toSet ++ Set("timeout_ms", "max_groups", "group_limit")
+
+  /** The plain-NEAR WITH options ([[nearOptions]]). `probe` is the
+    * probing tier (fast/balanced/accurate); None is the exact scan. */
+  private case class NearOptions(probe: Option[String], index: Option[String],
+      quant: Option[String], rerank: Boolean, oversampling: Option[Int])
+
+  /** Parses and cross-checks every plain-NEAR WITH option
+    * (ast/with_clause.rs:82-131) in one place, so a bad clause fails
+    * before any index is materialized. */
+  private def nearOptions(w: Map[String, String],
+      storageMode: Option[String]): NearOptions = {
+    // WITH (mode=…) / (ef_search=N): the reference's quality tiers
+    // (vector.rs:84-91 — ef ≤64 Fast, ≤128 Balanced, ≤256 Accurate,
+    // else Perfect); 'perfect' / 'exact' / absent = exact scan.
+    val probe = w.get("mode").orElse(w.get("ef_search").map(_.toDouble.toInt match {
+      case e if e <= 64 => "fast"
+      case e if e <= 128 => "balanced"
+      case e if e <= 256 => "accurate"
+      case _ => "perfect"
+    })) match {
+      case Some(t @ ("fast" | "balanced" | "accurate")) => Some(t)
+      case Some("perfect" | "exact") | None => None
+      case Some(other) => fail(s"unknown WITH mode '$other'")
+    }
+    // WITH (index = …) picks the structure behind a probing tier: LSH
+    // buckets (default), trained IVF cells or partitioned HNSW. On the
+    // exact scan it would be a silent no-op.
+    val index = w.get("index").map {
+      case k @ ("lsh" | "ivf" | "hnsw") => k
+      case other => fail(s"unknown WITH index '$other' (supported: lsh, ivf, hnsw)")
+    }
+    if (index.isDefined && probe.isEmpty)
+      fail("WITH index requires a probing mode (fast/balanced/accurate)")
+    // Quantization names follow QuantizationMode::parse
+    // (with_clause.rs:27-35) plus our 'binary' sketch and 'pq'. The
+    // collection's create-time storage mode is the default regime
+    // (collection/types.rs:32-61); an explicit WITH overrides it. "full"
+    // and the write-time f16/bf16 modes are dropped here, so a bare
+    // WITH rerank=true keeps its sketch-prefilter meaning on them.
+    val quant0 = w.get("quantization")
+      .orElse(storageMode.filterNot(m => m == "full" || m == "f16" || m == "bf16")).map {
+        case q @ ("binary" | "dual" | "hybrid" | "int8" | "sq8" | "quantized" | "pq") => q
+        case "f32" | "full" | "exact" | "auto" | "default" => "f32"
+        case other => fail(s"unknown WITH quantization '$other'")
+      }
+    // PQ codes compose only with the IVF cells they were trained on. An
+    // IMPLICIT storage-mode 'pq' yields to the other probing tiers (the
+    // user asked for mode=…, not for PQ); an explicit one is an error.
+    val pqConflict = quant0.contains("pq") && probe.isDefined && !index.contains("ivf")
+    if (pqConflict && w.contains("quantization"))
+      fail("quantization='pq' composes only with index='ivf' probing " +
+        "(the LSH buckets and HNSW graphs aren't trained with the codebooks); " +
+        "add index='ivf' or drop the mode for a full-codes ADC scan")
+    val rerank = w.get("rerank") match {
+      case Some("true") | Some("1") => true
+      case Some("false") | Some("0") | None => false
+      case Some(other) => fail(s"WITH rerank expects true/false, got '$other'")
+    }
+    NearOptions(probe, index, if (pqConflict) None else quant0, rerank,
+      w.get("oversampling").map(_.toDouble.toInt))
+  }
 
   def run(sql: String): DataFrame =
     Parser.parse(sql).fold(e => throw new IllegalArgumentException(e), compile)
@@ -196,6 +257,12 @@ class Compiler(
         val fusion = sel.fusion.get
         val kParam = fusion.params.getOrElse("k", 60.0)
         val w = fusion.params.getOrElse("vector_weight", 0.5)
+        // the reference fuses hybrid legs by weighted RRF only
+        // (text.rs:150-162): any other strategy would be a silent no-op,
+        // and a weight outside [0, 1] gives the text leg a negative one
+        if (fusion.strategy != "rrf")
+          fail(s"hybrid MATCH + NEAR fuses by RRF only, got strategy '${fusion.strategy}'")
+        if (w < 0.0 || w > 1.0) fail(s"vector_weight must be in [0, 1], got $w")
         val sim = fn(col(vcolName), VectorFunctions.vecLit(vec))
         // filter-then-search parity with plain NEAR (vector.rs:164-239):
         // the residual WHERE restricts BOTH legs BEFORE the bounded
@@ -275,6 +342,9 @@ class Compiler(
         val (fn, hib) = VectorFunctions.metrics(meta.metric)
         val vcolName = meta.vectorCol.getOrElse(
           fail("NEAR on a collection without a vector column"))
+        // every WITH option is validated here, before any index call: a
+        // rejected query never materializes an index
+        val opts = nearOptions(sel.withOptions, meta.storageMode)
         // Residual filters run BEFORE the sketch/top-k phase (the
         // filter-then-search contract — Knn.scala, vector.rs:164-239);
         // a post-filter could empty the k×oversampling candidate pool.
@@ -282,114 +352,53 @@ class Compiler(
           case Some(c) => residualApplied = true; df.where(compileCond(c, df, meta))
           case None => df
         }
-        // WITH (mode=…) / (ef_search=N) routes the ANN tier through the
-        // language: the reference's quality tiers (vector.rs:84-91 —
-        // ef ≤64 Fast, ≤128 Balanced, ≤256 Accurate, else Perfect) map
-        // to the LSH probe radius; 'perfect' / absent = exact scan.
-        val tier: Option[String] = sel.withOptions.get("mode")
-          .orElse(sel.withOptions.get("ef_search").map(_.toDouble.toInt match {
-            case e if e <= 64 => "fast"
-            case e if e <= 128 => "balanced"
-            case e if e <= 256 => "accurate"
-            case _ => "perfect"
-          }))
-        // WITH (index = 'lsh' | 'ivf') picks the ANN structure behind the
-        // quality tiers: LSH Hamming-ball probe (default) or the trained
-        // IVF cell probe (both materialized once per dataset). The key is
-        // only meaningful on a probing tier — on 'perfect'/absent it
-        // would be a silent no-op, which the closed-set validation
-        // explicitly forbids.
-        val indexKind = sel.withOptions.get("index").map {
-          case k @ ("lsh" | "ivf" | "hnsw") => k
-          case other => fail(s"unknown WITH index '$other' (supported: lsh, ivf, hnsw)")
+        // Dataset tables AND written user collections resolve an index
+        // source; joins and derived frames have none.
+        lazy val srcOpt = if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None
+        def indexSrc(withKey: String): Catalog.IndexSource = srcOpt.getOrElse(
+          fail(s"WITH $withKey needs a dataset table or a written user " +
+            "collection (its index is materialized per source; joins/derived " +
+            "frames can't use it)"))
+        // The probe step of every materialized tier: alias the index like
+        // the FROM table, apply the residual WHERE, keep `key IN probes`
+        // (pushed into the clustered scan, pruning row groups), drop key.
+        def probe(index: DataFrame, key: String, probes: Seq[Any]): DataFrame = {
+          val idx = index.as(sel.fromAlias.getOrElse(sel.from))
+          residualCond.fold(idx)(c => idx.where(compileCond(c, idx, meta)))
+            .where(col(key).isin(probes: _*)).drop(key)
         }
-        if (indexKind.isDefined && !tier.exists(Set("fast", "balanced", "accurate")))
-          fail("WITH index requires a probing mode (fast/balanced/accurate)")
-        val dfF = tier match {
-          case Some(t @ ("fast" | "balanced" | "accurate"))
-              if indexKind.contains("hnsw") =>
-            // Partitioned HNSW (reference index/hnsw/native_index.rs:230):
-            // the IVF centroid router picks the same nprobe cells as the
-            // 'ivf' tier, but inside each probed cell an ef-bounded
-            // navigable-graph walk collects ≤ ef candidates instead of
-            // scanning the whole cell — fewer scored candidates at equal
-            // recall (HnswSpec asserts the count; q195_ann_recall_hnsw
-            // pins recall@10 ≥ 0.95 at the accurate tier).
-            import graft.operators.{Hnsw, Ivf}
-            val src = (if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None)
-              .getOrElse(fail("WITH index='hnsw' needs a dataset table or a " +
-                "written user collection (the graph index is materialized " +
-                "per source; joins/derived frames can't use it)"))
-            val kCells = spark.conf.get("graft.ivf.cells", "8").toInt
-            val m = spark.conf.get("graft.hnsw.m", "8").toInt
-            // nprobe mirrors the ivf tiers; ef is the walk budget
-            // (calibrated on the near-uniform worst-case testdata,
-            // PERF_r11.md: accurate = nprobe 7, ef 96 → ≥29/30 recall@10)
-            val nprobe = t match { case "fast" => 2; case "balanced" => 4; case _ => kCells - 1 }
-            // The IVF half is the centroid router AND the cost-aware
-            // fallback target; resolving it first yields the corpus
-            // count WITHOUT touching the graph (Hnsw.materializedIndexAt
-            // builds on the same memoized artifact, so nothing doubles).
-            val (cents, ivfCells) = Ivf.materializedIndexAt(spark, src.token,
-              src.paths, sel.from, src.frame(), vcolName, kCells,
+        val dfF = opts.probe match {
+          case Some(t) if opts.index.exists(Set("ivf", "hnsw")) =>
+            // The trained IVF cells: `index = 'ivf'` probes them, and
+            // partitioned HNSW (native_index.rs:230) routes through the
+            // same centroids and nprobe, then walks an ef-bounded graph
+            // inside each probed cell instead of scanning it.
+            val src = indexSrc(s"index='${opts.index.get}'")
+            val (cents, cells) = Ivf.materializedIndexAt(spark, src.token,
+              src.paths, sel.from, src.frame(), vcolName, Ivf.Cells,
               modelSources = src.modelPaths, pieces = src.pieces)
-            // Corpus count: known the moment the index materializes, so
-            // it is persisted per content stamp (Materialize.countMemo)
-            // — NO Spark job on any later compile, including fresh-JVM
-            // serving with a new query vector per request (r16 VERDICT
-            // #1 / ADVICE: the unconditional per-compile count() doubled
-            // q195). The kind is deliberately index-family-agnostic
-            // (every family's count is the same non-null-vector corpus),
-            // so any future consumer can share the persisted value —
-            // since the r17 residual-PQ rework dropped its corpus-size
-            // knob, this routing decision is the only consumer.
-            val corpusN = graft.Materialize.countMemo(
-              s"corpusn_${vcolName}_${sel.from}", src.token, src.paths)(
-              ivfCells.count())
-            val cellsToProbe = Hnsw.probeCells(cents, vec.toArray, nprobe)
-            // Cost-aware tier routing (r16 VERDICT #2, widened to every
-            // tier in r17): the batch walk reads every probed row anyway
-            // (mapPartitions materializes the cell) — its only saving is
-            // exact-kernel evals, and the measured per-visit bookkeeping
-            // exceeds a codegen eval at every dim tested. Above the
-            // calibration corpus that trade never pays, on EITHER axis:
-            //  - accurate: recall at a FIXED ef decays as cells grow —
-            //    ef must scale as ~corpus/96 (RecallCurve r16; the
-            //    reference scales the same knob, HnswParams::
-            //    for_dataset_size params.rs:72-102) — and a linearly-
-            //    growing ef is a strictly worse linear scan (100K×768D:
-            //    662 ms walk at 0.96 vs the probed exact scan at 1.0);
-            //  - fast/balanced: their fixed small ef keeps the cost
-            //    DOWN but the recall collapses with cell size (0.31 /
-            //    0.48 on the tile at 512/500 ms — dominated by the
-            //    nprobe-matched cell scan at 1.0 recall and ~70 ms,
-            //    PERF_r17_ann).
-            // So once corpus > 96·96 every tier routes to the per-cell
-            // EXACT scan over its OWN nprobe probe set (the ivf-tier
-            // plan — the probe width stays the speed/recall knob), and
-            // the adjacency never builds. At calibration scale the walk
-            // keeps the reference's navigable-graph semantics (HnswSpec;
-            // q195's recall pin path).
-            if (corpusN > 96L * 96L) {
-              val idx = ivfCells.as(sel.fromAlias.getOrElse(sel.from))
-              val idxF = residualCond match {
-                case Some(c) => idx.where(compileCond(c, idx, meta))
-                case None => idx
-              }
-              idxF.where(col("cell").isin(cellsToProbe: _*)).drop("cell")
-            } else {
+            val probes = Ivf.probeCells(cents, vec.toArray, Ivf.nprobeOf(t))
+            // Corpus count for the HNSW route, persisted per content
+            // stamp (Materialize.countMemo): no Spark job on any later
+            // compile, fresh query vectors included (r16 VERDICT #1).
+            def corpusN = graft.Materialize.countMemo(
+              s"corpusn_${vcolName}_${sel.from}", src.token, src.paths)(cells.count())
+            // Above the calibration corpus (96·96) the walk never pays:
+            // its only saving is exact-kernel evals, its per-visit
+            // bookkeeping costs more, and recall at a fixed ef decays as
+            // cells grow (RecallCurve r16, PERF_r17_ann). So every HNSW
+            // tier there scans its probed cells exactly — the ivf plan —
+            // and the adjacency never builds.
+            if (opts.index.contains("ivf") || corpusN > 96L * 96L)
+              probe(cells, "cell", probes)
+            else {
               val (_, graph) = Hnsw.materializedIndexAt(spark, src.token,
                 src.paths, sel.from, src.frame(), vcolName, meta.idCol,
-                meta.metric, kCells, m,
+                meta.metric, Ivf.Cells,
                 modelSources = src.modelPaths, pieces = src.pieces)
-              val ef = t match {
-                case "fast" => 24
-                case "balanced" => 48
-                // the sf-scale calibration floor; larger corpora routed
-                // to the exact scan above, so the walk never pays an
-                // asymptotically-linear ef
-                case _ => 96
-              }
+              // walk budget per tier; accurate is the sf-scale
+              // calibration floor (PERF_r11.md: nprobe 7, ef 96 → ≥29/30)
+              val ef = t match { case "fast" => 24; case "balanced" => 48; case _ => 96 }
               val idx = graph.as(sel.fromAlias.getOrElse(sel.from))
               // filter-then-search: the residual predicate gates ACCEPTANCE
               // inside the walk (navigation still crosses non-matching
@@ -400,131 +409,32 @@ class Compiler(
                 case None => (idx, None)
               }
               Hnsw.walkCandidates(
-                probedIdx.where(col("cell").isin(cellsToProbe: _*)),
+                probedIdx.where(col("cell").isin(probes: _*)),
                 vcolName, meta.idCol, meta.metric, vec, ef, keepCol,
-                // the materialized graph is written clustered by cell, so
-                // the walk may skip its co-locating shuffle when no
-                // parquet file can split (walkCandidates gates on file
-                // sizes; the residual __keep projection doesn't change
-                // the underlying scan's files)
+                // the graph is written clustered by cell, so the walk may
+                // skip its co-locating shuffle when no file can split
                 cellClusteredFiles = true)
                 .drop("cell", "neighbors", "neighbors1", "level", "__keep")
             }
-          case Some(t @ ("fast" | "balanced" | "accurate"))
-              if indexKind.contains("ivf") =>
-            import graft.operators.Ivf
-            val src = (if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None)
-              .getOrElse(fail("WITH index='ivf' needs a dataset table or a " +
-                "written user collection (the trained index is materialized " +
-                "per source; joins/derived frames can't use it)"))
-            val k = spark.conf.get("graft.ivf.cells", "8").toInt
-            // nprobe per tier, calibrated like the LSH radii (PERF_r17_ann.md,
-            // same worst-case near-uniform testdata): fast=2 ≈ 0.43-0.53,
-            // balanced=4 ≈ 0.77-0.8, accurate=7 ≥ 0.95 — the reference's
-            // Accurate bar, oracle-pinned by q125_ann_recall_ivf
-            val nprobe = t match { case "fast" => 2; case "balanced" => 4; case _ => k - 1 }
-            val (cents, cells) = Ivf.materializedIndexAt(spark, src.token,
-              src.paths, sel.from, src.frame(), vcolName, k,
-              modelSources = src.modelPaths, pieces = src.pieces)
-            val probeCells = cents
-              .map { case (c, cen) =>
-                (c, graft.functions.VectorKernels.l2Squared(vec.toArray, cen)) }
-              .sortBy { case (c, dist) => (dist, c) }
-              .take(nprobe).map(_._1)
-            val idx = cells.as(sel.fromAlias.getOrElse(sel.from))
-            val idxF = residualCond match {
-              case Some(c) => idx.where(compileCond(c, idx, meta))
-              case None => idx
-            }
-            idxF.where(col("cell").isin(probeCells.toIndexedSeq: _*)).drop("cell")
-          case Some(t @ ("fast" | "balanced" | "accurate")) =>
-            import graft.operators.Ann
-            val nPlanes = spark.conf.get("graft.ann.planes", "6").toInt
-            // Tier → probe radius, calibrated on the testdata embeddings
-            // (near-uniform directions — the ANN worst case; recall@10
-            // over 3 queries, PERF_r17_ann.md): fast r=1 ≈ 0.25,
-            // balanced r=2 ≈ 0.45-0.57, accurate r=4 ≥ 0.95 — the
-            // reference's Accurate-tier recall bar (docs/BENCHMARKS.md:
-            // 96-102), oracle-pinned by q123_ann_recall. On clustered
-            // real-world embeddings the same radii probe far fewer rows.
+          case Some(t) =>
+            // LSH Hamming-ball probe, radius per tier, calibrated on the
+            // near-uniform testdata (PERF_r17_ann.md): fast r=1 ≈ 0.25,
+            // balanced r=2 ≈ 0.45-0.57, accurate r=4 ≥ 0.95 recall@10,
+            // oracle-pinned by q123_ann_recall.
             val radius = t match { case "fast" => 1; case "balanced" => 2; case _ => 4 }
-            val sig = Ann.signature(vec.toArray, Ann.planes(nPlanes, vec.length))
-            val probes = Ann.probeBuckets(sig, nPlanes, radius)
-            val srcOpt = if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None
-            if (srcOpt.isDefined) {
-              // probe the MATERIALIZED bucket-clustered index: `bucket IN
-              // (probes)` pushes into the parquet scan and prunes row
-              // groups — no per-query re-hash of every vector, no scan
-              // outside the Hamming ball (the 100 TB shape; on-the-fly
-              // signature filtering below is a full scan per query).
-              // Dataset tables AND written user collections both resolve
-              // an indexSource; derived frames fall to on-the-fly.
-              val src = srcOpt.get
-              // bucketed user collections maintain the LSH index PER
-              // STORAGE PIECE — a write builds only its own delta's
-              // piece (Ann.materializedIndexPieces scaladoc)
-              val idx0 = src.pieces match {
-                case Some(ps) => Ann.materializedIndexPieces(
-                  spark, src.token, ps, sel.from, vcolName, nPlanes,
-                  vec.length)
-                case None => Ann.materializedIndexAt(spark, src.token,
-                  src.paths, sel.from, src.frame(), vcolName, nPlanes,
-                  vec.length)
-              }
-              val idx = idx0.as(sel.fromAlias.getOrElse(sel.from))
-              val idxF = residualCond match {
-                case Some(c) => idx.where(compileCond(c, idx, meta))
-                case None => idx
-              }
-              idxF.where(col("bucket").isin(probes: _*)).drop("bucket")
-            } else
-              dfF0.where(Ann.signatureCol(col(vcolName), nPlanes, vec.length)
-                .isin(probes: _*))
-          case Some("perfect") | Some("exact") | None => dfF0
-          case Some(other) => fail(s"unknown WITH mode '$other'")
-        }
-        // WITH (quantization=…, oversampling=N, rerank=true) selects the
-        // two-phase sketch path (ast/with_clause.rs:106-131): hamming
-        // prefilter keeps k×oversampling candidates, exact scores rerank.
-        // `rerank=true` alone also routes two-phase (search_with_rerank,
-        // index/hnsw/index/search.rs:118-159; candidate pool = k×multiplier,
-        // default 2 — config.rs:228,240). Quantization value names follow
-        // QuantizationMode::parse (with_clause.rs:27-35) plus our 'binary'
-        // sketch; unknown values are an error, not a silent exact scan.
-        // the collection's create-time storage mode is the default
-        // quantization regime (StorageMode, collection/types.rs:32-61,
-        // quantization.rs:20-29); an explicit WITH overrides it — incl.
-        // WITH (quantization='full') to force exact on an SQ8 collection
-        // ("full" storage is the exact default — dropped here so a bare
-        // WITH rerank=true keeps its sketch-prefilter meaning on it)
-        // f16/bf16 are WRITE-time storage modes (precision applied at
-        // publish, Collections.halfRoundIfConfigured) — dropped here
-        // exactly like "full" so a bare WITH rerank=true keeps its
-        // sketch-prefilter meaning on a half-precision collection; as a
-        // READ-time WITH quantization value they stay an error below.
-        val quant0: Option[String] = sel.withOptions.get("quantization")
-          .orElse(meta.storageMode.filterNot(m =>
-            m == "full" || m == "f16" || m == "bf16")).map {
-          case q @ ("binary" | "dual" | "hybrid" | "int8" | "sq8" | "quantized" | "pq") => q
-          case "f32" | "full" | "exact" | "auto" | "default" => "f32"
-          case other => fail(s"unknown WITH quantization '$other'")
-        }
-        // an IMPLICIT storage-mode 'pq' yields to an explicitly requested
-        // probing tier it can't compose with (the LSH tiers): the user
-        // asked for mode=…, not for PQ — erroring a query that works on
-        // every other collection (or wasting the already-built bucket
-        // probe) would make the storage default a trap. An EXPLICIT
-        // WITH (quantization='pq') still conflicts loudly below.
-        val quant: Option[String] =
-          if (quant0.contains("pq") && sel.withOptions.get("quantization").isEmpty &&
-              tier.exists(Set("fast", "balanced", "accurate")) &&
-              !indexKind.contains("ivf")) None
-          else quant0
-        val rerank: Boolean = sel.withOptions.get("rerank") match {
-          case Some("true") | Some("1") => true
-          case Some("false") | Some("0") => false
-          case Some(other) => fail(s"WITH rerank expects true/false, got '$other'")
-          case None => false
+            val sig = Ann.signature(vec.toArray, Ann.planes(Ann.Planes, vec.length))
+            val probes = Ann.probeBuckets(sig, Ann.Planes, radius)
+            srcOpt match {
+              case Some(src) =>
+                probe(Ann.materializedIndexAt(spark, src.token, src.paths,
+                  sel.from, src.frame(), vcolName, Ann.Planes, vec.length,
+                  src.pieces), "bucket", probes)
+              // no index source: on-the-fly signatures, a full scan
+              case None =>
+                dfF0.where(Ann.signatureCol(col(vcolName), Ann.Planes, vec.length)
+                  .isin(probes: _*))
+            }
+          case None => dfF0
         }
         // Three quantization regimes (QuantizationMode, with_clause.rs:12-22):
         //   binary/dual/hybrid (+ bare rerank=true) → sketch prefilter,
@@ -533,62 +443,26 @@ class Compiler(
         //     ordering, exact rerank;
         //   int8/sq8/quantized alone → "int8 only (fast, approximate)":
         //     scores ARE the dequantized-vector scores, no rerank.
+        val quant = opts.quant
         val isInt8 = quant.exists(q => q == "int8" || q == "sq8" || q == "quantized")
         val isSketch = quant.exists(q => q == "binary" || q == "dual" || q == "hybrid")
-        val isPq = quant.contains("pq")
-        // PQ's calibrated operating point (PERF_r17.md / q133_pq_recall)
-        // only reaches the >=0.95 recall bar at oversampling=16 for the
-        // default m=8/k=32 — a plain WITH (quantization='pq') must land
-        // there, not at the generic sketch default of 4.
-        // composed IVF-PQ loses a little recall to the coarse probe, so
-        // its calibrated default is higher: nprobe=7, oversampling=64 →
-        // 29/30 at sf0.01 AND 30/30 at sf0.1 (PERF_r17_ann.md; 32 measures
-        // 29/30 and 28/30 — the pool must grow with the corpus fraction
-        // it represents, and 64 holds the bar at both scales)
-        val pqProbing = quant.contains("pq") &&
-          tier.exists(Set("fast", "balanced", "accurate"))
-        val oversample = sel.withOptions.get("oversampling")
-          .map(_.toDouble.toInt)
-          .getOrElse(if (pqProbing) 64 else if (isPq) 16
-            else if (quant.isDefined) 4 else 2)
         val k = sel.limit.getOrElse(NearDefaultLimit)
-        import graft.operators.Quantization
-        if (isPq) {
+        if (quant.contains("pq")) {
           // Beyond-reference fourth regime: product quantization. Phase 1
           // orders the NARROW materialized codes table (id + m ints) by
           // the ADC lookup score — the scan never touches vectors or
           // payloads — and the top k×oversampling ids join back to the
           // filtered frame for exact rerank. ADC is ordering-only, so
-          // 'pq' is two-phase by construction (rerank implicit). On the
-          // near-uniform testdata (the ANN worst case), m=8 k=32
-          // oversampling=16 measures recall@10 = 29/30 (PERF_r17.md) —
-          // pinned by q133_pq_recall.
-          val pqSrc = (if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None)
-            .getOrElse(fail("WITH quantization='pq' needs a dataset table " +
-              "or a written user collection (the trained codebooks are " +
-              "materialized per source)"))
-          val probing = tier.exists(Set("fast", "balanced", "accurate"))
-          if (probing && !indexKind.contains("ivf"))
-            fail("quantization='pq' composes only with index='ivf' probing " +
-              "(the LSH buckets aren't trained with the codebooks); add " +
-              "index='ivf' or drop the mode for a full-codes ADC scan")
-          import graft.operators.{IvfPq, Pq}
-          // (m, k) adapt to the vector width: ~8 dims/subspace, 256
-          // centroids — the classic 8-bit PQ operating point (64D keeps
-          // the historical m=8). A fixed m=8 quantized 768D vectors to
-          // noise (r16 RecallCurve), and the r16 (dim/16, k=32) point
-          // still needed a corpus-proportional candidate pool (r17
-          // RecallCurve); conf still overrides both.
-          val m = spark.conf.getOption("graft.pq.m").map(_.toInt)
-            .getOrElse(Pq.defaultM(vec.length))
-          val kc = spark.conf.get("graft.pq.k", "256").toInt
-          val cellsN = spark.conf.get("graft.ivf.cells", "8").toInt
+          // 'pq' is two-phase by construction (rerank implicit).
+          val pqSrc = indexSrc("quantization='pq'")
+          // m adapts to the vector width (~8 dims/subspace; 64D keeps
+          // the historical m=8): a fixed m=8 quantized 768D vectors to
+          // noise (r16 RecallCurve)
+          val m = Pq.defaultM(vec.length)
           // ONE residual-code artifact serves both pq regimes (IvfPq
           // scaladoc): codes quantize v − centroid[cell], so ADC ranks
           // tightly inside clusters and a FIXED candidate pool holds the
-          // recall bar at every corpus size — the r16 corpus-adaptive
-          // pool (rows/200, 512 reranked ids at 100K) and its count job
-          // are gone (r16 VERDICT #3).
+          // recall bar at every corpus size.
           //  - probing (tier + index='ivf'): phase 1 scans only the
           //    probed cells — row-group-pruned by the cell clustering —
           //    and rerank joins back to dfF, which the tier match above
@@ -598,28 +472,24 @@ class Compiler(
           //    EXPLICIT-oversampling contract at 16.
           val (cents, cb, combined) = IvfPq.materializedIndexAt(spark,
             pqSrc.token, pqSrc.paths, sel.from, pqSrc.frame(), vcolName,
-            meta.idCol, vec.length, cellsN, m, kc,
+            meta.idCol, vec.length, Ivf.Cells, m, Pq.K,
             modelSources = pqSrc.modelPaths, pieces = pqSrc.pieces)
-          val codes =
-            if (probing) {
-              val nprobe = tier.get match {
-                case "fast" => 2; case "balanced" => 4; case _ => cellsN - 1
-              }
-              val probes = IvfPq.probeCells(cents, vec.toArray, nprobe)
-              combined.where(col("cell").isin(probes: _*))
-            } else combined
+          val codes = opts.probe match {
+            case Some(t) => combined.where(col("cell").isin(
+              Ivf.probeCells(cents, vec.toArray, Ivf.nprobeOf(t)): _*))
+            case None => combined
+          }
           // fixed default pool, calibrated on residual codes (RecallCurve
           // 100K×768D: recall@10 ≥0.95 at os=64; near-uniform sf-scale
           // worst case holds its floor at 16 — q133's explicit pin)
-          val osEff = sel.withOptions.get("oversampling").map(_.toDouble.toInt)
-            .getOrElse(64)
+          val osEff = opts.oversampling.getOrElse(64)
           // query-independent ADC tables (|cb|², cent×cb cross, |cent|²)
           // memoized per model stamp, like the codebooks: rebuilding the
           // nCells×m×k cross table per request would be the same
           // per-request floor the r16 count job was, and memoizing lets
           // every cached plan share one array object
           val adcModel = graft.Materialize.memo(
-            s"ivfpqr${cellsN}_${m}x${kc}_adctables_${sel.from}", pqSrc.token,
+            s"ivfpqr${Ivf.Cells}_${m}x${Pq.K}_adctables_${sel.from}", pqSrc.token,
             pqSrc.modelPaths.getOrElse(pqSrc.paths)) {
             Pq.adcModelTables(cb, cents)
           }
@@ -638,13 +508,16 @@ class Compiler(
             .select(meta.idCol)
           dfF.join(candIds, meta.idCol :: Nil)
             .withColumn("score", fn(col(vcolName), VectorFunctions.vecLit(vec)))
-        } else if (isInt8 && !rerank) {
+        } else if (isInt8 && !opts.rerank) {
           Quantization.sq8Decode(Quantization.withSq8(dfF, vcolName))
             .withColumn("score", fn(col("vec_approx"), VectorFunctions.vecLit(vec)))
             .drop("vec_approx", "sq8_codes", "sq8_min", "sq8_scale")
         } else {
+          // a bare rerank=true is two-phase too (search_with_rerank,
+          // index/hnsw/index/search.rs:118-159), pool k×2 (config.rs:228,240)
+          val oversample = opts.oversampling.getOrElse(if (quant.isDefined) 4 else 2)
           val base =
-            if (isSketch || (rerank && quant.isEmpty)) {
+            if (isSketch || (opts.rerank && quant.isEmpty)) {
               val sk = Quantization.withBinarySketch(dfF, vcolName, vec.length)
               Quantization.hammingToQuery(sk, vec)
                 .orderBy(col("__ham").asc, col(meta.idCol).asc)
@@ -709,6 +582,11 @@ class Compiler(
             val aw = fusion.flatMap(_.params.get("avg_weight")).getOrElse(0.5)
             val mw = fusion.flatMap(_.params.get("max_weight")).getOrElse(0.3)
             val hw = fusion.flatMap(_.params.get("hit_weight")).getOrElse(0.2)
+            // the reference asserts weights ≥ 0 summing to 1 ± 0.001
+            // (fusion/strategy.rs:95-122)
+            if (Seq(aw, mw, hw).exists(_ < 0.0) || math.abs(aw + mw + hw - 1.0) > 0.001)
+              fail(s"weighted fusion weights must be >= 0 and sum to 1, got " +
+                s"avg_weight=$aw, max_weight=$mw, hit_weight=$hw")
             val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
             val ord = (c: Column) => if (hib) c.desc else c.asc
             val legs = sims.map { sim =>

@@ -26,31 +26,30 @@ import graft.operators.Ann
   * the Hamming ball.
   *
   * Opt-in (the ANN contract trades exactness for probe-bound work):
-  * `spark.conf.set("graft.ann.rewrite", "true")`; knobs
-  * `graft.ann.planes` / `graft.ann.radius` (the reference's ef tiers —
-  * vector.rs:69-115). Injected as a pre-CBO rule so it runs exactly once
-  * per plan; an idempotence guard skips sorts whose child already
-  * filters on this probe set.
+  * `spark.conf.set("graft.ann.rewrite", "true")`. The probe is the
+  * LSH index's `Ann.Planes` planes at radius `Ann.Radius`, the balanced
+  * tier (the reference's ef tiers — vector.rs:69-115). Injected as a
+  * pre-CBO rule so it runs exactly once per plan; an idempotence guard
+  * skips sorts whose child already filters on this probe set.
   */
-case class AnnTopKRule(annConf: () => (Boolean, Int, Int)) extends Rule[LogicalPlan] {
+case class AnnTopKRule(enabled: () => Boolean) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val (enabled, nPlanes, radius) = annConf()
-    if (!enabled) return plan
+    if (!enabled()) return plan
     plan.transformDown {
       // column pruning may leave a Project between the limit pair and the
       // Sort — match both shapes
       case gl @ GlobalLimit(_, ll @ LocalLimit(_, s: Sort)) =>
-        gl.copy(child = ll.copy(child = rewriteSort(s, nPlanes, radius)))
+        gl.copy(child = ll.copy(child = rewriteSort(s)))
       case gl @ GlobalLimit(_, ll @ LocalLimit(_, p @ Project(_, s: Sort))) =>
         gl.copy(child = ll.copy(child =
-          p.copy(child = rewriteSort(s, nPlanes, radius))))
+          p.copy(child = rewriteSort(s))))
     }
   }
 
   /** Insert the probe filter under a qualifying similarity Sort; returns
     * the sort unchanged when it does not qualify. */
-  private def rewriteSort(s: Sort, nPlanes: Int, radius: Int): Sort = s match {
+  private def rewriteSort(s: Sort): Sort = s match {
     case Sort(SortOrder(simExpr, direction, _, _) +: _, true, child, _) =>
       simVec(simExpr) match {
         // only a NEAREST-first top-k qualifies: Descending for
@@ -59,11 +58,11 @@ case class AnnTopKRule(annConf: () => (Boolean, Int, Int)) extends Rule[LogicalP
         // buckets would not approximate the requested query at all.
         case Some((vecAttr, q, higherIsBetter)) if
             (if (higherIsBetter) direction == Descending else direction == Ascending) =>
-          val sig = Ann.signature(q, Ann.planes(nPlanes, q.length))
-          val probes = Ann.probeBuckets(sig, nPlanes, radius)
+          val sig = Ann.signature(q, Ann.planes(Ann.Planes, q.length))
+          val probes = Ann.probeBuckets(sig, Ann.Planes, Ann.Radius)
           if (alreadyProbed(child, probes)) s
           else s.copy(child = Filter(
-            In(signatureExpr(vecAttr, nPlanes, q.length),
+            In(signatureExpr(vecAttr, q.length),
               probes.map(b => Literal(b, LongType))), child))
         case _ => s
       }
@@ -90,8 +89,8 @@ case class AnnTopKRule(annConf: () => (Boolean, Int, Int)) extends Rule[LogicalP
   /** The LSH signature as an expression over the vector column — the
     * same bit construction as Ann.buildIndex, so values agree with any
     * materialized `bucket` column. */
-  private def signatureExpr(vec: Attribute, nPlanes: Int, dim: Int): Expression =
-    Ann.planes(nPlanes, dim).toIndexedSeq.zipWithIndex.map { case (plane, p) =>
+  private def signatureExpr(vec: Attribute, dim: Int): Expression =
+    Ann.planes(Ann.Planes, dim).toIndexedSeq.zipWithIndex.map { case (plane, p) =>
       If(GreaterThanOrEqual(
           DotProduct(vec, Literal.create(plane.toSeq, ArrayType(FloatType))),
           Literal(0.0, DoubleType)),

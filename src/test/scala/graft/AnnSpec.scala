@@ -89,6 +89,17 @@ class AnnSpec extends SparkSpecBase {
     assert(recalls.last == 1.0, s"nprobe=k must be exact: $recalls")
   }
 
+  test("Ivf.probeCells: nearest cells first, ties by cell id, capped at every cell") {
+    import graft.operators.Ivf
+    // cells 2 and 0 sit at the same distance from the query, 1 further
+    val cents = Array(2 -> Array(1f, 0f), 1 -> Array(3f, 0f), 0 -> Array(-1f, 0f))
+    val q = Array(0f, 0f)
+    assert(Ivf.probeCells(cents, q, 1) == Seq(0))
+    assert(Ivf.probeCells(cents, q, 2) == Seq(0, 2))
+    assert(Ivf.probeCells(cents, q, 3) == Seq(0, 2, 1))
+    assert(Ivf.probeCells(cents, q, 9) == Seq(0, 2, 1))
+  }
+
   test("AnnTopKRule rewrites similarity top-k into a bucket-pruned probe") {
     import graft.functions.{VectorFunctions => VF}
     import org.apache.spark.sql.functions.col
@@ -104,9 +115,7 @@ class AnnSpec extends SparkSpecBase {
       .getOrCreate()
     org.apache.spark.sql.SparkSession.setDefaultSession(spark)
     org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    val nPlanes = 6
-    ext.conf.set("graft.ann.planes", nPlanes.toString)
-    ext.conf.set("graft.ann.radius", "2")
+    val nPlanes = Ann.Planes
     val index = Ann.buildIndex(Tables.table(ext, sfDir, "embeddings"),
       "embedding", nPlanes)
     def topk() = index
@@ -128,7 +137,7 @@ class AnnSpec extends SparkSpecBase {
     assert(probeFilters(topk()).nonEmpty, "probe filter missing when enabled")
     val annIds = topk().select("vec_id").collect().map(_.getLong(0)).toSet
     // rewrite result must equal the explicit probe search at same radius
-    val expected = Ann.search(index, "embedding", q, 10, nPlanes, radius = 2,
+    val expected = Ann.search(index, "embedding", q, 10, nPlanes, radius = Ann.Radius,
         metric = "cosine", idCol = "vec_id")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(annIds == expected)

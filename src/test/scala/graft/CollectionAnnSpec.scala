@@ -27,6 +27,23 @@ class CollectionAnnSpec extends SparkSpecBase {
   }
   private val q: Seq[Float] = (0 until 16).map(d => math.cos(d * 0.7).toFloat)
 
+  /** The `graft-derived` cache token of a collection's index source. */
+  private def tokenOf(name: String): String =
+    s"${tmp.toString}_col_$name".replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** `graft-derived` cache entries of one collection's index source. */
+  private def derivedOf(name: String): Set[String] = {
+    val parent = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
+    if (!java.nio.file.Files.isDirectory(parent)) Set.empty
+    else {
+      val s = java.nio.file.Files.list(parent)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString).filter(_.contains(tokenOf(name))).toSet
+      } finally s.close()
+    }
+  }
+
   test("probed collection search scans the materialized bucket index, pruned") {
     val df = g.sql("SELECT id, score FROM vecs WHERE vector NEAR $q LIMIT 10 " +
       "WITH (mode = 'accurate')", Map("q" -> q))
@@ -104,23 +121,16 @@ class CollectionAnnSpec extends SparkSpecBase {
     import spark.implicits._
     g.collections.create("gc", idCol = "id", vectorCol = Some("vec"))
     // r11: the LSH index over a bucketed collection is maintained PER
-    // STORAGE PIECE (Ann.materializedIndexPieces) — retention applies
+    // STORAGE PIECE (`pieces` of Ann.materializedIndexAt) — retention applies
     // per piece: each bucket keeps its current cache plus at most the
     // one superseded sibling
     def pieceGens(): Map[String, Int] = {
-      val parent = java.nio.file.Paths.get(
-        s"${sys.props("java.io.tmpdir")}/graft-derived")
-      val token = s"${tmp.toString}_col_gc".replaceAll("[^A-Za-z0-9._-]", "_")
       // v4 key shape: v4_<len>k<kind>_<len>t<token>__<stamp>
-      val piece = s"^v4_\\d+k(lsh6_p\\d+)_gc_\\d+t${java.util.regex.Pattern.quote(token)}__.*$$".r
-      val s = java.nio.file.Files.list(parent)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString).flatMap {
-          case piece(p) => Some(p)
-          case _ => None
-        }.toSeq.groupBy(identity).view.mapValues(_.size).toMap
-      } finally s.close()
+      val piece = s"^v4_\\d+k(lsh6_p\\d+)_gc_\\d+t${java.util.regex.Pattern.quote(tokenOf("gc"))}__.*$$".r
+      derivedOf("gc").toSeq.flatMap {
+        case piece(p) => Some(p)
+        case _ => None
+      }.groupBy(identity).view.mapValues(_.size).toMap
     }
     for (round <- 1 to 3) {
       val rows = (1L to (50L * round)).map { i =>
@@ -134,6 +144,65 @@ class CollectionAnnSpec extends SparkSpecBase {
     assert(gens.nonEmpty, "current piece caches must survive")
     gens.foreach { case (p, n) =>
       assert(n <= 2, s"stale index generations not pruned for $p: $n")
+    }
+  }
+
+  test("every probing tier shares one filtered, delta-aware probe route") {
+    import spark.implicits._
+    // 4 id-hash buckets, then one delta segment that re-labels and moves
+    // ids 1-40 and deletes 41-45: a stale base copy of any of them
+    // would surface with its old label or as a deleted id
+    def vec(i: Long, s: Double) = (0 until 16).map(d => math.sin(i * s + d * 1.3).toFloat)
+    g.collections.create("tiers", idCol = "id", vectorCol = Some("vec"), buckets = 4)
+    g.collections.upsert("tiers", (1L to 300L).map(i => (i, vec(i, 0.37), (i % 3).toInt, 1))
+      .toDF("id", "vec", "label", "version"))
+    g.collections.upsert("tiers", (1L to 40L).map(i => (i, vec(i, 0.71), ((i + 1) % 3).toInt, 2))
+      .toDF("id", "vec", "label", "version"))
+    g.collections.delete("tiers", 41L to 45L)
+    assert(g.collections.readManifest("tiers").get.segments.nonEmpty,
+      "the collection must carry a delta segment")
+    val live = g.collections.table("tiers").get.select("id", "label", "version")
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
+    // the query sits on a re-labelled delta row that passes the filter
+    val qv = vec(3L, 0.71)
+    assert(live(3L) == ((1, 2)))
+    val tiers = Seq("mode = 'fast'", "mode = 'balanced'", "mode = 'accurate'",
+      "mode = 'accurate', index = 'ivf'", "mode = 'accurate', index = 'hnsw'",
+      "mode = 'accurate', index = 'ivf', quantization = 'pq'")
+    tiers.foreach { w =>
+      val rows = g.sql("SELECT id, label, version FROM tiers WHERE label = 1 " +
+        s"AND vector NEAR $$q LIMIT 8 WITH ($w)", Map("q" -> qv)).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+      assert(rows.nonEmpty && rows.size <= 8, s"$w: ${rows.size} rows")
+      assert(rows.map(_._1).distinct.size == rows.size, s"$w: duplicate ids $rows")
+      rows.foreach { case (id, label, version) =>
+        assert(label == 1, s"$w: row $id fails the filter")
+        assert(live.get(id).contains((label, version)),
+          s"$w: row $id ($label, v$version) is superseded or deleted")
+      }
+      assert(rows.head._1 == 3L, s"$w: the exact delta match must rank first, got $rows")
+    }
+  }
+
+  test("a bad WITH clause fails before any index is materialized") {
+    import spark.implicits._
+    g.collections.create("unbuilt", idCol = "id", vectorCol = Some("vec"), buckets = 4)
+    g.collections.upsert("unbuilt", (1L to 100L).map { i =>
+      (i, (0 until 16).map(d => math.sin(i * 0.41 + d * 0.8).toFloat))
+    }.toDF("id", "vec"))
+    val before = derivedOf("unbuilt")
+    Seq("mode = 'accurate', quantization = 'pq'",
+      "mode = 'accurate', index = 'hnsw', quantization = 'pq'",
+      "mode = 'accurate', index = 'ivf', quantization = 'bogus'",
+      "mode = 'accurate', rerank = 'maybe'").foreach { w =>
+      val m = org.apache.spark.sql.graft.JobMeter(spark) {
+        intercept[graft.velesql.SemanticError] {
+          g.sql(s"SELECT id FROM unbuilt WHERE vector NEAR $$q LIMIT 5 WITH ($w)",
+            Map("q" -> q))
+        }
+      }
+      assert(m.jobs == 0, s"$w ran ${m.jobs} Spark job(s) before failing: ${m.descriptions}")
+      assert(derivedOf("unbuilt") == before, s"$w materialized an index before failing")
     }
   }
 

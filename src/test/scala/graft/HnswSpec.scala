@@ -55,7 +55,7 @@ class HnswSpec extends SparkSpecBase {
       queries.foreach { q =>
         val exact = Knn.topK(emb, "embedding", q, 10, "cosine", idCol = "vec_id")
           .select("vec_id")
-        val probes = Hnsw.probeCells(cents, q.toArray, 7)
+        val probes = Ivf.probeCells(cents, q.toArray, 7)
         // ef=24 is the partial-walk regime at this corpus size (cells
         // ~60 rows): the claim under test is equal recall at strictly
         // fewer scored candidates, not walk-covers-the-cell
@@ -90,7 +90,7 @@ class HnswSpec extends SparkSpecBase {
   test("filtered walk: acceptance gated, navigation intact") {
     val q = queries.head
     val g = graph.withColumn("__keep", col("label") === 1)
-    val probes = Hnsw.probeCells(cents, q.toArray, 7)
+    val probes = Ivf.probeCells(cents, q.toArray, 7)
     val out = Hnsw.walkCandidates(
       g.where(col("cell").isin(probes: _*)),
       "embedding", "vec_id", "cosine", q, ef = 48, keepCol = Some("__keep"))
@@ -107,7 +107,7 @@ class HnswSpec extends SparkSpecBase {
     graph.repartition(col("cell")).write.mode("overwrite").parquet(tmp.toString)
     val g2 = spark.read.parquet(tmp.toString)
     val q = queries.head
-    val probes = Hnsw.probeCells(cents, q.toArray, 7)
+    val probes = Ivf.probeCells(cents, q.toArray, 7)
     val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
     spark.conf.set("spark.sql.files.openCostInBytes", "16")
     try {

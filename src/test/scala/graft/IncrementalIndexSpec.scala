@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Incremental LSH index maintenance over the bucketed collection layout
-  * ([[graft.operators.Ann.materializedIndexPieces]]): an upsert that
+  * (`pieces` of [[graft.operators.Ann.materializedIndexAt]]): an upsert that
   * re-points K storage buckets must rebuild exactly K index pieces on
   * the next indexed query — the index-side twin of the partition-pruned
   * merge (reference in-place index insert, native_index.rs:317). */

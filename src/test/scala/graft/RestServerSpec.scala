@@ -429,6 +429,11 @@ class RestServerSpec extends SparkSpecBase {
     val wr = post("/collections/embeddings/search/multi",
       s"""{"vectors": [$a, $b], "top_k": 4, "strategy": "weighted"}""")
     assert(wr.statusCode() == 200, wr.body())
+    // weights must be >= 0 and sum to 1 (fusion/strategy.rs:95-122)
+    val bw = post("/collections/embeddings/search/multi",
+      s"""{"vectors": [$a, $b], "top_k": 4, "strategy": "weighted",
+         | "avg_weight": 0.9, "max_weight": 0.3, "hit_weight": 0.2}""".stripMargin)
+    assert(bw.statusCode() == 400 && bw.body().contains("sum to 1"), bw.body())
   }
 
   test("graph routes: node degree and BFS traverse") {

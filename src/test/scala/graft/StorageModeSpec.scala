@@ -54,7 +54,7 @@ class StorageModeSpec extends SparkSpecBase {
   test("pq storage mode routes bare NEAR through the codes index (beyond-ref)") {
     import spark.implicits._
     val g = freshGraft()
-    // dim 16 (divisible by graft.pq.m = 8); 200 rows so codebooks train
+    // dim 16 (Pq.defaultM(16) = 8 subspaces); 200 rows so codebooks train
     g.collections.create("pqcol", idCol = "id", vectorCol = Some("vec"),
       storageMode = Some("pq"))
     val rows = (1L to 200L).map { i =>

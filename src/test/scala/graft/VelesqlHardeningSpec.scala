@@ -97,6 +97,31 @@ class VelesqlHardeningSpec extends SparkSpecBase {
     // any outcome but that is acceptable; an error is what ships
   }
 
+  test("hybrid fusion rejects a non-RRF strategy and a vector_weight outside [0, 1]") {
+    def reject(fusion: String): String = intercept[graft.velesql.SemanticError] {
+      g.sql("SELECT doc_id FROM corpus WHERE text MATCH 'data' AND vector NEAR $q " +
+        s"LIMIT 5 USING FUSION ($fusion)", Map("q" -> vec64)).collect()
+    }.getMessage
+    // 'weighted' used to run RRF silently
+    assert(reject("strategy='weighted', k=60").contains("RRF"))
+    // w = 2 gave the text leg the weight 1 - w = -1
+    assert(reject("strategy='rrf', vector_weight=2").contains("vector_weight"))
+    assert(reject("vector_weight=-0.5").contains("vector_weight"))
+  }
+
+  test("weighted NEAR_FUSED weights must be >= 0 and sum to 1") {
+    val q2 = vec64.map(_ * -1f)
+    def run(params: String) = g.sql("SELECT vec_id FROM embeddings WHERE vector " +
+      s"NEAR_FUSED [$$a, $$b] USING FUSION 'weighted' ($params) LIMIT 5",
+      Map("a" -> vec64, "b" -> q2)).collect()
+    assert(run("avg_weight = 0.6, max_weight = 0.2, hit_weight = 0.2").length == 5)
+    Seq("avg_weight = 0.9, max_weight = 0.3, hit_weight = 0.2",
+      "avg_weight = 1.2, max_weight = -0.4, hit_weight = 0.2").foreach { p =>
+      val e = intercept[graft.velesql.SemanticError](run(p))
+      assert(e.getMessage.contains("sum to 1"), e.getMessage)
+    }
+  }
+
   test("plan-cache param key is delimiter-injection-proof") {
     val q = "SELECT doc_id FROM documents WHERE lang = $a LIMIT 5"
     // old rendering: these two maps produced the SAME key, so the

@@ -84,7 +84,7 @@ object RecallCurve {
     }
     report("exact", "perfect", "full scan", 100L, exactSec)
 
-    // LSH: planes=6 (graft.ann.planes default), radius per tier
+    // LSH: planes=6 (Ann.Planes), radius per tier
     if (sections("lsh")) {
       val t0 = System.nanoTime()
       val idx = Ann.buildIndex(emb, "embedding", 6, dim = Some(dim)).cache()
@@ -103,7 +103,7 @@ object RecallCurve {
       idx.unpersist()
     }
 
-    // IVF: cells=8 (graft.ivf.cells default), nprobe per tier; exact
+    // IVF: cells=8 (Ivf.Cells), nprobe per tier; exact
     // scoring within probed cells (the product's ivf tier shape)
     val cents = {
       val t0 = System.nanoTime()
@@ -116,7 +116,7 @@ object RecallCurve {
     if (sections("ivf")) for ((tier, np) <- Seq(("fast", 2), ("balanced", 4), ("accurate", 7))) {
       var hits = 0L; var sec = 0.0
       queries.zipWithIndex.foreach { case (q, i) =>
-        val probes = Hnsw.probeCells(cents, q.toArray, np)
+        val probes = Ivf.probeCells(cents, q.toArray, np)
         val (ids, s) = timed(
           Knn.topK(cells.where(col("cell").isin(probes: _*)),
             "embedding", q, 10, "cosine", idCol = "vec_id")
@@ -152,7 +152,7 @@ object RecallCurve {
       for ((tier, np, ef) <- hnswPoints) {
         var hits = 0L; var sec = 0.0
         queries.zipWithIndex.foreach { case (q, i) =>
-          val probes = Hnsw.probeCells(cents, q.toArray, np)
+          val probes = Ivf.probeCells(cents, q.toArray, np)
           val (ids, s) = timed {
             val walked = Hnsw.walkCandidates(
               graph.where(col("cell").isin(probes: _*)),
@@ -169,7 +169,7 @@ object RecallCurve {
         // the routed tiers: exact scan over each tier's probed cells
         var hits = 0L; var sec = 0.0
         queries.zipWithIndex.foreach { case (q, i) =>
-          val probes = Hnsw.probeCells(cents, q.toArray, np)
+          val probes = Ivf.probeCells(cents, q.toArray, np)
           val (ids, s) = timed(
             Knn.topK(cells.where(col("cell").isin(probes: _*)),
               "embedding", q, 10, "cosine", idCol = "vec_id")
@@ -220,7 +220,7 @@ object RecallCurve {
       for ((tier, np) <- Seq(("fast", 2), ("balanced", 4), ("accurate", 7))) {
         var hits = 0L; var sec = 0.0
         queries.zipWithIndex.foreach { case (q, i) =>
-          val probes = Hnsw.probeCells(cents, q.toArray, np)
+          val probes = Ivf.probeCells(cents, q.toArray, np)
           val (ord, asc) = Pq.adcOrderingResidual(col("codes"), col("cell"),
             q.toArray, cb, cents, "cosine")
           val (ids, s) = timed {
