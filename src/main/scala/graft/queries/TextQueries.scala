@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.operators.Fusion
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -198,24 +199,15 @@ object TextQueries {
          |  SELECT doc_id, rnk, 0.5 AS w FROM bmr
          |  UNION ALL SELECT doc_id, rnk, 0.5 AS w FROM vec)
          |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       // legs are already limited to top-50 (TakeOrderedAndProject); the
-      // rank window runs over those 50 rows only, pinned to one explicit
-      // partition (Ranks.one), not an unpartitioned global window.
+      // rank window runs over those 50 rows only (Fusion.rank)
       val q = graft.functions.VectorFunctions.syntheticQuery(64)
       val bmLeg = bm25Idx(s, d, Seq("spark", "join", "filter"), 50)
-        .select(col("doc_id"),
-          row_number().over(Window.partitionBy(graft.operators.Ranks.one(col("doc_id")))
-            .orderBy(col("score").desc, col("doc_id"))).as("rnk"))
       val vecLeg = graft.operators.Knn
         .topK(t(s, d, "embeddings"), "embedding", q, 50, "cosine", idCol = "vec_id")
-        .select(col("vec_id").as("doc_id"),
-          row_number().over(Window.partitionBy(graft.operators.Ranks.one(col("vec_id")))
-            .orderBy(col("score").desc, col("vec_id"))).as("rnk"))
+        .select(col("vec_id").as("doc_id"), col("score"))
       graft.operators.Graph.pinIfSmall(
-        bmLeg.select(col("doc_id"), col("rnk"), lit(0.5).as("w"))
-          .unionAll(vecLeg.select(col("doc_id"), col("rnk"), lit(0.5).as("w")))
-          .groupBy("doc_id").agg(sum(col("w") / (lit(60) + col("rnk"))).as("score"))
+        Fusion.rrf(Seq(Fusion.rank(bmLeg) -> 0.5, Fusion.rank(vecLeg) -> 0.5), 60)
           .orderBy(col("score").desc, col("doc_id")).limit(10),
         probe = graft.operators.Bm25.indexFor(s, d).postings)
     },

@@ -2,10 +2,9 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.VectorFunctions
-import graft.operators.Knn
+import graft.operators.{Fusion, Knn}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Vector search + fusion operator surface (SURVEY.md §2.3, §2.8).
   *
@@ -41,6 +40,12 @@ object VectorQueries {
   private val q64c: Seq[Float] = (0 until 64).map(i => (math.sin(i * 1.3 + 0.5) * 0.3).toFloat)
 
   private val E = "CAST(embedding AS DOUBLE[])"
+  /** F2/F3 rows' legs: the cosine top-20 of `q64` and of `q64b`. */
+  private def twoLegs(s: SparkSession, d: String): Seq[DataFrame] = {
+    val emb = t(s, d, "embeddings")
+    Seq(q64, q64b).map(q =>
+      Knn.topK(emb, "embedding", q, 20, "cosine", idCol = "vec_id").select("vec_id", "score"))
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -256,18 +261,10 @@ object VectorQueries {
       val emb = t(s, d, "embeddings")
       // top-20 per leg via TakeOrderedAndProject FIRST, then rank the
       // 20-row result — the r1 global rank window over every row is gone
-      def leg(metric: String): DataFrame = {
-        val (_, hib) = VectorFunctions.metrics(metric)
-        val ord = if (hib) col("score").desc else col("score").asc
-        Knn.topK(emb, "embedding", q64, 20, metric, idCol = "vec_id")
-          .select(col("vec_id"),
-            row_number().over(
-              Window.partitionBy(graft.operators.Ranks.one(col("vec_id")))
-                .orderBy(ord, col("vec_id"))).as("rnk"))
-      }
-      leg("cosine").unionAll(leg("dot"))
-        .groupBy("vec_id")
-        .agg(sum(lit(1.0) / (lit(60) + col("rnk"))).as("score"))
+      def leg(metric: String): (DataFrame, Double) = Fusion.rank(
+        Knn.topK(emb, "embedding", q64, 20, metric, idCol = "vec_id").select("vec_id", "score"),
+        VectorFunctions.metrics(metric)._2) -> 1.0
+      Fusion.rrf(Seq(leg("cosine"), leg("dot")), 60)
     },
 
     // ---- F2: average fusion (mean of per-leg scores where doc appears —
@@ -283,12 +280,7 @@ object VectorQueries {
          |SELECT vec_id, avg(score) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val la = Knn.topK(emb, "embedding", q64, 20, "cosine", idCol = "vec_id")
-        .select("vec_id", "score")
-      val lb = Knn.topK(emb, "embedding", q64b, 20, "cosine", idCol = "vec_id")
-        .select("vec_id", "score")
-      la.unionAll(lb).groupBy("vec_id").agg(avg(col("score")).as("score"))
+      Fusion.average(twoLegs(s, d))
     },
 
     // ---- F2: maximum fusion (strategy.rs:205-221)
@@ -303,12 +295,7 @@ object VectorQueries {
          |SELECT vec_id, max(score) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val la = Knn.topK(emb, "embedding", q64, 20, "cosine", idCol = "vec_id")
-        .select("vec_id", "score")
-      val lb = Knn.topK(emb, "embedding", q64b, 20, "cosine", idCol = "vec_id")
-        .select("vec_id", "score")
-      la.unionAll(lb).groupBy("vec_id").agg(max(col("score")).as("score"))
+      Fusion.maximum(twoLegs(s, d))
     },
 
     // ---- F3: weighted fusion — avg_w·avg + max_w·max + hit_w·(hits/legs),
@@ -325,14 +312,7 @@ object VectorQueries {
          |  0.5 * avg(score) + 0.3 * max(score) + 0.2 * (count(*) / 2.0) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val la = Knn.topK(emb, "embedding", q64, 20, "cosine", idCol = "vec_id")
-        .select("vec_id", "score")
-      val lb = Knn.topK(emb, "embedding", q64b, 20, "cosine", idCol = "vec_id")
-        .select("vec_id", "score")
-      la.unionAll(lb).groupBy("vec_id")
-        .agg((lit(0.5) * avg(col("score")) + lit(0.3) * max(col("score"))
-          + lit(0.2) * (count(lit(1)) / lit(2.0))).as("score"))
+      Fusion.weighted(twoLegs(s, d), 0.5, 0.3, 0.2)
     },
 
     // ---- V6: NEAR_FUSED multi-vector — exact mode scores EVERY row per
@@ -405,13 +385,12 @@ object VectorQueries {
          |  avg(coalesce(ap, 0.0)) AS map_10
          |FROM perq LEFT JOIN mapq USING (query_id) CROSS JOIN idcgv""".stripMargin
     }) { (s, d) =>
-      import graft.operators.{Metrics, Ranks}
+      import graft.operators.Metrics
       val emb = t(s, d, "embeddings")
       def pred(q: Seq[Float], qid: Int): DataFrame =
-        Knn.topK(emb, "embedding", q, 10, "cosine", idCol = "vec_id")
-          .select(lit(qid).as("query_id"), col("vec_id").as("doc_id"),
-            row_number().over(Window.partitionBy(Ranks.one(col("vec_id")))
-              .orderBy(col("score").desc, col("vec_id"))).as("rank"))
+        Fusion.rank(Knn.topK(emb, "embedding", q, 10, "cosine", idCol = "vec_id")
+            .select("vec_id", "score"))
+          .select(lit(qid).as("query_id"), col("vec_id").as("doc_id"), col("rank"))
       def rel(q: Seq[Float], qid: Int): DataFrame =
         Knn.topK(emb, "embedding", q, 15, "cosine", idCol = "vec_id",
             filter = Some(col("label") <= 4))

@@ -489,15 +489,16 @@ class RestServer(g: Graft, port: Int = 0) {
         // splice raw into the generated VelesQL (r15 review finding)
         if (!Set("rrf", "average", "maximum", "weighted").contains(strategy))
           badRequest(s"unknown strategy '$strategy' (rrf|average|maximum|weighted)")
-        val fparams = strategy match {
-          case "rrf" => s"(k = ${intOr(b, "rrf_k", 60)})"
-          case "weighted" =>
-            val aw = Option(b.get("avg_weight")).filter(_.isNumber).map(_.asDouble).getOrElse(0.5)
-            val mw = Option(b.get("max_weight")).filter(_.isNumber).map(_.asDouble).getOrElse(0.3)
-            val hw = Option(b.get("hit_weight")).filter(_.isNumber).map(_.asDouble).getOrElse(0.2)
-            s"(avg_weight = $aw, max_weight = $mw, hit_weight = $hw)"
-          case _ => ""
+        // body field → fusion option; the kernel checks each value and
+        // fills an absent one with its default (operators.Fusion.options)
+        val fopts = (strategy match {
+          case "rrf" => Seq("rrf_k" -> "k")
+          case "weighted" => Seq("avg_weight", "max_weight", "hit_weight").map(w => w -> w)
+          case _ => Nil
+        }).flatMap { case (field, opt) =>
+          Option(b.get(field)).filter(_.isNumber).map(v => s"$opt = ${v.asDouble}")
         }
+        val fparams = if (fopts.isEmpty) "" else fopts.mkString("(", ", ", ")")
         searchResponse(name,
           s"SELECT * FROM $name WHERE vector NEAR_FUSED [${vecs.map("$" + _._1).mkString(", ")}]" +
             s" USING FUSION '$strategy' $fparams LIMIT $k",

@@ -1,10 +1,9 @@
 package graft.velesql
 
 import graft.functions.VectorFunctions
-import graft.operators.{Ann, Bm25, Graph, Hnsw, Ivf, IvfPq, Knn, Pq, Quantization}
+import graft.operators.{Ann, Bm25, Fusion, Graph, Hnsw, Ivf, IvfPq, Knn, Pq, Quantization}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import Ast._
 
 /** VelesQL → DataFrame compiler.
@@ -41,17 +40,23 @@ class Compiler(
 
   private val LimitCap = 100000
   private val NearDefaultLimit = 10
-  /** Per-leg candidate pool for rank-based fusion (RRF/hybrid). The
-    * reference fetches a bounded candidate set per leg (text.rs:133-134);
-    * ranking only the top-K per leg keeps the rank window over K rows
-    * instead of single-tasking the whole collection.
-    * Join-back note (measured, r5): the fused/hybrid leg frames are
+  /** Per-leg candidate pool for candidate-leg fusion (hybrid, NEAR_FUSED
+    * rrf/weighted). The reference fetches a bounded candidate set per leg
+    * (text.rs:133-134); ranking only the top-K per leg keeps the rank
+    * window over K rows instead of single-tasking the whole collection.
+    * Every such query shares one epilogue (`withPayload` in
+    * compileSelect): the fused (id, score) frame joins back to the
+    * filtered frame for its payload, or skips the join when the query
+    * reads only id and score.
+    * Join-back note (measured, r5): the fused leg frames are
     * ≤2×CandidateK rows, but broadcast-hinting their join back to the
     * collection is consistently a bit SLOWER in local mode (driver
     * round-trip beats nothing when the "shuffle" is in-process, and the
     * hint overrides AQE). On a real cluster the broadcast shape wins —
     * one-line hint, revisit there. */
   private val CandidateK = 2000
+  /** NEAR_FUSED takes ≤10 vectors (SURVEY V6), one candidate leg each. */
+  private val MaxFusedVectors = 10
   /** WITH keys consumed ONLY by the plain vector NEAR branch — rejected
     * with a clear error anywhere else (fused/hybrid/non-vector), because
     * an accepted-but-ignored option is a silent no-op. */
@@ -159,23 +164,6 @@ class Compiler(
     sel.withOptions.keys.find(!KnownWithKeys.contains(_)).foreach { k =>
       fail(s"unknown WITH option '$k' (supported: ${KnownWithKeys.toSeq.sorted.mkString(", ")})")
     }
-    val meta = catalog.metaOf(sel.from)
-    // alias every frame by its table name (or AS alias) so qualified
-    // refs like `customer.c_nationkey` resolve
-    var df = catalog.table(sel.from).as(sel.fromAlias.getOrElse(sel.from))
-
-    // joins (grammar.pest:99-107; reference executes only the PK inner
-    // join — query/join.rs:123-198; we execute all four types + USING)
-    for (j <- sel.joins) {
-      val right = catalog.table(j.table).as(j.alias.getOrElse(j.table))
-      df =
-        if (j.using.nonEmpty) df.join(right, j.using, j.joinType)
-        else {
-          val (lc, rc) = j.on.get
-          df.join(right, resolve(df, lc) === col(rc), j.joinType)
-        }
-    }
-
     // WHERE: extract NEAR / NEAR_FUSED (top-k drivers), compile the rest
     val (near, residual) = sel.where.map(extractNear).getOrElse((None, None))
     val simScore = sel.where.flatMap(lastSimilarity)
@@ -208,6 +196,42 @@ class Compiler(
         .find(sel.withOptions.contains)
         .foreach(k => fail(s"WITH $k applies only to plain vector NEAR queries " +
           "(not NEAR_FUSED, hybrid fusion, or non-vector queries)"))
+    }
+
+    // the fusion clause is checked once, before any table is read: a
+    // rejected query runs no Spark job
+    val (fusionStrategy, fusionOpts) = near match {
+      case Some(VectorNearFused(vs, fusion0)) =>
+        if (vs.size > MaxFusedVectors)
+          fail(s"NEAR_FUSED takes at most $MaxFusedVectors vectors, got ${vs.size}")
+        // a condition-level clause wins over a select-level one
+        val fusion = fusion0.orElse(sel.fusion)
+        val strategy = fusion.map(_.strategy).getOrElse("average")
+        (strategy, Fusion.options(strategy, fusion.map(_.params).getOrElse(Map.empty)))
+      case _ if hybridText.isDefined =>
+        // the reference fuses hybrid legs by weighted RRF only
+        // (text.rs:150-162): any other strategy would be a silent no-op
+        if (sel.fusion.get.strategy != "rrf")
+          fail(s"hybrid MATCH + NEAR fuses by RRF only, got strategy '${sel.fusion.get.strategy}'")
+        ("hybrid", Fusion.options("hybrid", sel.fusion.get.params))
+      case _ => ("", Map.empty[String, Double])
+    }
+
+    val meta = catalog.metaOf(sel.from)
+    // alias every frame by its table name (or AS alias) so qualified
+    // refs like `customer.c_nationkey` resolve
+    var df = catalog.table(sel.from).as(sel.fromAlias.getOrElse(sel.from))
+
+    // joins (grammar.pest:99-107; reference executes only the PK inner
+    // join — query/join.rs:123-198; we execute all four types + USING)
+    for (j <- sel.joins) {
+      val right = catalog.table(j.table).as(j.alias.getOrElse(j.table))
+      df =
+        if (j.using.nonEmpty) df.join(right, j.using, j.joinType)
+        else {
+          val (lc, rc) = j.on.get
+          df.join(right, resolve(df, lc) === col(rc), j.joinType)
+        }
     }
 
     // residual predicate (metadata + similarity thresholds + text match);
@@ -248,21 +272,33 @@ class Compiler(
     var residualApplied = false
     var scoredTm: Option[(TextMatch, Column)] = None
 
+    // The epilogue of every candidate-leg fusion: join the fused (__fid,
+    // score) frame back to the filtered frame its legs drew from, for the
+    // payload. Leg ids ⊆ that frame's ids, so a query reading only id and
+    // score skips the join (r6 verdict #5; ~25% off q104 at sf0.1).
+    val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
+    def withPayload(filtered: DataFrame, fused: DataFrame): DataFrame = {
+      val idScoreOnly = (sel.selectList match {
+        case SelectItems(items) => items.forall {
+          case Left(ColumnItem(n, _)) => n == meta.idCol || n == "score"
+          case _ => false
+        }
+        case SelectAll => false
+      }) && sel.orderBy.forall(_.expr match {
+        case OrderByColumn(n) => n == meta.idCol || n == "score"
+        case _ => false
+      }) && sel.groupBy.isEmpty
+      if (idScoreOnly) fused.select(col("__fid").as(meta.idCol), col("score"))
+      else filtered.join(fused, filtered(meta.idCol) === col("__fid")).drop("__fid")
+    }
+
     // score column (reference score conventions: W1/V2/S6)
     val scored: DataFrame = near match {
       case Some(VectorNear(v)) if hybridText.isDefined =>
         val vec = vecOf(v)
         val (fn, hib) = VectorFunctions.metrics(meta.metric)
         val vcolName = meta.vectorCol.getOrElse(fail("hybrid NEAR needs a vector column"))
-        val fusion = sel.fusion.get
-        val kParam = fusion.params.getOrElse("k", 60.0)
-        val w = fusion.params.getOrElse("vector_weight", 0.5)
-        // the reference fuses hybrid legs by weighted RRF only
-        // (text.rs:150-162): any other strategy would be a silent no-op,
-        // and a weight outside [0, 1] gives the text leg a negative one
-        if (fusion.strategy != "rrf")
-          fail(s"hybrid MATCH + NEAR fuses by RRF only, got strategy '${fusion.strategy}'")
-        if (w < 0.0 || w > 1.0) fail(s"vector_weight must be in [0, 1], got $w")
+        val w = fusionOpts("vector_weight")
         val sim = fn(col(vcolName), VectorFunctions.vecLit(vec))
         // filter-then-search parity with plain NEAR (vector.rs:164-239):
         // the residual WHERE restricts BOTH legs BEFORE the bounded
@@ -273,70 +309,26 @@ class Compiler(
           case Some(c) => residualApplied = true; df.where(compileCond(c, df, meta))
           case None => df
         }
-        // candidate-K legs: top-K per leg via TakeOrderedAndProject, THEN
-        // rank the K-row result. Rows in neither leg's top-K are not
-        // candidates (reference parity: bounded fetch per leg,
-        // text.rs:133-134) — and no global rank window over the table.
-        val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
-        val vOrd = if (hib) col("__vs").desc else col("__vs").asc
-        val vLeg = dfH.select(col(meta.idCol).as("__vid"), sim.as("__vs"))
-          .orderBy(vOrd, col("__vid")).limit(kCand)
-          .select(col("__vid"), row_number().over(
-            Window.partitionBy(graft.operators.Ranks.one(col("__vid")))
-              .orderBy(vOrd, col("__vid"))).as("__vrank"))
-        // text leg: BM25 stats are corpus-wide (over `df`), and the
-        // top-kCand fetch + rank run over the FILTERED doc set.
-        // Corpus-wide (not filtered-N/avgdl/df like q61's
-        // searchIndexFiltered) is DELIBERATE reference fidelity: the
-        // reference's own hybrid_search_with_filter ranks against the
-        // global text index and applies the filter afterwards
-        // (text.rs:221-280) — only the standalone filtered text search
-        // re-derives stats over the filtered set. We improve on the
-        // post-filter (candidates draw from the filtered frame so a
-        // selective filter can't starve the legs) without changing the
-        // scoring contract.
+        val vLeg = Fusion.leg(dfH, col(meta.idCol).as("__fid"), sim, kCand, hib)
+        // text leg: corpus-wide BM25 stats (over `df`, not q61's filtered
+        // ones: the reference's hybrid_search_with_filter ranks against the
+        // global text index, text.rs:221-280), top-kCand over the FILTERED
+        // doc set, so a selective filter can't starve the leg.
         val qtext = hybridText.get.query
-        val tScores = bm25Index(sel, meta) match {
+        val tLeg = bm25Index(sel, meta) match {
           case Some(idx) if residualApplied =>
-            Bm25.searchIndex(idx, qtext)
+            Fusion.leg(Bm25.searchIndex(idx, qtext)
               .join(dfH.select(col(meta.idCol).as("__fsel")),
-                col("doc_id") === col("__fsel"), "left_semi")
-              .orderBy(col("score").desc, col("doc_id")).limit(kCand)
+                col("doc_id") === col("__fsel"), "left_semi"),
+              col("doc_id"), col("score"), kCand)
           case Some(idx) => Bm25.searchIndex(idx, qtext, kCand)
           case None =>
             // per-row scores: one scan + TakeOrderedAndProject, no shuffle
             val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
-            dfH.where(hit).select(col(meta.idCol).as("doc_id"), score.as("score"))
-              .orderBy(col("score").desc, col("doc_id")).limit(kCand)
+            Fusion.leg(dfH.where(hit), col(meta.idCol).as("doc_id"), score, kCand)
         }
-        val tLeg = tScores
-          .select(col("doc_id").as("__tid"), row_number().over(
-            Window.partitionBy(graft.operators.Ranks.one(col("doc_id")))
-              .orderBy(col("score").desc, col("doc_id")))
-            .as("__trank"))
-        val legs = vLeg.join(tLeg, col("__vid") === col("__tid"), "full_outer")
-          .select(coalesce(col("__vid"), col("__tid")).as("__cid"),
-            (coalesce(lit(w) / (lit(kParam) + col("__vrank")), lit(0.0))
-              + coalesce(lit(1.0 - w) / (lit(kParam) + col("__trank")), lit(0.0)))
-              .as("score"))
-        // Join-back elision (r6 verdict #5): both legs already draw from
-        // the FILTERED frame, so `legs` ids ⊆ dfH ids and the join back to
-        // dfH exists only to re-attach payload columns. When the SELECT
-        // list (and ORDER BY) needs nothing beyond id + score, skip it —
-        // one less scan of the collection and one less join in the plan
-        // (measured ~25% off q104's steady time at sf0.1).
-        val needsOnlyIdScore = (sel.selectList match {
-          case SelectItems(items) => items.forall {
-            case Left(ColumnItem(n, _)) => n == meta.idCol || n == "score"
-            case _ => false
-          }
-          case SelectAll => false
-        }) && sel.orderBy.forall(_.expr match {
-          case OrderByColumn(n) => n == meta.idCol || n == "score"
-          case _ => false
-        }) && sel.groupBy.isEmpty
-        if (needsOnlyIdScore) legs.select(col("__cid").as(meta.idCol), col("score"))
-        else dfH.join(legs, dfH(meta.idCol) === col("__cid")).drop("__cid")
+        withPayload(dfH, Fusion.rrf(Seq(Fusion.rank(vLeg, hib) -> w,
+          Fusion.rank(tLeg) -> (1.0 - w)), fusionOpts("k")))
       case Some(VectorNear(v)) =>
         val vec = vecOf(v)
         val (fn, hib) = VectorFunctions.metrics(meta.metric)
@@ -534,11 +526,7 @@ class Compiler(
             } else dfF // 'f32' / absent → exact scan
           base.withColumn("score", fn(col(vcolName), VectorFunctions.vecLit(vec)))
         }
-      case Some(VectorNearFused(vs, fusion0)) =>
-        // condition-level fusion clause wins; a select-level USING
-        // FUSION is the same user intent and used to be silently
-        // ignored here (r15 review finding)
-        val fusion = fusion0.orElse(sel.fusion)
+      case Some(VectorNearFused(vs, _)) =>
         val vecs = vs.map(vecOf)
         val (fn, hib) = VectorFunctions.metrics(meta.metric)
         val vcol = col(meta.vectorCol.getOrElse(fail("NEAR_FUSED needs a vector column")))
@@ -549,56 +537,20 @@ class Compiler(
           case Some(c) => residualApplied = true; df.where(compileCond(c, df, meta))
           case None => df
         }
-        val strategy = fusion.map(_.strategy).getOrElse("average")
-        strategy match {
+        // rrf and weighted fuse one candidate-K leg per vector (the
+        // bounded fetch of hybrid); average and maximum score every row
+        def legs = sims.map(Fusion.leg(dfF, col(meta.idCol).as("__fid"), _, kCand, hib))
+        fusionStrategy match {
           case "average" =>
             dfF.withColumn("score", sims.reduce(_ + _) / lit(sims.size.toDouble))
           case "maximum" =>
             dfF.withColumn("score", greatest(sims: _*))
           case "rrf" =>
-            // RRF over candidate-K legs: each leg keeps its top-K
-            // (TakeOrderedAndProject), ranks those K rows, fused =
-            // Σ 1/(k + rank) over legs the row appears in
-            // (strategy.rs:224-250; bounded candidate fetch as in hybrid)
-            val kParam = fusion.flatMap(_.params.get("k")).getOrElse(60.0)
-            val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
-            val ord = (c: Column) => if (hib) c.desc else c.asc
-            val legs = sims.map { sim =>
-              dfF.select(col(meta.idCol).as("__fid"), sim.as("__fs"))
-                .orderBy(ord(col("__fs")), col("__fid")).limit(kCand)
-                .select(col("__fid"), row_number().over(
-                  Window.partitionBy(graft.operators.Ranks.one(col("__fid")))
-                    .orderBy(ord(col("__fs")), col("__fid")))
-                  .as("__frank"))
-            }
-            val fused = legs.reduce(_ unionAll _)
-              .groupBy("__fid")
-              .agg(sum(lit(1.0) / (lit(kParam) + col("__frank"))).as("score"))
-            dfF.join(fused, dfF(meta.idCol) === col("__fid")).drop("__fid")
+            withPayload(dfF, Fusion.rrf(legs.map(l => Fusion.rank(l, hib) -> 1.0),
+              fusionOpts("k")))
           case "weighted" =>
-            // weighted combination over candidate-K legs (fusion/strategy
-            // .rs:67-78): avg_weight×avg + max_weight×max + hit_weight×
-            // hit_ratio, hit_ratio = legs containing the doc / total legs
-            val aw = fusion.flatMap(_.params.get("avg_weight")).getOrElse(0.5)
-            val mw = fusion.flatMap(_.params.get("max_weight")).getOrElse(0.3)
-            val hw = fusion.flatMap(_.params.get("hit_weight")).getOrElse(0.2)
-            // the reference asserts weights ≥ 0 summing to 1 ± 0.001
-            // (fusion/strategy.rs:95-122)
-            if (Seq(aw, mw, hw).exists(_ < 0.0) || math.abs(aw + mw + hw - 1.0) > 0.001)
-              fail(s"weighted fusion weights must be >= 0 and sum to 1, got " +
-                s"avg_weight=$aw, max_weight=$mw, hit_weight=$hw")
-            val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
-            val ord = (c: Column) => if (hib) c.desc else c.asc
-            val legs = sims.map { sim =>
-              dfF.select(col(meta.idCol).as("__fid"), sim.as("__fs"))
-                .orderBy(ord(col("__fs")), col("__fid")).limit(kCand)
-            }
-            val fused = legs.reduce(_ unionAll _)
-              .groupBy("__fid")
-              .agg((lit(aw) * avg(col("__fs")) + lit(mw) * max(col("__fs"))
-                + lit(hw) * (count(lit(1)) / lit(sims.size.toDouble))).as("score"))
-            dfF.join(fused, dfF(meta.idCol) === col("__fid")).drop("__fid")
-          case other => fail(s"unknown fusion strategy $other")
+            withPayload(dfF, Fusion.weighted(legs, fusionOpts("avg_weight"),
+              fusionOpts("max_weight"), fusionOpts("hit_weight")))
         }
       case _ =>
         (simScore, textScore) match {

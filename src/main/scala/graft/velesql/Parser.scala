@@ -129,7 +129,7 @@ object Parser extends RegexParsers {
 
   private val fusionParamList: Parser[Map[String, Double]] =
     "(" ~> rep1sep(identifier ~ ("=" ~> (floatLit | intLit ^^ (_.toDouble))), ",") <~ ")" ^^
-      (_.map { case k ~ v => k -> v }.toMap)
+      (_.map { case k ~ v => k.toLowerCase -> v }.toMap)
   private val fusionClause: Parser[FusionClause] =
     K("USING") ~> K("FUSION") ~> stringLit ~ opt(fusionParamList) ^^ {
       case s ~ p => FusionClause(s.toLowerCase, p.getOrElse(Map.empty))
@@ -242,17 +242,23 @@ object Parser extends RegexParsers {
 
   /** Select-level USING FUSION clause (grammar.pest:77-83): option list
     * `(strategy = 'rrf', k = 60, …)`, all parts optional. Distinct from
-    * the NEAR_FUSED-level `USING FUSION 'strategy' (params)` form. */
+    * the NEAR_FUSED-level `USING FUSION 'strategy' (params)` form. Keys
+    * are case-insensitive in both forms; `strategy` takes a string and
+    * every other option a number (the strategy checks which it reads). */
   private val usingFusionSelect: Parser[FusionClause] =
     K("USING") ~> K("FUSION") ~> opt(
       "(" ~> rep1sep(identifier ~ ("=" ~>
         ((stringLit ^^ (Left(_))) | (floatLit ^^ (x => Right(x))) |
-          (intLit ^^ (x => Right(x.toDouble))))), ",") <~ ")") ^^ { opts =>
+          (intLit ^^ (x => Right(x.toDouble))))), ",") <~ ")") into { opts =>
       val kvs = opts.getOrElse(Nil).map { case k ~ v => k.toLowerCase -> v }
-      val strategy = kvs.collectFirst { case ("strategy", Left(s)) => s.toLowerCase }
-        .getOrElse("rrf")
-      val params = kvs.collect { case (k, Right(d)) => k -> d }.toMap
-      FusionClause(strategy, params)
+      kvs.collectFirst {
+        case ("strategy", Right(_)) => err("USING FUSION strategy must be a string")
+        case (k, Left(_)) if k != "strategy" => err(s"USING FUSION option '$k' must be a number")
+      }.getOrElse {
+        val strategy = kvs.collectFirst { case ("strategy", Left(s)) => s.toLowerCase }
+          .getOrElse("rrf")
+        success(FusionClause(strategy, kvs.collect { case (k, Right(d)) => k -> d }.toMap))
+      }
     }
 
   // ---- select statement (grammar.pest:59-66)

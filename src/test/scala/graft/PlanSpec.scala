@@ -47,22 +47,30 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("fusion legs rank top-K candidates, never the whole table (F1/F4)") {
-    // every Window in an RRF/hybrid plan must (a) carry a partition spec
-    // — an empty spec is the r1 global-window scale-killer — and (b) sit
-    // above a TakeOrderedAndProject, so it ranks K rows, not the table
-    for (q <- Seq("q51_fusion_rrf", "q62_hybrid_rrf")) {
-      val p = plan(q)
-      assert(p.contains("TakeOrderedAndProject"), s"$q: top-K per leg")
-      val firstArgs = "windowspecdefinition\\(([^,]*),".r
-        .findAllMatchIn(p).map(_.group(1)).toSeq
-      assert(firstArgs.nonEmpty, s"$q: rank windows present")
-      firstArgs.foreach { a =>
-        // a partitioned spec's first argument is the partition key (a
-        // bare attribute); the unpartitioned r1 form starts directly
-        // with an ORDER BY column carrying a sort direction
-        assert(!a.contains("ASC") && !a.contains("DESC"),
-          s"$q: window must be partition-keyed, first arg was a sort column: $a")
+    // one check for every rank-fusion site (operators.Fusion): the F1 and
+    // F4 dataset rows, VelesQL hybrid and NEAR_FUSED rrf. Every Window
+    // must (a) carry a partition key (an empty spec is the r1
+    // global-window scale-killer) and (b) sit above a
+    // TakeOrderedAndProject, so it ranks K rows, not the table; and the
+    // legs merge by union + aggregate, never by a full-outer join.
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    for (q <- Seq("q51_fusion_rrf", "q62_hybrid_rrf", "q104_vql_hybrid",
+        "q116_vql_fused_filtered")) {
+      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.sparkPlan
+      val windows = p.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty, s"$q: rank windows present")
+      windows.foreach { w =>
+        assert(w.partitionSpec.nonEmpty, s"$q: window must be partition-keyed: $w")
+        assert(w.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+          s"$q: window must rank a top-K leg:\n$w")
       }
+      assert(!p.exists {
+        case j: BaseJoinExec => j.joinType == FullOuter
+        case _ => false
+      }, s"$q: legs merged by a full-outer join:\n$p")
     }
   }
 

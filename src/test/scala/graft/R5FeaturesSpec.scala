@@ -157,7 +157,7 @@ class R5FeaturesSpec extends SparkSpecBase {
         f.select(col("vec_id"), graft.functions.VectorFunctions.cosine_sim(
             col("embedding"), graft.functions.VectorFunctions.vecLit(v)).as("s"))
           .withColumn("rnk", row_number().over(
-            Window.partitionBy(graft.operators.Ranks.one(col("vec_id")))
+            Window.partitionBy(pmod(hash(col("vec_id")), lit(1)))
               .orderBy(col("s").desc, col("vec_id"))))
           .where(col("rnk") <= 2000)
           .select(col("vec_id"), (lit(1.0) / (lit(60.0) + col("rnk"))).as("p"))
@@ -169,6 +169,101 @@ class R5FeaturesSpec extends SparkSpecBase {
       assert(got.map(_._1) == exp.map(_._1), s"tree $i: $ws → ids diverged")
       got.zip(exp).foreach { case ((_, gs), (_, es)) =>
         assert(math.abs(gs - es) < 1e-9, s"tree $i: $ws → score diverged") }
+    }
+  }
+
+  test("fusion parity table: hybrid and NEAR_FUSED rrf/weighted match a plain-Scala reference") {
+    import graft.functions.VectorFunctions
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    import spark.implicits._
+    type Leg = Seq[(Long, Double)]
+    val dir = java.nio.file.Files.createTempDirectory("graft-fusion-parity").toString
+    val g2 = Graft(spark, dir)
+    // two groups of 2,100 rows, each over the 2,000-row candidate pool:
+    // group A's vectors sit near qa, group B's near qb, three distinct
+    // values per group, and the texts repeat, so every leg is tie-heavy
+    val vals = Seq(Seq(Seq(1f, 0f, 0f, 0f), Seq(1f, 0.1f, 0f, 0f), Seq(1f, 0.2f, 0.05f, 0f)),
+      Seq(Seq(0f, 1f, 0f, 0f), Seq(0f, 1f, 0.1f, 0f), Seq(0.05f, 1f, 0.2f, 0f)))
+    val texts = Seq(Seq("alpha one", "alpha two two", "alpha", "gamma"),
+      Seq("beta one", "beta beta", "beta", "gamma"))
+    val rows = (0 until 4200).map { i =>
+      (i.toLong, vals(i / 2100)(i % 3), texts(i / 2100)(i % 4), ((i / 7) % 3).toLong)
+    }
+    for ((c, n) <- Seq("par" -> 4200, "gone" -> 60)) {
+      g2.collections.create(c, idCol = "id", vectorCol = Some("vector"), buckets = 4)
+      g2.collections.upsert(c, rows.take(n).toDF("id", "vector", "text", "cat").repartition(4))
+    }
+    g2.collections.delete("gone", rows.take(60).map(_._1))
+    val srv = new graft.server.RestServer(g2, port = 0).start()
+    val http = HttpClient.newHttpClient()
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val (qa, qa2, qb) = (Seq(1f, 0.05f, 0f, 0f), Seq(1f, 0.15f, 0.02f, 0f), Seq(0f, 1f, 0.05f, 0f))
+    // plain-Scala reference over the collected per-row scores
+    def order(hib: Boolean)(x: (Long, Double), y: (Long, Double)): Boolean =
+      if (x._2 != y._2) (if (hib) x._2 > y._2 else x._2 < y._2) else x._1 < y._1
+    def top(rows: Leg, hib: Boolean, k: Int): Leg = rows.sortWith(order(hib)).take(k)
+    def rrf(legs: Seq[(Leg, Double)]): Leg = top(legs.flatMap { case (l, w) =>
+      l.zipWithIndex.map { case ((id, _), i) => id -> w / (60.0 + (i + 1)) }
+    }.groupBy(_._1).map { case (id, xs) => id -> xs.map(_._2).sum }.toSeq, true, 10)
+    def weighted(legs: Seq[Leg]): Leg = top(legs.flatten.groupBy(_._1).map { case (id, xs) =>
+      val s = xs.map(_._2)
+      id -> (0.5 * (s.sum / s.size) + 0.3 * s.max + 0.2 * (s.size / legs.size.toDouble))
+    }.toSeq, true, 10)
+    try for ((name, coll, vs, text, cat) <- Seq(
+        ("tie-heavy legs", "par", Seq(qa, qa2), "alpha", None),
+        ("disjoint legs", "par", Seq(qa, qb), "beta", None),
+        ("empty text leg", "par", Seq(qa, qb), "zzzz", None),
+        ("filtered frame", "par", Seq(qb, qa2), "gamma", Some(1L)),
+        ("collection emptied by deletes", "gone", Seq(qa, qb), "alpha", None))) {
+      val frame = g2.catalog.table(coll)
+      val f = cat.fold(frame)(c => frame.where(col("cat") === c))
+      def collected(df: org.apache.spark.sql.DataFrame): Leg =
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val vLegs = vs.map(q => top(collected(f.select(col("id"),
+        VectorFunctions.cosine_sim(col("vector"), VectorFunctions.vecLit(q)))), true, 2000))
+      val (bm25, hit) = graft.operators.Bm25.scoreColumns(frame, text, "text")
+      val tLeg = top(collected(f.where(hit).select(col("id"), bm25)), true, 2000)
+      name match {
+        case "tie-heavy legs" => assert(vLegs.head.map(_._2).distinct.size < 4 &&
+          tLeg.map(_._2).distinct.size < tLeg.size, "legs hold ties")
+        case "disjoint legs" => assert(vLegs(0).map(_._1).intersect(vLegs(1).map(_._1)).isEmpty &&
+          vLegs(0).map(_._1).intersect(tLeg.map(_._1)).isEmpty, "legs are disjoint")
+        case "empty text leg" => assert(tLeg.isEmpty)
+        case _ =>
+      }
+      val where = cat.fold("")(c => s"cat = $c AND ")
+      def vql(sql: String, params: Map[String, Any]): Leg =
+        collected(g2.sql(sql, params).select("id", "score"))
+      val filter = cat.fold("")(c =>
+        s""","filter":{"condition":{"type":"eq","field":"cat","value":$c}}""")
+      val rest = json.readTree(http.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.boundPort}/collections/$coll/search/hybrid"))
+        .POST(HttpRequest.BodyPublishers.ofString(s"""{"query":"$text","vector":""" +
+          s"""${vs.head.mkString("[", ",", "]")},"top_k":10,"vector_weight":0.7$filter}"""))
+        .header("Content-Type", "application/json").build(),
+        HttpResponse.BodyHandlers.ofString()).body()).get("results")
+      val hybridRef = rrf(Seq(vLegs.head -> 0.7, tLeg -> 0.3))
+      val nf = s"SELECT * FROM $coll WHERE ${where}vector NEAR_FUSED [$$a, $$b] USING FUSION "
+      val ab = Map("a" -> vs(0), "b" -> vs(1))
+      for ((kind, got, exp) <- Seq(
+          ("hybrid VelesQL", vql(s"SELECT id, score FROM $coll WHERE ${where}text MATCH '$text' " +
+            "AND vector NEAR $v LIMIT 10 USING FUSION(strategy = 'rrf', k = 60, " +
+            "vector_weight = 0.7)", Map("v" -> vs.head)), hybridRef),
+          ("hybrid REST", (0 until rest.size).map(i =>
+            (rest.get(i).get("id").asLong, rest.get(i).get("score").asDouble)), hybridRef),
+          ("NEAR_FUSED rrf", vql(nf + "'rrf' (k = 60) LIMIT 10", ab),
+            rrf(vLegs.map(_ -> 1.0))),
+          ("NEAR_FUSED weighted", vql(nf.replace("SELECT *", "SELECT id, score") +
+            "'weighted' (avg_weight = 0.5, max_weight = 0.3, hit_weight = 0.2) LIMIT 10", ab),
+            weighted(vLegs)))) {
+        assert(got.map(_._1) == exp.map(_._1), s"$name / $kind: ids $got vs $exp")
+        got.zip(exp).foreach { case ((_, gs), (_, es)) =>
+          assert(math.abs(gs - es) <= 1e-12, s"$name / $kind: score $gs vs $es") }
+        assert(got.isEmpty == (coll == "gone"), s"$name / $kind: ${got.size} rows")
+      }
+    } finally {
+      srv.stop(); g2.collections.drop("par"); g2.collections.drop("gone")
     }
   }
 

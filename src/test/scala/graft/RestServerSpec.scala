@@ -436,6 +436,25 @@ class RestServerSpec extends SparkSpecBase {
     assert(bw.statusCode() == 400 && bw.body().contains("sum to 1"), bw.body())
   }
 
+  test("search/multi rejects a negative rrf_k with a 400") {
+    val a = graft.functions.VectorFunctions.syntheticQuery(64).mkString("[", ",", "]")
+    // k = -1 divided rank 1 by zero and answered 200
+    for (k <- Seq(-1, -30)) {
+      val r = post("/collections/embeddings/search/multi",
+        s"""{"vectors": [$a, $a], "top_k": 4, "strategy": "rrf", "rrf_k": $k}""")
+      assert(r.statusCode() == 400 && r.body().contains("k must be"), r.body())
+    }
+  }
+
+  test("search/multi takes at most 10 vectors: a 400 before any Spark job") {
+    val a = graft.functions.VectorFunctions.syntheticQuery(64).mkString("[", ",", "]")
+    val body = Seq.fill(11)(a).mkString("""{"vectors": [""", ", ", """], "top_k": 4}""")
+    val m = org.apache.spark.sql.graft.JobMeter(spark)(
+      post("/collections/embeddings/search/multi", body))
+    assert(m.value.statusCode() == 400 && m.value.body().contains("at most 10"), m.value.body())
+    assert(m.jobs == 0, s"an 11-vector search/multi ran ${m.jobs} Spark jobs")
+  }
+
   test("graph routes: node degree and BFS traverse") {
     // node 1 = customer 1; out-degree = orders placed (q80's surface)
     val dg = get("/collections/documents/graph/nodes/1/degree")

@@ -122,6 +122,50 @@ class VelesqlHardeningSpec extends SparkSpecBase {
     }
   }
 
+  test("fusion options: keys are case-insensitive, and unknown, string or bad values are rejected") {
+    val q2 = vec64.map(_ * -1f)
+    def fused(clause: String) = g.sql("SELECT vec_id, score FROM embeddings WHERE vector " +
+      s"NEAR_FUSED [$$a, $$b] $clause LIMIT 5", Map("a" -> vec64, "b" -> q2))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the condition-level form used to keep key case: K = 30 ran with k = 60
+    val k30 = fused("USING FUSION 'rrf' (k = 30)")
+    assert(fused("USING FUSION 'rrf' (K = 30)") == k30)
+    assert(fused("USING FUSION 'rrf' (k = 60)") != k30)
+    def reject(sql: String): String =
+      intercept[graft.velesql.VelesError](g.sql(sql, Map("a" -> vec64, "b" -> q2, "q" -> vec64))
+        .collect()).getMessage
+    def nearFused(clause: String) =
+      s"SELECT vec_id FROM embeddings WHERE vector NEAR_FUSED [$$a, $$b] $clause LIMIT 5"
+    def hybrid(opts: String) = "SELECT doc_id FROM corpus WHERE text MATCH 'data' AND " +
+      s"vector NEAR $$q LIMIT 5 USING FUSION ($opts)"
+    // a key outside the strategy's set used to be ignored
+    assert(reject(hybrid("strategy = 'rrf', vector_wieght = 0.2")).contains("vector_wieght"))
+    assert(reject(nearFused("USING FUSION 'rrf' (vector_weight = 0.7)")).contains("vector_weight"))
+    assert(reject(nearFused("USING FUSION 'average' (k = 5)")).contains("'k'"))
+    // a string option other than strategy used to be dropped
+    assert(reject("SELECT vec_id FROM embeddings WHERE vector NEAR_FUSED [$a, $b] " +
+      "LIMIT 5 USING FUSION (strategy = 'rrf', k = '30')").contains("'k'"))
+    // k = -1 divided rank 1 by zero; k = -30 gave the top ranks negative scores
+    for (k <- Seq("-1", "-30", "-0.5")) {
+      assert(reject(nearFused(s"USING FUSION 'rrf' (k = $k)")).contains("k must be"), k)
+      assert(reject(hybrid(s"strategy = 'rrf', k = $k")).contains("k must be"), k)
+    }
+    for (k <- Seq(Double.PositiveInfinity, Double.NaN))
+      intercept[IllegalArgumentException](graft.operators.Fusion.options("rrf", Map("k" -> k)))
+  }
+
+  test("NEAR_FUSED takes at most 10 vectors, rejected before any Spark job") {
+    val vecs = (0 until 11).map(i => s"v$i" -> vec64.map(_ * (i + 1).toFloat)).toMap
+    def sql(n: Int) = "SELECT vec_id FROM embeddings WHERE vector NEAR_FUSED " +
+      s"[${(0 until n).map("$v" + _).mkString(", ")}] USING FUSION 'rrf' LIMIT 5"
+    assert(g.sql(sql(10), vecs).collect().length == 5)
+    val m = org.apache.spark.sql.graft.JobMeter(spark) {
+      intercept[graft.velesql.SemanticError](g.sql(sql(11), vecs).collect()).getMessage
+    }
+    assert(m.value.contains("at most 10"), m.value)
+    assert(m.jobs == 0, s"a rejected NEAR_FUSED ran ${m.jobs} Spark jobs")
+  }
+
   test("plan-cache param key is delimiter-injection-proof") {
     val q = "SELECT doc_id FROM documents WHERE lang = $a LIMIT 5"
     // old rendering: these two maps produced the SAME key, so the

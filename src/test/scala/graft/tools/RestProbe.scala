@@ -19,7 +19,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * and 10,000 `link` edges; `local[4]`, one client over HTTP/1.1
   * keep-alive. For `GET /health` and each of the seven serving read
   * kinds (exact, category-filtered and `mode: accurate` kNN, BM25
-  * `search/text`, `search/hybrid`, 2-hop MATCH, point GET) it prints one
+  * `search/text`, `search/hybrid`, two-vector RRF `search/multi`, 2-hop
+  * MATCH, point GET) it prints one
   * table row for `reps` hot requests (the kind's first request, repeated)
   * and one for `reps` fresh ones: median ms, Spark jobs, stages run,
   * shuffle bytes (written + read) and codegen compiles. Then it prints the
@@ -88,7 +89,9 @@ object RestProbe {
     /** (method, path, body) of a fresh request of `kind`. */
     def request(kind: String): (String, String, String) = {
       val base = "/collections/docs"
-      val v = normalize(vectors(r.nextInt(Points)).map(x => (x + 0.05 * r.nextGaussian()).toFloat))
+      def near(): Array[Float] =
+        normalize(vectors(r.nextInt(Points)).map(x => (x + 0.05 * r.nextGaussian()).toFloat))
+      val v = near()
       val vq = s""""vector":${v.mkString("[", ",", "]")},"top_k":$K"""
       // mid-frequency query words: Zipf ranks 10..199
       val text = s""""query":"w${10 + r.nextInt(190)} w${10 + r.nextInt(190)}""""
@@ -101,6 +104,8 @@ object RestProbe {
         case "knn_ann" => ("POST", s"$base/search", s"""{$vq,"mode":"accurate"}""")
         case "bm25" => ("POST", s"$base/search/text", s"{$text,\"top_k\":$K}")
         case "hybrid" => ("POST", s"$base/search/hybrid", s"{$text,$vq}")
+        case "fused" => ("POST", s"$base/search/multi", s"""{"vectors":[${v.mkString("[", ",", "]")},""" +
+          s"""${near().mkString("[", ",", "]")}],"top_k":$K,"strategy":"rrf"}""")
         case "match2" => ("POST", s"$base/match", s"""{"match":"MATCH (a {id: $node})""" +
           """-[:link]->(b)-[:link]->(c) RETURN c.id AS d"}""")
         case "get" => ("GET", s"$base/points/$node", null)
@@ -180,7 +185,7 @@ object RestProbe {
       println("| kind                 |      ms | jobs | stages | shuffle B | compiles |")
       println("|---|---|---|---|---|---|")
       for (kind <- Seq("health", "knn_exact", "knn_filtered", "knn_ann", "bm25", "hybrid",
-          "match2", "get")) {
+          "fused", "match2", "get")) {
         val hot = request(kind)
         call(hot) // first request: ANN index build, BM25 postings, codegen
         println(row(s"$kind hot", Seq.fill(reps)(call(hot))))
