@@ -192,8 +192,6 @@ class Collections(spark: SparkSession, dataDir: String,
       s"invalid collection name '$name'")
     root.resolve(name)
   }
-  private def dataPath(name: String, frame: String = "points"): String =
-    colDir(name).resolve(frame).toString
   private def metaPath(name: String): Path = colDir(name).resolve("meta.json")
 
   /** S1: create — empty collection with metadata sidecar.
@@ -407,9 +405,7 @@ class Collections(spark: SparkSession, dataDir: String,
     * `retain` newest `<frame>.manifest-*` files (always including the
     * one the symlink targets), delete older manifests, then delete every
     * base (`<frame>-g*`) and delta (`<frame>-d*`) data dir no retained
-    * manifest references. A legacy
-    * pre-manifest `<frame>` symlink/dir is kept for one manifest cycle
-    * (its in-flight readers) and removed on the next. */
+    * manifest references. */
   private def gcFrame(name: String, frame: String, retain: Int): Unit = {
     val dir = colDir(name)
     val current = manifestPath(name, frame)
@@ -419,22 +415,8 @@ class Collections(spark: SparkSession, dataDir: String,
       .reverse
     val keep = (current.toSeq ++ manifests).distinct.take(math.max(retain, 1))
     manifests.filterNot(keep.contains).foreach(Files.deleteIfExists(_))
-    // legacy single-generation layout: retire it one cycle after the
-    // first manifest publish
-    val legacy = dir.resolve(frame)
-    val legacyTarget: Option[Path] =
-      if (Files.isSymbolicLink(legacy)) Some(dir.resolve(Files.readSymbolicLink(legacy)))
-      else if (Files.exists(legacy)) Some(legacy)
-      else None
-    if (manifests.size >= 2) legacyTarget.foreach { t =>
-      if (Files.isSymbolicLink(legacy)) Files.deleteIfExists(legacy)
-      else deleteRec(legacy)
-    }
-    val stillLegacy: Set[String] =
-      if (Files.exists(legacy)) legacyTarget.map(_.getFileName.toString).toSet
-      else Set.empty
     val referenced = keep.filter(Files.exists(_)).map(parseManifest)
-      .flatMap(_.topDirs).toSet ++ stillLegacy
+      .flatMap(_.topDirs).toSet
     // unreferenced dirs younger than the grace window stay: an in-flight
     // reader may still hold their file paths (see generationGraceMs) —
     // they age out on a later publish/vacuum. Generation dirs are
@@ -539,28 +521,32 @@ class Collections(spark: SparkSession, dataDir: String,
     next
   }
 
-  /** The index pieces of a hash-bucketed points frame — one per base
-    * bucket (bucket index → RESOLVED immutable leaf dir) and one per
-    * delta segment (index `buckets + i`), each carrying the ids its
-    * reader must hide — or None on flat/legacy layouts. Derived indexes
-    * cache one artifact per piece dir ([[graft.Materialize.pieces]]), so
-    * after a write the next indexed query builds only the new delta's
-    * piece and reuses every base piece, filtered. */
-  def bucketPieces(name: String): Option[Collections.Pieces] =
-    readManifest(name)
-      .filter(m => m.buckets > 0 && m.schema.isDefined && m.entries.nonEmpty)
-      .map { m =>
-        val dir = colDir(name)
-        val (baseHidden, later) = m.hidden
-        val base = m.entries.toSeq.sortBy(_._1).map { case (b, rel) =>
-          Collections.Piece(b, dir.resolve(rel), baseHidden)
-        }
-        val deltas = m.segments.zipWithIndex.collect {
-          case (Collections.Segment(Some(d), _), i) =>
-            Collections.Piece(m.buckets + i, dir.resolve(d), later(i))
-        }
-        Collections.Pieces(base ++ deltas, m.schema.get, idColOf(name))
-      }
+  /** The index pieces of the points frame — one per base dir (bucket
+    * index → RESOLVED immutable leaf dir on the bucketed layout, the
+    * i-th whole data dir on the flat one) and one per delta segment
+    * (index `buckets` or `dirs` count + i), each carrying the ids its
+    * reader must hide. An emptied bucketed frame has zero base pieces.
+    * Derived indexes cache one artifact per piece dir
+    * ([[graft.Materialize.pieces]]), so after a write the next indexed
+    * query builds only the new delta's piece and reuses every base
+    * piece, filtered. The collection must have been written. */
+  def pieces(name: String): Collections.Pieces = {
+    val m = readManifest(name).getOrElse(
+      throw new IllegalStateException(s"collection $name has no points yet"))
+    val dir = colDir(name)
+    val (baseHidden, later) = m.hidden
+    val base =
+      if (m.buckets > 0) m.entries.toSeq.sortBy(_._1)
+      else m.dirs.zipWithIndex.map(_.swap)
+    val firstDelta = if (m.buckets > 0) m.buckets else m.dirs.size
+    val deltas = m.segments.zipWithIndex.collect {
+      case (Collections.Segment(Some(d), _), i) =>
+        Collections.Piece(firstDelta + i, dir.resolve(d), later(i))
+    }
+    Collections.Pieces(
+      base.map { case (b, rel) => Collections.Piece(b, dir.resolve(rel), baseHidden) } ++ deltas,
+      m.schema.get, idColOf(name)) // every manifest writer records its schema
+  }
 
   /** The points frame's authoritative schema (manifest-carried). */
   def manifestSchema(name: String): Option[org.apache.spark.sql.types.StructType] =
@@ -612,44 +598,27 @@ class Collections(spark: SparkSession, dataDir: String,
   /** S3: read all points (empty frame with no schema if never written).
     * Manifest layout: the scan gets the manifest's authoritative schema
     * and the referenced immutable dirs — a concurrent publish writes a
-    * NEW manifest + new dirs, so a planned read never races a rewrite.
-    * Legacy layout: reads the RESOLVED generation directory, not the
-    * `points` symlink, for the same reason. */
+    * NEW manifest + new dirs, so a planned read never races a rewrite. */
   def table(name: String): Option[DataFrame] =
     readManifest(name).map(m => manifestFrame(name, m, idColOf(name)))
-      .orElse(frameTable(name, "points"))
 
   /** The collection's mutable edge frame (graph_api.rs:40-107) — a second
     * manifest-published frame next to `points`, keyed by the long `id`
     * column; None until the first [[upsertEdges]]. */
   def edges(name: String): Option[DataFrame] =
     readManifest(name, "edges").map(m => manifestFrame(name, m, "id"))
-      .orElse(frameTable(name, "edges"))
 
   /** The edge-side content stamp: the RESOLVED current edges manifest
-    * (every edge write publishes a new one), or the legacy generation
-    * dir. None until the first edge write. */
-  def edgesRealPath(name: String): Option[java.nio.file.Path] =
-    manifestPath(name, "edges").orElse(framePath(name, "edges"))
-
-  private def frameTable(name: String, frame: String): Option[DataFrame] =
-    framePath(name, frame).map(real => spark.read.parquet(real.toString))
-
-  /** The content stamp for materialized ANN structures over this
-    * collection ([[graft.Materialize.atPaths]]): the RESOLVED current
-    * manifest file (every publish writes a new one), or the resolved
-    * generation directory on the legacy layout. None until the first
+    * (every edge write publishes a new one). None until the first edge
     * write. */
-  def pointsRealPath(name: String): Option[java.nio.file.Path] =
-    manifestPath(name, "points").orElse(framePath(name, "points"))
+  def edgesRealPath(name: String): Option[java.nio.file.Path] =
+    manifestPath(name, "edges")
 
-  private def framePath(name: String, frame: String): Option[java.nio.file.Path] = {
-    val p = Paths.get(dataPath(name, frame))
-    if (!Files.exists(p)) None
-    else Some(
-      if (Files.isSymbolicLink(p)) p.getParent.resolve(Files.readSymbolicLink(p))
-      else p)
-  }
+  /** The content stamp of this collection's points ([[graft.IndexSource]]):
+    * the RESOLVED current manifest file (every publish writes a new
+    * one). None until the first write. */
+  def pointsRealPath(name: String): Option[java.nio.file.Path] =
+    manifestPath(name, "points")
 
   /** S2: upsert — insert-or-replace by id (crud.rs:19-127). Batch
     * semantics: the incoming batch wins over stored rows; within a batch,
@@ -675,8 +644,7 @@ class Collections(spark: SparkSession, dataDir: String,
     * first write, collections range-clustered by an index (the
     * clustering IS the layout), a shared column whose type changes
     * (unionByName coercion must rewrite every file to keep one type per
-    * column), non-integral ids (segments hold long ids) and the legacy
-    * single-generation layout (migrates it). */
+    * column) and non-integral ids (segments hold long ids). */
   def upsert(name: String, batch0: DataFrame): Unit = this.synchronized {
     validateNodeBatch(name, batch0)
     val batch = halfRoundIfConfigured(name, batch0)
@@ -929,10 +897,9 @@ class Collections(spark: SparkSession, dataDir: String,
     * points ([[Collections.FrameManifest]]): a write publishes one delta
     * file of its batch sorted by (label, src), superseding the batch's
     * ids, and folds into a full (label, src)-clustered rewrite past the
-    * same threshold. A type change or the legacy layout rewrites in
-    * full. A batch with new property columns widens the schema (missing
-    * columns null-fill — the reference's `properties: HashMap` is open
-    * too).
+    * same threshold. A type change rewrites in full. A batch with new
+    * property columns widens the schema (missing columns null-fill — the
+    * reference's `properties: HashMap` is open too).
     * Rows without an id get one auto-assigned (above both the stored max
     * and the batch's explicit max, like the reference's add_edge id
     * counter) INSIDE the instance lock, so concurrent REST writers can't
@@ -1228,8 +1195,8 @@ class Collections(spark: SparkSession, dataDir: String,
     * integral ids this is a manifest-only publish — one segment naming
     * the ids, no parquet written and no Spark job (the reference's
     * deletion-bitmap tombstone) — unless it crosses the fold threshold
-    * ([[upsert]]); indexed/legacy layouts and non-integral ids fall
-    * back to the full filter-and-rewrite. */
+    * ([[upsert]]); the indexed layout and non-integral ids fall back to
+    * the full filter-and-rewrite. */
   def delete(name: String, ids: Seq[Long]): Unit = this.synchronized {
     val idc = idColOf(name)
     // keep = NOT coalesce(id IN ids, false): for a null-id row `isin`

@@ -25,10 +25,11 @@ object Materialize {
 
   /** Path-stamped variant: `token` is the cache identity (the dataset
     * dir, or a collection's identity), `sources` the concrete files/dirs
-    * whose listing stamps the content. User-collection ANN indexes key
-    * on the CURRENT points generation path — a publish changes the
-    * listing, so the next query rebuilds (the reference's insert-time
-    * index update re-expressed as build-on-read).
+    * whose listing stamps the content. Every ANN index piece
+    * ([[pieces]]), trained model and HNSW cell graph is one such
+    * artifact — a write adds a piece dir, so the next query builds only
+    * that piece (the reference's insert-time index update re-expressed
+    * as build-on-read).
     *
     * BUILDER CONTRACT: after the frame is written, every localCheckpoint
     * anywhere in the builder's plan is freed (`CheckpointBlocks
@@ -51,7 +52,15 @@ object Materialize {
 
   def atPaths(spark: SparkSession, token: String, kind: String,
       sources: Seq[Path], partCol: Option[String],
-      extraStamp: Option[String] = None)(build: => DataFrame): DataFrame = {
+      extraStamp: Option[String] = None)(build: => DataFrame): DataFrame =
+    readMemo(spark, Seq(artifact(spark, token, kind, sources, partCol, extraStamp)(build)))
+
+  /** [[atPaths]] without the read: build the artifact once per key and
+    * return its published dir, for callers that read several artifacts
+    * as one relation ([[readMemo]]). */
+  def artifact(spark: SparkSession, token: String, kind: String,
+      sources: Seq[Path], partCol: Option[String],
+      extraStamp: Option[String] = None)(build: => DataFrame): Path = {
     val key = cacheKey(kind, token, sources, extraStamp)
     val path = Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived/$key")
     buildLocks.getOrElseUpdate(key, new Object).synchronized {
@@ -82,7 +91,7 @@ object Materialize {
         org.apache.spark.sql.graft.CheckpointBlocks.unpersistAll(b)
       }
     }
-    readMemo(spark, path.toString)
+    path
   }
 
   /** Per-session memo of resolved parquet relations. `spark.read
@@ -98,11 +107,17 @@ object Materialize {
     * a plain value map would make every weak KEY reachable from its own
     * value and pin stopped sessions (plus all their plans) forever —
     * the WeakHashMap self-reference trap. Soft values cost at worst a
-    * re-resolve after a GC pressure spike. */
+    * re-resolve after a GC pressure spike.
+    *
+    * Several dirs read as ONE relation: one scan whose read partitions
+    * pack small files across dirs. `schema`, when given, is the read
+    * schema: files written under a narrower one null-fill. */
   private val readCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, java.lang.ref.SoftReference[DataFrame]]]()
-  def readMemo(spark: SparkSession, path: String): DataFrame = {
+  def readMemo(spark: SparkSession, dirs: Seq[Path],
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val key = (dirs.map(_.toString) ++ schema.map(_.json)).mkString("\n")
     val perSession = readCache.synchronized {
       var m = readCache.get(spark)
       if (m == null) {
@@ -112,11 +127,12 @@ object Materialize {
       }
       m
     }
-    perSession.get(path).flatMap(r => Option(r.get())) match {
+    perSession.get(key).flatMap(r => Option(r.get())) match {
       case Some(df) => df
       case None =>
-        val df = spark.read.parquet(path)
-        perSession.put(path, new java.lang.ref.SoftReference(df))
+        val df = schema.fold(spark.read)(spark.read.schema(_))
+          .parquet(dirs.map(_.toString): _*)
+        perSession.put(key, new java.lang.ref.SoftReference(df))
         df
     }
   }
@@ -126,28 +142,32 @@ object Materialize {
     * (name, mtime, size) walk as [[atPaths]] keys, driver-side only. */
   def pathStamp(p: Path): String = listingHash(p)
 
-  /** Per-piece incremental materialization — the shared maintenance
-    * loop of every piece-wise index (LSH buckets, IVF cells, PQ codes,
-    * IVF-PQ combined, HNSW signatures): one cached artifact per (piece
-    * dir, extraSources), read back minus the piece's hidden ids. Piece
-    * dirs are immutable (base buckets and delta segments,
-    * [[Collections.FrameManifest]]), so after a write the next use
-    * builds only the new delta's piece and every other piece is a cache
-    * hit with a wider filter; a fold rebuilds all of them. `build`
-    * receives the piece's frame read under the manifest's authoritative
-    * schema (null-filling columns a pre-widening file lacks) and must
-    * keep the id column. */
+  /** Per-piece incremental materialization — the one maintenance route
+    * of every ANN index (LSH buckets, IVF cells, IVF-PQ codes, HNSW
+    * signatures): one cached artifact per (piece dir, extraSources),
+    * read back minus the piece's hidden ids. Piece dirs are immutable
+    * (a dataset table's parquet file; a collection's base buckets or
+    * flat dirs and its delta segments, [[Collections.FrameManifest]]),
+    * so after a write the next use builds only the new delta's piece
+    * and every other piece is a cache hit with a wider filter; a fold
+    * rebuilds all of them. `build` receives the piece's frame read under
+    * the source's authoritative schema (null-filling columns a
+    * pre-widening file lacks) and must keep the id column. Zero pieces
+    * (an emptied collection) is an empty index: `build` over an empty
+    * frame of that schema, nothing cached. */
   def pieces(spark: SparkSession, token: String, kindFor: Int => String,
       ps: Collections.Pieces, extraSources: Seq[Path],
-      partCol: Option[String])(build: DataFrame => DataFrame): DataFrame = {
-    require(ps.parts.nonEmpty, "no pieces to materialize")
-    ps.parts.map { p =>
+      partCol: Option[String])(build: DataFrame => DataFrame): DataFrame =
+    if (ps.parts.isEmpty)
+      build(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ps.schema))
+    else ps.parts.map { p =>
       Collections.visible(
-        atPaths(spark, token, kindFor(p.index), p.dir +: extraSources, partCol) {
+        atPaths(spark, token, kindFor(p.index), (p.dir +: extraSources).distinct,
+          partCol) {
           build(spark.read.schema(ps.schema).parquet(p.dir.toString))
         }, ps.idCol, p.hidden)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
 
   /** Retention for superseded index generations: building a NEW stamp of
     * (kind, token) makes every OLDER same-prefix sibling stale — without

@@ -27,8 +27,4 @@ object QueryDef {
   def lifecyclePin(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle), benchmarked = false)
-
-  def noOracle(name: String)(
-      fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

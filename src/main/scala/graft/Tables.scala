@@ -84,8 +84,4 @@ object Tables {
       df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
     } else df
   }
-
-  /** Register every table as a temp view so spark.sql() works against it. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    All.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 }

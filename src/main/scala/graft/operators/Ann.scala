@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.LongType
   * every vector to a bucket; search probes the query's bucket plus its
   * Hamming neighbors and exact-reranks only those candidates. The index
   * is just a DataFrame (bucket, id, vector) — written as parquet
-  * partitioned by bucket, probing becomes partition pruning, and index
+  * clustered by bucket, probing becomes row-group pruning, and index
   * build is one distributed pass (vs 52 s single-node HNSW build for
   * 100K×768D — benchmarks/README.md:20-22).
   *
@@ -72,11 +72,10 @@ object Ann {
     bits.reduce(_ + _).cast(LongType)
   }
 
-  /** Build the LSH index frame: input plus a `bucket` column. Persist
-    * with `.write.partitionBy("bucket")` to turn probes into partition
-    * pruning at scale. Pass `dim` (from collection metadata / the query
-    * vector) to keep the build a single pass — the `None` fallback costs
-    * one stray dim-probe job. */
+  /** Build the LSH index frame: input plus a `bucket` column
+    * ([[materializedIndexAt]] persists it bucket-clustered). Pass `dim`
+    * (from collection metadata / the query vector) to keep the build a
+    * single pass — the `None` fallback costs one stray dim-probe job. */
   def buildIndex(df: DataFrame, vecCol: String, nPlanes: Int,
       dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(
@@ -117,57 +116,25 @@ object Ann {
     out.result()
   }
 
-  /** Persist an LSH index partitioned BY BUCKET: probing then becomes
-    * partition pruning — a radius-r probe reads only its Hamming ball's
-    * directories, never the rest of the index. */
-  def writeIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-  /** The LSH index for a dataset-dir table, materialized ONCE per
-    * dataset and CLUSTERED+SORTED by `bucket` (the q59-IVF pattern
-    * applied to the LSH tier): a probe is a pushed `bucket IN (…)`
-    * filter that prunes row groups — the query neither re-hashes every
-    * vector nor scans outside its Hamming ball. Index build happens at
-    * materialize time, like the reference's insert-time index build
-    * (index/hnsw/native_index.rs:317). */
-  def materializedIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      table: String, vecCol: String, nPlanes: Int, dim: Int): DataFrame =
-    materializedIndexAt(spark, dir,
-      Seq(java.nio.file.Paths.get(s"$dir/$table.parquet")), table,
-      graft.Tables.table(spark, dir, table), vecCol, nPlanes, dim)
-
-  /** Path-stamped variant (user collections: stamp = the current points
-    * generation, so a publish rebuilds on next query).
-    *
-    * `pieces` (bucketed collections) maintains the index INCREMENTALLY
-    * over the collection's immutable pieces ([[graft.Materialize.pieces]]):
-    * the LSH signature is a pure per-row function, so the index
-    * decomposes into one cached piece per base bucket and per delta
-    * segment, each stamped by its own dir and read back minus the ids
-    * later writes superseded. A write adds one delta dir, so the next
-    * indexed query hashes only that batch's rows and reuses every base
-    * piece — per-write index upkeep is O(batch), which is what the
+  /** The LSH index of a source, maintained per piece
+    * ([[graft.Materialize.pieces]]): the signature is a pure per-row
+    * function, so the index decomposes into one cached piece per storage
+    * piece (a dataset table's file; a collection's base buckets and
+    * delta segments), each stamped by its own dir and read back minus
+    * the ids later writes superseded. A write adds one delta dir, so the
+    * next indexed query hashes only that batch's rows and reuses every
+    * base piece — per-write index upkeep is O(batch), which is what the
     * reference's in-place HNSW insert (native_index.rs:317) costs and
-    * what a 100 TB ingest needs. Every piece is bucket-clustered
-    * parquet, so the probe's pushed `bucket IN (…)` prunes row groups
-    * inside each piece of the union. (The trained tiers — IVF/PQ/HNSW —
-    * take the same `pieces` against EPOCH-FROZEN models; see
-    * [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
+    * what a 100 TB ingest needs. Every piece is bucket-clustered and
+    * sorted parquet, so the probe's pushed `bucket IN (…)` prunes row
+    * groups inside each piece of the union: the query neither re-hashes
+    * a vector nor scans outside its Hamming ball. (The trained tiers —
+    * IVF/PQ/HNSW — take the same pieces against EPOCH-FROZEN models;
+    * see [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
   def materializedIndexAt(spark: org.apache.spark.sql.SparkSession,
-      token: String, sources: Seq[java.nio.file.Path], name: String,
-      base: => DataFrame, vecCol: String, nPlanes: Int, dim: Int,
-      pieces: Option[graft.Collections.Pieces] = None): DataFrame =
-    pieces match {
-      case Some(ps) =>
-        graft.Materialize.pieces(spark, token, b => s"lsh${nPlanes}_p${b}_$name",
-          ps, Nil, Some("bucket"))(buildIndex(_, vecCol, nPlanes, Some(dim)))
-      case None =>
-        graft.Materialize.atPaths(spark, token, s"lsh${nPlanes}_buckets_$name",
-          sources, Some("bucket"))(buildIndex(base, vecCol, nPlanes, Some(dim)))
-    }
-
-  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+      src: graft.IndexSource, vecCol: String, nPlanes: Int, dim: Int): DataFrame =
+    graft.Materialize.pieces(spark, src.token, b => s"lsh${nPlanes}_p${b}_${src.name}",
+      src.pieces, Nil, Some("bucket"))(buildIndex(_, vecCol, nPlanes, Some(dim)))
 
   /** ANN top-k: probe buckets within `radius`, exact-rerank candidates.
     * radius = nPlanes probes ALL buckets — honored by skipping the

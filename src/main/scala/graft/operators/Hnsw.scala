@@ -394,92 +394,83 @@ object Hnsw {
     }(Encoders.row(inSchema))
   }
 
+  /** Level-0 link count and level-1 sampling stride of the
+    * materialized graphs ([[buildGraph]]'s defaults). */
+  private val M = 8
+  private val LevelStride = 16
+
   /** The materialized partitioned-HNSW index for a source: the IVF
     * centroid router (shared with the `index='ivf'` tier — same cells,
-    * same probe routing) plus the cell-clustered adjacency table. Built
-    * once per content stamp; a collection publish re-stamps and the
-    * next query rebuilds (the reference's insert-time index update,
-    * native_index.rs:317, as build-on-read). */
-  def materializedIndexAt(spark: SparkSession, token: String,
-      sources: Seq[java.nio.file.Path], name: String, base: => DataFrame,
-      vecCol: String, idCol: String, metric: String, kCells: Int,
-      m: Int = 8, levelStride: Int = 16,
-      modelSources: Option[Seq[java.nio.file.Path]] = None,
-      pieces: Option[graft.Collections.Pieces] = None)
+    * same probe routing) plus the cell-clustered adjacency table, kept
+    * PER CELL over the epoch-frozen router. The adjacency couples rows
+    * WITHIN a cell, across storage pieces, so the rebuild unit is the
+    * cell, not the piece; [[buildGraph]] builds each cell on its own in
+    * ascending-id order, so a cell's graph depends only on its rows. */
+  def materializedIndexAt(spark: SparkSession, src: graft.IndexSource,
+      vecCol: String, idCol: String, metric: String, kCells: Int)
       : (Array[(Int, Array[Float])], DataFrame) = {
-    val (cents, cells) = Ivf.materializedIndexAt(spark, token, sources,
-      name, base, vecCol, kCells, modelSources = modelSources,
-      pieces = pieces)
+    val (cents, cells) = Ivf.materializedIndexAt(spark, src, vecCol, kCells)
+    val name = src.name
     // v2 in the kind: the r12 insertion build produces different (still
     // contract-conforming) adjacency than the r11 half-matrix build — a
     // stale same-key cache from the old algorithm must not be served.
     // kCells too: the graph's `cell` column is an assignment under the
     // CURRENT cell count — without it a cell-count change served a
     // graph partitioned under the old k (r15 review finding)
-    val graphKind = s"hnswv2m${m}s${levelStride}c${kCells}_${metric}_$name"
-    val modelSrcAll = modelSources.getOrElse(sources)
-    val graph = pieces match {
-      case Some(ps) =>
-        // PER-CELL incremental maintenance over the epoch-frozen router
-        // (the adjacency couples rows WITHIN a cell, across storage
-        // pieces — so the rebuild unit is the cell, not the piece):
-        //  1. per-row (id, cell, hash) signature tables cache per
-        //     (piece dir, model stamp) — a write computes only its own
-        //     delta's table;
-        //  2. per-cell hash = order-independent XOR over the LIVE rows
-        //     (pieces read minus their superseded ids; k-cells-sized,
-        //     collected once per manifest and memoized);
-        //  3. each cell's graph materializes with that hash as its
-        //     extraStamp — ONLY cells whose live rows changed rebuild,
-        //     each at the insertion build's O(|cell|·ef·m).
-        // A 1-id upsert therefore computes one small signature table and
-        // rebuilds ≤2 cell graphs (IncrementalTrainedIndexSpec pins this
-        // at the file level); the reference's in-place insert
-        // (native_index.rs:317) has the same touched-cells cost shape.
-        val modelSrc = modelSources.getOrElse(sources)
-        // the signature hashes the WHOLE row (to_json of every manifest
-        // column), not just (id, vector) — the cached cell graph carries
-        // all columns (residual __keep predicates and SELECTed payload
-        // evaluate against it), so a payload-only upsert must dirty its
-        // cell or the walk serves stale payload. Per-row (`_rows_`), so
-        // superseded rows can be filtered out before the XOR.
-        val sigs = graft.Materialize.pieces(spark, token,
-          b => s"hnswsig2v${kCells}_${metric}_p${b}_rows_$name", ps,
-          modelSrc, None)(
-          _.where(col(vecCol).isNotNull)
-            .select(col(ps.idCol), Ivf.udfAssign(cents)(col(vecCol)).as("cell"),
-              xxhash64(to_json(struct(col("*")))).as("h")))
-        val cellHashes: Seq[(Int, String)] = graft.Materialize.memo(
-            s"hnswhashes2v${kCells}_${metric}_$name", token,
-            (sources ++ modelSrc).distinct) {
-          // bit_xor: order-independent and overflow-free (an ANSI sum of
-          // 64-bit hashes overflows); live ids are unique, so XOR
-          // cancellation needs a true hash collision
-          sigs.groupBy("cell").agg(expr("bit_xor(h)").as("h"), count(lit(1)).as("n"))
-            .collect()
-            .map(r => (r.getInt(0),
-              java.lang.Long.toHexString(r.getLong(1)) + "n" + r.getLong(2)))
-            .sortBy(_._1).toSeq
-        }
-        // a collection whose every point was deleted has buckets but no
-        // cells — the index is legitimately EMPTY, not an error
-        if (cellHashes.isEmpty)
-          buildGraph(cells.limit(0), vecCol, idCol, metric, m, levelStride)
-        else cellHashes.map { case (c, h) =>
-          graft.Materialize.atPaths(spark, token, s"${graphKind}_c$c",
-            modelSrc, Some("cell"), extraStamp = Some(h)) {
-            buildGraph(cells.where(col("cell") === c), vecCol, idCol,
-              metric, m, levelStride)
-          }
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
-      case None =>
-        // modelSrc in the key (see Ivf): a retrain re-partitions the
-        // cells, so the cached graph must follow the model epoch
-        graft.Materialize.atPaths(spark, token, graphKind,
-          (sources ++ modelSrcAll).distinct, Some("cell")) {
-          buildGraph(cells, vecCol, idCol, metric, m, levelStride)
-        }
+    val graphKind = s"hnswv2m${M}s${LevelStride}c${kCells}_${metric}_$name"
+    // Per-cell incremental maintenance:
+    //  1. per-row (id, cell, hash) signature tables cache per
+    //     (piece dir, model stamp) — a write computes only its own
+    //     delta's table;
+    //  2. per-cell hash = order-independent XOR over the LIVE rows
+    //     (pieces read minus their superseded ids; k-cells-sized,
+    //     collected once per content stamp and memoized);
+    //  3. each cell's graph materializes with that hash as its
+    //     extraStamp — ONLY cells whose live rows changed rebuild,
+    //     each at the insertion build's O(|cell|·ef·m).
+    // A 1-id upsert therefore computes one small signature table and
+    // rebuilds ≤2 cell graphs (IncrementalTrainedIndexSpec pins this
+    // at the file level); the reference's in-place insert
+    // (native_index.rs:317) has the same touched-cells cost shape.
+    // The signature hashes the WHOLE row (to_json of every column), not
+    // just (id, vector) — the cached cell graph carries all columns
+    // (residual __keep predicates and SELECTed payload evaluate against
+    // it), so a payload-only upsert must dirty its cell or the walk
+    // serves stale payload. Per-row (`_rows_`), so superseded rows can
+    // be filtered out before the XOR.
+    val sigs = graft.Materialize.pieces(spark, src.token,
+      b => s"hnswsig2v${kCells}_${metric}_p${b}_rows_$name", src.pieces,
+      src.model, None)(
+      _.where(col(vecCol).isNotNull)
+        .select(col(idCol), Ivf.udfAssign(cents)(col(vecCol)).as("cell"),
+          xxhash64(to_json(struct(col("*")))).as("h")))
+    val cellHashes: Seq[(Int, String)] = graft.Materialize.memo(
+        s"hnswhashes2v${kCells}_${metric}_$name", src.token,
+        (src.stamp ++ src.model).distinct) {
+      // bit_xor: order-independent and overflow-free (an ANSI sum of
+      // 64-bit hashes overflows); live ids are unique, so XOR
+      // cancellation needs a true hash collision
+      sigs.groupBy("cell").agg(expr("bit_xor(h)").as("h"), count(lit(1)).as("n"))
+        .collect()
+        .map(r => (r.getInt(0),
+          java.lang.Long.toHexString(r.getLong(1)) + "n" + r.getLong(2)))
+        .sortBy(_._1).toSeq
     }
+    // a source with no vectors (an emptied collection) has no cells —
+    // the index is legitimately EMPTY, not an error
+    val empty = buildGraph(cells.limit(0), vecCol, idCol, metric, M, LevelStride)
+    // the cell graphs read as ONE relation under the current schema: one
+    // scan per probe, not one per cell, and a graph cached before a
+    // schema widening null-fills the new columns
+    val graph =
+      if (cellHashes.isEmpty) empty
+      else graft.Materialize.readMemo(spark, cellHashes.map { case (c, h) =>
+        graft.Materialize.artifact(spark, src.token, s"${graphKind}_c$c",
+          src.model, Some("cell"), extraStamp = Some(h)) {
+          buildGraph(cells.where(col("cell") === c), vecCol, idCol,
+            metric, M, LevelStride)
+        }
+      }, Some(empty.schema))
     (cents, graph)
   }
 

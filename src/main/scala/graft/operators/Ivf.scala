@@ -12,13 +12,14 @@ import org.apache.spark.sql.functions._
   * iterations, all distributed aggregations) partition the vector space;
   * every vector is assigned to its nearest centroid (`cell` column).
   * Search scores the query against the tiny centroid table on the driver,
-  * probes the `nprobe` nearest cells — partition pruning when the index
-  * is written `partitionBy("cell")` — and exact-reranks candidates.
+  * probes the `nprobe` nearest cells — row-group pruning over the
+  * cell-clustered index — and exact-reranks candidates.
   * `nprobe` is the recall/latency knob (the reference's ef analogue).
   *
-  * Training + assignment happen at INDEX BUILD time ([[materializedIndex]]
-  * — the reference builds its index at insert, index/hnsw/native_index
-  * .rs:317), never inside a query: queries are probe + rerank only.
+  * Training + assignment happen at INDEX BUILD time
+  * ([[materializedIndexAt]] — the reference builds its index at insert,
+  * index/hnsw/native_index.rs:317), never inside a query: queries are
+  * probe + rerank only.
   */
 object Ivf {
 
@@ -117,8 +118,8 @@ object Ivf {
   private[operators] def udfAssign(cs: Array[(Int, Array[Float])]) =
     udf { (v: Seq[Float]) => assignCell(cs, v.toArray) }
 
-  /** Index = data + `cell` column (persist `partitionBy("cell")` so
-    * probing prunes partitions). */
+  /** Index = data + `cell` column ([[materializedIndexAt]] persists it
+    * cell-clustered, so probing prunes row groups). */
   def buildIndex(df: DataFrame, vecCol: String,
       centroids: Array[(Int, Array[Float])]): DataFrame =
     // vector-less rows are unsearchable by vector and excluded from the
@@ -127,56 +128,27 @@ object Ivf {
     df.where(col(vecCol).isNotNull)
       .withColumn("cell", udfAssign(centroids)(col(vecCol)))
 
-  /** The IVF index for a dataset-dir table, materialized ONCE per
-    * dataset (keyed on the source parquet's file listing, like the BM25
-    * postings and dedup shingle tables): a tiny `(cell, centroid)`
-    * table plus the cell-clustered assignment table. Queries collect the
-    * centroid table (k rows) and go straight to probe + rerank — no
-    * per-query Lloyd rounds. At cluster scale the cells table is the
-    * partitionBy("cell") parquet layout ([[buildIndex]] scaladoc). */
-  def materializedIndex(spark: SparkSession, dir: String, table: String,
-      vecCol: String, k: Int,
-      iters: Int = 2): (Array[(Int, Array[Float])], DataFrame) =
-    materializedIndexAt(spark, dir,
-      Seq(java.nio.file.Paths.get(s"$dir/$table.parquet")), table,
-      graft.Tables.table(spark, dir, table), vecCol, k, iters)
+  /** Lloyd rounds of every materialized coarse quantizer. */
+  private val Iters = 2
 
-  /** Path-stamped variant (user collections: stamp = the current points
-    * generation, so a publish rebuilds on next query). `name` (the
-    * table/collection) is part of the cache kind — two vector tables in
-    * one dir must never share a key prefix, or generation pruning would
-    * delete one table's live index when the other rebuilds.
-    *
-    * `modelSources` (when set) stamps the TRAINED centroids instead of
-    * `sources` — user collections pass their index-epoch sidecar, so
-    * the model FREEZES across publishes (centroids are corpus
-    * statistics, stable under small batches) and only re-trains when
-    * [[graft.Collections.retrainIndexes]] bumps the epoch. `pieces`
-    * (bucketed layouts) then encodes ONLY a write's own delta against
-    * the frozen model: each piece's cell assignment caches per
-    * (piece dir, model stamp) and is read back minus its superseded ids
-    * — O(batch) index upkeep per write, the r11 VERDICT's remaining
-    * ingest scale-killer. */
   /** The coarse quantizer ALONE — trained/collected/memoized per model
-    * stamp, WITHOUT touching the cell-assignment table. Consumers that
-    * only route on centroids (residual PQ's encode + ADC constants,
-    * [[IvfPq]]) must not pay a corpus-sized full-width cells build as a
-    * side effect (r17 review finding: plain `quantization='pq'` wrote a
-    * complete corpus copy it never read). Collected table is k×dim-small
-    * — the in-memory quantizer cache every ANN engine keeps. */
-  def materializedCentroidsAt(spark: SparkSession, token: String,
-      sources: Seq[java.nio.file.Path], name: String, base: => DataFrame,
-      vecCol: String, k: Int,
-      iters: Int = 2,
-      modelSources: Option[Seq[java.nio.file.Path]] = None)
-      : Array[(Int, Array[Float])] = {
+    * stamp (`src.model`), WITHOUT touching the cell-assignment table.
+    * Consumers that only route on centroids (residual PQ's encode + ADC
+    * constants, [[IvfPq]]) must not pay a corpus-sized full-width cells
+    * build as a side effect (r17 review finding: plain
+    * `quantization='pq'` wrote a complete corpus copy it never read).
+    * Collected table is k×dim-small — the in-memory quantizer cache
+    * every ANN engine keeps. `src.name` is part of the cache kind — two
+    * vector tables under one token must never share a key prefix, or
+    * generation pruning would delete one table's live model when the
+    * other rebuilds. */
+  def materializedCentroidsAt(spark: SparkSession, src: graft.IndexSource,
+      vecCol: String, k: Int): Array[(Int, Array[Float])] = {
     import spark.implicits._
-    val modelSrc = modelSources.getOrElse(sources)
-    graft.Materialize.memo(
-        s"ivf${k}_centroids_$name", token, modelSrc) {
-      graft.Materialize.atPaths(spark, token,
-        s"ivf${k}_centroids_$name", modelSrc, None) {
-        trainCentroids(base, vecCol, k, iters)
+    val kind = s"ivf${k}_centroids_${src.name}"
+    graft.Materialize.memo(kind, src.token, src.model) {
+      graft.Materialize.atPaths(spark, src.token, kind, src.model, None) {
+        trainCentroids(src.frame(), vecCol, k, Iters)
           .toSeq.map { case (c, cen) => (c, cen.toSeq) }.toDF("cell", "centroid")
       }.collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
@@ -184,31 +156,25 @@ object Ivf {
     }
   }
 
-  def materializedIndexAt(spark: SparkSession, token: String,
-      sources: Seq[java.nio.file.Path], name: String, base: => DataFrame,
-      vecCol: String, k: Int,
-      iters: Int = 2,
-      modelSources: Option[Seq[java.nio.file.Path]] = None,
-      pieces: Option[graft.Collections.Pieces] = None)
-      : (Array[(Int, Array[Float])], DataFrame) = {
-    val centroids = materializedCentroidsAt(spark, token, sources, name,
-      base, vecCol, k, iters, modelSources)
-    val modelSrc = modelSources.getOrElse(sources)
-    val cells = pieces match {
-      case Some(ps) =>
-        graft.Materialize.pieces(spark, token,
-          b => s"ivf${k}_cells_p${b}_$name", ps, modelSrc,
-          Some("cell"))(buildIndex(_, vecCol, centroids))
-      case None =>
-        // modelSrc in the key: a retrain must invalidate the assignment
-        // table too, or frozen-then-retrained centroids get probed
-        // against rows assigned under the OLD model (r15 review finding;
-        // the pieces branch already carries modelSrc)
-        graft.Materialize.atPaths(spark, token, s"ivf${k}_cells_$name",
-          (sources ++ modelSrc).distinct, Some("cell")) {
-          buildIndex(base, vecCol, centroids)
-        }
-    }
+  /** The IVF index of a source: the trained centroids plus the
+    * cell-clustered assignment table. Training + assignment happen at
+    * INDEX BUILD time (the reference builds its index at insert,
+    * index/hnsw/native_index.rs:317), never inside a query: queries
+    * collect the centroid table (k rows) and go straight to probe +
+    * rerank. The centroids stamp on `src.model`, so on a user collection
+    * the model FREEZES across publishes (centroids are corpus
+    * statistics, stable under small batches) and only re-trains when
+    * [[graft.Collections.retrainIndexes]] bumps the epoch. The cell
+    * assignment caches per (piece dir, model stamp) and is read back
+    * minus each piece's superseded ids — a write encodes ONLY its own
+    * delta against the frozen model, O(batch) index upkeep per write,
+    * and a retrain re-encodes every piece. */
+  def materializedIndexAt(spark: SparkSession, src: graft.IndexSource,
+      vecCol: String, k: Int): (Array[(Int, Array[Float])], DataFrame) = {
+    val centroids = materializedCentroidsAt(spark, src, vecCol, k)
+    val cells = graft.Materialize.pieces(spark, src.token,
+      b => s"ivf${k}_cells_p${b}_${src.name}", src.pieces, src.model,
+      Some("cell"))(buildIndex(_, vecCol, centroids))
     (centroids, cells)
   }
 

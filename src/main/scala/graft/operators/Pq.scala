@@ -180,7 +180,7 @@ object Pq {
     val k = codebooks(0).length
     val normFlat = Array.tabulate(m * k)(x =>
       codebooks(x / k)(x % k).map(v => v.toDouble * v).sum)
-    val nCells = cents.map(_._1).max + 1
+    val nCells = cents.map(_._1).maxOption.fold(0)(_ + 1) // none: empty source
     val normC = Array.fill(nCells)(0.0)
     val crossFlat = Array.fill(nCells * m * k)(0.0)
     cents.foreach { case (c, cen) =>
@@ -199,6 +199,8 @@ object Pq {
       query: Array[Float], codebooks: Array[Array[Array[Float]]],
       cents: Array[(Int, Array[Float])], metric: String,
       model: Option[AdcModelTables] = None): (Column, Boolean) = {
+    // an empty source trains no cells, so it holds no codes to order
+    if (cents.isEmpty) return (lit(0.0), false)
     val m = codebooks.length
     val k = codebooks(0).length
     val sub = query.length / m

@@ -221,8 +221,9 @@ object VectorQueries {
       // index built ONCE per dataset behind Materialize (bucket-clustered
       // — same insert-time-build contract as q59's IVF); the query is
       // probe + rerank only
-      val idx = graft.operators.Ann.materializedIndex(s, d, "embeddings",
-        "embedding", nPlanes = 6, dim = q64.length)
+      val idx = graft.operators.Ann.materializedIndexAt(s,
+        graft.IndexSource.table(s, d, "embeddings"), "embedding", nPlanes = 6,
+        dim = q64.length)
       graft.operators.Ann.search(idx, "embedding", q64, 10, nPlanes = 6,
           radius = 6, idCol = "vec_id")
         .select("vec_id", "score")
@@ -238,7 +239,8 @@ object VectorQueries {
       import graft.operators.Ivf
       // train ONCE per dataset behind Materialize; the query is probe +
       // rerank only (insert-time index build, index/hnsw/native_index.rs:317)
-      val (cents, cells) = Ivf.materializedIndex(s, d, "embeddings", "embedding", k = 8)
+      val (cents, cells) = Ivf.materializedIndexAt(s,
+        graft.IndexSource.table(s, d, "embeddings"), "embedding", k = 8)
       Ivf.search(cells, "embedding", q64, 10, cents, nprobe = 8, idCol = "vec_id")
         .select("vec_id", "score")
     },

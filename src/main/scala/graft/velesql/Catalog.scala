@@ -24,31 +24,9 @@ final case class CollectionMeta(
     storageMode: Option[String] = None)
 
 object Catalog {
-  /** See [[Catalog.indexSource]]. */
-  /** `pieces`: the bucketed layout's immutable piece dirs (base buckets
-    * and delta segments) with the ids each reader must hide, plus the
-    * authoritative read schema, when the source supports per-piece index
-    * maintenance (user collections on the manifest layout) — index tiers
-    * materialize one cached piece per dir and filter it on read, so a
-    * write builds only its own delta's piece. */
-  /** `modelPaths`: the stamp sources for TRAINED model artifacts
-    * (IVF centroids, PQ codebooks, the HNSW router) when they freeze
-    * independently of content — user collections stamp models on their
-    * index-epoch sidecar ([[graft.Collections.indexEpoch]]), so a
-    * write encodes its delta against the frozen model instead of
-    * re-training. None = models stamp on `paths` (dataset
-    * tables: content never changes without a full regeneration). */
-  final case class IndexSource(token: String,
-      paths: Seq[java.nio.file.Path], frame: () => org.apache.spark.sql.DataFrame,
-      pieces: Option[graft.Collections.Pieces] = None,
-      modelPaths: Option[Seq[java.nio.file.Path]] = None)
-}
-
-class Catalog(spark: SparkSession, val dir: String) {
-
   /** Testdata collection registry: every driver table, with vector/text
     * metadata where the table carries embeddings or documents. */
-  val meta: Map[String, CollectionMeta] = Map(
+  val builtins: Map[String, CollectionMeta] = Map(
     "embeddings" -> CollectionMeta("vec_id", Some("embedding"), "cosine"),
     "documents" -> CollectionMeta("doc_id", None, "cosine", Some("text")),
     "events" -> CollectionMeta("event_id"),
@@ -65,6 +43,11 @@ class Catalog(spark: SparkSession, val dir: String) {
     // derived 128-dim collection (embedding ∥ embedding): exercises the
     // multi-word binary sketch path (real embeddings are 768+ dims)
     "embeddings_wide" -> CollectionMeta("vec_id", Some("embedding"), "cosine"))
+}
+
+class Catalog(spark: SparkSession, val dir: String) {
+
+  val meta: Map[String, CollectionMeta] = Catalog.builtins
 
   /** User-created collections ([[graft.Collections]] sidecar dirs) are
     * first-class VelesQL targets: the reference's `db.get_collection(n)
@@ -127,30 +110,25 @@ class Catalog(spark: SparkSession, val dir: String) {
         concat(col("embedding"), col("embedding")).as("embedding"))
     } else Tables.table(spark, dir, name)
 
-  /** Source descriptor for materialized ANN structures (LSH buckets,
-    * IVF cells, PQ codes): a stable cache token, the content-stamp
-    * paths, and the base frame. Dataset tables stamp on their parquet
-    * file; USER collections stamp on the current points manifest and,
-    * on the bucketed layout, carry their pieces — the next indexed
-    * query after a write builds only that write's delta piece (the
-    * reference's insert-time index update,
+  /** The source every ANN tier builds over ([[graft.IndexSource]]):
+    * a dataset table is one piece stamped on its parquet file; a USER
+    * collection stamps on its current points manifest, freezes its models
+    * on the index-epoch sidecar and carries one piece per base dir and
+    * delta segment — the next indexed query after a write builds only
+    * that write's delta piece (the reference's insert-time index update,
     * index/hnsw/native_index.rs:317, re-expressed as build-on-read).
-    * None for joins-free-violations, derived frames (corpus,
-    * embeddings_wide), and never-written collections — callers fall
-    * back to on-the-fly filtering or fail with their own message. */
-  def indexSource(name: String): Option[Catalog.IndexSource] =
+    * None for derived frames (corpus, embeddings_wide) and never-written
+    * collections — callers fall back to on-the-fly filtering or fail
+    * with their own message. */
+  def indexSource(name: String): Option[graft.IndexSource] =
     if (meta.contains(name))
-      if (Tables.All.contains(name))
-        Some(Catalog.IndexSource(dir,
-          Seq(java.nio.file.Paths.get(s"$dir/$name.parquet")),
-          () => table(name)))
+      if (Tables.All.contains(name)) Some(graft.IndexSource.table(spark, dir, name))
       else None // derived frames: no stable file to stamp
     else if (userCollections.exists(name))
-      userCollections.pointsRealPath(name).map { p =>
-        Catalog.IndexSource(s"${dir}_col_$name", Seq(p), () => table(name),
-          userCollections.bucketPieces(name),
-          modelPaths = Some(Seq(userCollections.ensureIndexEpochFile(name))))
-      }
+      userCollections.pointsRealPath(name).map(p =>
+        graft.IndexSource(s"${dir}_col_$name", name, Seq(p),
+          Seq(userCollections.ensureIndexEpochFile(name)),
+          userCollections.pieces(name), () => table(name)))
     else None
 
   def metaOf(name: String): CollectionMeta =

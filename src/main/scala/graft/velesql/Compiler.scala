@@ -347,7 +347,7 @@ class Compiler(
         // Dataset tables AND written user collections resolve an index
         // source; joins and derived frames have none.
         lazy val srcOpt = if (sel.joins.isEmpty) catalog.indexSource(sel.from) else None
-        def indexSrc(withKey: String): Catalog.IndexSource = srcOpt.getOrElse(
+        def indexSrc(withKey: String): graft.IndexSource = srcOpt.getOrElse(
           fail(s"WITH $withKey needs a dataset table or a written user " +
             "collection (its index is materialized per source; joins/derived " +
             "frames can't use it)"))
@@ -366,15 +366,13 @@ class Compiler(
             // same centroids and nprobe, then walks an ef-bounded graph
             // inside each probed cell instead of scanning it.
             val src = indexSrc(s"index='${opts.index.get}'")
-            val (cents, cells) = Ivf.materializedIndexAt(spark, src.token,
-              src.paths, sel.from, src.frame(), vcolName, Ivf.Cells,
-              modelSources = src.modelPaths, pieces = src.pieces)
+            val (cents, cells) = Ivf.materializedIndexAt(spark, src, vcolName, Ivf.Cells)
             val probes = Ivf.probeCells(cents, vec.toArray, Ivf.nprobeOf(t))
             // Corpus count for the HNSW route, persisted per content
             // stamp (Materialize.countMemo): no Spark job on any later
             // compile, fresh query vectors included (r16 VERDICT #1).
             def corpusN = graft.Materialize.countMemo(
-              s"corpusn_${vcolName}_${sel.from}", src.token, src.paths)(cells.count())
+              s"corpusn_${vcolName}_${src.name}", src.token, src.stamp)(cells.count())
             // Above the calibration corpus (96·96) the walk never pays:
             // its only saving is exact-kernel evals, its per-visit
             // bookkeeping costs more, and recall at a fixed ef decays as
@@ -384,10 +382,8 @@ class Compiler(
             if (opts.index.contains("ivf") || corpusN > 96L * 96L)
               probe(cells, "cell", probes)
             else {
-              val (_, graph) = Hnsw.materializedIndexAt(spark, src.token,
-                src.paths, sel.from, src.frame(), vcolName, meta.idCol,
-                meta.metric, Ivf.Cells,
-                modelSources = src.modelPaths, pieces = src.pieces)
+              val (_, graph) = Hnsw.materializedIndexAt(spark, src, vcolName,
+                meta.idCol, meta.metric, Ivf.Cells)
               // walk budget per tier; accurate is the sf-scale
               // calibration floor (PERF_r11.md: nprobe 7, ef 96 → ≥29/30)
               val ef = t match { case "fast" => 24; case "balanced" => 48; case _ => 96 }
@@ -418,9 +414,8 @@ class Compiler(
             val probes = Ann.probeBuckets(sig, Ann.Planes, radius)
             srcOpt match {
               case Some(src) =>
-                probe(Ann.materializedIndexAt(spark, src.token, src.paths,
-                  sel.from, src.frame(), vcolName, Ann.Planes, vec.length,
-                  src.pieces), "bucket", probes)
+                probe(Ann.materializedIndexAt(spark, src, vcolName, Ann.Planes,
+                  vec.length), "bucket", probes)
               // no index source: on-the-fly signatures, a full scan
               case None =>
                 dfF0.where(Ann.signatureCol(col(vcolName), Ann.Planes, vec.length)
@@ -462,10 +457,8 @@ class Compiler(
           //    filter). q139_ivfpq_recall pins the accurate tier.
           //  - plain pq: same table, ADC over ALL cells. q133 pins the
           //    EXPLICIT-oversampling contract at 16.
-          val (cents, cb, combined) = IvfPq.materializedIndexAt(spark,
-            pqSrc.token, pqSrc.paths, sel.from, pqSrc.frame(), vcolName,
-            meta.idCol, vec.length, Ivf.Cells, m, Pq.K,
-            modelSources = pqSrc.modelPaths, pieces = pqSrc.pieces)
+          val (cents, cb, combined) = IvfPq.materializedIndexAt(spark, pqSrc,
+            vcolName, meta.idCol, vec.length, Ivf.Cells, m, Pq.K)
           val codes = opts.probe match {
             case Some(t) => combined.where(col("cell").isin(
               Ivf.probeCells(cents, vec.toArray, Ivf.nprobeOf(t)): _*))
@@ -481,8 +474,8 @@ class Compiler(
           // per-request floor the r16 count job was, and memoizing lets
           // every cached plan share one array object
           val adcModel = graft.Materialize.memo(
-            s"ivfpqr${Ivf.Cells}_${m}x${Pq.K}_adctables_${sel.from}", pqSrc.token,
-            pqSrc.modelPaths.getOrElse(pqSrc.paths)) {
+            s"ivfpqr${Ivf.Cells}_${m}x${Pq.K}_adctables_${pqSrc.name}", pqSrc.token,
+            pqSrc.model) {
             Pq.adcModelTables(cb, cents)
           }
           val (ord, asc) = Pq.adcOrderingResidual(col("codes"), col("cell"),

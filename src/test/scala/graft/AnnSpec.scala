@@ -161,28 +161,6 @@ class AnnSpec extends SparkSpecBase {
     ext.conf.set("graft.ann.rewrite", "false")
   }
 
-  test("bucket-partitioned index turns probes into partition pruning") {
-    import org.apache.spark.sql.functions.col
-    val nPlanes = 4
-    val emb = Tables.table(spark, sfDir, "embeddings")
-    val idx = Ann.buildIndex(emb, "embedding", nPlanes)
-    val path = java.nio.file.Files.createTempDirectory("graft-lsh-idx").toString
-    Ann.writeIndex(idx, path)
-    val onDisk = Ann.readIndex(spark, path)
-    val sig = Ann.signature(q.toArray, Ann.planes(nPlanes, q.length))
-    val probes = Ann.probeBuckets(sig, nPlanes, radius = 1)
-    val probed = onDisk.where(col("bucket").isin(probes: _*))
-    val plan = probed.queryExecution.executedPlan.toString
-    // the bucket predicate must land in PartitionFilters (directory
-    // pruning), NOT as a row-level data filter over the whole index
-    assert(plan.contains("PartitionFilters") &&
-      "PartitionFilters: \\[.*bucket".r.findFirstIn(plan).isDefined,
-      s"bucket probe should prune partitions:\n$plan")
-    // and the probed read agrees with the in-memory index filter
-    val want = idx.where(col("bucket").isin(probes: _*)).count()
-    assert(probed.count() == want)
-  }
-
   test("sketch packing matches the kernel sketch") {
     val sk = Quantization.withBinarySketch(emb, "embedding", 64)
     sk.select("embedding", "sketch").limit(20).collect().foreach { r =>

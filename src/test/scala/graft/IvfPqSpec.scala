@@ -20,8 +20,9 @@ class IvfPqSpec extends SparkSpecBase {
   }
 
   test("combined index is (id, cell, codes) and cells agree with IVF") {
-    val (cents, cb, combined) = IvfPq.materializedIndex(spark, sfDir,
-      "embeddings", "embedding", "vec_id", dim, cells = 8, m = 8, k = 32)
+    val (cents, cb, combined) = IvfPq.materializedIndexAt(spark,
+      IndexSource.table(spark, sfDir, "embeddings"), "embedding", "vec_id",
+      dim, cells = 8, m = 8, k = 32)
     assert(combined.columns.sorted.toSeq == Seq("cell", "codes", "vec_id"),
       "phase-1 must scan the narrow combined table only")
     assert(cents.length == 8 && cb.length == 8)

@@ -41,19 +41,17 @@ class OperatorsHardeningSpec extends SparkSpecBase {
     assert(out.collect().isEmpty)
   }
 
-  test("flat-layout IVF cell assignments follow the model epoch") {
-    // pieces=None path: the cells cache key must carry the MODEL stamp
-    // — the old key (data sources only) served assignments computed
-    // under retired centroids after a retrain (r15 review finding)
+  test("IVF cell assignments follow the model epoch") {
+    // the cells cache key must carry the MODEL stamp — a key on the data
+    // sources only served assignments computed under retired centroids
+    // after a retrain (r15 review finding)
     val token = s"hardspec-${System.nanoTime()}"
-    val name = "flatstale"
-    val src = java.nio.file.Paths.get(s"$sfDir/embeddings.parquet")
     def epochFile(n: Int): java.nio.file.Path = {
       val p = java.nio.file.Files.createTempFile("graft-epoch-", ".txt")
       java.nio.file.Files.writeString(p, f"$n%020d " + "x" * (n % 97))
       p
     }
-    val base = Tables.table(spark, sfDir, "embeddings").limit(300)
+    val table = IndexSource.table(spark, sfDir, "embeddings").copy(token = token)
     def cellsArtifacts(): Int = {
       val parent = java.nio.file.Paths.get(
         s"${sys.props("java.io.tmpdir")}/graft-derived")
@@ -61,17 +59,17 @@ class OperatorsHardeningSpec extends SparkSpecBase {
       try {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala.count(p =>
-          p.getFileName.toString.contains(s"ivf4_cells_$name") &&
+          p.getFileName.toString.contains("ivf4_cells_p0_embeddings") &&
             p.getFileName.toString.contains(token) &&
             !p.getFileName.toString.contains(".tmp-"))
       } finally s.close()
     }
-    operators.Ivf.materializedIndexAt(spark, token, Seq(src), name, base,
-      "embedding", k = 4, modelSources = Some(Seq(src, epochFile(1))))
+    operators.Ivf.materializedIndexAt(spark,
+      table.copy(model = table.model :+ epochFile(1)), "embedding", k = 4)
     val afterFirst = cellsArtifacts()
     assert(afterFirst >= 1)
-    operators.Ivf.materializedIndexAt(spark, token, Seq(src), name, base,
-      "embedding", k = 4, modelSources = Some(Seq(src, epochFile(2))))
+    operators.Ivf.materializedIndexAt(spark,
+      table.copy(model = table.model :+ epochFile(2)), "embedding", k = 4)
     assert(cellsArtifacts() > afterFirst,
       "retrained model did not produce a fresh cell-assignment artifact")
   }

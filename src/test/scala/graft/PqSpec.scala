@@ -37,9 +37,9 @@ class PqSpec extends SparkSpecBase {
     // the folded literal tables (dot(q,cent) + cross(cent, cb) + shared
     // dot/norm) must reproduce cosine(q, centroid[cell] + decode(codes))
     // exactly — the algebra, not just the ranking
-    val (cents, cb, combined) = graft.operators.IvfPq.materializedIndex(
-      spark, sfDir, "embeddings", "embedding", "vec_id", dim,
-      cells = 8, m = 4, k = 8)
+    val (cents, cb, combined) = graft.operators.IvfPq.materializedIndexAt(
+      spark, IndexSource.table(spark, sfDir, "embeddings"), "embedding",
+      "vec_id", dim, cells = 8, m = 4, k = 8)
     assert(combined.columns.sorted.toSeq == Seq("cell", "codes", "vec_id"))
     val q = functions.VectorFunctions.syntheticQuery(dim).toArray
     val (ord, asc) = Pq.adcOrderingResidual(col("codes"), col("cell"),

@@ -466,15 +466,16 @@ class R5FeaturesSpec extends SparkSpecBase {
     assert(cols.count("g") == 3) // fresh reads see the new generation
   }
 
-  test("Ivf.materializedIndex trains once per dataset and probes exactly") {
+  test("Ivf.materializedIndexAt trains once per dataset and probes exactly") {
     import graft.operators.{Ivf, Knn}
-    val (cents, cells) = Ivf.materializedIndex(spark, sfDir, "embeddings", "embedding", k = 4)
+    val src = IndexSource.table(spark, sfDir, "embeddings")
+    val (cents, cells) = Ivf.materializedIndexAt(spark, src, "embedding", k = 4)
     assert(cents.nonEmpty && cents.length <= 4)
     val emb = Tables.table(spark, sfDir, "embeddings")
     assert(cells.count() == emb.count()) // assignment covers every vector
     // a second call is served from the materialized cache with the SAME
     // centroids (deterministic training + content-keyed Materialize)
-    val (cents2, _) = Ivf.materializedIndex(spark, sfDir, "embeddings", "embedding", k = 4)
+    val (cents2, _) = Ivf.materializedIndexAt(spark, src, "embedding", k = 4)
     assert(cents.map(_._1).sameElements(cents2.map(_._1)))
     cents.zip(cents2).foreach { case ((_, a), (_, b)) => assert(a.sameElements(b)) }
     // full-nprobe search over the materialized index == exact top-k
