@@ -2,15 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.{DoubleToScaledLong, FixedPointSum}
+import org.apache.spark.sql.types.DoubleType
 
-/** Session-extension entry point: injects the five distance metrics
-  * ([[graft.functions.VectorFunctions.sqlFunctions]]) into a session's
-  * function registry at build time, so `spark.sql("SELECT
-  * cosine_sim(a, b) …")` works with no imperative registration call.
-  * Install it on a session builder with `.withExtensions(new
-  * GraftExtensions)`, or with the conf
-  * `spark.sql.extensions=graft.GraftExtensions`.
+/** The engine's one session hook. [[SessionTuning]] installs it on
+  * every session it builds, so Bench, Verify, Serve, the REPL, the
+  * tools and the specs all resolve the same SQL names with no
+  * registration call: the five distance metrics
+  * ([[graft.functions.VectorFunctions.sqlFunctions]]) and `dsum(x,
+  * scale)`. It injects functions only, no optimizer rule, so a
+  * session's plans are Spark's own.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -23,22 +25,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.functions.VectorFunctions.sqlFunctions.foreach { case (name, f) =>
       e.injectFunction(fn(name, es => f(es(0), es(1))))
     }
-    // opt-in ANN top-k rewrite (SURVEY §4.3): bucket-prunes similarity
-    // sorts over LSH-indexed frames when graft.ann.rewrite=true
-    e.injectPreCBORule { session =>
-      org.apache.spark.sql.graft.AnnTopKRule(() =>
-        session.conf.get("graft.ann.rewrite", "false").toBoolean)
+    e.injectFunction(fn("dsum", dsum))
+  }
+
+  /** `dsum(x, scale)`: the exact money/quantity sum as SQL — the int128
+    * [[FixedPointSum]] behind the relational rows. Input is taken as
+    * DOUBLE and scaled by the oracle-exact rint cast
+    * ([[DoubleToScaledLong]]), the same semantics as the DataFrame-side
+    * `FixedPointSum.dsumD`: one function, one rounding contract. */
+  private def dsum(es: Seq[Expression]): Expression = {
+    if (es.length != 2)
+      throw new IllegalArgumentException(
+        s"dsum expects exactly (value, scale), got ${es.length} argument(s)")
+    val scale = es(1) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"dsum scale must be an integer literal, got $other")
     }
-    // exact rewrite, on by default: CAST(sum(CAST(x AS DECIMAL(≤18,s)))
-    // AS DOUBLE) → the int128 FixedPointSum (bit-identical, ~2× at 18M
-    // rows); graft.dsum.rewrite=false to escape
-    e.injectPreCBORule { session =>
-      // marker for VectorFunctions.register(): a session built with the
-      // extensions already carries this rule, so the imperative path
-      // must not add a second copy (r15 review finding)
-      session.conf.set("graft.extensions.installed", "true")
-      org.apache.spark.sql.graft.FixedPointSumRule(() =>
-        session.conf.get("graft.dsum.rewrite", "true").toBoolean)
-    }
+    FixedPointSum(DoubleToScaledLong(Cast(es(0), DoubleType), scale), scale)
+      .toAggregateExpression()
   }
 }

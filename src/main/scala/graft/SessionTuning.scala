@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one place a local-mode `SparkSession` is built: [[local]] for the
   * short-lived mains (Bench, Verify, Plans, QTime), the test tools and
   * the spec base; [[service]] for the long-running ones (Serve, Repl).
+  * Every session it builds carries [[GraftExtensions]], the engine's one
+  * session hook.
   *
   * Why the shuffle settings (measured at `local[32]`, PERF_r12.md): a
   * 32-partition `groupBy` over 369k in-memory longs took 0.47 s — per-
@@ -43,6 +45,7 @@ object SessionTuning {
     * long and `Tables` re-derives the timestamp. */
   private def session(cpus: Int, tuning: java.util.Map[String, Any]): SparkSession =
     SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")

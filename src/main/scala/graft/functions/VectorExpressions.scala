@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.{Bridge, CosineSimilarity, DotProduct, EuclideanDistance, EuclideanDistanceDouble, HammingDistance, JaccardSimilarity}
 
-/** Column-API + SQL-registration facade over the codegen'd distance
+/** Column-API facade (plus the SQL names) over the codegen'd distance
   * expressions, mirroring the reference's metric dispatch
   * (distance.rs:64-72) and its `higher_is_better` direction flag
   * (distance.rs:76-81) used for ORDER BY direction and threshold
@@ -51,56 +51,13 @@ object VectorFunctions {
     "hamming" -> ((hamming_dist _, false)),
     "jaccard" -> ((jaccard_sim _, true)))
 
-  /** The five distance functions by SQL name — the one list both
-    * [[register]] and [[graft.GraftExtensions]] install. */
+  /** The five distance functions by SQL name, the list
+    * [[graft.GraftExtensions]] injects into every factory-built
+    * session. */
   val sqlFunctions: Seq[(String, (Expression, Expression) => Expression)] = Seq(
     "cosine_sim" -> (CosineSimilarity(_, _)),
     "dot_product" -> (DotProduct(_, _)),
     "l2_dist" -> (EuclideanDistance(_, _)),
     "hamming_dist" -> (HammingDistance(_, _)),
     "jaccard_sim" -> (JaccardSimilarity(_, _)))
-
-  /** Register the metric expressions for SQL use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def create(name: String, b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    sqlFunctions.foreach { case (name, f) => create(name, es => f(es(0), es(1))) }
-    // exact money/quantity sum as SQL: dsum(x, scale) — the int128
-    // fixed-point aggregate behind the relational defs. Input is taken
-    // as DOUBLE and scaled by the oracle-exact rint cast
-    // (DoubleToScaledLong), the same semantics as the DataFrame-side
-    // FixedPointSum.dsumD — one function, one rounding contract.
-    create("dsum", es => {
-      if (es.length != 2)
-        throw new IllegalArgumentException(
-          s"dsum expects exactly (value, scale), got ${es.length} argument(s)")
-      val scale = es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"dsum scale must be an integer literal, got $other")
-      }
-      org.apache.spark.sql.graft.FixedPointSum(
-        org.apache.spark.sql.graft.DoubleToScaledLong(
-          org.apache.spark.sql.catalyst.expressions.Cast(es(0),
-            org.apache.spark.sql.types.DoubleType),
-        scale), scale).toAggregateExpression()
-    })
-    // the imperative twin of GraftExtensions' optimizer injection: an
-    // ALREADY-BUILT session (REST Serve, REPL, notebook) gets the exact
-    // decimal-sum rewrite too — extraOptimizations appends to the
-    // optimizer's user-rule batch; idempotent across repeat calls
-    // skip when the session was built WITH GraftExtensions (which
-    // injects the rule pre-CBO): a second copy in extraOptimizations is
-    // output-identical but pattern-matches every plan twice (r15
-    // review). The extensions marker is the conf the injector sets.
-    val exp = spark.experimental
-    val viaExtensions =
-      spark.conf.getOption("graft.extensions.installed").contains("true")
-    if (!viaExtensions && !exp.extraOptimizations.exists(
-        _.isInstanceOf[org.apache.spark.sql.graft.FixedPointSumRule]))
-      exp.extraOptimizations = exp.extraOptimizations :+
-        org.apache.spark.sql.graft.FixedPointSumRule(() =>
-          spark.conf.get("graft.dsum.rewrite", "true").toBoolean)
-  }
 }

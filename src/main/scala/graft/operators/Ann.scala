@@ -19,17 +19,16 @@ import org.apache.spark.sql.types.LongType
   *
   * `ef_search`-style quality knobs (vector.rs:69-115 Fast/Balanced/
   * Accurate/Perfect) map to the probe radius: more probed buckets →
-  * higher recall, linearly more work.
+  * higher recall, linearly more work. VelesQL `NEAR … WITH (mode = …)`
+  * is the one probe route (the Compiler picks the radius per tier and
+  * probes the materialized index, or [[signatureCol]] when the frame has
+  * no index source).
   */
 object Ann {
 
   /** Hyperplanes per signature: 2⁶ = 64 buckets, the plane count every
     * probe radius below is calibrated against. */
   val Planes = 6
-
-  /** Probe radius of the opt-in similarity top-k rewrite
-    * ([[org.apache.spark.sql.graft.AnnTopKRule]]): the balanced tier. */
-  val Radius = 2
 
   /** Deterministic pseudo-random hyperplane component (plane p, dim i):
     * a splitmix64-style integer hash mapped to [-1, 1). Reproducible

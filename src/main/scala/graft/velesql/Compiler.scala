@@ -439,8 +439,10 @@ class Compiler(
           // orders the NARROW materialized codes table (id + m ints) by
           // the ADC lookup score — the scan never touches vectors or
           // payloads — and the top k×oversampling ids join back to the
-          // filtered frame for exact rerank. ADC is ordering-only, so
-          // 'pq' is two-phase by construction (rerank implicit).
+          // filtered frame for exact rerank. With a residual WHERE the
+          // candidates are the filtered frame's own rows, ranked once
+          // over `dfF ⋈ codes`. ADC is ordering-only, so 'pq' is
+          // two-phase by construction (rerank implicit).
           val pqSrc = indexSrc("quantization='pq'")
           // m adapts to the vector width (~8 dims/subspace; 64D keeps
           // the historical m=8): a fixed m=8 quantized 768D vectors to
@@ -478,20 +480,28 @@ class Compiler(
             pqSrc.model) {
             Pq.adcModelTables(cb, cents)
           }
-          val (ord, asc) = Pq.adcOrderingResidual(col("codes"), col("cell"),
+          // the codes columns are renamed so they cannot collide with a
+          // payload column of the filtered frame they join onto
+          val pqCodes = codes.select(col(meta.idCol),
+            col("cell").as("__pq_cell"), col("codes").as("__pq_codes"))
+          val (ord, asc) = Pq.adcOrderingResidual(col("__pq_codes"), col("__pq_cell"),
             vec.toArray, cb, cents, meta.metric, model = Some(adcModel))
-          // filter-then-search: with a residual WHERE, candidates come
-          // from the filtered frame's ids only
-          val scoped = residualCond match {
-            case Some(_) => codes.join(dfF.select(col(meta.idCol)), meta.idCol :: Nil)
-            case None => codes
-          }
-          val candIds = scoped.withColumn("__adc", ord)
+          def topByAdc(ranked: DataFrame): DataFrame = ranked.withColumn("__adc", ord)
             .orderBy(if (asc) col("__adc").asc else col("__adc").desc,
               col(meta.idCol).asc)
             .limit(k * osEff)
-            .select(meta.idCol)
-          dfF.join(candIds, meta.idCol :: Nil)
+          // filter-then-search: with a residual WHERE, candidates are the
+          // filtered frame's rows, so dfF (the probed cells or the base)
+          // is read once; without one, the narrow codes-only phase 1
+          // picks ids and they join back to dfF
+          val candidates = residualCond match {
+            case Some(_) =>
+              topByAdc(dfF.join(pqCodes, meta.idCol :: Nil))
+                .drop("__pq_cell", "__pq_codes", "__adc")
+            case None =>
+              dfF.join(topByAdc(pqCodes).select(meta.idCol), meta.idCol :: Nil)
+          }
+          candidates
             .withColumn("score", fn(col(vcolName), VectorFunctions.vecLit(vec)))
         } else if (isInt8 && !opts.rerank) {
           Quantization.sq8Decode(Quantization.withSq8(dfF, vcolName))

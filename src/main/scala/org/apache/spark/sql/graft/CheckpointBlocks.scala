@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * knows the blocks are no longer reachable from any live plan.
   *
   * Lives in `org.apache.spark.sql` for access to the `private[sql]`
-  * execution plan node — same pattern as [[AnnTopKRule]].
+  * execution plan node — same pattern as [[StaticPlanner]].
   */
 object CheckpointBlocks {
   /** Unpersist the checkpoint blocks behind `ds` (no-op for a

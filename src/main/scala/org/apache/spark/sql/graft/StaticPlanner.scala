@@ -26,7 +26,7 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   * milliseconds, and any live pinned frame keeps its own twin reachable).
   *
   * Planner-relevant parent conf set AFTER the first pin (shuffle
-  * partitions, broadcast threshold/timeout, the graft rewrites toggle)
+  * partitions, broadcast threshold/timeout)
   * is re-synced onto the twin on every fetch — cloneSession snapshots
   * the conf once, and a stale snapshot would silently plan subsequent
   * pinned queries under the old settings. */
@@ -40,8 +40,7 @@ object StaticPlanner {
   private val resyncKeys = Seq(
     "spark.sql.shuffle.partitions",
     "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.broadcastTimeout",
-    "graft.dsum.rewrite")
+    "spark.sql.broadcastTimeout")
 
   private def noAqeTwin(spark: org.apache.spark.sql.SparkSession): ClassicSession =
     twins.synchronized {

@@ -100,67 +100,6 @@ class AnnSpec extends SparkSpecBase {
     assert(Ivf.probeCells(cents, q, 9) == Seq(0, 2, 1))
   }
 
-  test("AnnTopKRule rewrites similarity top-k into a bucket-pruned probe") {
-    import graft.functions.{VectorFunctions => VF}
-    import org.apache.spark.sql.functions.col
-    // getOrCreate would hand back the extension-less shared session —
-    // clear the default so a NEW session (same SparkContext) is built
-    // with the extensions applied
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val ext = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[2]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-    org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    val nPlanes = Ann.Planes
-    val index = Ann.buildIndex(Tables.table(ext, sfDir, "embeddings"),
-      "embedding", nPlanes)
-    def topk() = index
-      .orderBy(VF.cosine_sim(col("embedding"), VF.vecLit(q)).desc, col("vec_id").asc)
-      .limit(10)
-
-    // structural check: the only Filter in this plan can be the injected
-    // probe filter (pushdown may substitute `bucket` with its defining
-    // expression, so string matching would miss it)
-    def probeFilters(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
-      }
-    ext.conf.set("graft.ann.rewrite", "false")
-    assert(probeFilters(topk()).isEmpty, "no probe filter expected when disabled")
-    val exactIds = topk().select("vec_id").collect().map(_.getLong(0)).toSet
-
-    ext.conf.set("graft.ann.rewrite", "true")
-    assert(probeFilters(topk()).nonEmpty, "probe filter missing when enabled")
-    val annIds = topk().select("vec_id").collect().map(_.getLong(0)).toSet
-    // rewrite result must equal the explicit probe search at same radius
-    val expected = Ann.search(index, "embedding", q, 10, nPlanes, radius = Ann.Radius,
-        metric = "cosine", idCol = "vec_id")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(annIds == expected)
-    assert((annIds & exactIds).nonEmpty) // sanity: probes overlap the true top-k
-
-    // direction guard (ADVICE r1): a FARTHEST-first sort must NOT get the
-    // near-bucket probe filter — it would not approximate that query
-    val farthest = index
-      .orderBy(VF.cosine_sim(col("embedding"), VF.vecLit(q)).asc, col("vec_id").asc)
-      .limit(10)
-    assert(probeFilters(farthest).isEmpty, "farthest-first sort must not be probe-rewritten")
-    // l2: ASCENDING is nearest-first and qualifies; DESC must not
-    val l2Near = index
-      .orderBy(VF.l2_dist(col("embedding"), VF.vecLit(q)).asc, col("vec_id").asc)
-      .limit(10)
-    assert(probeFilters(l2Near).nonEmpty, "l2 ASC is nearest-first, should rewrite")
-    val l2Far = index
-      .orderBy(VF.l2_dist(col("embedding"), VF.vecLit(q)).desc, col("vec_id").asc)
-      .limit(10)
-    assert(probeFilters(l2Far).isEmpty, "l2 DESC must not be probe-rewritten")
-    ext.conf.set("graft.ann.rewrite", "false")
-  }
-
   test("sketch packing matches the kernel sketch") {
     val sk = Quantization.withBinarySketch(emb, "embedding", 64)
     sk.select("embedding", "sketch").limit(20).collect().foreach { r =>

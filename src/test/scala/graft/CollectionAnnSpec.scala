@@ -206,6 +206,26 @@ class CollectionAnnSpec extends SparkSpecBase {
     }
   }
 
+  test("pq over probed ivf cells with a WHERE reads each cells piece once") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    g.collections.create("pqcells", idCol = "id", vectorCol = Some("vec"))
+    g.collections.upsert("pqcells", (1L to 200L).map { i =>
+      (i, (0 until 16).map(d => math.sin(i * 0.37 + d * 1.3).toFloat), (i % 3).toInt)
+    }.toDF("id", "vec", "label"))
+    val df = g.sql("SELECT id, label FROM pqcells WHERE label = 1 AND vector NEAR $q " +
+      "LIMIT 10 WITH (mode = 'accurate', index = 'ivf', quantization = 'pq')", Map("q" -> q))
+    val rows = df.collect()
+    assert(rows.length == 10 && rows.forall(_.getInt(1) == 1), rows.toSeq)
+    // one scan per cells piece (a bucketed collection has several), none twice
+    val cellPaths = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    }.flatten.filter(_.contains("ivf8_cells"))
+    assert(cellPaths.nonEmpty && cellPaths.distinct.size == cellPaths.size,
+      s"a cells piece is scanned twice in:\n${df.queryExecution.executedPlan}")
+  }
+
   test("REST search reaches the probed tiers on a user collection") {
     val srv = new RestServer(g, port = 0).start()
     try {

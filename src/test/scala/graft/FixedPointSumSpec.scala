@@ -80,12 +80,20 @@ class FixedPointSumSpec extends SparkSpecBase {
   }
 
   test("SQL-registered dsum(x, scale) matches the stock decimal sum") {
-    graft.functions.VectorFunctions.register(spark)
+    // dsum comes with the factory-built spec session (GraftExtensions)
     val df = (1 to 1000).map(i => (i % 7, i * 1.37)).toDF("g", "v")
     df.createOrReplaceTempView("fx_sql_t")
-    val a = spark.sql(
+    val ref = spark.sql(
       "SELECT g, CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s " +
-      "FROM fx_sql_t GROUP BY g ORDER BY g").collect().map(_.toString)
+      "FROM fx_sql_t GROUP BY g ORDER BY g")
+    // the reference must be Spark's own decimal sum, else the parity
+    // below compares the int128 aggregate with itself
+    val aggs = ref.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction => a
+    }))
+    assert(aggs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.Sum]) &&
+      !aggs.exists(_.isInstanceOf[FixedPointSum]), s"reference is not a stock sum: $aggs")
+    val a = ref.collect().map(_.toString)
     val b = spark.sql(
       "SELECT g, dsum(v, 2) AS s FROM fx_sql_t GROUP BY g ORDER BY g")
       .collect().map(_.toString)

@@ -39,38 +39,16 @@ class GraftSpec extends SparkSpecBase {
   }
 
   test("distance functions usable from SQL via registry and via extensions") {
-    // imperative registry path
-    graft.functions.VectorFunctions.register(spark)
+    // the spec session comes from SessionTuning, which installs
+    // GraftExtensions: the metrics resolve with no registration call
     Tables.table(spark, sfDir, "embeddings").createOrReplaceTempView("emb_sql")
-    val viaRegistry = spark.sql(
+    val cos = spark.sql(
       """SELECT vec_id, cosine_sim(embedding, array(0.5f, 0.5f)) FROM emb_sql LIMIT 1""")
-    assert(viaRegistry.count() == 1)
-
-    // SparkSessionExtensions path: a sibling session built with
-    // withExtensions shares the SparkContext but gets its own registry.
-    // getOrCreate would hand back the shared spec session (extensions
-    // ignored, l2_dist resolved through the register call above) —
-    // clear the default and active sessions so a NEW session is built
-    // with the extensions applied, then restore them
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val extSession = try org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[2]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    }
-    assert(extSession ne spark, "the extensions check needs its own session")
-    try {
-      Tables.table(extSession, sfDir, "embeddings").createOrReplaceTempView("emb_ext")
-      val r = extSession.sql(
-        """SELECT vec_id, l2_dist(embedding, embedding) AS d FROM emb_ext LIMIT 5""")
-        .collect()
-      assert(r.length == 5 && r.forall(_.getDouble(1) == 0.0))
-    } finally ()
+    assert(cos.count() == 1)
+    val r = spark.sql(
+      """SELECT vec_id, l2_dist(embedding, embedding) AS d FROM emb_sql LIMIT 5""")
+      .collect()
+    assert(r.length == 5 && r.forall(_.getDouble(1) == 0.0))
   }
 
   test("error taxonomy matches the reference (error.rs)") {
