@@ -69,13 +69,13 @@ object Collections {
     * column_store/mod.rs:420-573): an upsert publishes ONE small delta
     * dir holding only its batch plus the ids it supersedes, a delete
     * publishes ids only — no parquet, no Spark job. A write therefore
-    * costs O(batch), not O(collection). Readers see the base minus every
-    * segment's ids, plus each delta minus the ids of LATER segments
-    * (newest wins); the id sets are manifest-known literals, so no join
-    * is needed. A write that would take the segments' ids past
-    * [[FoldFraction]] of the base's `rows` is a full rewrite instead,
-    * which folds everything into a new base. With no segments the read
-    * plan is the base scan alone.
+    * costs O(batch), not O(collection). Readers scan the base and every
+    * delta as one relation and keep a row only if its segment is the
+    * last that touched its id (newest wins, [[Visibility]]); the id sets
+    * are manifest-known literals, so no join is needed. A write that
+    * would take the segments' ids past [[FoldFraction]] of the base's
+    * `rows` is a full rewrite instead, which folds everything into a new
+    * base. With no segments the read plan is the base scan alone.
     *
     * `schema` is the frame's authoritative merged schema (JSON
     * StructType): readers pass it to the parquet scan explicitly, so a
@@ -99,18 +99,18 @@ object Collections {
     /** Relative dirs of the base, in bucket order. */
     def baseDirs: Seq[String] = entries.toSeq.sortBy(_._1).map(_._2) ++ dirs
 
-    /** (ids hidden in the base, ids hidden in each segment): the base
-      * loses every segment's ids, segment i loses those of segments
-      * after it. Computed once per parsed manifest (parses are cached). */
-    lazy val hidden: (Array[Long], IndexedSeq[Array[Long]]) = {
-      val later = new Array[Array[Long]](segments.size)
-      var acc = Array.emptyLongArray
-      for (i <- segments.indices.reverse) {
-        later(i) = acc
-        acc = (acc ++ segments(i).ids).sorted.distinct
-      }
-      (acc, later.toIndexedSeq)
+    /** Each id's last writer, grouped by segment. Computed once per
+      * parsed manifest (parses are cached). */
+    lazy val visibility: Visibility = {
+      val last = scala.collection.mutable.LongMap.empty[Int]
+      segments.iterator.zipWithIndex.foreach { case (s, i) => s.ids.foreach(last(_) = i) }
+      val by = Array.fill(segments.size)(Array.newBuilder[Long])
+      last.foreach { case (id, s) => by(s) += id }
+      Visibility(by.map(_.result().sorted).toIndexedSeq)
     }
+
+    /** Segment ordinal → its delta dir (a delete has none). */
+    def segmentDir(s: Int): Option[String] = segments.lift(s).flatMap(_.dir)
 
     /** Ids written or deleted since the base (with repeats). */
     def segmentIds: Long = segments.map(_.ids.length.toLong).sum
@@ -121,25 +121,51 @@ object Collections {
     * threshold (20% deleted rows, column_store/mod.rs:420-573). */
   private[graft] val FoldFraction = 0.2
 
-  /** `df` without the rows whose id is in `hidden` (sorted). Null ids
-    * are never hidden: they sit outside upsert semantics. An empty set
-    * returns `df` itself, so a segment-free read plans exactly as
-    * before. */
-  private[graft] def visible(df: DataFrame, idCol: String,
-      hidden: Array[Long]): DataFrame =
-    if (hidden.isEmpty) df
-    else df.where(col(idCol).isNull || !col(idCol).isin(hidden.toIndexedSeq: _*))
+  /** Which rows of ONE scan over a frame's base and its deltas are live:
+    * `last(s)` holds the ids whose last writer is segment s (a delete's
+    * ids too). A row from segment s (the base is −1) is visible iff
+    * last(id) = s, an id no segment touched counting as last = −1; a
+    * null id is always visible (it sits outside upsert semantics).
+    *
+    * Every row a delta holds carries an id its own segment touched, so
+    * an untouched id can only come from the base: the predicate looks up
+    * a row's segment — the dir of its file, `_metadata.file_path` — only
+    * for touched ids, and an untouched row costs one hash-set probe per
+    * segment that last-touched something. */
+  final case class Visibility(last: IndexedSeq[Array[Long]]) {
+    /** `scan` (a file scan) without its superseded rows; `dirOf(s)`
+      * names the dir whose files hold segment s's rows (None for a
+      * delete). With no touched id this is `scan` itself, so a
+      * segment-free read plans as the bare scan. */
+    def apply(scan: DataFrame, idCol: String,
+        dirOf: Int => Option[String]): DataFrame = {
+      val touched = last.zipWithIndex.filter(_._1.nonEmpty)
+      if (touched.isEmpty) scan
+      else {
+        val id = col(idCol)
+        val path = col("_metadata.file_path")
+        def fromLast(s: Int) = dirOf(s).fold(lit(false))(d => path.contains(s"/$d/"))
+        val (ids0, s0) = touched.head
+        val rule = touched.tail.foldLeft(when(id.isin(ids0.toIndexedSeq: _*), fromLast(s0))) {
+          case (c, (ids, s)) => c.when(id.isin(ids.toIndexedSeq: _*), fromLast(s))
+        }.otherwise(lit(true))
+        scan.where(id.isNull || rule)
+      }
+    }
+  }
 
   /** One cached index piece: `index` names it in the `…_p<N>_` kind
     * family (bucket N of the base, or `buckets + i` for segment i),
-    * `dir` is its immutable source dir and `hidden` the ids the reader
-    * must filter out of it. */
-  final case class Piece(index: Int, dir: Path, hidden: Array[Long])
+    * `dir` is its immutable source dir and `segment` the manifest
+    * segment whose rows it holds (−1: the base). */
+  final case class Piece(index: Int, dir: Path, segment: Int)
 
-  /** A frame's pieces with the authoritative read schema and the id
-    * column the `hidden` filters apply to. */
+  /** A frame's pieces with the authoritative read schema, the id column
+    * and the frame's [[Visibility]], which a reader of the pieces'
+    * artifacts applies as it does to the frame itself. */
   final case class Pieces(parts: Seq[Piece],
-      schema: org.apache.spark.sql.types.StructType, idCol: String)
+      schema: org.apache.spark.sql.types.StructType, idCol: String,
+      visibility: Visibility)
 }
 
 /** @param retainGenerations how many manifest generations (current
@@ -524,28 +550,28 @@ class Collections(spark: SparkSession, dataDir: String,
   /** The index pieces of the points frame — one per base dir (bucket
     * index → RESOLVED immutable leaf dir on the bucketed layout, the
     * i-th whole data dir on the flat one) and one per delta segment
-    * (index `buckets` or `dirs` count + i), each carrying the ids its
-    * reader must hide. An emptied bucketed frame has zero base pieces.
+    * (index `buckets` or `dirs` count + i), each tagged with the segment
+    * its rows belong to. An emptied bucketed frame has zero base pieces.
     * Derived indexes cache one artifact per piece dir
     * ([[graft.Materialize.pieces]]), so after a write the next indexed
     * query builds only the new delta's piece and reuses every base
-    * piece, filtered. The collection must have been written. */
+    * piece, read under the manifest's [[Collections.Visibility]]. The
+    * collection must have been written. */
   def pieces(name: String): Collections.Pieces = {
     val m = readManifest(name).getOrElse(
       throw new IllegalStateException(s"collection $name has no points yet"))
     val dir = colDir(name)
-    val (baseHidden, later) = m.hidden
     val base =
       if (m.buckets > 0) m.entries.toSeq.sortBy(_._1)
       else m.dirs.zipWithIndex.map(_.swap)
     val firstDelta = if (m.buckets > 0) m.buckets else m.dirs.size
     val deltas = m.segments.zipWithIndex.collect {
       case (Collections.Segment(Some(d), _), i) =>
-        Collections.Piece(firstDelta + i, dir.resolve(d), later(i))
+        Collections.Piece(firstDelta + i, dir.resolve(d), i)
     }
     Collections.Pieces(
-      base.map { case (b, rel) => Collections.Piece(b, dir.resolve(rel), baseHidden) } ++ deltas,
-      m.schema.get, idColOf(name)) // every manifest writer records its schema
+      base.map { case (b, rel) => Collections.Piece(b, dir.resolve(rel), -1) } ++ deltas,
+      m.schema.get, idColOf(name), m.visibility) // every manifest writer records its schema
   }
 
   /** The points frame's authoritative schema (manifest-carried). */
@@ -573,26 +599,20 @@ class Collections(spark: SparkSession, dataDir: String,
     schema match {
       case Some(s) if paths.isEmpty =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case Some(s) => org.apache.spark.sql.graft.ImmutableDirScan(spark, paths, s)
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
 
-  /** A manifest's rows: the base (or `pruned`, a narrower read of it)
-    * minus every segment's ids, unioned with each delta minus the ids of
-    * later segments. With no segments this is the base scan alone. */
+  /** A manifest's rows: ONE scan of `baseDirs` (the base, or the
+    * buckets a point get prunes it to) and every delta dir under the
+    * manifest schema, minus the superseded rows
+    * ([[Collections.Visibility]]). With no segments this is the base scan
+    * alone. */
   private def manifestFrame(name: String, m: FrameManifest, idc: => String,
-      pruned: Option[DataFrame] = None): DataFrame = {
-    val dir = colDir(name)
-    def read(rels: Seq[String]) = readPaths(rels.map(dir.resolve(_).toString), m.schema)
-    val base = pruned.getOrElse(read(m.baseDirs))
-    if (m.segments.isEmpty) base
-    else {
-      val id = idc
-      val (baseHidden, later) = m.hidden
-      m.segments.zipWithIndex.collect {
-        case (Collections.Segment(Some(d), _), i) => Collections.visible(read(Seq(d)), id, later(i))
-      }.foldLeft(Collections.visible(base, id, baseHidden))(_ union _)
-    }
+      baseDirs: Seq[String]): DataFrame = {
+    val paths = (baseDirs ++ m.segments.flatMap(_.dir)).map(colDir(name).resolve(_).toString)
+    val scan = readPaths(paths, m.schema)
+    if (paths.isEmpty || m.segments.isEmpty) scan else m.visibility(scan, idc, m.segmentDir)
   }
 
   /** S3: read all points (empty frame with no schema if never written).
@@ -600,13 +620,13 @@ class Collections(spark: SparkSession, dataDir: String,
     * and the referenced immutable dirs — a concurrent publish writes a
     * NEW manifest + new dirs, so a planned read never races a rewrite. */
   def table(name: String): Option[DataFrame] =
-    readManifest(name).map(m => manifestFrame(name, m, idColOf(name)))
+    readManifest(name).map(m => manifestFrame(name, m, idColOf(name), m.baseDirs))
 
   /** The collection's mutable edge frame (graph_api.rs:40-107) — a second
     * manifest-published frame next to `points`, keyed by the long `id`
     * column; None until the first [[upsertEdges]]. */
   def edges(name: String): Option[DataFrame] =
-    readManifest(name, "edges").map(m => manifestFrame(name, m, "id"))
+    readManifest(name, "edges").map(m => manifestFrame(name, m, "id", m.baseDirs))
 
   /** The edge-side content stamp: the RESOLVED current edges manifest
     * (every edge write publishes a new one). None until the first edge
@@ -1173,17 +1193,15 @@ class Collections(spark: SparkSession, dataDir: String,
 
   /** S3: get by ids (crud.rs:250). Bucket-pruned on the manifest
     * layout: only the base leaf dirs the ids hash to are scanned (plus
-    * row-group pruning inside them — files are id-sorted), with the
-    * request-sized delta files layered over them. */
+    * row-group pruning inside them — files are id-sorted), in the same
+    * scan as the request-sized delta files. */
   def get(name: String, ids: Seq[Long]): DataFrame = {
     val idCol = idColOf(name)
     readManifest(name) match {
       case Some(m) if m.buckets > 0 && m.schema.isDefined =>
         val bs = if (ids.isEmpty) Set.empty[Int]
           else bucketsForIds(ids, m.buckets)
-        val paths = bs.toSeq.sorted.flatMap(m.entries.get)
-          .map(rel => colDir(name).resolve(rel).toString)
-        manifestFrame(name, m, idCol, Some(readPaths(paths, m.schema)))
+        manifestFrame(name, m, idCol, bs.toSeq.sorted.flatMap(m.entries.get))
           .where(col(idCol).isin(ids: _*))
       case _ =>
         table(name).map(_.where(col(idCol).isin(ids: _*)))

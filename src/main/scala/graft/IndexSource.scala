@@ -22,8 +22,11 @@ import java.nio.file.{Path, Paths}
   *               writes and a write encodes only its own delta; a dataset
   *               table, whose content never changes without a full
   *               regeneration, uses its own stamp
-  * @param pieces the immutable piece dirs the encodings cache per, with
-  *               the ids each reader hides — zero pieces is an empty index
+  * @param pieces the immutable piece dirs the encodings cache per, each
+  *               tagged with its segment, and the visibility rule a reader
+  *               of their artifacts applies — zero pieces is an empty
+  *               index; every missing piece builds in one Spark job and
+  *               the index reads as one scan
   * @param frame  the source's rows, the training input of the models
   */
 final case class IndexSource(token: String, name: String, stamp: Seq[Path],
@@ -31,8 +34,8 @@ final case class IndexSource(token: String, name: String, stamp: Seq[Path],
 
 object IndexSource {
 
-  /** A dataset-dir table as an index source: one piece (the table's
-    * parquet file, nothing hidden) read under the raw file's schema,
+  /** A dataset-dir table as an index source: one base piece (the
+    * table's parquet file, nothing hidden) read under the raw file's schema,
     * with the model stamped on the same file. */
   def table(spark: SparkSession, dir: String, table: String): IndexSource = {
     val file = Paths.get(s"$dir/$table.parquet")
@@ -42,8 +45,8 @@ object IndexSource {
       spark.read.parquet(file.toString).schema
     }
     IndexSource(dir, table, Seq(file), Seq(file),
-      Collections.Pieces(Seq(Collections.Piece(0, file, Array.emptyLongArray)),
-        schema, idCol),
+      Collections.Pieces(Seq(Collections.Piece(0, file, -1)), schema, idCol,
+        Collections.Visibility(IndexedSeq.empty)),
       () => Tables.table(spark, dir, table))
   }
 }

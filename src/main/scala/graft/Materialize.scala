@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Materialize a derived frame ONCE per dataset dir as parquet,
@@ -25,11 +25,11 @@ object Materialize {
 
   /** Path-stamped variant: `token` is the cache identity (the dataset
     * dir, or a collection's identity), `sources` the concrete files/dirs
-    * whose listing stamps the content. Every ANN index piece
-    * ([[pieces]]), trained model and HNSW cell graph is one such
-    * artifact — a write adds a piece dir, so the next query builds only
-    * that piece (the reference's insert-time index update re-expressed
-    * as build-on-read).
+    * whose listing stamps the content. Trained models and dataset-dir
+    * derived tables are such artifacts, clustered by `partCol` (one
+    * repartition shuffle) and read back through [[readMemo]]; index
+    * pieces and HNSW cell graphs are built in batches instead
+    * ([[artifacts]]).
     *
     * BUILDER CONTRACT: after the frame is written, every localCheckpoint
     * anywhere in the builder's plan is freed (`CheckpointBlocks
@@ -51,18 +51,9 @@ object Materialize {
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
   def atPaths(spark: SparkSession, token: String, kind: String,
-      sources: Seq[Path], partCol: Option[String],
-      extraStamp: Option[String] = None)(build: => DataFrame): DataFrame =
-    readMemo(spark, Seq(artifact(spark, token, kind, sources, partCol, extraStamp)(build)))
-
-  /** [[atPaths]] without the read: build the artifact once per key and
-    * return its published dir, for callers that read several artifacts
-    * as one relation ([[readMemo]]). */
-  def artifact(spark: SparkSession, token: String, kind: String,
-      sources: Seq[Path], partCol: Option[String],
-      extraStamp: Option[String] = None)(build: => DataFrame): Path = {
-    val key = cacheKey(kind, token, sources, extraStamp)
-    val path = Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived/$key")
+      sources: Seq[Path], partCol: Option[String])(build: => DataFrame): DataFrame = {
+    val key = cacheKey(kind, token, sources)
+    val path = derived.resolve(key)
     buildLocks.getOrElseUpdate(key, new Object).synchronized {
       if (!Files.exists(path.resolve("_SUCCESS"))) {
         val b = build
@@ -72,18 +63,10 @@ object Materialize {
           b.repartition(spark.sessionState.conf.numShufflePartitions, col(c))
             .sortWithinPartitions(col(c)))
           .getOrElse(b)
-        val tmp = path.resolveSibling(
-          s"${path.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-        // a failed build must not strand its partial copy: prune skips
-        // `.tmp-` names by design, so nothing else ever reclaims one
-        try {
-          clustered.write.mode("overwrite").parquet(tmp.toString)
+        writeThen(clustered, path) { tmp =>
           publish(tmp, path)
-        } catch { case e: Throwable =>
-          try deleteRec(tmp) catch { case _: Throwable => () }
-          throw e
+          pruneStaleSiblings(key, kind, token, path)
         }
-        pruneStaleSiblings(key, kind, token, path)
         // iterative builders (LPA labels, dedup components) return
         // projections over localCheckpoints — once written to parquet
         // those blocks are dead; free them now instead of waiting for
@@ -91,8 +74,80 @@ object Materialize {
         org.apache.spark.sql.graft.CheckpointBlocks.unpersistAll(b)
       }
     }
-    path
+    readMemo(spark, Seq(path))
   }
+
+  /** One artifact of a batched build ([[artifacts]]): `tag` is the value
+    * its rows carry in the build's [[PieceCol]]; the rest is its cache
+    * identity, as in [[atPaths]]. */
+  final case class Part(tag: Int, kind: String, sources: Seq[Path],
+      extraStamp: Option[String] = None)
+
+  /** The tag column of a batched build. */
+  val PieceCol = "__piece"
+
+  /** Build every missing artifact of `parts` in ONE Spark job and return
+    * each part's published dir, in `parts` order. `build(tags)` returns
+    * the rows of those parts with their tag in an int [[PieceCol]]. The
+    * rows are sorted within their partitions by (tag, `partCol`) — no
+    * repartition shuffle, so a part holds at most one file per input
+    * partition of its build and no zero-row file — and written once,
+    * partitioned by the tag, into one temp dir; each part's subdir then
+    * publishes atomically under its own key (with `_SUCCESS`, and its own
+    * stale generations pruned), so every later use reuses it per part.
+    * Locks on the missing keys are taken in sorted key order, so two
+    * batches over overlapping keys cannot deadlock, and a key a racer
+    * published while this one waited is not built again. */
+  def artifacts(spark: SparkSession, token: String, parts: Seq[Part],
+      partCol: Option[String])(build: Seq[Int] => DataFrame): Seq[Path] = {
+    val keyed = parts.map(p => p -> cacheKey(p.kind, token, p.sources, p.extraStamp))
+    def missing = keyed.filterNot { case (_, k) =>
+      Files.exists(derived.resolve(k).resolve("_SUCCESS"))
+    }.distinctBy(_._2)
+    def locked(keys: List[String])(f: => Unit): Unit = keys match {
+      case Nil => f
+      case k :: rest => buildLocks.getOrElseUpdate(k, new Object).synchronized(locked(rest)(f))
+    }
+    if (missing.nonEmpty) locked(missing.map(_._2).sorted.toList) {
+      val dirty = missing
+      if (dirty.nonEmpty) {
+        val b = build(dirty.map(_._1.tag))
+        writeThen(b.sortWithinPartitions((PieceCol +: partCol.toSeq).map(col): _*),
+            derived.resolve(dirty.head._2), Some(PieceCol)) { tmp =>
+          dirty.foreach { case (p, key) =>
+            // a part with no rows has no subdir: it publishes empty
+            val sub = Files.createDirectories(tmp.resolve(s"$PieceCol=${p.tag}"))
+            Files.createFile(sub.resolve("_SUCCESS"))
+            publish(sub, derived.resolve(key))
+            pruneStaleSiblings(key, p.kind, token, derived.resolve(key))
+          }
+          deleteRec(tmp)
+        }
+        org.apache.spark.sql.graft.CheckpointBlocks.unpersistAll(b)
+      }
+    }
+    keyed.map { case (_, k) => derived.resolve(k) }
+  }
+
+  /** Write `df` into a private temp sibling of `path` and hand it to
+    * `publish`; a failed write or publish must not strand its partial
+    * copy (prune skips `.tmp-` names by design, so nothing else ever
+    * reclaims one). */
+  private def writeThen(df: DataFrame, path: Path, partitionBy: Option[String] = None)(
+      publish: Path => Unit): Unit = {
+    val tmp = path.resolveSibling(
+      s"${path.getFileName}.tmp-${java.util.UUID.randomUUID()}")
+    try {
+      partitionBy.fold(df.write)(df.write.partitionBy(_))
+        .mode("overwrite").parquet(tmp.toString)
+      publish(tmp)
+    } catch { case e: Throwable =>
+      try deleteRec(tmp) catch { case _: Throwable => () }
+      throw e
+    }
+  }
+
+  private def derived: Path = Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
 
   /** Per-session memo of resolved parquet relations. `spark.read
     * .parquet` runs 1-2 one-task driver jobs (file listing + footer
@@ -111,7 +166,9 @@ object Materialize {
     *
     * Several dirs read as ONE relation: one scan whose read partitions
     * pack small files across dirs. `schema`, when given, is the read
-    * schema: files written under a narrower one null-fill. */
+    * schema — no footer job runs, and files written under a narrower
+    * one null-fill; [[pieces]] and the HNSW cell graphs pass the schema
+    * their build plan already knows. */
   private val readCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, java.lang.ref.SoftReference[DataFrame]]]()
@@ -144,30 +201,43 @@ object Materialize {
 
   /** Per-piece incremental materialization — the one maintenance route
     * of every ANN index (LSH buckets, IVF cells, IVF-PQ codes, HNSW
-    * signatures): one cached artifact per (piece dir, extraSources),
-    * read back minus the piece's hidden ids. Piece dirs are immutable
-    * (a dataset table's parquet file; a collection's base buckets or
-    * flat dirs and its delta segments, [[Collections.FrameManifest]]),
-    * so after a write the next use builds only the new delta's piece
-    * and every other piece is a cache hit with a wider filter; a fold
-    * rebuilds all of them. `build` receives the piece's frame read under
-    * the source's authoritative schema (null-filling columns a
-    * pre-widening file lacks) and must keep the id column. Zero pieces
-    * (an emptied collection) is an empty index: `build` over an empty
-    * frame of that schema, nothing cached. */
+    * signatures): one cached artifact per (piece dir, extraSources).
+    * Piece dirs are immutable (a dataset table's parquet file; a
+    * collection's base buckets or flat dirs and its delta segments,
+    * [[Collections.FrameManifest]]), so after a write the next use
+    * builds only the new delta's piece; a fold rebuilds all of them.
+    * Every missing piece builds in ONE Spark job ([[artifacts]]). `build`
+    * receives the piece's frame read under the source's authoritative
+    * schema (null-filling columns a pre-widening file lacks) and must
+    * keep the id column.
+    *
+    * The index reads as ONE relation over every piece's artifact,
+    * under the schema of `build` over the source's current schema (known
+    * without a footer job; a piece built before a widening null-fills),
+    * minus the superseded rows: the frame's [[Collections.Visibility]]
+    * with each delta piece's artifact dir standing in for its segment's
+    * dir. Zero pieces (an emptied collection) is an empty index: `build`
+    * over an empty frame of that schema, nothing cached. */
   def pieces(spark: SparkSession, token: String, kindFor: Int => String,
       ps: Collections.Pieces, extraSources: Seq[Path],
-      partCol: Option[String])(build: DataFrame => DataFrame): DataFrame =
-    if (ps.parts.isEmpty)
-      build(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ps.schema))
-    else ps.parts.map { p =>
-      Collections.visible(
-        atPaths(spark, token, kindFor(p.index), (p.dir +: extraSources).distinct,
-          partCol) {
+      partCol: Option[String])(build: DataFrame => DataFrame): DataFrame = {
+    val empty = build(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ps.schema))
+    if (ps.parts.isEmpty) empty
+    else {
+      val dirs = artifacts(spark, token, ps.parts.map(p =>
+          Part(p.index, kindFor(p.index), (p.dir +: extraSources).distinct)), partCol) { tags =>
+        ps.parts.filter(p => tags.contains(p.index)).map(p =>
           build(spark.read.schema(ps.schema).parquet(p.dir.toString))
-        }, ps.idCol, p.hidden)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+            .withColumn(PieceCol, lit(p.index)))
+          .reduce(_.union(_))
+      }
+      val segmentDirs = ps.parts.zip(dirs).collect {
+        case (p, d) if p.segment >= 0 => p.segment -> d.getFileName.toString
+      }.toMap
+      ps.visibility(readMemo(spark, dirs, Some(empty.schema)), ps.idCol, segmentDirs.get)
+    }
+  }
 
   /** Retention for superseded index generations: building a NEW stamp of
     * (kind, token) makes every OLDER same-prefix sibling stale — without
@@ -271,7 +341,7 @@ object Materialize {
     memoCache.get(prefix) match {
       case Some((k, v)) if k == key => v.asInstanceOf[Long]
       case _ =>
-        val dir = Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived/counts")
+        val dir = derived.resolve("counts")
         val sidecar = dir.resolve(key)
         val persisted =
           if (Files.exists(sidecar))
@@ -320,7 +390,7 @@ object Materialize {
     retiredSweeps.getOrElseUpdate(s"$note|$token", {
       val t = token.replaceAll("[^A-Za-z0-9._-]", "_")
       val tokSeg = s"_${t.length}t${t}__"
-      val root = Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
+      val root = derived
       if (Files.exists(root)) {
         val s = Files.list(root)
         val stale = try {

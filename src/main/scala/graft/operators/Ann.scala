@@ -72,7 +72,7 @@ object Ann {
   }
 
   /** Build the LSH index frame: input plus a `bucket` column
-    * ([[materializedIndexAt]] persists it bucket-clustered). Pass `dim`
+    * ([[materializedIndexAt]] persists it sorted by bucket). Pass `dim`
     * (from collection metadata / the query vector) to keep the build a
     * single pass — the `None` fallback costs one stray dim-probe job. */
   def buildIndex(df: DataFrame, vecCol: String, nPlanes: Int,
@@ -124,9 +124,9 @@ object Ann {
     * next indexed query hashes only that batch's rows and reuses every
     * base piece — per-write index upkeep is O(batch), which is what the
     * reference's in-place HNSW insert (native_index.rs:317) costs and
-    * what a 100 TB ingest needs. Every piece is bucket-clustered and
-    * sorted parquet, so the probe's pushed `bucket IN (…)` prunes row
-    * groups inside each piece of the union: the query neither re-hashes
+    * what a 100 TB ingest needs. Every piece's files are sorted by
+    * bucket, so the probe's pushed `bucket IN (…)` prunes row groups in
+    * the one scan over all pieces: the query neither re-hashes
     * a vector nor scans outside its Hamming ball. (The trained tiers —
     * IVF/PQ/HNSW — take the same pieces against EPOCH-FROZEN models;
     * see [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */

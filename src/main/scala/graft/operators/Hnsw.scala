@@ -298,8 +298,8 @@ object Hnsw {
     // The walk groups by cell WITHIN a task partition, so skipping the
     // co-locating shuffle is safe iff no cell's rows can be split across
     // tasks. The index writer puts each cell wholly inside one FILE
-    // (hash-repartition by cell, one file per partition), so the only
-    // split risk is Spark slicing a single file — which parquet resolves
+    // (buildGraph's hash partitioning by cell, one file per cell), so the
+    // only split risk is Spark slicing a single file — which parquet resolves
     // at ROW-GROUP granularity (a row group goes to the split holding
     // its middle byte). Two sufficient conditions per file, either one
     // qualifies: (a) small enough that the scan packer never slices it,
@@ -405,7 +405,10 @@ object Hnsw {
     * PER CELL over the epoch-frozen router. The adjacency couples rows
     * WITHIN a cell, across storage pieces, so the rebuild unit is the
     * cell, not the piece; [[buildGraph]] builds each cell on its own in
-    * ascending-id order, so a cell's graph depends only on its rows. */
+    * ascending-id order, so a cell's graph depends only on its rows.
+    * Every cell whose rows changed rebuilds in ONE Spark job, published
+    * per cell ([[graft.Materialize.artifacts]]), and the graphs read as
+    * one relation. */
   def materializedIndexAt(spark: SparkSession, src: graft.IndexSource,
       vecCol: String, idCol: String, metric: String, kCells: Int)
       : (Array[(Int, Array[Float])], DataFrame) = {
@@ -459,18 +462,21 @@ object Hnsw {
     // a source with no vectors (an emptied collection) has no cells —
     // the index is legitimately EMPTY, not an error
     val empty = buildGraph(cells.limit(0), vecCol, idCol, metric, M, LevelStride)
-    // the cell graphs read as ONE relation under the current schema: one
-    // scan per probe, not one per cell, and a graph cached before a
-    // schema widening null-fills the new columns
+    // every dirty cell's graph builds in ONE job (buildGraph builds each
+    // cell on its own, so one pass over `cell IN dirty` split by cell is
+    // exact) and publishes per cell; the graphs read as ONE relation
+    // under the current schema: one scan per probe, not one per cell,
+    // and a graph cached before a schema widening null-fills the new
+    // columns
     val graph =
       if (cellHashes.isEmpty) empty
-      else graft.Materialize.readMemo(spark, cellHashes.map { case (c, h) =>
-        graft.Materialize.artifact(spark, src.token, s"${graphKind}_c$c",
-          src.model, Some("cell"), extraStamp = Some(h)) {
-          buildGraph(cells.where(col("cell") === c), vecCol, idCol,
-            metric, M, LevelStride)
-        }
-      }, Some(empty.schema))
+      else graft.Materialize.readMemo(spark, graft.Materialize.artifacts(spark, src.token,
+        cellHashes.map { case (c, h) =>
+          graft.Materialize.Part(c, s"${graphKind}_c$c", src.model, Some(h))
+        }, None) { dirty =>
+          buildGraph(cells.where(col("cell").isin(dirty: _*)), vecCol, idCol,
+            metric, M, LevelStride).withColumn(graft.Materialize.PieceCol, col("cell"))
+        }, Some(empty.schema))
     (cents, graph)
   }
 

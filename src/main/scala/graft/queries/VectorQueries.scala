@@ -218,7 +218,7 @@ object VectorQueries {
       "q58_lsh_fullprobe",
       s"""SELECT vec_id, list_cosine_similarity($E, ${sqlVec(q64)}) AS score
          |FROM embeddings ORDER BY score DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      // index built ONCE per dataset behind Materialize (bucket-clustered
+      // index built ONCE per dataset behind Materialize (bucket-sorted
       // — same insert-time-build contract as q59's IVF); the query is
       // probe + rerank only
       val idx = graft.operators.Ann.materializedIndexAt(s,

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, DeclarativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
@@ -201,21 +201,6 @@ object Int128 {
     * BigDecimal.doubleValue is correctly rounded at any magnitude. */
   def toDouble(hi: Long, lo: Long, scale: Int): Double =
     new java.math.BigDecimal(toBigInteger(hi, lo), scale).doubleValue()
-
-  /** Exact `int128 · 10^-scale` as a Decimal, or null when the
-    * unscaled value exceeds 38 digits (unrepresentable — reachable
-    * only in the int128's top sliver 1e38..1.7e38). Precision is NOT
-    * clamped here; the caller's own overflow check (e.g. the stock
-    * CheckOverflowInSum harvested by [[FixedPointAvg]]) polices the
-    * declared precision with its session's null/throw policy. */
-  def toDecimal(hi: Long, lo: Long, scale: Int): Decimal = {
-    val bi = toBigInteger(hi, lo)
-    if (bi.abs.compareTo(MAX_UNSCALED) > 0) null
-    else Decimal(BigDecimal(new java.math.BigDecimal(bi, scale)))
-  }
-
-  private val MAX_UNSCALED =
-    java.math.BigInteger.TEN.pow(DecimalType.MAX_PRECISION).subtract(java.math.BigInteger.ONE)
 }
 
 /** `(hi, lo) int128 · 10^-scale` exactly single-rounded to DOUBLE —
@@ -239,135 +224,6 @@ case class Int128ToDouble(left: Expression, right: Expression, scale: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** `(hi, lo) int128 · 10^-scale` as an exact DECIMAL(precision, scale)
-  * value (null past 38 digits) — slots in where a stock aggregate's
-  * decimal `sum` buffer attribute sat, so the harvested stock evaluate
-  * tree (and its own overflow policy) operates on the exact sum. */
-case class Int128Decimal(left: Expression, right: Expression,
-    precision: Int, scale: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-  override def dataType: DataType = DecimalType(precision, scale)
-  override def nullable: Boolean = true
-  override def prettyName: String = "int128_decimal"
-
-  override protected def nullSafeEval(hi: Any, lo: Any): Any =
-    Int128.toDecimal(hi.asInstanceOf[Long], lo.asInstanceOf[Long], scale)
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (hi, lo) => {
-      val d = ctx.freshName("dec")
-      s"""
-         |org.apache.spark.sql.types.Decimal $d =
-         |  org.apache.spark.sql.graft.Int128.toDecimal($hi, $lo, $scale);
-         |if ($d == null) { ${ev.isNull} = true; } else { ${ev.value} = $d; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Exact fixed-point AVG over pre-scaled longs — the [[FixedPointSum]]
-  * int128 limbs plus a row count, finalized through Spark's OWN
-  * `Average` evaluate tree for bit-parity by construction.
-  *
-  * Why: `avg(CAST(x AS DECIMAL(p≤18,s)))` runs the same wide-decimal
-  * BigDecimal-per-row buffer as the stock Sum (Average's buffer is
-  * `DECIMAL(p+10, s)`), so the money-AVG idiom pays the identical 3.3×
-  * premium the SUM rewrite removed (the reference computes AVG as
-  * sum/count over its fixed-point column — velesdb-core
-  * `velesql/aggregator.rs:220`).
-  *
-  * Exactness: update/merge are the [[FixedPointSum]] primitive-long
-  * limb ops plus a count increment, all inside whole-stage codegen.
-  * Finalization does NOT hand-build a divide: it instantiates a stock
-  * `Average` of the same child type and eval mode, takes its
-  * `evaluateExpression` (CheckOverflowInSum → Divide → cast to
-  * DECIMAL(p+4, s+4), whatever the running Spark version does), and
-  * substitutes the exact int128 sum for the `sum` buffer attribute and
-  * our count for `count` — identical rounding, identical overflow
-  * policy, identical null semantics to the un-rewritten plan, version
-  * drift included. Output is the stock result cast to DOUBLE (the
-  * consumer cast the rule absorbed).
-  */
-case class FixedPointAvg(child: Expression, precision: Int, scale: Int,
-    evalMode: EvalMode.Value)
-    extends DeclarativeAggregate with ExpectsInputTypes with UnaryLike[Expression] {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "fixed_point_avg"
-
-  private lazy val hi = AttributeReference("hi", LongType, nullable = false)()
-  private lazy val lo = AttributeReference("lo", LongType, nullable = false)()
-  private lazy val cnt = AttributeReference("cnt", LongType, nullable = false)()
-
-  override lazy val aggBufferAttributes: Seq[AttributeReference] =
-    Seq(hi, lo, cnt)
-
-  override lazy val initialValues: Seq[Expression] =
-    Seq(Literal(0L), Literal(0L), Literal(0L))
-
-  private def addW(a: Expression, b: Expression): Expression =
-    Add(a, b, EvalMode.LEGACY)
-
-  private def add128(h1: Expression, l1: Expression,
-      h2: Expression, l2: Expression): (Expression, Expression) = {
-    val newLo = addW(l1, l2)
-    val carry = ShiftRightUnsigned(
-      BitwiseOr(BitwiseAnd(l1, l2),
-        BitwiseAnd(BitwiseOr(l1, l2), BitwiseNot(newLo))),
-      Literal(63))
-    val newHi = addW(addW(h1, h2), carry)
-    (newHi, newLo)
-  }
-
-  override lazy val updateExpressions: Seq[Expression] = {
-    val (nh, nl) = add128(hi, lo, ShiftRight(child, Literal(63)), child)
-    Seq(
-      If(IsNull(child), hi, nh),
-      If(IsNull(child), lo, nl),
-      addW(cnt, Cast(IsNotNull(child), LongType)))
-  }
-
-  override lazy val mergeExpressions: Seq[Expression] = {
-    val (nh, nl) = add128(hi.left, lo.left, hi.right, lo.right)
-    Seq(nh, nl, addW(cnt.left, cnt.right))
-  }
-
-  override lazy val evaluateExpression: Expression = {
-    // the stock tree, harvested from a throwaway Average of the same
-    // input type/eval mode (we only read its evaluate expression and
-    // buffer attribute ids — the literal child never evaluates)
-    val stock = Average(Literal.create(null, DecimalType(precision, scale)), evalMode)
-    val sumDec = {
-      // cheap reassembly while the unscaled sum fits int64 (always, in
-      // practice); exact BigDecimal reassembly past it — both carry
-      // the stock buffer type DECIMAL(p+10, s), and the harvested
-      // tree's own CheckOverflowInSum polices that precision with the
-      // session overflow policy, exactly as the stock plan would
-      val bufType = DecimalType.bounded(precision + 10, scale)
-      val fitsInt64 = EqualTo(hi, ShiftRight(lo, Literal(63)))
-      If(fitsInt64,
-        MakeDecimal(lo, bufType.precision, bufType.scale),
-        Int128Decimal(hi, lo, bufType.precision, bufType.scale))
-    }
-    val substituted = stock.evaluateExpression.transform {
-      case a: AttributeReference if a.exprId == stock.sum.exprId => sumDec
-      case a: AttributeReference if a.exprId == stock.count.exprId => cnt
-    }
-    Cast(substituted, DoubleType)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object FixedPointSum {

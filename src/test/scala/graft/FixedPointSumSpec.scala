@@ -197,37 +197,4 @@ class FixedPointSumSpec extends SparkSpecBase {
       assert(got == exact, s"scale=$s got=$got exact=$exact diff=${got - exact}")
     }
   }
-
-  test("fixed-point AVG: harvested stock finalization is bit-identical") {
-    import org.apache.spark.sql.graft.{FixedPointAvg, Bridge => B}
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, UnscaledValue}
-    def fxAvg(c: Column, p: Int, s: Int): Column = B.column(
-      FixedPointAvg(
-        UnscaledValue(Cast(B.expression(c), DecimalType(p, s))), p, s,
-        EvalMode.LEGACY).toAggregateExpression())
-    val genV = Gen.chooseNum(-1e9, 1e9)
-    // precision varies too: the harvested stock tree's buffer/result
-    // types (p+10, p+4/s+4) and divide precision-loss adjustment all
-    // depend on p, so parity must hold across the fireable range
-    forAll(Gen.listOfN(200, genV), Gen.oneOf((18, 0), (18, 2), (18, 4),
-        (12, 2), (10, 0), (9, 3))) { (xs, ps) =>
-      val (p, s) = ps
-      // keep every value inside DECIMAL(p,s) range (ANSI casts throw on
-      // overflow; parity on the throwing path is not what this pins)
-      val vmax = math.pow(10, p - s - 1)
-      val df = xs.zipWithIndex.map(q => (q._2 % 5, q._1 % vmax)).toDF("g", "v")
-        .repartition(7, col("g"))
-      val a = df.groupBy("g")
-        .agg(avg(col("v").cast(DecimalType(p, s))).cast("double").as("a"))
-        .orderBy("g").collect().map(_.toString)
-      val b = df.groupBy("g").agg(fxAvg(col("v"), p, s).as("a"))
-        .orderBy("g").collect().map(_.toString)
-      assert(a.sameElements(b), s"p=$p scale=$s\n stock=${a.mkString(",")}\n fx=${b.mkString(",")}")
-    }
-    // nulls skipped, all-null group → null (stock avg semantics)
-    val rows = Seq((1, Some(2.5)), (1, None), (1, Some(0.5)), (2, None))
-      .toDF("g", "v").groupBy("g").agg(fxAvg(col("v"), 18, 2).as("a"))
-      .orderBy("g").collect()
-    assert(rows(0).getDouble(1) == 1.5 && rows(1).isNullAt(1))
-  }
 }

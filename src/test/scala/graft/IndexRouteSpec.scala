@@ -7,6 +7,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobMeter
 
 /** Every ANN tier over every source shape, through the one maintenance
   * route ([[IndexSource]] → [[Materialize.pieces]]): a dataset table (one
@@ -71,6 +72,16 @@ class IndexRouteSpec extends SparkSpecBase {
     assert(s("emptied").src.pieces.parts.isEmpty && s("emptied").visible.isEmpty)
   }
 
+  /** `graft-derived` entries of a token, temp copies excluded. */
+  private def derivedOf(token: String): Seq[java.nio.file.Path] = {
+    val t = token.replaceAll("[^A-Za-z0-9._-]", "_")
+    val derived = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
+    Collections.children(derived).filter { p =>
+      val n = p.getFileName.toString
+      n.contains(s"t${t}__") && !n.contains(".tmp-")
+    }
+  }
+
   private def rows(df: DataFrame, cols: String*): Seq[String] =
     df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
 
@@ -129,11 +140,8 @@ class IndexRouteSpec extends SparkSpecBase {
   test("an upsert to a flat collection rebuilds its one piece; models stay") {
     collection("flatup")
     g.collections.createIndex("flatup", "Point", "label", "range")
-    val token = s"${tmp}_col_flatup".replaceAll("[^A-Za-z0-9._-]", "_")
-    val derived = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
     def entries(kind: String): Set[String] =
-      Collections.children(derived).map(_.getFileName.toString)
-        .filter(n => n.contains(kind) && n.contains(token) && !n.contains(".tmp-")).toSet
+      derivedOf(s"${tmp}_col_flatup").map(_.getFileName.toString).filter(_.contains(kind)).toSet
     def build(): Unit = {
       val src = g.catalog.indexSource("flatup").get
       assert(src.pieces.parts.map(_.index) == Seq(0))
@@ -151,5 +159,86 @@ class IndexRouteSpec extends SparkSpecBase {
       "an upsert must not re-train the models")
     assert((entries("ivf8_cells_p0_flatup") -- cells).size == 1, "one new cell piece")
     assert((entries("_codes_p0_flatup") -- codes).size == 1, "one new code piece")
+  }
+
+  test("a refresh writes every missing piece in one job") {
+    collection("pins")
+    def src = g.catalog.indexSource("pins").get
+    val first = JobMeter(spark)(Ann.materializedIndexAt(spark, src, "vec", Ann.Planes, 16))
+    assert(src.pieces.parts.size == 4)
+    assert((first.jobs, first.writes.size) == ((1L, 1)),
+      "a fresh 4-bucket collection's first LSH build: (jobs, writes)")
+    val m = Pq.defaultM(16)
+    def hnsw() = Hnsw.materializedIndexAt(spark, src, "vec", "id", "cosine", Ivf.Cells)
+    IvfPq.materializedIndexAt(spark, src, "vec", "id", 16, Ivf.Cells, m, Pq.K)
+    hnsw()
+    g.collections.upsert("pins", (300L until 310L).map(i => (i, vec(i, 0.37), 1))
+      .toDF("id", "vec", "label"))
+    for ((tier, refresh) <- Seq[(String, () => Any)](
+        "lsh" -> (() => Ann.materializedIndexAt(spark, src, "vec", Ann.Planes, 16)),
+        "ivf" -> (() => Ivf.materializedIndexAt(spark, src, "vec", Ivf.Cells)),
+        "ivfpq" -> (() => IvfPq.materializedIndexAt(spark, src, "vec", "id", 16,
+          Ivf.Cells, m, Pq.K)))) {
+      val r = JobMeter(spark)(refresh())
+      assert((r.jobs, r.writes.size) == ((1L, 1)), s"$tier one-delta refresh: (jobs, writes)")
+    }
+    // HNSW: the signature piece (one write job), the cell-hash aggregate
+    // (its shuffle stage and the collect) and ONE write for every cell
+    // graph the delta dirtied (buildGraph's cell shuffle and the write)
+    val h = JobMeter(spark)(hnsw())
+    assert((h.jobs, h.writes.size) == ((5L, 2)), "hnsw one-delta refresh: (jobs, writes)")
+    // a one-id upsert moves one point: at most its old and new cell rebuild
+    def graphs = derivedOf(s"${tmp}_col_pins").map(_.getFileName.toString)
+      .filter(_.contains("hnswv2")).toSet
+    val before = graphs
+    g.collections.upsert("pins", Seq((5L, vec(5L, 0.91), 1)).toDF("id", "vec", "label"))
+    Ivf.materializedIndexAt(spark, src, "vec", Ivf.Cells)
+    val one = JobMeter(spark)(hnsw())
+    val rebuilt = graphs -- before
+    assert(rebuilt.nonEmpty && rebuilt.size <= 2 && one.writes.size == 2,
+      s"rebuilt $rebuilt in ${one.writes.size - 1} graph writes")
+  }
+
+  test("index artifacts hold no zero-row file and at most one file per piece partition") {
+    // a private copy of the dataset table: its own cache token, so the
+    // check sees only artifacts this build wrote
+    val dsDir = java.nio.file.Files.createTempDirectory("graft-idxroute-ds")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
+      dsDir.resolve("embeddings.parquet"))
+    val all = Shape(IndexSource.table(spark, dsDir.toString, "embeddings"),
+      Tables.table(spark, dsDir.toString, "embeddings"), "embedding", "vec_id", 64) +:
+      Seq("bucketed", "flat", "compacted", "emptied").map(shapes.toMap)
+    val conf = spark.sessionState.newHadoopConf()
+    def rowsOf(f: java.nio.file.Path): Long = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try r.getRecordCount finally r.close()
+    }
+    for (sh <- all) {
+      import sh._
+      val m = Pq.defaultM(dim)
+      Ann.materializedIndexAt(spark, src, vecCol, Ann.Planes, dim)
+      Ivf.materializedIndexAt(spark, src, vecCol, Ivf.Cells)
+      IvfPq.materializedIndexAt(spark, src, vecCol, idCol, dim, Ivf.Cells, m, Pq.K)
+      Hnsw.materializedIndexAt(spark, src, vecCol, idCol, "cosine", Ivf.Cells)
+      val partitions = src.pieces.parts.map(p =>
+        p.index -> spark.read.parquet(p.dir.toString).rdd.getNumPartitions).toMap
+      for (d <- derivedOf(src.token) if java.nio.file.Files.isDirectory(d)) {
+        val files = Collections.children(d).filter(_.getFileName.toString.endsWith(".parquet"))
+        // a piece artifact: one file per input partition of its piece; a
+        // cell graph: one file (the walk relies on it); a model: no cap
+        val name = d.getFileName.toString
+        val cap = "_p(\\d+)_".r.findFirstMatchIn(name).map(p => partitions(p.group(1).toInt))
+          .orElse(Option.when(name.contains("hnswv2"))(1))
+        cap.foreach(c => assert(files.size <= c, s"$d holds ${files.size} files, cap $c"))
+        // an index artifact never holds a zero-row file; a model trained
+        // on no rows keeps the one schema-carrying file an empty write leaves
+        val counts = files.map(rowsOf)
+        if (cap.isDefined || counts.exists(_ > 0))
+          assert(counts.forall(_ > 0), s"zero-row file in $d: ${files.zip(counts)}")
+      }
+    }
+    Collections.deleteRec(dsDir)
   }
 }

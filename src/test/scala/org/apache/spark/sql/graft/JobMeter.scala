@@ -8,17 +8,21 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** A metered call's value and the Spark work it scheduled: one
   * `spark.job.description` per job started ("" when unset), stages
-  * submitted, and shuffle bytes written + read. */
+  * submitted, shuffle bytes written + read, and the output dir of every
+  * parquet/file write (outside the pattern, so four-field matches hold). */
 final case class Metered[T](value: T, descriptions: Seq[String], stages: Long,
-    shuffleBytes: Long) {
+    shuffleBytes: Long)(val writes: Seq[String] = Nil) {
   def jobs: Long = descriptions.size.toLong
 }
 
 /** Test helper: run `f` under a listener that counts its jobs, stages
-  * and shuffle bytes. The listener bus is drained before the listener
+  * and shuffle bytes and records its file writes. The listener bus is drained before the listener
   * is added and again after `f`, so every event of the jobs `f`
   * scheduled is counted and none from before. Work other threads
   * schedule meanwhile is counted too. Lives in the spark package tree
@@ -43,12 +47,25 @@ object JobMeter {
             m.shuffleReadMetrics.totalBytesRead)
         }
     }
+    val writes = new ConcurrentLinkedQueue[String]
+    val w = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.foreach {
+          case c: InsertIntoHadoopFsRelationCommand => writes.add(c.outputPath.toString); ()
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(l)
+    spark.listenerManager.register(w)
     try {
       val r = f
       sc.listenerBus.waitUntilEmpty()
-      Metered(r, jobs.asScala.toSeq, stages.get, shuffle.get)
-    } finally sc.removeSparkListener(l)
+      Metered(r, jobs.asScala.toSeq, stages.get, shuffle.get)(writes.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(l)
+      spark.listenerManager.unregister(w)
+    }
   }
 }
