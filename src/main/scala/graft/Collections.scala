@@ -144,7 +144,11 @@ object Collections {
       else {
         val id = col(idCol)
         val path = col("_metadata.file_path")
-        def fromLast(s: Int) = dirOf(s).fold(lit(false))(d => path.contains(s"/$d/"))
+        // file_path is a URI: match the dir's name in its encoded form
+        // (a space reads as %20, a '%' as %25)
+        def fromLast(s: Int) = dirOf(s).fold(lit(false)) { d =>
+          path.contains(new org.apache.hadoop.fs.Path(s"/$d").toUri.getRawPath + "/")
+        }
         val (ids0, s0) = touched.head
         val rule = touched.tail.foldLeft(when(id.isin(ids0.toIndexedSeq: _*), fromLast(s0))) {
           case (c, (ids, s)) => c.when(id.isin(ids.toIndexedSeq: _*), fromLast(s))

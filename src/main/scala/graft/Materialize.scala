@@ -168,7 +168,10 @@ object Materialize {
     * pack small files across dirs. `schema`, when given, is the read
     * schema — no footer job runs, and files written under a narrower
     * one null-fill; [[pieces]] and the HNSW cell graphs pass the schema
-    * their build plan already knows. */
+    * their build plan already knows. Such a read goes through
+    * [[org.apache.spark.sql.graft.ImmutableDirScan]], the scan collection
+    * frames use too: published artifact dirs never change, so each is
+    * listed once, and a read over more than 32 dirs runs no listing job. */
   private val readCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, java.lang.ref.SoftReference[DataFrame]]]()
@@ -187,8 +190,10 @@ object Materialize {
     perSession.get(key).flatMap(r => Option(r.get())) match {
       case Some(df) => df
       case None =>
-        val df = schema.fold(spark.read)(spark.read.schema(_))
-          .parquet(dirs.map(_.toString): _*)
+        val df = schema match {
+          case Some(s) => org.apache.spark.sql.graft.ImmutableDirScan(spark, dirs.map(_.toString), s)
+          case None => spark.read.parquet(dirs.map(_.toString): _*)
+        }
         perSession.put(key, new java.lang.ref.SoftReference(df))
         df
     }
@@ -439,8 +444,10 @@ object Materialize {
   /** Atomic publish: rename tmp → target; if another process already
     * published the same key, keep theirs and drop ours. */
   private def publish(tmp: Path, target: Path): Unit = {
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    catch {
+    try {
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      org.apache.spark.sql.graft.ImmutableDirScan.forget(target.toString)
+    } catch {
       case _: java.nio.file.FileAlreadyExistsException
            | _: java.nio.file.AccessDeniedException
            | _: java.nio.file.DirectoryNotEmptyException =>

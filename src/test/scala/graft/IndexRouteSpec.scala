@@ -33,11 +33,15 @@ class IndexRouteSpec extends SparkSpecBase {
   private final case class Shape(src: IndexSource, visible: DataFrame,
       vecCol: String, idCol: String, dim: Int)
 
+  /** A collection name whose artifact and data paths a URI escapes. */
+  private val Escaped = "my docs 50%off"
+
   private lazy val shapes: Seq[(String, Shape)] = {
-    collection("bucketed")
-    g.collections.upsert("bucketed",
-      (1L to 20L).map(i => (i, vec(i, 0.71), 2)).toDF("id", "vec", "label"))
-    g.collections.delete("bucketed", 21L to 25L)
+    for (n <- Seq("bucketed", Escaped)) {
+      collection(n)
+      g.collections.upsert(n, (1L to 20L).map(i => (i, vec(i, 0.71), 2)).toDF("id", "vec", "label"))
+      g.collections.delete(n, 21L to 25L)
+    }
     collection("flat")
     g.collections.createIndex("flat", "Point", "label", "range")
     collection("compacted")
@@ -53,7 +57,7 @@ class IndexRouteSpec extends SparkSpecBase {
     } finally srv.stop()
     val table = Shape(IndexSource.table(spark, sfDir, "embeddings"),
       Tables.table(spark, sfDir, "embeddings"), "embedding", "vec_id", 64)
-    ("dataset table" -> table) +: Seq("bucketed", "flat", "compacted", "emptied").map { n =>
+    ("dataset table" -> table) +: Seq("bucketed", Escaped, "flat", "compacted", "emptied").map { n =>
       n -> Shape(g.catalog.indexSource(n).get, g.collections.table(n).get, "vec", "id", 16)
     }
   }
@@ -65,6 +69,8 @@ class IndexRouteSpec extends SparkSpecBase {
     assert(bucketed.buckets == 4 && bucketed.segments.size == 2)
     assert(s("bucketed").src.pieces.parts.size == bucketed.entries.size + 1,
       "one piece per base bucket plus one per delta (a delete has no dir)")
+    assert(s(Escaped).visible.select("id").as[Long].collect().sorted.toSeq ==
+      ((1L to 20L) ++ (26L to 200L)), s"'$Escaped' holds the bucketed shape's rows")
     for (n <- Seq("flat", "compacted")) {
       assert(g.collections.readManifest(n).get.buckets == 0, s"$n is not flat")
       assert(s(n).src.pieces.parts.size == 1, s"$n: one piece per flat dir")
@@ -85,7 +91,7 @@ class IndexRouteSpec extends SparkSpecBase {
   private def rows(df: DataFrame, cols: String*): Seq[String] =
     df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
 
-  for (name <- Seq("dataset table", "bucketed", "flat", "compacted", "emptied")) {
+  for (name <- Seq("dataset table", "bucketed", Escaped, "flat", "compacted", "emptied")) {
     test(s"$name: every tier indexes exactly the visible rows") {
       val sh = shapes.toMap.apply(name)
       import sh._

@@ -6,7 +6,7 @@ import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.JobMeter
+import org.apache.spark.sql.graft.{ImmutableDirScan, JobMeter}
 
 /** The one-scan read of a frame's base and deltas
   * ([[Collections.Visibility]]) and of an index's pieces
@@ -134,15 +134,41 @@ class OneScanSpec extends SparkSpecBase {
 
   test("a read lists only the dirs no earlier read listed: 37 dirs, no listing job") {
     val dir = tmpDir("listing")
-    val cols = new Collections(spark, dir.toString)
-    cols.create("c", buckets = 16)
-    cols.upsert("c", (1L to 2000L).map(i => (i, s"b$i")).toDF("id", "tag"))
-    (1 to 20).foreach(i => cols.upsert("c", Seq((i.toLong, s"d$i")).toDF("id", "tag")))
+    val g = Graft(spark, dir.toString)
+    val cols = g.collections
+    cols.create("c", idCol = "id", vectorCol = Some("vec"), buckets = 16)
+    cols.upsert("c", points((1L to 2000L).map(i => (Some(i), s"b$i"))))
+    (1 to 20).foreach(i => cols.upsert("c", points(Seq((Some(i.toLong), s"d$i")))))
+    def lsh() = Ann.materializedIndexAt(spark, g.catalog.indexSource("c").get, "vec",
+      Ann.Planes, 8)
     cols.table("c").get
-    cols.upsert("c", Seq((21L, "d21")).toDF("id", "tag"))
+    lsh()
+    cols.upsert("c", points(Seq((Some(21L), "d21"))))
     val read = JobMeter(spark)(cols.table("c").get)
     assert(read.jobs == 0, s"16 base dirs + 21 delta dirs: ${read.jobs} listing jobs")
     assert(read.value.where(col("id") === 21L).select("tag").as[String].collect().toSeq == Seq("d21"))
+    // the index over the same 37 pieces: the refresh writes the new
+    // delta's piece, and the read of all 37 artifact dirs lists only it
+    val index = JobMeter(spark)(lsh())
+    assert(index.jobs == 1 && index.writes.size == 1,
+      s"37 pieces after one write: ${index.jobs} jobs, ${index.writes.size} writes")
+    assert(index.value.where(col("id") === 21L).select("tag").as[String].collect().toSeq ==
+      Seq("d21"))
+    Collections.deleteRec(dir)
+  }
+
+  test("a dir rebuilt under its old name reads its new files once forgotten") {
+    val dir = tmpDir("forget")
+    val artifact = dir.resolve("artifact").toString
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", org.apache.spark.sql.types.LongType)
+    def write(ids: Seq[Long]): Unit = ids.toDF("id").write.mode("overwrite").parquet(artifact)
+    def read() = ImmutableDirScan(spark, Seq(artifact), schema).as[Long].collect().sorted.toSeq
+    write(Seq(1L, 2L))
+    assert(read() == Seq(1L, 2L))
+    write(Seq(3L))
+    ImmutableDirScan.forget(artifact)
+    assert(read() == Seq(3L))
     Collections.deleteRec(dir)
   }
 
