@@ -24,6 +24,11 @@ import scala.jdk.CollectionConverters._
   */
 object Collections {
 
+  /** The cache identity of collection `name`'s index artifacts
+    * ([[IndexSource]]) under data dir `dataDir`. */
+  private[graft] def indexToken(dataDir: String, name: String): String =
+    s"${dataDir}_col_$name"
+
   /** Built-in VelesQL catalog names a user collection must not shadow. */
   private[graft] val ReservedNames: Set[String] =
     graft.Tables.All.toSet ++ Set("corpus", "embeddings_wide")
@@ -300,8 +305,15 @@ class Collections(spark: SparkSession, dataDir: String,
       .filter(p => Files.exists(p.resolve("meta.json")))
       .map(_.getFileName.toString).sorted
 
-  /** S1: drop (lib.rs:337-346). */
-  def drop(name: String): Unit = this.synchronized { deleteRec(colDir(name)) }
+  /** S1: drop (lib.rs:337-346). The collection's index artifacts and
+    * count sidecars in the derived cache, and every in-memory entry kept
+    * for it, go with it ([[Materialize.reclaim]]). */
+  def drop(name: String): Unit = this.synchronized {
+    val dir = colDir(name)
+    deleteRec(dir)
+    Materialize.reclaim(Collections.indexToken(dataDir, name))
+    org.apache.spark.sql.graft.ImmutableDirScan.forgetUnder(dir.toString)
+  }
 
   private def idColOf(name: String): String = metaOf(name)._1
 

@@ -329,18 +329,19 @@ class Graft(
   def classify(query: String): String = Graft.classify(parse(query))
 
   /** Execute eagerly, honoring `WITH (timeout_ms = N)`
-    * (ast/with_clause.rs:97-101): the collect runs inside a dedicated
-    * job group; a watchdog cancels the group at the deadline and the
-    * call surfaces [[velesql.TimeoutError]]. Without the option this is
-    * a plain collect. */
+    * (ast/with_clause.rs:97-101): the compile and the collect run inside
+    * a dedicated job group — compiling runs jobs too (BM25 corpus stats,
+    * index refreshes, fused legs) — and a watchdog cancels the group at
+    * the deadline and the call surfaces [[velesql.TimeoutError]]. Without
+    * the option this is a plain compile and collect. */
   def collect(query: String, params: Map[String, Any] = Map.empty,
       fixedNowEpoch: Option[Long] = None): Array[org.apache.spark.sql.Row] = {
     val timeoutMs = parse(query).select
       .flatMap(_.withOptions.get("timeout_ms")).map(_.toDouble.toLong)
-    val df = sql(query, params, fixedNowEpoch)
+    def run = sql(query, params, fixedNowEpoch).collect()
     timeoutMs match {
-      case None => df.collect()
-      case Some(ms) => Graft.withTimeout(spark, ms)(df.collect())
+      case None => run
+      case Some(ms) => Graft.withTimeout(spark, ms)(run)
     }
   }
 }

@@ -257,15 +257,8 @@ object Materialize {
     val prefix = keyPrefix(kind, token)
     val parent = current.getParent
     if (parent == null || !Files.exists(parent)) return
-    val s = Files.list(parent)
-    val stale = try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(prefix) &&
-          p.getFileName.toString != key &&
-          !p.getFileName.toString.contains(".tmp-"))
-        .toSeq
-    } finally s.close()
+    val stale = entries(parent).filter(p => p.getFileName.toString.startsWith(prefix) &&
+      p.getFileName.toString != key && !p.getFileName.toString.contains(".tmp-"))
     stale.sortBy(p => Files.getLastModifiedTime(p).toMillis)
       .dropRight(1) // newest other generation survives one more build
       .foreach(Collections.deleteRec)
@@ -292,9 +285,11 @@ object Materialize {
     * could prune each other's LIVE generations as stale; r15 review
     * finding). The digit counts pin the boundaries unambiguously. */
   private def keyPrefix(kind: String, token: String): String = {
-    val t = token.replaceAll("[^A-Za-z0-9._-]", "_")
+    val t = sanitized(token)
     s"v4_${kind.length}k${kind}_${t.length}t${t}__"
   }
+
+  private def sanitized(token: String): String = token.replaceAll("[^A-Za-z0-9._-]", "_")
 
   private def cacheKey(kind: String, token: String,
       sources: Seq[Path], extraStamp: Option[String] = None): String = {
@@ -364,15 +359,9 @@ object Materialize {
           }
           // retire superseded stamps of the same (kind, token) — each is
           // ~20 bytes, but a long-lived serving process publishes forever
-          val s = Files.list(dir)
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala
-              .filter(p => p.getFileName.toString.startsWith(keyPrefix(kind, token)) &&
-                p.getFileName.toString != key &&
-                !p.getFileName.toString.contains(".tmp-"))
-              .foreach(p => Files.deleteIfExists(p))
-          } finally s.close()
+          entries(dir).filter(p => p.getFileName.toString.startsWith(keyPrefix(kind, token)) &&
+            p.getFileName.toString != key && !p.getFileName.toString.contains(".tmp-"))
+            .foreach(p => Files.deleteIfExists(p))
           n
         }
         memoCache.put(prefix, (key, v))
@@ -393,31 +382,63 @@ object Materialize {
   def retireKinds(token: String, note: String)(
       pred: String => Boolean): Unit =
     retiredSweeps.getOrElseUpdate(s"$note|$token", {
-      val t = token.replaceAll("[^A-Za-z0-9._-]", "_")
-      val tokSeg = s"_${t.length}t${t}__"
-      val root = derived
-      if (Files.exists(root)) {
-        val s = Files.list(root)
-        val stale = try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith("v4_") && n.contains(tokSeg) &&
-              !n.contains(".tmp-") && {
-                val rest = n.drop(3) // <len>k<kind>_...
-                val digits = rest.takeWhile(_.isDigit)
-                digits.nonEmpty && digits.length <= 4 && {
-                  val len = digits.toInt
-                  val after = rest.drop(digits.length)
-                  after.length > len + 1 && after.startsWith("k") &&
-                    pred(after.substring(1, 1 + len))
-                }
-              }
-          }.toSeq
-        } finally s.close()
-        stale.foreach(Collections.deleteRec)
-      }
+      entries(derived).filter(p => keyParts(p.getFileName.toString).exists {
+        case (kind, t) => t == sanitized(token) && pred(kind) }).foreach(Collections.deleteRec)
     })
+
+  /** Reclaims everything kept for `token`, a source that no longer exists
+    * (a dropped collection): every artifact dir and count sidecar keyed by
+    * it, and its [[memo]], [[countMemo]], [[readMemo]] and listing-cache
+    * entries. In-flight temp dirs are left to the builds that own them. */
+  def reclaim(token: String): Unit = {
+    def ours(name: String) = keyParts(name).exists(_._2 == sanitized(token))
+    memoCache.filterInPlace { case (_, (key, _)) => !ours(key) }
+    buildLocks.filterInPlace { case (key, _) => !ours(key) }
+    readCache.synchronized {
+      readCache.values().forEach { m =>
+        m.filterInPlace { case (key, _) => !key.split("\n").exists(d =>
+          Option(Paths.get(d).getFileName).exists(f => ours(f.toString))) }
+        ()
+      }
+    }
+    (entries(derived) ++ entries(derived.resolve("counts")))
+        .filter(p => ours(p.getFileName.toString)).foreach { p =>
+      org.apache.spark.sql.graft.ImmutableDirScan.forget(p.toString)
+      Collections.deleteRec(p)
+    }
+  }
+
+  /** The (kind, sanitized token) of a v4 cache key or sidecar name —
+    * `v4_<len>k<kind>_<len>t<token>__<stamp>`; the length prefixes make
+    * the split unambiguous. None for any other name and for temp dirs. */
+  private def keyParts(name: String): Option[(String, String)] = {
+    def field(s: String, tag: Char): Option[(String, String)] = {
+      val digits = s.takeWhile(_.isDigit)
+      if (digits.isEmpty || digits.length > 4) None
+      else {
+        val len = digits.toInt
+        val after = s.drop(digits.length)
+        if (after.length > len && after.head == tag) Some(after.substring(1, 1 + len) ->
+          after.drop(1 + len))
+        else None
+      }
+    }
+    if (!name.startsWith("v4_") || name.contains(".tmp-")) None
+    else for {
+      (kind, r1) <- field(name.drop(3), 'k') if r1.startsWith("_")
+      (token, r2) <- field(r1.drop(1), 't') if r2.startsWith("__")
+    } yield kind -> token
+  }
+
+  private def entries(dir: Path): Seq[Path] =
+    if (!Files.exists(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.toSeq
+      } finally s.close()
+    }
 
   /** Test hook: evict a countMemo's in-memory entry so specs can
     * exercise the persisted-sidecar path (fresh-JVM simulation). */

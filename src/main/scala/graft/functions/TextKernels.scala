@@ -99,4 +99,63 @@ object TextKernels {
       i += 1
     }
   }
+
+  /** The BM25 tokens of an already lower-cased text under the reference
+    * tokenizer (bm25.rs:114-120): maximal runs of `[a-z0-9]` of at least
+    * two chars, every other byte separating (a multi-byte UTF-8 char has
+    * no byte in that range). Counts each of `terms` into `tf` and
+    * returns the token count — one pass, no token array. */
+  def bm25Counts(lowered: UTF8String, terms: Array[Array[Byte]], tf: Array[Int]): Int = {
+    java.util.Arrays.fill(tf, 0)
+    val base = lowered.getBaseObject
+    val off = lowered.getBaseOffset
+    val n = lowered.numBytes
+    def tokenByte(i: Int): Boolean = {
+      val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+      (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
+    }
+    var dlen = 0
+    var i = 0
+    while (i < n) {
+      while (i < n && !tokenByte(i)) i += 1
+      val start = i
+      while (i < n && tokenByte(i)) i += 1
+      val len = i - start
+      if (len > 1) {
+        dlen += 1
+        var t = 0
+        while (t < terms.length) {
+          val term = terms(t)
+          if (term.length == len) {
+            var j = 0
+            while (j < len && org.apache.spark.unsafe.Platform.getByte(base, off + start + j) ==
+                term(j)) j += 1
+            if (j == len) tf(t) += 1
+          }
+          t += 1
+        }
+      }
+    }
+    dlen
+  }
+
+  /** A row's BM25 score: Σ over `terms`, in order, of
+    * idf · (tf · (k1 + 1)) / (tf + k1 · (1 − b + b · dlen / avgdl)),
+    * `stats` = (avgdl, idf of each term). The operations and their order
+    * are those of the Column formula this replaces, so scores are equal
+    * bit for bit; a text holding no term scores 0.0. */
+  def bm25Score(lowered: UTF8String, terms: Array[Array[Byte]], stats: Array[Double],
+      k1: Double, b: Double): Double = {
+    val tf = new Array[Int](terms.length)
+    val dlen = bm25Counts(lowered, terms, tf).toDouble
+    var s = 0.0
+    var t = 0
+    while (t < terms.length) {
+      val f = tf(t).toDouble
+      val c = stats(1 + t) * (f * (k1 + 1.0)) / (f + k1 * (1.0 - b + b * dlen / stats(0)))
+      s = if (t == 0) c else s + c
+      t += 1
+    }
+    s
+  }
 }

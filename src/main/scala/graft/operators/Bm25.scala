@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.functions.TextKernels
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Bm25Score, Bridge}
 
 /** BM25 full-text scoring (SURVEY.md §2.9 T1).
   *
@@ -13,12 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Distributed shape, query time ([[scoreColumns]]): one aggregate job
   * folds (N, Σ dlen, df per query term) per partition and sums the
-  * partials on the driver — no shuffle. The stats become literals of a
-  * per-row score expression over the row's own token array, so a ranked
-  * top-k is one scan plus TakeOrderedAndProject: no shuffle, no join
-  * back for the payload. Batch-built shape ([[buildIndex]],
-  * [[materializedIndex]]): posting lists + doc stats as tables, scored by
-  * joining the query-term-pruned postings against the doc-length side.
+  * partials on the driver — no shuffle. The stats ride a per-row score
+  * kernel over the row's own text (`Bm25Score`, one tokenizing pass, no
+  * token array), so a ranked top-k is one scan plus
+  * TakeOrderedAndProject: no shuffle, no join back for the payload.
+  * Batch-built shape ([[buildIndex]], [[materializedIndex]]): posting
+  * lists + doc stats as tables, scored by joining the query-term-pruned
+  * postings against the doc-length side.
   */
 object Bm25 {
 
@@ -45,42 +48,42 @@ object Bm25 {
     * ([[corpusStats]]), so the columns apply to `docs` or to any frame
     * filtered from it that still carries `textCol`, and score it with
     * the stats of `docs`. A row holding no query term has match = false
-    * and score = 0.0. tf and dlen read the row's own token array. */
+    * and score = 0.0. tf and dlen come from the row's own text, and the
+    * stats are not literals of the plan, so a new query compiles no new
+    * code. */
   def scoreColumns(docs: DataFrame, queryText: String,
       textCol: String = "text"): (Column, Column) = {
     val terms = queryTerms(queryText)
-    val tok = tokenArray(col(textCol))
+    val lowered = lower(coalesce(col(textCol), lit("")))
     val (n, avgdl, dfs) =
-      if (terms.isEmpty) (0L, 0.0, Nil) else corpusStats(docs, tok, terms)
+      if (terms.isEmpty) (0L, 0.0, Nil) else corpusStats(docs, lowered, terms)
     // a term no doc of `docs` holds adds 0.0 to every score: drop it
     val live = terms.zip(dfs).filter(_._2 > 0)
     if (live.isEmpty) return (lit(0.0), lit(false))
-    val dlen = size(tok)
-    val score = live.map { case (t, df) =>
-      val tf = dlen - size(array_remove(tok, t))
-      val idf = log((lit(n) - df + 0.5) / (lit(df) + 0.5) + 1.0)
-      idf * (tf * (lit(K1) + 1.0)) /
-        (tf + lit(K1) * (lit(1.0) - B + lit(B) * dlen / avgdl))
-    }.reduce(_ + _)
-    val hit = matches(col(textCol), live.map(_._1))
-    (when(hit, score).otherwise(lit(0.0)), hit)
+    // Spark's `log` is StrictMath.log
+    val idf = live.map { case (_, df) => StrictMath.log((n - df + 0.5) / (df + 0.5) + 1.0) }
+    val score = Bridge.column(Bm25Score(Bridge.expression(lowered),
+      live.map(_._1.getBytes("UTF-8")).toArray, (avgdl +: idf).toArray, K1, B))
+    // every term a row holds adds a positive score
+    (score, score > 0.0)
   }
 
   /** (N, avgdl, df per term) of `docs`, N and avgdl over docs with at
     * least one token. One job: each partition folds its rows into a
     * count vector and the driver sums them, so nothing shuffles. */
-  private def corpusStats(docs: DataFrame, tok: Column,
+  private def corpusStats(docs: DataFrame, lowered: Column,
       terms: Seq[String]): (Long, Double, Seq[Long]) = {
     val nt = terms.size
-    val acc = docs.select(size(tok) +: terms.map(t => array_contains(tok, t).cast("int")): _*)
-      .queryExecution.toRdd
+    val termBytes = terms.map(_.getBytes("UTF-8")).toArray
+    val tf = new Array[Int](nt)
+    val acc = docs.select(lowered).queryExecution.toRdd
       .aggregate(new Array[Long](nt + 2))(
         (a, r) => {
-          val dl = r.getInt(0)
+          val dl = TextKernels.bm25Counts(r.getUTF8String(0), termBytes, tf)
           if (dl > 0) {
             a(0) += 1; a(1) += dl
             var i = 0
-            while (i < nt) { a(2 + i) += r.getInt(1 + i); i += 1 }
+            while (i < nt) { if (tf(i) > 0) a(2 + i) += 1; i += 1 }
           }
           a
         },

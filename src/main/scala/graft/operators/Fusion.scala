@@ -1,15 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.CandidateLegs
+import org.apache.spark.sql.types.StructField
 
 /** The one ranked-merge kernel (SURVEY.md §2.8, F1–F4): the F1–F4 rows,
-  * VelesQL hybrid and NEAR_FUSED `rrf`/`weighted` fuse their legs here,
-  * as one lazy `unionAll` + `groupBy(id)` (planning runs no Spark job).
-  * A leg is an (id, `score`) frame cut to its top K rows ([[leg]],
-  * `Knn.topK`, `Bm25.searchIndex`), its id first under any name. A fused
-  * frame is (id, `score`), the id named as in the first leg. */
+  * q124's ranked predictions, VelesQL hybrid and NEAR_FUSED
+  * `rrf`/`weighted` rank and fuse their legs here, on the driver, as
+  * VelesDB fuses in memory (text.rs:113-203, strategy.rs:224-250). A leg
+  * is the ≤ K (id, score) rows of one score over a frame, collected when
+  * the query is planned: the legs over one frame share ONE Spark job
+  * ([[legs]]), and the fused list is a [[Ranked]] (id named as in the
+  * first leg) that callers turn into a local relation or a payload
+  * filter. So planning a fused query runs its leg jobs, as planning a
+  * BM25 MATCH runs its stats job, and executing it runs no rank window,
+  * no union and no aggregate. */
 object Fusion {
 
   /** Each strategy's options and defaults; `hybrid` is text + vector RRF
@@ -43,45 +48,77 @@ object Fusion {
     p
   }
 
-  /** The top `k` rows of `df` by `score` (descending when
-    * `higherIsBetter`), ties by ascending id: one TakeOrderedAndProject. */
+  /** A ranked candidate list: (id, `score`) rows, best first, the ids in
+    * Spark's internal form; `id` names and types them. A leg is the top K
+    * rows of a frame by one score ([[legs]]); a fused list is the merge of
+    * legs (best = score descending, ties by id). */
+  final case class Ranked(id: StructField, rows: CandidateLegs.Rows) {
+    /** The list as a local relation (id, `score`). */
+    def toDF(spark: SparkSession): DataFrame = CandidateLegs.frame(spark, id, rows)
+    /** The ids as Scala values, best first. */
+    def ids: Seq[Any] = CandidateLegs.external(id.dataType, rows.map(_._1))
+    def take(n: Int): Ranked = copy(rows = rows.take(n))
+  }
+
+  /** The top `k` rows of `df` by each `(score, higherIsBetter)`, ties by
+    * ascending id: one [[Ranked]] leg per score, ALL from one Spark job
+    * over one scan of `df` ([[CandidateLegs.topK]]). A row whose score is
+    * null ranks in no leg. */
+  def legs(df: DataFrame, id: Column, scores: Seq[(Column, Boolean)], k: Int): Seq[Ranked] = {
+    val (f, ranked) = CandidateLegs.topK(df, id, scores, k)
+    ranked.map(Ranked(f, _))
+  }
+
+  /** One leg: the top `k` rows of `df` by `score`. */
   def leg(df: DataFrame, id: Column, score: Column, k: Int,
-      higherIsBetter: Boolean = true): DataFrame = {
-    val l = df.select(id, score.as("score"))
-    l.orderBy(order(higherIsBetter), col(l.columns.head)).limit(k)
-  }
+      higherIsBetter: Boolean = true): Ranked =
+    legs(df, id, Seq(score -> higherIsBetter), k).head
 
-  /** (id, `rank`): each leg row's 1-based rank by score, ties by id. The
-    * window key `pmod(hash(id), 1)` is 0 for every row but not foldable,
-    * so the partition spec survives (`lit(0)` folds into an unpartitioned
-    * global window); over a leg's K rows one partition costs nothing. */
-  def rank(leg: DataFrame, higherIsBetter: Boolean = true): DataFrame = {
-    val id = col(leg.columns.head)
-    leg.select(id, row_number().over(Window.partitionBy(pmod(hash(id), lit(1)))
-      .orderBy(order(higherIsBetter), id)).as("rank"))
-  }
+  /** The rows of `df` whose `id` is a `fused` id, each with its fused
+    * `score`: an `id IN (…)` filter and a literal score lookup over one
+    * scan of `df`, no join. */
+  def payload(df: DataFrame, id: Column, fused: Ranked): DataFrame =
+    CandidateLegs.payload(df, id, fused.id.dataType, fused.rows)
 
-  /** F1 RRF (strategy.rs:224-250): Σ w / (k + rank) over the ranked legs
-    * a row appears in, each leg with its weight w. */
-  def rrf(ranked: Seq[(DataFrame, Double)], k: Double): DataFrame =
-    fuse(ranked.map { case (r, w) =>
-      r.select(col(r.columns.head), col("rank"), lit(w).as("w"))
-    })(sum(col("w") / (lit(k) + col("rank"))))
+  /** F1 RRF (strategy.rs:224-250): Σ w / (k + rank) over the legs a row
+    * appears in, each leg with its weight w; rank is 1-based. */
+  def rrf(ranked: Seq[(Ranked, Double)], k: Double): Ranked =
+    fuse(ranked.map(_._1))(_.foldLeft(0.0) { case (s, (leg, rank, _)) =>
+      s + ranked(leg)._2 / (k + rank) })
 
   /** F2: the mean / the max score over the legs a row appears in
     * (strategy.rs:170-221). */
-  def average(legs: Seq[DataFrame]): DataFrame = fuse(legs)(avg(col("score")))
-  def maximum(legs: Seq[DataFrame]): DataFrame = fuse(legs)(max(col("score")))
+  def average(legs: Seq[Ranked]): Ranked = fuse(legs)(mean)
+  def maximum(legs: Seq[Ranked]): Ranked = fuse(legs)(top)
 
   /** F3 (strategy.rs:67-78): aw × mean + mw × max + hw × legs holding the
     * row / legs. */
-  def weighted(legs: Seq[DataFrame], aw: Double, mw: Double, hw: Double): DataFrame =
-    fuse(legs)(lit(aw) * avg(col("score")) + lit(mw) * max(col("score"))
-      + lit(hw) * (count(lit(1)) / lit(legs.size.toDouble)))
+  def weighted(legs: Seq[Ranked], aw: Double, mw: Double, hw: Double): Ranked =
+    fuse(legs)(p => aw * mean(p) + mw * top(p) + hw * (p.size.toDouble / legs.size))
 
-  private def order(higherIsBetter: Boolean): Column =
-    if (higherIsBetter) col("score").desc else col("score").asc
+  /** (leg index, 1-based rank, score) of each appearance of one id. */
+  private type Parts = Seq[(Int, Int, Double)]
 
-  private def fuse(legs: Seq[DataFrame])(score: Column): DataFrame =
-    legs.reduce(_ unionAll _).groupBy(legs.head.columns.head).agg(score.as("score"))
+  /** Spark's `avg`: a 0.0-seeded sum over the count. */
+  private def mean(p: Parts): Double = p.foldLeft(0.0)(_ + _._3) / p.size
+
+  /** Spark's `max` over doubles: NaN is greatest, −0.0 equals 0.0 and the
+    * first of equal values stays. */
+  private def top(p: Parts): Double = p.map(_._3).reduce { (m, x) =>
+    if (x != m && java.lang.Double.compare(x, m) > 0) x else m }
+
+  /** Groups every leg row by id — duplicate rows of a leg count twice, as
+    * under `unionAll` + `groupBy` — scores each group with `score` and
+    * ranks the result best first. */
+  private def fuse(legs: Seq[Ranked])(score: Parts => Double): Ranked = {
+    require(legs.nonEmpty, "fusion needs at least one leg")
+    val idType = legs.head.id.dataType
+    legs.foreach(l => require(l.id.dataType == idType,
+      s"fused legs disagree on the id type: ${l.id.dataType} vs $idType"))
+    val byId = scala.collection.mutable.LinkedHashMap.empty[Any, List[(Int, Int, Double)]]
+    for ((l, li) <- legs.zipWithIndex; ((id, s), r) <- l.rows.zipWithIndex)
+      byId(id) = (li, r + 1, s) :: byId.getOrElse(id, Nil)
+    Ranked(legs.head.id, CandidateLegs.best(idType,
+      byId.iterator.map { case (id, ps) => id -> score(ps.reverse) }.toSeq))
+  }
 }

@@ -25,12 +25,13 @@ object Knn {
     df.withColumn("score", fn(col(vecCol), VectorFunctions.vecLit(query)))
   }
 
-  /** Exact top-k by metric direction, deterministic tie-break on `idCol`. */
+  /** Exact top-k by metric direction, deterministic tie-break on `idCol`.
+    * A row without a vector has no score and never ranks. */
   def topK(df: DataFrame, vecCol: String, query: Seq[Float], k: Int,
       metric: String = "cosine", idCol: String = "id",
       filter: Option[Column] = None): DataFrame = {
     val (_, higherIsBetter) = VectorFunctions.metrics(metric)
-    val base = filter.map(df.where).getOrElse(df)
+    val base = filter.map(df.where).getOrElse(df).where(col(vecCol).isNotNull)
     val s = scored(base, vecCol, query, metric)
     val ord = if (higherIsBetter) col("score").desc else col("score").asc
     s.orderBy(ord, col(idCol).asc).limit(k)

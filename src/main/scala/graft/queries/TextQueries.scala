@@ -199,17 +199,19 @@ object TextQueries {
          |  SELECT doc_id, rnk, 0.5 AS w FROM bmr
          |  UNION ALL SELECT doc_id, rnk, 0.5 AS w FROM vec)
          |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin) { (s, d) =>
-      // legs are already limited to top-50 (TakeOrderedAndProject); the
-      // rank window runs over those 50 rows only (Fusion.rank)
-      val q = graft.functions.VectorFunctions.syntheticQuery(64)
-      val bmLeg = bm25Idx(s, d, Seq("spark", "join", "filter"), 50)
-      val vecLeg = graft.operators.Knn
-        .topK(t(s, d, "embeddings"), "embedding", q, 50, "cosine", idCol = "vec_id")
-        .select(col("vec_id").as("doc_id"), col("score"))
-      graft.operators.Graph.pinIfSmall(
-        Fusion.rrf(Seq(Fusion.rank(bmLeg) -> 0.5, Fusion.rank(vecLeg) -> 0.5), 60)
-          .orderBy(col("score").desc, col("doc_id")).limit(10),
-        probe = graft.operators.Bm25.indexFor(s, d).postings)
+      // each top-50 leg is collected on its own (the BM25 leg reads the
+      // posting tables, the vector leg the embeddings scan), then ranked
+      // and fused on the driver. The BM25 leg's broadcast-hinted joins
+      // and aggregates pin static at this size (no AQE stage jobs).
+      import graft.functions.VectorFunctions
+      val q = VectorFunctions.syntheticQuery(64)
+      val bmLeg = Fusion.leg(graft.operators.Graph.pinIfSmall(
+          bm25Idx(s, d, Seq("spark", "join", "filter"), 0),
+          probe = graft.operators.Bm25.indexFor(s, d).postings),
+        col("doc_id"), col("score"), 50)
+      val vecLeg = Fusion.leg(t(s, d, "embeddings"), col("vec_id").as("doc_id"),
+        VectorFunctions.cosine_sim(col("embedding"), VectorFunctions.vecLit(q)), 50)
+      Fusion.rrf(Seq(bmLeg -> 0.5, vecLeg -> 0.5), 60).take(10).toDF(s)
     },
 
     // ---- Text analysis: language-ID heuristic (stopword ratio over

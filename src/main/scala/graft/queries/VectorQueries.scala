@@ -40,12 +40,11 @@ object VectorQueries {
   private val q64c: Seq[Float] = (0 until 64).map(i => (math.sin(i * 1.3 + 0.5) * 0.3).toFloat)
 
   private val E = "CAST(embedding AS DOUBLE[])"
-  /** F2/F3 rows' legs: the cosine top-20 of `q64` and of `q64b`. */
-  private def twoLegs(s: SparkSession, d: String): Seq[DataFrame] = {
-    val emb = t(s, d, "embeddings")
-    Seq(q64, q64b).map(q =>
-      Knn.topK(emb, "embedding", q, 20, "cosine", idCol = "vec_id").select("vec_id", "score"))
-  }
+  /** F2/F3 rows' legs: the cosine top-20 of `q64` and of `q64b`, both
+    * from one scan. */
+  private def twoLegs(s: SparkSession, d: String): Seq[Fusion.Ranked] =
+    Fusion.legs(t(s, d, "embeddings"), col("vec_id"), Seq(q64, q64b).map(q =>
+      VectorFunctions.cosine_sim(col("embedding"), VectorFunctions.vecLit(q)) -> true), 20)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -260,13 +259,13 @@ object VectorQueries {
          |SELECT vec_id, sum(1.0 / (60 + rnk)) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      // top-20 per leg via TakeOrderedAndProject FIRST, then rank the
-      // 20-row result — the r1 global rank window over every row is gone
-      def leg(metric: String): (DataFrame, Double) = Fusion.rank(
-        Knn.topK(emb, "embedding", q64, 20, metric, idCol = "vec_id").select("vec_id", "score"),
-        VectorFunctions.metrics(metric)._2) -> 1.0
-      Fusion.rrf(Seq(leg("cosine"), leg("dot")), 60)
+      // both top-20 legs from one scan, ranked and fused on the driver
+      def leg(metric: String): (Column, Boolean) = {
+        val (fn, hib) = VectorFunctions.metrics(metric)
+        fn(col("embedding"), VectorFunctions.vecLit(q64)) -> hib
+      }
+      Fusion.rrf(Fusion.legs(t(s, d, "embeddings"), col("vec_id"),
+        Seq(leg("cosine"), leg("dot")), 20).map(_ -> 1.0), 60).toDF(s)
     },
 
     // ---- F2: average fusion (mean of per-leg scores where doc appears —
@@ -282,7 +281,7 @@ object VectorQueries {
          |SELECT vec_id, avg(score) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      Fusion.average(twoLegs(s, d))
+      Fusion.average(twoLegs(s, d)).toDF(s)
     },
 
     // ---- F2: maximum fusion (strategy.rs:205-221)
@@ -297,7 +296,7 @@ object VectorQueries {
          |SELECT vec_id, max(score) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      Fusion.maximum(twoLegs(s, d))
+      Fusion.maximum(twoLegs(s, d)).toDF(s)
     },
 
     // ---- F3: weighted fusion — avg_w·avg + max_w·max + hit_w·(hits/legs),
@@ -314,7 +313,7 @@ object VectorQueries {
          |  0.5 * avg(score) + 0.3 * max(score) + 0.2 * (count(*) / 2.0) AS score
          |FROM (SELECT * FROM la UNION ALL SELECT * FROM lb)
          |GROUP BY vec_id""".stripMargin) { (s, d) =>
-      Fusion.weighted(twoLegs(s, d), 0.5, 0.3, 0.2)
+      Fusion.weighted(twoLegs(s, d), 0.5, 0.3, 0.2).toDF(s)
     },
 
     // ---- V6: NEAR_FUSED multi-vector — exact mode scores EVERY row per
@@ -389,23 +388,25 @@ object VectorQueries {
     }) { (s, d) =>
       import graft.operators.Metrics
       val emb = t(s, d, "embeddings")
-      def pred(q: Seq[Float], qid: Int): DataFrame =
-        Fusion.rank(Knn.topK(emb, "embedding", q, 10, "cosine", idCol = "vec_id")
-            .select("vec_id", "score"))
-          .select(lit(qid).as("query_id"), col("vec_id").as("doc_id"), col("rank"))
+      // preds: both queries' ranked cosine top-10 from one scan, as rows
+      // (query_id, doc_id, 1-based rank)
+      val preds = s.createDataFrame(Fusion.legs(emb, col("vec_id"), Seq(q64, q64b).map(q =>
+          VectorFunctions.cosine_sim(col("embedding"), VectorFunctions.vecLit(q)) -> true), 10)
+        .zipWithIndex.flatMap { case (leg, qid) =>
+          leg.ids.zipWithIndex.map { case (id, r) => (qid, id.asInstanceOf[Long], r + 1) }
+        }).toDF("query_id", "doc_id", "rank")
       def rel(q: Seq[Float], qid: Int): DataFrame =
         Knn.topK(emb, "embedding", q, 15, "cosine", idCol = "vec_id",
             filter = Some(col("label") <= 4))
           .select(lit(qid).as("query_id"), col("vec_id").as("doc_id"))
       // Eager localCheckpoint on TRUTH only: it is read twice inside
-      // the report plan (the marked join + the n_rel agg). preds is
-      // consumed once, so its two top-k scans stay in-plan. cache()
+      // the report plan (the marked join + the n_rel agg). preds is a
+      // local relation already. cache()
       // would leak entries into the shared session's cache registry for
       // the rest of a CORRECTNESS run; checkpoint blocks (20 rows) are
       // freed by the ContextCleaner once the returned frame is
       // unreferenced. All five metrics then come from ONE plan
       // (retrievalReport) instead of five cross-joined agg subtrees.
-      val preds = pred(q64, 0).unionAll(pred(q64b, 1))
       val truth = rel(q64, 0).unionAll(rel(q64b, 1)).localCheckpoint(true)
       Metrics.retrievalReport(preds, truth, 10)
     },

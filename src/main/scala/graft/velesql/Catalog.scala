@@ -126,7 +126,7 @@ class Catalog(spark: SparkSession, val dir: String) {
       else None // derived frames: no stable file to stamp
     else if (userCollections.exists(name))
       userCollections.pointsRealPath(name).map(p =>
-        graft.IndexSource(s"${dir}_col_$name", name, Seq(p),
+        graft.IndexSource(graft.Collections.indexToken(dir, name), name, Seq(p),
           Seq(userCollections.ensureIndexEpochFile(name)),
           userCollections.pieces(name), () => table(name)))
     else None

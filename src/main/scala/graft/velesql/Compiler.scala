@@ -42,18 +42,9 @@ class Compiler(
   private val NearDefaultLimit = 10
   /** Per-leg candidate pool for candidate-leg fusion (hybrid, NEAR_FUSED
     * rrf/weighted). The reference fetches a bounded candidate set per leg
-    * (text.rs:133-134); ranking only the top-K per leg keeps the rank
-    * window over K rows instead of single-tasking the whole collection.
-    * Every such query shares one epilogue (`withPayload` in
-    * compileSelect): the fused (id, score) frame joins back to the
-    * filtered frame for its payload, or skips the join when the query
-    * reads only id and score.
-    * Join-back note (measured, r5): the fused leg frames are
-    * ≤2×CandidateK rows, but broadcast-hinting their join back to the
-    * collection is consistently a bit SLOWER in local mode (driver
-    * round-trip beats nothing when the "shuffle" is in-process, and the
-    * hint overrides AQE). On a real cluster the broadcast shape wins —
-    * one-line hint, revisit there. */
+    * (text.rs:133-134); each leg is collected as ≤ K rows and ranked and
+    * fused on the driver (operators.Fusion). Every such query shares one
+    * epilogue (`withPayload` in compileSelect). */
   private val CandidateK = 2000
   /** NEAR_FUSED takes ≤10 vectors (SURVEY V6), one candidate leg each. */
   private val MaxFusedVectors = 10
@@ -272,12 +263,17 @@ class Compiler(
     var residualApplied = false
     var scoredTm: Option[(TextMatch, Column)] = None
 
-    // The epilogue of every candidate-leg fusion: join the fused (__fid,
-    // score) frame back to the filtered frame its legs drew from, for the
-    // payload. Leg ids ⊆ that frame's ids, so a query reading only id and
-    // score skips the join (r6 verdict #5; ~25% off q104 at sf0.1).
+    // The epilogue of every candidate-leg fusion. The fused rows are
+    // known on the driver: a query reading only id and score returns them
+    // as a local relation (leg ids ⊆ the filtered frame's ids; r6 verdict
+    // #5), and any other query fetches their payload from the filtered
+    // frame its legs drew from by an `id IN (fused ids)` filter and a
+    // literal score lookup — no join, no broadcast job. A query that ends
+    // in the default ranked top L (no ORDER BY, grouping or DISTINCT)
+    // fetches only the fused top L + OFFSET ids: its final (score desc,
+    // id) top L holds no other id.
     val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
-    def withPayload(filtered: DataFrame, fused: DataFrame): DataFrame = {
+    def withPayload(filtered: DataFrame, fused: Fusion.Ranked): DataFrame = {
       val idScoreOnly = (sel.selectList match {
         case SelectItems(items) => items.forall {
           case Left(ColumnItem(n, _)) => n == meta.idCol || n == "score"
@@ -288,8 +284,14 @@ class Compiler(
         case OrderByColumn(n) => n == meta.idCol || n == "score"
         case _ => false
       }) && sel.groupBy.isEmpty
-      if (idScoreOnly) fused.select(col("__fid").as(meta.idCol), col("score"))
-      else filtered.join(fused, filtered(meta.idCol) === col("__fid")).drop("__fid")
+      val rankedTop = sel.orderBy.isEmpty && sel.groupBy.isEmpty && !sel.distinct &&
+        (sel.selectList match {
+          case SelectItems(items) => items.forall(_.isLeft)
+          case SelectAll => true
+        })
+      if (idScoreOnly) fused.toDF(spark)
+      else Fusion.payload(filtered, col(meta.idCol), if (!rankedTop) fused else fused.take(
+        math.min(sel.limit.getOrElse(NearDefaultLimit), LimitCap) + sel.offset.getOrElse(0)))
     }
 
     // score column (reference score conventions: W1/V2/S6)
@@ -309,26 +311,29 @@ class Compiler(
           case Some(c) => residualApplied = true; df.where(compileCond(c, df, meta))
           case None => df
         }
-        val vLeg = Fusion.leg(dfH, col(meta.idCol).as("__fid"), sim, kCand, hib)
         // text leg: corpus-wide BM25 stats (over `df`, not q61's filtered
         // ones: the reference's hybrid_search_with_filter ranks against the
         // global text index, text.rs:221-280), top-kCand over the FILTERED
         // doc set, so a selective filter can't starve the leg.
         val qtext = hybridText.get.query
-        val tLeg = bm25Index(sel, meta) match {
-          case Some(idx) if residualApplied =>
-            Fusion.leg(Bm25.searchIndex(idx, qtext)
-              .join(dfH.select(col(meta.idCol).as("__fsel")),
-                col("doc_id") === col("__fsel"), "left_semi"),
-              col("doc_id"), col("score"), kCand)
-          case Some(idx) => Bm25.searchIndex(idx, qtext, kCand)
+        val id = col(meta.idCol)
+        val (vLeg, tLeg) = bm25Index(sel, meta) match {
+          case Some(idx) =>
+            // an index leg reads its own plan: collected on its own
+            val scores = Bm25.searchIndex(idx, qtext)
+            val tFrame = if (!residualApplied) scores
+              else scores.join(dfH.select(id.as("__fsel")),
+                col("doc_id") === col("__fsel"), "left_semi")
+            (Fusion.leg(dfH, id, sim, kCand, hib),
+              Fusion.leg(tFrame, col("doc_id"), col("score"), kCand))
           case None =>
-            // per-row scores: one scan + TakeOrderedAndProject, no shuffle
+            // per-row scores: both legs from one scan of dfH, one job; a
+            // row holding no query term has a null text score
             val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
-            Fusion.leg(dfH.where(hit), col(meta.idCol).as("doc_id"), score, kCand)
+            val Seq(v, t) = Fusion.legs(dfH, id, Seq(sim -> hib, when(hit, score) -> true), kCand)
+            (v, t)
         }
-        withPayload(dfH, Fusion.rrf(Seq(Fusion.rank(vLeg, hib) -> w,
-          Fusion.rank(tLeg) -> (1.0 - w)), fusionOpts("k")))
+        withPayload(dfH, Fusion.rrf(Seq(vLeg -> w, tLeg -> (1.0 - w)), fusionOpts("k")))
       case Some(VectorNear(v)) =>
         val vec = vecOf(v)
         val (fn, hib) = VectorFunctions.metrics(meta.metric)
@@ -359,7 +364,9 @@ class Compiler(
           residualCond.fold(idx)(c => idx.where(compileCond(c, idx, meta)))
             .where(col(key).isin(probes: _*)).drop(key)
         }
-        val dfF = opts.probe match {
+        // a point without a vector has no score and never ranks, on every
+        // tier (the IVF cells never hold one)
+        val dfF = (opts.probe match {
           case Some(t) if opts.index.exists(Set("ivf", "hnsw")) =>
             // The trained IVF cells: `index = 'ivf'` probes them, and
             // partitioned HNSW (native_index.rs:230) routes through the
@@ -422,7 +429,7 @@ class Compiler(
                   .isin(probes: _*))
             }
           case None => dfF0
-        }
+        }).where(col(vcolName).isNotNull)
         // Three quantization regimes (QuantizationMode, with_clause.rs:12-22):
         //   binary/dual/hybrid (+ bare rerank=true) → sketch prefilter,
         //     exact rerank (Dual: "int8 for candidates, f32 for rerank");
@@ -535,22 +542,23 @@ class Compiler(
         val vcol = col(meta.vectorCol.getOrElse(fail("NEAR_FUSED needs a vector column")))
         val sims = vecs.map(v => fn(vcol, VectorFunctions.vecLit(v)))
         // filter-then-search, same contract as plain NEAR: candidate legs
-        // draw from the WHERE-filtered frame (vector.rs:164-239)
-        val dfF = residualCond match {
+        // draw from the WHERE-filtered frame (vector.rs:164-239), and a
+        // point without a vector never ranks
+        val dfF = (residualCond match {
           case Some(c) => residualApplied = true; df.where(compileCond(c, df, meta))
           case None => df
-        }
+        }).where(vcol.isNotNull)
         // rrf and weighted fuse one candidate-K leg per vector (the
-        // bounded fetch of hybrid); average and maximum score every row
-        def legs = sims.map(Fusion.leg(dfF, col(meta.idCol).as("__fid"), _, kCand, hib))
+        // bounded fetch of hybrid), all from one scan; average and
+        // maximum score every row
+        def legs = Fusion.legs(dfF, col(meta.idCol), sims.map(_ -> hib), kCand)
         fusionStrategy match {
           case "average" =>
             dfF.withColumn("score", sims.reduce(_ + _) / lit(sims.size.toDouble))
           case "maximum" =>
             dfF.withColumn("score", greatest(sims: _*))
           case "rrf" =>
-            withPayload(dfF, Fusion.rrf(legs.map(l => Fusion.rank(l, hib) -> 1.0),
-              fusionOpts("k")))
+            withPayload(dfF, Fusion.rrf(legs.map(_ -> 1.0), fusionOpts("k")))
           case "weighted" =>
             withPayload(dfF, Fusion.weighted(legs, fusionOpts("avg_weight"),
               fusionOpts("max_weight"), fusionOpts("hit_weight")))

@@ -45,6 +45,10 @@ object ImmutableDirScan {
       byDir.synchronized { byDir.put(key(p), files); () }
     override def invalidateAll(): Unit = byDir.synchronized(byDir.clear())
     def remove(p: Path): Unit = byDir.synchronized { byDir.remove(key(p)); () }
+    def removeUnder(p: Path): Unit = byDir.synchronized {
+      val k = key(p)
+      byDir.keySet().removeIf(d => d == k || d.startsWith(k + "/")); ()
+    }
   }
 
   def apply(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame = {
@@ -56,4 +60,8 @@ object ImmutableDirScan {
 
   /** Drop `dir`'s listing: it was (re)published. */
   def forget(dir: String): Unit = Listings.remove(new Path(dir))
+
+  /** Drop the listings of `root` and of every dir under it: it was
+    * deleted. */
+  def forgetUnder(root: String): Unit = Listings.removeUnder(new Path(root))
 }

@@ -95,3 +95,31 @@ case class HashedGramMargin(tokens: Expression, weights: Array[Double])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(tokens = c)
 }
+
+/** A row's BM25 score over its lower-cased text
+  * ([[graft.functions.TextKernels.bm25Score]]): the query terms and the
+  * corpus stats ride the plan as reference objects, not literals, so a
+  * query with new terms or stats reuses the generated code of the last
+  * one with as many terms instead of compiling its own. */
+case class Bm25Score(lowered: Expression, terms: Array[Array[Byte]], stats: Array[Double],
+    k1: Double, b: Double) extends UnaryExpression with ExpectsInputTypes {
+  require(stats.length == terms.length + 1, "Bm25Score: stats = (avgdl, idf per term)")
+
+  override def child: Expression = lowered
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "bm25_score"
+
+  override def nullSafeEval(t: Any): Any =
+    TextKernels.bm25Score(t.asInstanceOf[UTF8String], terms, stats, k1, b)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tRef = ctx.addReferenceObj("bm25Terms", terms, "byte[][]")
+    val sRef = ctx.addReferenceObj("bm25Stats", stats, "double[]")
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.bm25Score($t, $tRef, $sRef, ${k1}D, ${b}D);")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(lowered = c)
+}

@@ -253,4 +253,89 @@ class CollectionAnnSpec extends SparkSpecBase {
       assert(unknown.statusCode() == 400 && unknown.body().contains("unknown index"))
     } finally srv.stop()
   }
+
+  test("a point without a vector never ranks: every NEAR tier agrees, per metric") {
+    import spark.implicits._
+    // 40 points near q; ids 3, 13, 23, 33 have no vector. The exact,
+    // LSH, IVF, NEAR_FUSED and hybrid answers must be the same ids, none
+    // vector-less, and every score present (an ascending metric used to
+    // rank the null scores first)
+    val nulls = Set(3L, 13L, 23L, 33L)
+    val q8 = Seq(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)
+    val rows = (0L until 40L).map { i =>
+      (i, if (nulls(i)) None else Some(q8.updated(1 + (i % 7).toInt, 0.01f * i)),
+        if (nulls(i)) "alpha" else "beta")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-nullvec").toString
+    val g2 = Graft(spark, dir)
+    try for (metric <- Seq("cosine", "euclidean", "dot")) {
+      val c = s"p_$metric"
+      g2.collections.create(c, idCol = "id", vectorCol = Some("vector"), metric = metric,
+        buckets = 2)
+      g2.collections.upsert(c, rows.toDF("id", "vector", "text"))
+      val near = s"SELECT id, score FROM $c WHERE vector NEAR $$q LIMIT 5"
+      val answers = Seq(
+        "exact" -> near,
+        "lsh" -> s"$near WITH (mode = 'accurate')",
+        "ivf" -> s"$near WITH (mode = 'accurate', index = 'ivf')",
+        "near_fused" -> (s"SELECT id, score FROM $c WHERE vector NEAR_FUSED [$$q, $$q] " +
+          "USING FUSION 'rrf' LIMIT 5"),
+        "hybrid" -> (s"SELECT * FROM $c WHERE text MATCH 'alpha' AND vector NEAR $$q LIMIT 5 " +
+          "USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)")
+      ).map { case (tier, sql) =>
+        tier -> g2.sql(sql, Map("q" -> q8)).select("id", "score").collect()
+          .map(r => (r.getLong(0), Option(r.get(1)))).toSeq
+      }
+      answers.foreach { case (tier, got) =>
+        assert(got.forall(_._2.isDefined), s"$metric/$tier: a null score ranks: $got")
+        if (tier != "hybrid")
+          assert(!got.exists(r => nulls(r._1)), s"$metric/$tier: a vector-less point ranks: $got")
+        else // the text leg alone ranks the vector-less points, after the vector leg's best
+          assert(got.map(_._1).take(1) == Seq(0L) && got.count(r => nulls(r._1)) <= 4,
+            s"$metric/$tier: $got")
+      }
+      val ids = answers.toMap.map { case (t, got) => t -> got.map(_._1) }
+      assert(ids("exact") == Seq(0L, 1L, 2L, 4L, 5L), s"$metric: exact ${ids("exact")}")
+      Seq("lsh", "ivf", "near_fused").foreach(t =>
+        assert(ids(t) == ids("exact"), s"$metric/$t: ${ids(t)} vs exact ${ids("exact")}"))
+    } finally graft.Collections.deleteRec(java.nio.file.Paths.get(dir))
+  }
+
+  test("drop reclaims the collection's index artifacts, count sidecars and cached listings") {
+    import spark.implicits._
+    val name = "dropme"
+    def create(seed: Double): Unit = {
+      g.collections.create(name, idCol = "id", vectorCol = Some("vec"))
+      g.collections.upsert(name, (1L to 120L).map { i =>
+        (i, (0 until 16).map(d => math.sin(i * seed + d * 0.9).toFloat))
+      }.toDF("id", "vec"))
+    }
+    def tiers(): Seq[Seq[Long]] = Seq("mode = 'accurate'", "mode = 'accurate', index = 'ivf'",
+        "mode = 'accurate', index = 'hnsw'").map { w =>
+      g.sql(s"SELECT id FROM $name WHERE vector NEAR $$q LIMIT 5 WITH ($w)", Map("q" -> q))
+        .collect().map(_.getLong(0)).toSeq
+    }
+    val counts = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived/counts")
+    def sidecars(): Seq[String] =
+      if (!java.nio.file.Files.isDirectory(counts)) Nil
+      else {
+        val s = java.nio.file.Files.list(counts)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.map(_.getFileName.toString).filter(_.contains(tokenOf(name))).toSeq
+        } finally s.close()
+      }
+    create(0.53)
+    tiers()
+    assert(derivedOf(name).nonEmpty && sidecars().nonEmpty, "the tiers built their artifacts")
+    g.collections.drop(name)
+    assert(derivedOf(name).isEmpty, s"stranded artifacts: ${derivedOf(name)}")
+    assert(sidecars().isEmpty, s"stranded count sidecars: ${sidecars()}")
+    // the same name over new rows reads the new rows on every tier
+    create(0.29)
+    val exact = g.sql(s"SELECT id FROM $name WHERE vector NEAR $$q LIMIT 5", Map("q" -> q))
+      .collect().map(_.getLong(0)).toSeq
+    assert(tiers().forall(_.head == exact.head), s"re-created collection: ${tiers()} vs $exact")
+    g.collections.drop(name)
+  }
 }

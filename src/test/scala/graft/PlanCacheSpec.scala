@@ -51,6 +51,31 @@ class PlanCacheSpec extends SparkSpecBase {
     graft.Collections.deleteRec(java.nio.file.Paths.get(tmp))
   }
 
+  test("a publish invalidates a memoized hybrid plan: the hot request returns the new point") {
+    // the fused legs run at compile, so the memoized plan is one payload
+    // scan over the fused ids; an upsert re-stamps the collection and the
+    // same request recompiles its legs over the new generation
+    val tmp = java.nio.file.Files.createTempDirectory("graft-plancache-hy").toString
+    val g = Graft(spark, tmp)
+    g.collections.create("h", idCol = "id", vectorCol = Some("vector"))
+    g.collections.upsert("h", Seq((1L, Seq(1f, 0f), "alpha beta"), (2L, Seq(0f, 1f), "gamma"))
+      .toDF("id", "vector", "text"))
+    val q = "SELECT * FROM h WHERE text MATCH 'alpha' AND vector NEAR $v LIMIT 10 " +
+      "USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)"
+    val v = Map("v" -> Seq(1f, 0f))
+    def ids() = g.sql(q, v).collect().map(_.getAs[Long]("id")).toSeq
+    assert(ids() == Seq(1L, 2L))
+    val c0 = g.compileCount.get()
+    assert(ids() == Seq(1L, 2L))
+    assert(g.compileCount.get() == c0, "the hot request must hit the memo")
+    g.collections.upsert("h", Seq((3L, Seq(1f, 0f), "alpha")).toDF("id", "vector", "text"))
+    assert(ids() == Seq(1L, 3L, 2L), "post-publish plan must rank the new point")
+    assert(g.compileCount.get() == c0 + 1, "publish must invalidate the plan")
+    assert(ids() == Seq(1L, 3L, 2L))
+    assert(g.compileCount.get() == c0 + 1, "the next hot request hits the new plan")
+    graft.Collections.deleteRec(java.nio.file.Paths.get(tmp))
+  }
+
   test("subquery-bearing texts cache (tables stamped from the AST)") {
     val g = Graft(spark, sfDir)
     val q = """SELECT c_custkey, c_acctbal FROM customer

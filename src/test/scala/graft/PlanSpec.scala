@@ -46,32 +46,68 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("In(label, [1,3,5])") || p.contains("label"), "label filter pushed")
   }
 
-  test("fusion legs rank top-K candidates, never the whole table (F1/F4)") {
-    // one check for every rank-fusion site (operators.Fusion): the F1 and
-    // F4 dataset rows, VelesQL hybrid and NEAR_FUSED rrf. Every Window
-    // must (a) carry a partition key (an empty spec is the r1
-    // global-window scale-killer) and (b) sit above a
-    // TakeOrderedAndProject, so it ranks K rows, not the table; and the
-    // legs merge by union + aggregate, never by a full-outer join.
-    import org.apache.spark.sql.catalyst.plans.FullOuter
-    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    for (q <- Seq("q51_fusion_rrf", "q62_hybrid_rrf", "q104_vql_hybrid",
-        "q116_vql_fused_filtered")) {
-      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.sparkPlan
-      val windows = p.collect { case w: WindowExec => w }
-      assert(windows.nonEmpty, s"$q: rank windows present")
-      windows.foreach { w =>
-        assert(w.partitionSpec.nonEmpty, s"$q: window must be partition-keyed: $w")
-        assert(w.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
-          s"$q: window must rank a top-K leg:\n$w")
+  test("fusion legs hold at most K rows; no window, exchange or full-outer join (F1/F4)") {
+    // every rank-fusion site (operators.Fusion) ranks and fuses its legs
+    // on the driver: the F1 and F4 dataset rows, VelesQL hybrid and
+    // NEAR_FUSED rrf. Every plan a row runs — each leg collection and the
+    // fused frame — comes from the SQL execution events. No plan holds a
+    // Window or a full-outer join; the legs over one scan (q51, q116 and
+    // every vector leg) and the fused frame shuffle nothing. q62's and
+    // q104's BM25 index legs read the posting tables through their own
+    // joins and aggregates, whose exchanges are the leg's, not the
+    // fusion's.
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlanInfo}
+    import org.apache.spark.sql.graft.JobMeter
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    for ((q, maxRows) <- Seq("q51_fusion_rrf" -> 2 * 20, "q62_hybrid_rrf" -> 10,
+        "q104_vql_hybrid" -> 2 * 2000, "q116_vql_fused_filtered" -> 2 * 2000)) {
+      val m = JobMeter(spark) {
+        val df = SparkEntry.queries(q)(spark, sfDir)
+        df.collect()
+        df
       }
-      assert(!p.exists {
-        case j: BaseJoinExec => j.joinType == FullOuter
-        case _ => false
-      }, s"$q: legs merged by a full-outer join:\n$p")
+      assert(m.plans.nonEmpty, s"$q: no SQL execution seen")
+      m.plans.foreach { p =>
+        val ns = nodes(p)
+        assert(!ns.exists(_.nodeName == "Window"), s"$q: a rank window runs:\n${p.simpleString}")
+        assert(!ns.exists(_.simpleString.contains("FullOuter")), s"$q: legs merged by a full-outer join")
+        if (ns.exists(_.nodeName == "Exchange"))
+          assert(Set("q62_hybrid_rrf", "q104_vql_hybrid")(q) &&
+            ns.exists(_.nodeName.contains("Aggregate")),
+            s"$q: a fusion plan shuffles:\n${ns.map(_.nodeName).mkString(", ")}")
+      }
+      // the fused frame: a local relation of ≤ legs × K id/score rows
+      // under its final top k, nothing to shuffle
+      val fused = m.value.queryExecution.executedPlan
+      assert(!fused.exists(_.nodeName.contains("Exchange")), s"$q: the fused frame shuffles:\n$fused")
+      val local = fused.collect { case l: LocalTableScanExec => l }
+      assert(local.size == 1 && local.head.rows.size <= maxRows,
+        s"$q: fused rows ${local.map(_.rows.size)} (at most $maxRows)")
     }
+  }
+
+  test("Fusion.legs: each leg is its score's top K from one job, ties by id, nulls never rank") {
+    import graft.operators.{Fusion, Knn}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.JobMeter
+    val emb = Tables.table(spark, sfDir, "embeddings")
+    val q = functions.VectorFunctions.syntheticQuery(64)
+    // a rounded score leaves ties for the id order to break; a null score
+    // on some rows must leave them out of the leg
+    val sim = functions.VectorFunctions.cosine_sim(col("embedding"), functions.VectorFunctions.vecLit(q))
+    val tied = when(col("vec_id") % 7 =!= 0, round(sim, 1))
+    val m = JobMeter(spark)(Fusion.legs(emb, col("vec_id"), Seq(sim -> true, tied -> false), 20))
+    assert((m.jobs, m.stages, m.shuffleBytes) == ((1L, 1L, 0L)), "(jobs, stages, shuffle bytes)")
+    val Seq(a, b) = m.value
+    def top(score: org.apache.spark.sql.Column, asc: Boolean) =
+      emb.where(score.isNotNull).select(col("vec_id"), score.as("s"))
+        .orderBy(if (asc) col("s").asc else col("s").desc, col("vec_id")).limit(20)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(a.ids.zip(a.rows.map(_._2)) == top(sim, asc = false))
+    assert(b.ids.zip(b.rows.map(_._2)) == top(tied, asc = true))
+    assert(a.rows.size == 20 && b.ids.forall(_.asInstanceOf[Long] % 7 != 0))
+    assert(a.ids == Knn.topK(emb, "embedding", q, 20, idCol = "vec_id")
+      .collect().map(_.getAs[Long]("vec_id")).toSeq)
   }
 
   test("VelesQL hybrid ranks top-K per leg through the language (q104)") {

@@ -89,6 +89,49 @@ class TextSearchSpec extends SparkSpecBase {
     assert(Bm25.searchIndex(Bm25.buildIndex(empty), "spark join").count() == 0)
   }
 
+  test("the BM25 score kernel equals the Column formula it replaced, bit for bit") {
+    import org.apache.spark.sql.functions._
+    // the reference: the tokenizer as a token array and the score as a
+    // Column formula with the corpus stats as literals
+    def reference(docs: org.apache.spark.sql.DataFrame, q: String): Map[Long, Double] = {
+      val terms = Bm25.queryTerms(q)
+      val tok = Bm25.tokenArray(col("text"))
+      val st = docs.where(size(tok) > 0).agg(count(lit(1)), (sum(size(tok)) +:
+        terms.map(t => sum(array_contains(tok, t).cast("int")))): _*).head()
+      val n = st.getLong(0)
+      val avgdl = if (n == 0) 0.0 else st.getLong(1).toDouble / n
+      val live = terms.zipWithIndex.map { case (t, i) =>
+        t -> Option(st.get(2 + i)).fold(0L)(_.asInstanceOf[Long]) }.filter(_._2 > 0)
+      val score = if (live.isEmpty) lit(0.0) else {
+        val dlen = size(tok)
+        val s = live.map { case (t, df) =>
+          val tf = dlen - size(array_remove(tok, t))
+          val idf = log((lit(n) - df + 0.5) / (lit(df) + 0.5) + 1.0)
+          idf * (tf * (lit(Bm25.K1) + 1.0)) /
+            (tf + lit(Bm25.K1) * (lit(1.0) - Bm25.B + lit(Bm25.B) * dlen / avgdl))
+        }.reduce(_ + _)
+        when(Bm25.matches(col("text"), live.map(_._1)), s).otherwise(lit(0.0))
+      }
+      docs.select(col("doc_id"), score).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+    val unicode = Seq("Straße SPARK join", "\u212Aelvin join", "\u0130stanbul spark",
+      "ÀÉÎ stream ßpark", "spark_join spark-join", "x\u0000y spark", "\uD83D\uDD25spark\uD83D\uDD25 join",
+      "SPARK\tJOIN\nspark", "a1 b2 c33 spark9")
+    val docs = (genDocs(9, 300) ++ unicode.zipWithIndex.map { case (t, i) => (10000L + i, t) })
+      .toDF("doc_id", "text")
+    for (q <- queries ++ Seq("kelvin join", "stanbul spark", "spark9 c33")) {
+      val (score, hit) = Bm25.scoreColumns(docs, q)
+      val got = docs.select(col("doc_id"), score, hit).collect()
+      val exp = reference(docs, q)
+      got.foreach { r =>
+        val id = r.getLong(0)
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+          java.lang.Double.doubleToRawLongBits(exp(id)), s"query '$q' doc $id: ${r.getDouble(1)} vs ${exp(id)}")
+        assert(r.getBoolean(2) == (exp(id) > 0.0), s"query '$q' doc $id: match ${r.getBoolean(2)}")
+      }
+    }
+  }
+
   /** A user collection of `docs` with 4-d vectors, in a fresh data dir. */
   private def withCollection(docs: Seq[(Long, String)])(body: Graft => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-text").toString
@@ -165,8 +208,27 @@ class TextSearchSpec extends SparkSpecBase {
       val hybrid = "SELECT * FROM docs WHERE text MATCH 'merge vector' AND vector NEAR $v " +
         "LIMIT 10 USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)"
       g.sql(hybrid.replace("merge vector", "graph"), Map("v" -> q)).collect() // warm
-      val hJobs = JobMeter(spark)(g.sql(hybrid, Map("v" -> q)).collect()).jobs
-      assert(hJobs <= 5, s"hybrid ran $hJobs jobs")
+      // corpus stats, both legs from one scan, the payload scan
+      val h = JobMeter(spark)(g.sql(hybrid, Map("v" -> q)).collect())
+      assert(h.jobs <= 3, s"hybrid ran ${h.jobs} jobs")
+      assert(h.shuffleBytes == 0, s"hybrid shuffled ${h.shuffleBytes} bytes")
+    }
+  }
+
+  test("WITH (timeout_ms) bounds the compile: every job of a timed MATCH and hybrid runs in its job group") {
+    withCollection(genDocs(8, 200)) { g =>
+      val q = Seq(0.1f, 0.2f, 0.3f, 0.4f).toList
+      for (sql <- Seq(
+          "SELECT * FROM docs WHERE text MATCH 'spark join' LIMIT 10 WITH (timeout_ms = 600000)",
+          "SELECT * FROM docs WHERE text MATCH 'merge vector' AND vector NEAR $v LIMIT 10 " +
+            "WITH (timeout_ms = 600000) " +
+            "USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)")) {
+        // a fresh text: the compile's jobs (corpus stats, fused legs) run
+        val m = JobMeter(spark)(g.collect(sql, Map("v" -> q)))
+        assert(m.value.nonEmpty && m.jobs >= 2, s"$sql: ${m.jobs} jobs")
+        assert(m.groups.forall(_.startsWith("graft-timeout-")) && m.groups.distinct.size == 1,
+          s"$sql: job groups ${m.groups}")
+      }
     }
   }
 
@@ -184,10 +246,24 @@ class TextSearchSpec extends SparkSpecBase {
           JobMeter(spark)(post("search/text", """{"query": "spark stream", "top_k": 10}"""))
         assert(text.jobs <= 2, s"search/text ran ${text.jobs} jobs")
         assert(text.shuffleBytes == 0, s"search/text shuffled ${text.shuffleBytes} bytes")
-        post("search/hybrid", """{"query": "graph", "vector": [0.1, 0.2, 0.3, 0.4], "top_k": 10}""")
-        val hJobs = JobMeter(spark)(post("search/hybrid",
-          """{"query": "merge vector", "vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}""")).jobs
-        assert(hJobs <= 3, s"search/hybrid ran $hJobs jobs")
+        // fused routes: fresh = the leg jobs (hybrid: corpus stats, then
+        // both legs from one scan) + the payload scan; hot = the payload
+        // scan of the memoized plan; one stage each, nothing shuffled
+        val hot = """{"query": "graph", "vector": [0.1, 0.2, 0.3, 0.4], "top_k": 10}"""
+        val multiHot = """{"vectors": [[0.1, 0.2, 0.3, 0.4], [0.3, 0.1, 0.4, 0.2]], "top_k": 10}"""
+        for ((route, warm, fresh, freshJobs) <- Seq(
+            ("search/hybrid", hot,
+              """{"query": "merge vector", "vector": [0.4, 0.3, 0.2, 0.1], "top_k": 10}""", 3L),
+            ("search/multi", multiHot,
+              """{"vectors": [[0.4, 0.3, 0.2, 0.1], [0.2, 0.4, 0.1, 0.3]], "top_k": 10}""", 2L))) {
+          post(route, warm)
+          for ((kind, body, budget) <- Seq(("fresh", fresh, freshJobs), ("hot", warm, 1L))) {
+            val m = JobMeter(spark)(post(route, body))
+            assert(m.jobs <= budget, s"$route $kind ran ${m.jobs} jobs")
+            assert(m.stages <= m.jobs, s"$route $kind ran ${m.stages} stages in ${m.jobs} jobs")
+            assert(m.shuffleBytes == 0, s"$route $kind shuffled ${m.shuffleBytes} bytes")
+          }
+        }
       }
     }
   }
