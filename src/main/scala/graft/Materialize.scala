@@ -279,17 +279,30 @@ object Materialize {
     * same-(kind, token) entry with a different extraStamp as a stale
     * generation and retires it like any other superseded stamp. */
   /** The (kind, token) identity prefix of a cache key. LENGTH-PREFIXED:
-    * kind and sanitized token both admit '_' — the same char that used
+    * kind and the token key both admit '_' — the same char that used
     * to join them — so v3's `v3_<kind>_<token>__` was ambiguous
     * (kind='a'/token='b_c' and kind='a_b'/token='c' shared a prefix and
     * could prune each other's LIVE generations as stale; r15 review
     * finding). The digit counts pin the boundaries unambiguously. */
   private def keyPrefix(kind: String, token: String): String = {
-    val t = sanitized(token)
+    val t = tokenKey(token)
     s"v4_${kind.length}k${kind}_${t.length}t${t}__"
   }
 
-  private def sanitized(token: String): String = token.replaceAll("[^A-Za-z0-9._-]", "_")
+  /** `token` as a file-name segment, one-to-one: `[A-Za-z0-9.-]` stays,
+    * and every other UTF-8 byte, '_' included, becomes `_` and two hex
+    * digits. A lossy form would let collections `a b` and `a_b` share a
+    * token, so dropping one would reclaim the other's artifacts. */
+  private[graft] def tokenKey(token: String): String = {
+    val sb = new StringBuilder
+    token.getBytes("UTF-8").foreach { b =>
+      val c = (b & 0xff).toChar
+      if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
+          c == '.' || c == '-') sb += c
+      else sb ++= f"_${b & 0xff}%02x"
+    }
+    sb.toString
+  }
 
   private def cacheKey(kind: String, token: String,
       sources: Seq[Path], extraStamp: Option[String] = None): String = {
@@ -383,7 +396,7 @@ object Materialize {
       pred: String => Boolean): Unit =
     retiredSweeps.getOrElseUpdate(s"$note|$token", {
       entries(derived).filter(p => keyParts(p.getFileName.toString).exists {
-        case (kind, t) => t == sanitized(token) && pred(kind) }).foreach(Collections.deleteRec)
+        case (kind, t) => t == tokenKey(token) && pred(kind) }).foreach(Collections.deleteRec)
     })
 
   /** Reclaims everything kept for `token`, a source that no longer exists
@@ -391,7 +404,7 @@ object Materialize {
     * it, and its [[memo]], [[countMemo]], [[readMemo]] and listing-cache
     * entries. In-flight temp dirs are left to the builds that own them. */
   def reclaim(token: String): Unit = {
-    def ours(name: String) = keyParts(name).exists(_._2 == sanitized(token))
+    def ours(name: String) = keyParts(name).exists(_._2 == tokenKey(token))
     memoCache.filterInPlace { case (_, (key, _)) => !ours(key) }
     buildLocks.filterInPlace { case (key, _) => !ours(key) }
     readCache.synchronized {
@@ -408,7 +421,7 @@ object Materialize {
     }
   }
 
-  /** The (kind, sanitized token) of a v4 cache key or sidecar name —
+  /** The (kind, token key) of a v4 cache key or sidecar name —
     * `v4_<len>k<kind>_<len>t<token>__<stamp>`; the length prefixes make
     * the split unambiguous. None for any other name and for temp dirs. */
   private def keyParts(name: String): Option[(String, String)] = {

@@ -32,16 +32,21 @@ object Bm25 {
   def queryTerms(queryText: String): Seq[String] =
     queryText.toLowerCase.split("[^a-z0-9]+").filter(_.length > 1).toSeq.distinct
 
-  /** A row's token array under the reference tokenizer; null text has
-    * no tokens. */
+  /** A row's token array, for the posting index ([[buildIndex]]): the
+    * tokenizer of [[TextKernels.bm25Counts]], which scores and MATCH
+    * membership use, as a split; null text has no tokens. */
   def tokenArray(text: Column): Column =
     filter(split(coalesce(lower(text), lit("")), "[^a-z0-9]+"), t => length(t) > 1)
 
-  /** Whether a row's text holds any of `terms` (MATCH membership); an
+  /** Whether a row's text holds any of `terms` (MATCH membership): its
+    * BM25 score is positive, as in [[scoreColumns]]. Any positive stats
+    * make every held term add a positive score and no other term add
+    * anything, so unit stats decide membership without a corpus job. An
     * empty term set matches nothing. */
   def matches(text: Column, terms: Seq[String]): Column =
     if (terms.isEmpty) lit(false)
-    else arrays_overlap(tokenArray(text), array(terms.map(lit): _*))
+    else Bridge.column(Bm25Score(Bridge.expression(lower(coalesce(text, lit("")))),
+      terms.map(_.getBytes("UTF-8")).toArray, Array.fill(terms.size + 1)(1.0), K1, B)) > 0.0
 
   /** Per-row BM25 for `queryText` over `docs`: the (score, match)
     * columns. The corpus stats come from ONE aggregate job over `docs`
@@ -64,7 +69,8 @@ object Bm25 {
     val idf = live.map { case (_, df) => StrictMath.log((n - df + 0.5) / (df + 0.5) + 1.0) }
     val score = Bridge.column(Bm25Score(Bridge.expression(lowered),
       live.map(_._1.getBytes("UTF-8")).toArray, (avgdl +: idf).toArray, K1, B))
-    // every term a row holds adds a positive score
+    // every term a row holds adds a positive score: membership as in
+    // [[matches]]
     (score, score > 0.0)
   }
 

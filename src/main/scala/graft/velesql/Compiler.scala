@@ -43,8 +43,9 @@ class Compiler(
   /** Per-leg candidate pool for candidate-leg fusion (hybrid, NEAR_FUSED
     * rrf/weighted). The reference fetches a bounded candidate set per leg
     * (text.rs:133-134); each leg is collected as ≤ K rows and ranked and
-    * fused on the driver (operators.Fusion). Every such query shares one
-    * epilogue (`withPayload` in compileSelect). */
+    * fused on the driver (operators.Fusion). A larger LIMIT raises the
+    * pool to it, up to LimitCap. Every such query shares one epilogue
+    * (`withPayload` in compileSelect). */
   private val CandidateK = 2000
   /** NEAR_FUSED takes ≤10 vectors (SURVEY V6), one candidate leg each. */
   private val MaxFusedVectors = 10
@@ -272,7 +273,7 @@ class Compiler(
     // in the default ranked top L (no ORDER BY, grouping or DISTINCT)
     // fetches only the fused top L + OFFSET ids: its final (score desc,
     // id) top L holds no other id.
-    val kCand = math.max(sel.limit.getOrElse(NearDefaultLimit), CandidateK)
+    val kCand = math.max(math.min(sel.limit.getOrElse(NearDefaultLimit), LimitCap), CandidateK)
     def withPayload(filtered: DataFrame, fused: Fusion.Ranked): DataFrame = {
       val idScoreOnly = (sel.selectList match {
         case SelectItems(items) => items.forall {

@@ -49,8 +49,10 @@ object CandidateLegs {
     val parts = if (k <= 0) Array.empty[Array[(Array[Any], Array[Double])]]
       else SQLExecution.withNewExecutionId(qe, Some("fusion legs")) {
         qe.toRdd.mapPartitions { it =>
-          // worst kept row at each heap's head
-          val heaps = onRow.map(o => new java.util.PriorityQueue[InternalRow](k, o.reverse))
+          // worst kept row at each heap's head; a heap grows as it fills,
+          // so a large k costs only the rows a partition holds
+          val heaps = onRow.map(o =>
+            new java.util.PriorityQueue[InternalRow](math.min(k, 1024), o.reverse))
           it.foreach { r =>
             var i = 0
             while (i < n) {

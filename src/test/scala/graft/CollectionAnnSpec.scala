@@ -29,7 +29,7 @@ class CollectionAnnSpec extends SparkSpecBase {
 
   /** The `graft-derived` cache token of a collection's index source. */
   private def tokenOf(name: String): String =
-    s"${tmp.toString}_col_$name".replaceAll("[^A-Za-z0-9._-]", "_")
+    Materialize.tokenKey(Collections.indexToken(tmp.toString, name))
 
   /** `graft-derived` cache entries of one collection's index source. */
   private def derivedOf(name: String): Set[String] = {
@@ -337,5 +337,38 @@ class CollectionAnnSpec extends SparkSpecBase {
       .collect().map(_.getLong(0)).toSeq
     assert(tiers().forall(_.head == exact.head), s"re-created collection: ${tiers()} vs $exact")
     g.collections.drop(name)
+  }
+
+  test("dropping a collection spares one whose name differs only in a non-word char") {
+    import spark.implicits._
+    // `a b` and `a_b` once mapped to one file-name token, so dropping
+    // `a b` deleted `a_b`'s live artifacts
+    val (gone, kept) = ("a b", "a_b")
+    for (n <- Seq(gone, kept)) {
+      g.collections.create(n, idCol = "id", vectorCol = Some("vec"))
+      g.collections.upsert(n, (1L to 120L).map { i =>
+        (i, (0 until 16).map(d => math.sin(i * 0.41 + d * 0.9).toFloat))
+      }.toDF("id", "vec"))
+    }
+    def tiers(n: String): Seq[Seq[Long]] = Seq("mode = 'accurate'",
+        "mode = 'accurate', index = 'ivf'").map { w =>
+      g.sql(s"SELECT id FROM `$n` WHERE vector NEAR $$q LIMIT 5 WITH ($w)", Map("q" -> q))
+        .collect().map(_.getLong(0)).toSeq
+    }
+    try {
+      tiers(gone)
+      tiers(kept)
+      val hot = org.apache.spark.sql.graft.JobMeter(spark)(tiers(kept))
+      val built = derivedOf(kept)
+      assert(built.nonEmpty && derivedOf(gone).nonEmpty, "both built their artifacts")
+      assert(built.intersect(derivedOf(gone)).isEmpty, "the two share no artifact")
+      g.collections.drop(gone)
+      assert(derivedOf(gone).isEmpty, s"stranded artifacts: ${derivedOf(gone)}")
+      assert(derivedOf(kept) == built, s"'$kept' lost artifacts: ${built -- derivedOf(kept)}")
+      // no rebuild: the same answers from as many jobs as a hot read
+      val after = org.apache.spark.sql.graft.JobMeter(spark)(tiers(kept))
+      assert(after.value == hot.value)
+      assert(after.jobs <= hot.jobs, s"'$kept' rebuilt: ${after.descriptions} vs ${hot.descriptions}")
+    } finally Seq(gone, kept).filter(g.collections.exists).foreach(g.collections.drop)
   }
 }

@@ -80,7 +80,7 @@ class IndexRouteSpec extends SparkSpecBase {
 
   /** `graft-derived` entries of a token, temp copies excluded. */
   private def derivedOf(token: String): Seq[java.nio.file.Path] = {
-    val t = token.replaceAll("[^A-Za-z0-9._-]", "_")
+    val t = Materialize.tokenKey(token)
     val derived = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
     Collections.children(derived).filter { p =>
       val n = p.getFileName.toString

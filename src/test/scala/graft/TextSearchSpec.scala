@@ -110,7 +110,7 @@ class TextSearchSpec extends SparkSpecBase {
           idf * (tf * (lit(Bm25.K1) + 1.0)) /
             (tf + lit(Bm25.K1) * (lit(1.0) - Bm25.B + lit(Bm25.B) * dlen / avgdl))
         }.reduce(_ + _)
-        when(Bm25.matches(col("text"), live.map(_._1)), s).otherwise(lit(0.0))
+        when(arrays_overlap(tok, array(live.map(t => lit(t._1)): _*)), s).otherwise(lit(0.0))
       }
       docs.select(col("doc_id"), score).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }
@@ -212,6 +212,38 @@ class TextSearchSpec extends SparkSpecBase {
       val h = JobMeter(spark)(g.sql(hybrid, Map("v" -> q)).collect())
       assert(h.jobs <= 3, s"hybrid ran ${h.jobs} jobs")
       assert(h.shuffleBytes == 0, s"hybrid shuffled ${h.shuffleBytes} bytes")
+    }
+  }
+
+  test("a fused search with the largest LIMIT returns every row") {
+    // the candidate pool follows LIMIT up to the result cap: a pool of
+    // Int.MaxValue once sized each leg heap to it
+    withCollection(genDocs(9, 300)) { g =>
+      val q = Seq(0.1f, 0.2f, 0.3f, 0.4f).toList
+      val q2 = Seq(0.3f, 0.1f, 0.4f, 0.2f).toList
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def ids(resp: String): Seq[Long] = {
+        val it = mapper.readTree(resp).get("results").elements()
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().get("id").asLong).toSeq
+      }
+      for (sql <- Seq(
+          "SELECT id, score FROM docs WHERE text MATCH 'spark join' AND vector NEAR $v " +
+            "LIMIT %d USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)",
+          "SELECT id, score FROM docs WHERE vector NEAR_FUSED [$v, $w] USING FUSION 'rrf' " +
+            "LIMIT %d")) {
+        def run(limit: Int) = g.sql(sql.format(limit), Map("v" -> q, "w" -> q2)).collect().toSeq
+        val all = run(Int.MaxValue)
+        assert(all.size == 300, s"$sql: ${all.size} rows")
+        assert(all == run(300), sql)
+      }
+      withRest(g) { post =>
+        val hybrid = ids(post("search/hybrid",
+          s"""{"query": "spark join", "vector": [0.1, 0.2, 0.3, 0.4], "top_k": ${Int.MaxValue}}"""))
+        val multi = ids(post("search/multi",
+          s"""{"vectors": [[0.1, 0.2, 0.3, 0.4], [0.3, 0.1, 0.4, 0.2]], "top_k": ${Int.MaxValue}}"""))
+        assert(hybrid.size == 300 && hybrid.distinct.size == 300, s"search/hybrid: ${hybrid.size}")
+        assert(multi.size == 300 && multi.distinct.size == 300, s"search/multi: ${multi.size}")
+      }
     }
   }
 
