@@ -13,8 +13,9 @@ import scala.jdk.CollectionConverters._
   * JSON meta sidecar plus manifest-named parquet frames (points, edges);
   * upsert is merge-by-id (latest write wins) published as a delta
   * segment, delete is a tombstone id set ([[Collections.FrameManifest]]).
-  * Index structures (BM25 postings, LSH buckets) are derived tables
-  * built per immutable piece rather than incrementally mutated.
+  * Index structures (LSH buckets, IVF cells) are derived tables built
+  * per immutable piece rather than incrementally mutated; BM25 needs
+  * none (it scores per row).
   *
   * Mutations are serialized per instance (the reference's collection
   * RwLock, lib.rs `Arc<RwLock<_>>`): concurrent REST upserts/deletes

@@ -328,22 +328,29 @@ class Graft(
     * label. */
   def classify(query: String): String = Graft.classify(parse(query))
 
-  /** Execute eagerly, honoring `WITH (timeout_ms = N)`
-    * (ast/with_clause.rs:97-101): the compile and the collect run inside
-    * a dedicated job group — compiling runs jobs too (BM25 corpus stats,
-    * index refreshes, fused legs) — and a watchdog cancels the group at
-    * the deadline and the call surfaces [[velesql.TimeoutError]]. Without
-    * the option this is a plain compile and collect. */
-  def collect(query: String, params: Map[String, Any] = Map.empty,
-      fixedNowEpoch: Option[Long] = None): Array[org.apache.spark.sql.Row] = {
+  /** Compile `query` and run `action` on it, honoring `WITH (timeout_ms
+    * = N)` (ast/with_clause.rs:97-101): the compile and the action run
+    * inside a dedicated job group — compiling runs jobs too (BM25 corpus
+    * stats, index refreshes, fused legs) — and a watchdog cancels the
+    * group at the deadline and the call surfaces [[velesql.TimeoutError]].
+    * Without the option this is a plain compile and run. The REST query
+    * and search routes, the REPL and [[collect]] run their queries here. */
+  def run[T](query: String, params: Map[String, Any] = Map.empty,
+      fixedNowEpoch: Option[Long] = None, graphScope: Option[String] = None)(
+      action: DataFrame => T): T = {
     val timeoutMs = parse(query).select
       .flatMap(_.withOptions.get("timeout_ms")).map(_.toDouble.toLong)
-    def run = sql(query, params, fixedNowEpoch).collect()
+    def go = action(sql(query, params, fixedNowEpoch, graphScope))
     timeoutMs match {
-      case None => run
-      case Some(ms) => Graft.withTimeout(spark, ms)(run)
+      case None => go
+      case Some(ms) => Graft.withTimeout(spark, ms)(go)
     }
   }
+
+  /** Execute eagerly: [[run]] with a collect. */
+  def collect(query: String, params: Map[String, Any] = Map.empty,
+      fixedNowEpoch: Option[Long] = None): Array[org.apache.spark.sql.Row] =
+    run(query, params, fixedNowEpoch)(_.collect())
 }
 
 object Graft {

@@ -231,11 +231,12 @@ class ReplSession(val g: Graft, out: java.io.PrintStream) {
       return
     }
     val t0 = System.nanoTime()
-    val df = g.sql(text, params = params, graphScope = active)
-    val rows = df.limit(maxResults + 1).collect()
+    val (names, rows) = g.run(text, params, graphScope = active) { df =>
+      (df.schema.fieldNames, df.limit(maxResults + 1).collect())
+    }
     val ms = (System.nanoTime() - t0) / 1e6
     val capped = rows.length > maxResults
-    render(df.schema.fieldNames, rows.take(maxResults))
+    render(names, rows.take(maxResults))
     if (capped) out.println(s"(output capped at $maxResults rows — .set max_results N to raise)")
     if (timing) out.println(f"Took $ms%.1f ms")
   }

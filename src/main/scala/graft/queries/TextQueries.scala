@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.LongType
   * params k1=1.2 b=0.75 (bm25.rs:45-58); idf = ln((N - df + 0.5)/(df +
   * 0.5) + 1) (bm25.rs:294-305). All math in f64 in both engines.
   *
-  * Scale shape: tokenization is a flatMap (no shuffle); doc stats and term
-  * stats are partial+final aggregations; scoring is a posting⋈stats join
-  * keyed on term/doc_id. The small per-query term set makes the term-stats
-  * side broadcast-able. Nothing here collects to the driver.
+  * Scale shape: BM25 rows score per row ([[graft.operators.Bm25]]): one
+  * shuffle-free job folds the corpus stats, then a scan scores each row
+  * from its own text under a partition-local top-k — no posting table,
+  * no join, no exchange.
   *
   * Cross-engine hashing: md5 (identical hex in Spark and DuckDB); 60-bit
   * ints from the first 15 hex chars via conv()/CAST('0x…') — verified to
@@ -52,13 +52,6 @@ object TextQueries {
     """SELECT doc_id, u.t AS term
       |  FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS u(t)
       |  WHERE len(u.t) > 1""".stripMargin
-
-  /** BM25 top-k over the MATERIALIZED documents index (unfiltered
-    * corpus — identical scores, no per-query tokenize+stats pass). */
-  private def bm25Idx(s: SparkSession, d: String, queryTerms: Seq[String],
-      k: Int): DataFrame =
-    graft.operators.Bm25.searchIndex(
-      graft.operators.Bm25.indexFor(s, d), queryTerms.mkString(" "), k)
 
   private def bm25Sql(terms: Seq[String], k: Int, docFilter: String = ""): String = {
     val termList = terms.map(x => s"'$x'").mkString(", ")
@@ -159,7 +152,7 @@ object TextQueries {
     QueryDef(
       "q60_bm25",
       bm25Sql(Seq("spark", "join", "filter"), 10)) { (s, d) =>
-      bm25Idx(s, d, Seq("spark", "join", "filter"), 10)
+      graft.operators.Bm25.score(t(s, d, "documents"), "spark join filter", 10)
     },
 
     // ---- T3: BM25 with metadata filter — filter BEFORE indexing/scoring
@@ -167,19 +160,9 @@ object TextQueries {
     QueryDef(
       "q61_bm25_filtered",
       bm25Sql(Seq("vector", "query"), 10, "WHERE lang = 'en'")) { (s, d) =>
-      // filter-then-score over the MATERIALIZED index: per-doc lengths
-      // and tf are doc-local, so the filtered stats come from joins
-      // against the cached postings/docStats instead of a per-query
-      // re-tokenize of the corpus — identical scores (Bm25
-      // .searchIndexFiltered scaladoc). Every join in the chain is
-      // explicitly broadcast-hinted, so the small-corpus plan pins
-      // static (r12 ask #4: AQE's stage jobs were 2/3 of the latency)
-      graft.operators.Graph.pinIfSmall(
-        graft.operators.Bm25.searchIndexFiltered(
-          graft.operators.Bm25.indexFor(s, d),
-          t(s, d, "documents").where(col("lang") === "en").select("doc_id"),
-          Seq("vector", "query").mkString(" "), 10),
-        probe = graft.operators.Bm25.indexFor(s, d).postings)
+      // scoring the filtered frame takes the corpus stats over it
+      graft.operators.Bm25.score(t(s, d, "documents").where(col("lang") === "en"),
+        "vector query", 10)
     },
 
     // ---- F4: hybrid text+vector RRF — BM25 leg + cosine leg over the
@@ -199,16 +182,14 @@ object TextQueries {
          |  SELECT doc_id, rnk, 0.5 AS w FROM bmr
          |  UNION ALL SELECT doc_id, rnk, 0.5 AS w FROM vec)
          |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin) { (s, d) =>
-      // each top-50 leg is collected on its own (the BM25 leg reads the
-      // posting tables, the vector leg the embeddings scan), then ranked
-      // and fused on the driver. The BM25 leg's broadcast-hinted joins
-      // and aggregates pin static at this size (no AQE stage jobs).
+      // each top-50 leg is collected on its own (the BM25 leg scores the
+      // documents scan per row, the vector leg the embeddings scan), then
+      // ranked and fused on the driver
       import graft.functions.VectorFunctions
       val q = VectorFunctions.syntheticQuery(64)
-      val bmLeg = Fusion.leg(graft.operators.Graph.pinIfSmall(
-          bm25Idx(s, d, Seq("spark", "join", "filter"), 0),
-          probe = graft.operators.Bm25.indexFor(s, d).postings),
-        col("doc_id"), col("score"), 50)
+      val docs = t(s, d, "documents")
+      val (bm25, hit) = graft.operators.Bm25.scoreColumns(docs, "spark join filter")
+      val bmLeg = Fusion.leg(docs, col("doc_id"), when(hit, bm25), 50)
       val vecLeg = Fusion.leg(t(s, d, "embeddings"), col("vec_id").as("doc_id"),
         VectorFunctions.cosine_sim(col("embedding"), VectorFunctions.vecLit(q)), 50)
       Fusion.rrf(Seq(bmLeg -> 0.5, vecLeg -> 0.5), 60).take(10).toDF(s)
@@ -1497,8 +1478,8 @@ object TextQueries {
             .as("bg"))
           .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       // the trained LM (unigram counts, bigram counts, totals) is a
-      // corpus-stamped MODEL artifact — materialized once like the BM25
-      // postings; scoring passes read three small parquets instead of
+      // corpus-stamped MODEL artifact — materialized once like the dedup
+      // shingles; scoring passes read three small parquets instead of
       // re-counting the training half per execution
       val c1 = graft.Materialize(s, d, "lm2_unigrams", Seq("documents"),
         Some("term")) {

@@ -12,15 +12,9 @@ object VelesqlQueries {
 
   private def vql(name: String, oracle: String, text: String,
       params: Map[String, Any] = Map.empty,
-      nowEpoch: Option[Long] = None, pin: Boolean = false): QueryDef =
+      nowEpoch: Option[Long] = None): QueryDef =
     QueryDef(name, oracle) { (s, d) =>
-      val out = new Compiler(s, new Catalog(s, d), params, nowEpoch).run(text)
-      // pin=true: latency-class defs whose multi-leg chains measured
-      // faster under a static plan (PERF_r14.md; q104 0.465→0.321 s, 7→5
-      // jobs) — gated on the corpus size estimate like every other pin
-      if (pin) graft.operators.Graph.pinIfSmall(out,
-        probe = graft.Tables.table(s, d, "documents"))
-      else out
+      new Compiler(s, new Catalog(s, d), params, nowEpoch).run(text)
     }
 
   private val qvec: Seq[Float] = graft.functions.VectorFunctions.syntheticQuery(64)
@@ -326,7 +320,7 @@ object VelesqlQueries {
         |WHERE text MATCH 'spark stream' AND vector NEAR $q AND lang = 'en'
         |LIMIT 10
         |USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)""".stripMargin,
-      params = Map("q" -> qvec), pin = true),
+      params = Map("q" -> qvec)),
 
     // ---- var-length MATCH through the language: *1..2 over typed edges,
     // BFS loop vs recursive-CTE oracle (reachable pairs)

@@ -501,7 +501,7 @@ class RestServer(g: Graft, port: Int = 0) {
         val fparams = if (fopts.isEmpty) "" else fopts.mkString("(", ", ", ")")
         searchResponse(name,
           s"SELECT * FROM $name WHERE vector NEAR_FUSED [${vecs.map("$" + _._1).mkString(", ")}]" +
-            s" USING FUSION '$strategy' $fparams LIMIT $k",
+            s" USING FUSION '$strategy' $fparams LIMIT $k${withClause(timeoutOpt(b))}",
           vecs.toMap)
       case ("POST", "collections" :: name :: "search" :: Nil) =>
         existing(name)
@@ -529,7 +529,8 @@ class RestServer(g: Graft, port: Int = 0) {
         val params = scala.collection.mutable.Map[String, Any]()
         val fSql = filterFragment(b, params)
         searchResponse(name,
-          s"SELECT * FROM $name WHERE $fSql$tcol MATCH ${matchLit(q)} LIMIT $k",
+          s"SELECT * FROM $name WHERE $fSql$tcol MATCH ${matchLit(q)} LIMIT $k" +
+            withClause(timeoutOpt(b)),
           params.toMap)
       case ("POST", "collections" :: name :: "search" :: "hybrid" :: Nil) =>
         existing(name)
@@ -548,6 +549,7 @@ class RestServer(g: Graft, port: Int = 0) {
         val tcol = g.catalog.metaOf(name).textCol.getOrElse("text")
         searchResponse(name,
           s"SELECT * FROM $name WHERE $fSql$tcol MATCH ${matchLit(q)} AND vector NEAR $$__v LIMIT $k" +
+            withClause(timeoutOpt(b)) +
             s" USING FUSION(strategy = 'rrf', k = 60, vector_weight = $vw)",
           params.toMap)
       case ("POST", "collections" :: name :: "graph" :: "edges" :: Nil) =>
@@ -1014,16 +1016,13 @@ class RestServer(g: Graft, port: Int = 0) {
   private def searchResponse(name: String, vql: String,
       params: Map[String, Any]): (Int, String) =
     timed { ms =>
-      val df = g.sql(vql, params)
-      val idCol = g.catalog.metaOf(name).idCol
-      val rest = df.columns.filterNot(c => c == idCol || c == "score")
-      val shaped: DataFrame =
-        if (df.columns.contains("score"))
-          df.select(col(idCol).as("id"), col("score"),
-            struct(rest.map(col).toIndexedSeq: _*).as("payload"))
-        else df.select(col(idCol).as("id"), lit(1.0).as("score"),
-          struct(rest.map(col).toIndexedSeq: _*).as("payload"))
-      val rows = jsonRows(shaped)
+      val rows = g.run(vql, params) { df =>
+        val idCol = g.catalog.metaOf(name).idCol
+        val rest = df.columns.filterNot(c => c == idCol || c == "score")
+        val score = if (df.columns.contains("score")) col("score") else lit(1.0)
+        jsonRows(df.select(col(idCol).as("id"), score.as("score"),
+          struct(rest.map(col).toIndexedSeq: _*).as("payload")))
+      }
       s"""{"results":[${rows.mkString(",")}],"timing_ms":${ms()}}"""
     }
 
@@ -1031,8 +1030,7 @@ class RestServer(g: Graft, port: Int = 0) {
       graphScope: Option[String] = None)(
       render: (Array[String], Double) => String): (Int, String) =
     timed { ms =>
-      val rows = jsonRows(g.sql(vql, params, graphScope = graphScope))
-      render(rows, ms())
+      render(g.run(vql, params, graphScope = graphScope)(jsonRows), ms())
     }
 
   /** The edge frame a graph route traverses: a USER collection's own
@@ -1108,8 +1106,7 @@ class RestServer(g: Graft, port: Int = 0) {
       }.toSeq ++
       Option(b.get("ef_search")).filter(_.isNumber)
         .map(n => s"ef_search = ${posInt("ef_search", n.asInt)}").toSeq ++
-      Option(b.get("timeout_ms")).filter(_.isNumber)
-        .map(n => s"timeout_ms = ${posLong("timeout_ms", n.asLong)}").toSeq ++
+      timeoutOpt(b) ++
       text(b, "quantization").map { q =>
         if (!QuantModes.contains(q))
           badRequest(s"unknown quantization '$q' (expected one of ${QuantModes.toSeq.sorted.mkString("/")})")
@@ -1117,8 +1114,15 @@ class RestServer(g: Graft, port: Int = 0) {
       }.toSeq ++
       Option(b.get("oversampling")).filter(_.isNumber)
         .map(n => s"oversampling = ${posInt("oversampling", n.asInt)}").toSeq
-    if (opts.nonEmpty) s" WITH (${opts.mkString(", ")})" else ""
+    withClause(opts)
   }
+  /** The body's `timeout_ms`: the one WITH option every search route
+    * takes (the others tune plain NEAR only). */
+  private def timeoutOpt(b: JsonNode): Seq[String] =
+    Option(b.get("timeout_ms")).filter(_.isNumber)
+      .map(n => s"timeout_ms = ${posLong("timeout_ms", n.asLong)}").toSeq
+  private def withClause(opts: Seq[String]): String =
+    if (opts.nonEmpty) s" WITH (${opts.mkString(", ")})" else ""
   // numeric request fields fail as 400s HERE, like every other malformed
   // shape on these routes — not as a Spark AnalysisException 500 (a
   // negative oversampling reaches limit(k × os)) or a silent empty 200

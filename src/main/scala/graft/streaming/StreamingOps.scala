@@ -89,7 +89,7 @@ object StreamingOps {
     * foreachBatch — the streaming face of the reference's insert path
     * (collection/core/crud.rs upsert; its WAL durability is superseded
     * by the checkpointed sink + atomic parquet swap). Derived indexes
-    * (BM25 postings, LSH buckets) rebuild lazily on next query because
+    * (LSH buckets, IVF cells) rebuild lazily on next query because
     * Materialize keys on the store's file listing. Returns the started
     * query; callers own `processAllAvailable`/`stop`.
     *

@@ -290,7 +290,10 @@ class Compiler(
           case SelectItems(items) => items.forall(_.isLeft)
           case SelectAll => true
         })
-      if (idScoreOnly) fused.toDF(spark)
+      // one partition, so the final ordering sorts it in place: a fused
+      // list no longer than LIMIT loses its Limit to the optimizer, and a
+      // Sort over the local scan's several partitions would range-shuffle
+      if (idScoreOnly) fused.toDF(spark).coalesce(1)
       else Fusion.payload(filtered, col(meta.idCol), if (!rankedTop) fused else fused.take(
         math.min(sel.limit.getOrElse(NearDefaultLimit), LimitCap) + sel.offset.getOrElse(0)))
     }
@@ -317,23 +320,11 @@ class Compiler(
         // global text index, text.rs:221-280), top-kCand over the FILTERED
         // doc set, so a selective filter can't starve the leg.
         val qtext = hybridText.get.query
-        val id = col(meta.idCol)
-        val (vLeg, tLeg) = bm25Index(sel, meta) match {
-          case Some(idx) =>
-            // an index leg reads its own plan: collected on its own
-            val scores = Bm25.searchIndex(idx, qtext)
-            val tFrame = if (!residualApplied) scores
-              else scores.join(dfH.select(id.as("__fsel")),
-                col("doc_id") === col("__fsel"), "left_semi")
-            (Fusion.leg(dfH, id, sim, kCand, hib),
-              Fusion.leg(tFrame, col("doc_id"), col("score"), kCand))
-          case None =>
-            // per-row scores: both legs from one scan of dfH, one job; a
-            // row holding no query term has a null text score
-            val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
-            val Seq(v, t) = Fusion.legs(dfH, id, Seq(sim -> hib, when(hit, score) -> true), kCand)
-            (v, t)
-        }
+        // per-row scores: both legs from one scan of dfH, one job; a row
+        // holding no query term has a null text score
+        val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
+        val Seq(vLeg, tLeg) =
+          Fusion.legs(dfH, col(meta.idCol), Seq(sim -> hib, when(hit, score) -> true), kCand)
         withPayload(dfH, Fusion.rrf(Seq(vLeg -> w, tLeg -> (1.0 - w)), fusionOpts("k")))
       case Some(VectorNear(v)) =>
         val vec = vecOf(v)
@@ -575,33 +566,18 @@ class Compiler(
             // flag, so rows with no matching term survive for NOT/OR
             // branches (reference filter semantics evaluate MATCH
             // per-row). The flag feeds the residual filter.
-            bm25Index(sel, meta) match {
-              case Some(idx) =>
-                // indexed collections LEFT-join the index scores; a
-                // top-level AND MATCH lets Catalyst convert the join back
-                // to inner
-                val scores = Bm25.searchIndex(idx, qtext)
-                  .select(col("doc_id").as("__bm25_id"), col("score"))
-                scoredTm = Some((tm, col("__tm")))
-                df.join(scores, df(meta.idCol) === col("__bm25_id"), "left")
-                  .withColumn("__tm", col("__bm25_id").isNotNull)
-                  .withColumn("score", coalesce(col("score"), lit(0.0)))
-                  .drop("__bm25_id")
-              case None =>
-                val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
-                scoredTm = Some((tm, hit))
-                df.withColumn("score", score)
-            }
+            val (score, hit) = Bm25.scoreColumns(df, qtext, textColOf(meta))
+            scoredTm = Some((tm, hit))
+            df.withColumn("score", score)
           case _ => df.withColumn("score", lit(1.0)) // scan score (S6)
         }
     }
 
-    val filtered0 = residualCond match {
+    val filtered1 = residualCond match {
       case Some(cond) if !residualApplied =>
         scored.where(compileCond(cond, scored, meta, scoredTm))
       case _ => scored
     }
-    val filtered1 = if (scoredTm.isDefined) filtered0.drop("__tm") else filtered0
     // decorrelated scalar-subquery conjuncts: aggregate ⋈ outer + compare
     val filtered = corrConjs.foldLeft(filtered1) {
       case (acc0, Compare(outerCol, op, SubqueryValue(sq))) =>
@@ -767,20 +743,6 @@ class Compiler(
       case Some(false) => base.desc
     }
   }
-
-  /** The BM25 index of a known text collection: a MATERIALIZED index
-    * (built once per dataset — T2, index/bm25.rs posting lists). The
-    * corpus collection needs its own: its doc set (docs WITH embeddings)
-    * has different N/avgdl/df stats than the full documents table. Every
-    * other frame (user collections) scores per row instead
-    * ([[Bm25.scoreColumns]]): one stats job, then a plain scan. */
-  private def bm25Index(sel: Select, meta: CollectionMeta): Option[Bm25.Index] =
-    if (!meta.textCol.contains("text")) None
-    else if (sel.from == "documents") Some(Bm25.indexFor(spark, catalog.dir))
-    else if (sel.from == "corpus")
-      Some(Bm25.materializedIndex(spark, catalog.dir, "bm25corpus",
-        Seq("documents", "embeddings"))(catalog.table("corpus")))
-    else None
 
   private def textColOf(meta: CollectionMeta): String = meta.textCol.getOrElse("text")
 

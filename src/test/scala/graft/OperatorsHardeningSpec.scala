@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** r15 review findings on the analytics operators, pinned. */
 class OperatorsHardeningSpec extends SparkSpecBase {
   import spark.implicits._
@@ -12,20 +10,6 @@ class OperatorsHardeningSpec extends SparkSpecBase {
     for (bad <- Seq(0, -1, 11))
       intercept[IllegalArgumentException](
         operators.Graph.bfsVarLength(e, s, bad))
-  }
-
-  test("searchIndexFiltered: duplicate keep ids do not inflate scores") {
-    val idx = operators.Bm25.materializedIndex(spark, sfDir, "hardspec",
-      Seq("documents"))(Tables.table(spark, sfDir, "documents"))
-    val keep = Tables.table(spark, sfDir, "documents")
-      .select(col("doc_id")).limit(200)
-    val dup = keep.unionAll(keep).unionAll(keep) // every id three times
-    val a = operators.Bm25.searchIndexFiltered(idx, keep, "data model", 10)
-      .collect().map(_.toString).toSeq
-    val b = operators.Bm25.searchIndexFiltered(idx, dup, "data model", 10)
-      .collect().map(_.toString).toSeq
-    assert(a.nonEmpty && a == b,
-      s"duplicated keep set changed scores\n a=${a.take(3)}\n b=${b.take(3)}")
   }
 
   test("Knn.batch with no queries returns an empty frame, not reduce-on-empty") {

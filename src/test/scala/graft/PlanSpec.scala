@@ -51,11 +51,8 @@ class PlanSpec extends SparkSpecBase {
     // on the driver: the F1 and F4 dataset rows, VelesQL hybrid and
     // NEAR_FUSED rrf. Every plan a row runs — each leg collection and the
     // fused frame — comes from the SQL execution events. No plan holds a
-    // Window or a full-outer join; the legs over one scan (q51, q116 and
-    // every vector leg) and the fused frame shuffle nothing. q62's and
-    // q104's BM25 index legs read the posting tables through their own
-    // joins and aggregates, whose exchanges are the leg's, not the
-    // fusion's.
+    // Window, a full-outer join or an Exchange: every leg (vector or
+    // per-row BM25) is one scan, and the fused frame shuffles nothing.
     import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlanInfo}
     import org.apache.spark.sql.graft.JobMeter
     def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
@@ -71,10 +68,8 @@ class PlanSpec extends SparkSpecBase {
         val ns = nodes(p)
         assert(!ns.exists(_.nodeName == "Window"), s"$q: a rank window runs:\n${p.simpleString}")
         assert(!ns.exists(_.simpleString.contains("FullOuter")), s"$q: legs merged by a full-outer join")
-        if (ns.exists(_.nodeName == "Exchange"))
-          assert(Set("q62_hybrid_rrf", "q104_vql_hybrid")(q) &&
-            ns.exists(_.nodeName.contains("Aggregate")),
-            s"$q: a fusion plan shuffles:\n${ns.map(_.nodeName).mkString(", ")}")
+        assert(!ns.exists(_.nodeName == "Exchange"),
+          s"$q: a fusion plan shuffles:\n${ns.map(_.nodeName).mkString(", ")}")
       }
       // the fused frame: a local relation of ≤ legs × K id/score rows
       // under its final top k, nothing to shuffle

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Bm25Postings.{postingScores, tokenArray}
 import graft.operators.Bm25
 import graft.server.RestServer
 
@@ -10,12 +11,12 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.graft.JobMeter
 import org.apache.spark.sql.types._
 
-/** Query-time BM25 on user collections: per-row scores from one stats
-  * job ([[Bm25.scoreColumns]]) must equal the posting-list index on
-  * adversarial text, MATCH … LIMIT k must be the BM25 top k, an
-  * all-short-token query must match nothing, and the text leg and the
-  * REST search routes must stay within their job budgets with no
-  * shuffle. */
+/** Query-time BM25: per-row scores from one stats job
+  * ([[Bm25.scoreColumns]]) must equal a posting-list computation on
+  * adversarial text and the documents table, MATCH … LIMIT k must be
+  * the BM25 top k, an all-short-token query must match nothing, and the
+  * text leg and the REST search routes must stay within their job
+  * budgets with no shuffle. */
 class TextSearchSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -70,23 +71,27 @@ class TextSearchSpec extends SparkSpecBase {
     "a x 7", "", "!!", "zzzz never", "data data query 42")
 
   test("per-row scores equal the posting-list index on adversarial text") {
-    for (seed <- Seq(1L, 2L)) {
-      val docs = genDocs(seed, 300).toDF("doc_id", "text")
-      val idx = Bm25.buildIndex(docs)
-      for (q <- queries) {
-        val got = Bm25.score(docs, q).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val exp = Bm25.searchIndex(idx, q).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        assert(got.keySet == exp.keySet, s"seed $seed query '$q'")
-        got.foreach { case (id, s) =>
-          assert(math.abs(s - exp(id)) < 1e-12, s"seed $seed query '$q' doc $id: $s vs ${exp(id)}")
-        }
+    val inputs = Seq(1L, 2L).map(seed => s"seed $seed" -> genDocs(seed, 300).toDF("doc_id", "text")) :+
+      ("sf0.001 documents" -> Tables.table(spark, sfDir, "documents"))
+    for ((input, docs) <- inputs; q <- queries :+ "spark join filter") {
+      val got = Bm25.score(docs, q).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val exp = postingScores(docs, q)
+      assert(got.keySet == exp.keySet, s"$input query '$q'")
+      got.foreach { case (id, s) =>
+        assert(math.abs(s - exp(id)) < 1e-12, s"$input query '$q' doc $id: $s vs ${exp(id)}")
       }
     }
+    // the ranked top 10 of the dataset table (q60's shape) is the
+    // posting scores' top 10
+    val docs = Tables.table(spark, sfDir, "documents")
+    val top = Bm25.score(docs, "spark join filter", 10).collect().map(_.getLong(0)).toSet
+    assert(top.size == 10 &&
+      top == postingScores(docs, "spark join filter").toSeq.sortBy(e => (-e._2, e._1)).take(10).map(_._1).toSet)
     // an empty collection scores nothing, by both shapes
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
     assert(Bm25.score(empty, "spark join").count() == 0)
-    assert(Bm25.searchIndex(Bm25.buildIndex(empty), "spark join").count() == 0)
+    assert(postingScores(empty, "spark join").isEmpty)
   }
 
   test("the BM25 score kernel equals the Column formula it replaced, bit for bit") {
@@ -95,7 +100,7 @@ class TextSearchSpec extends SparkSpecBase {
     // Column formula with the corpus stats as literals
     def reference(docs: org.apache.spark.sql.DataFrame, q: String): Map[Long, Double] = {
       val terms = Bm25.queryTerms(q)
-      val tok = Bm25.tokenArray(col("text"))
+      val tok = tokenArray(col("text"))
       val st = docs.where(size(tok) > 0).agg(count(lit(1)), (sum(size(tok)) +:
         terms.map(t => sum(array_contains(tok, t).cast("int")))): _*).head()
       val n = st.getLong(0)
@@ -218,6 +223,8 @@ class TextSearchSpec extends SparkSpecBase {
   test("a fused search with the largest LIMIT returns every row") {
     // the candidate pool follows LIMIT up to the result cap: a pool of
     // Int.MaxValue once sized each leg heap to it
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
     withCollection(genDocs(9, 300)) { g =>
       val q = Seq(0.1f, 0.2f, 0.3f, 0.4f).toList
       val q2 = Seq(0.3f, 0.1f, 0.4f, 0.2f).toList
@@ -231,10 +238,20 @@ class TextSearchSpec extends SparkSpecBase {
             "LIMIT %d USING FUSION(strategy = 'rrf', k = 60, vector_weight = 0.5)",
           "SELECT id, score FROM docs WHERE vector NEAR_FUSED [$v, $w] USING FUSION 'rrf' " +
             "LIMIT %d")) {
-        def run(limit: Int) = g.sql(sql.format(limit), Map("v" -> q, "w" -> q2)).collect().toSeq
-        val all = run(Int.MaxValue)
+        def run(limit: Int) = JobMeter(spark)(
+          g.sql(sql.format(limit), Map("v" -> q, "w" -> q2)).collect().toSeq)
+        val all = run(Int.MaxValue).value
         assert(all.size == 300, s"$sql: ${all.size} rows")
-        assert(all == run(300), sql)
+        assert(all == all.sortBy(r => (-r.getDouble(1), r.getLong(0))), sql)
+        // the optimizer drops a Limit its local relation cannot exceed:
+        // the final ordering must still sort the fused rows in place
+        for (limit <- Seq(300, 5000)) {
+          val m = run(limit)
+          assert(m.value == all, s"$sql LIMIT $limit")
+          assert(m.shuffleBytes == 0 && !m.plans.exists(nodes(_).exists(_.nodeName == "Exchange")),
+            s"$sql LIMIT $limit: ${m.plans.map(nodes(_).map(_.nodeName).mkString(", "))}")
+        }
+        assert(run(10).value == all.take(10), sql)
       }
       withRest(g) { post =>
         val hybrid = ids(post("search/hybrid",
@@ -260,6 +277,21 @@ class TextSearchSpec extends SparkSpecBase {
         assert(m.value.nonEmpty && m.jobs >= 2, s"$sql: ${m.jobs} jobs")
         assert(m.groups.forall(_.startsWith("graft-timeout-")) && m.groups.distinct.size == 1,
           s"$sql: job groups ${m.groups}")
+      }
+      // the REST search routes carry a body's timeout_ms the same way
+      // (multi: both legs from one scan, then the payload scan)
+      withRest(g) { post =>
+        for ((route, body) <- Seq(
+            "search/text" -> """{"query": "stream index", "top_k": 10, "timeout_ms": 600000}""",
+            "search/hybrid" -> ("""{"query": "parquet graph", "vector": [0.4, 0.3, 0.2, 0.1], """ +
+              """"top_k": 10, "timeout_ms": 600000}"""),
+            "search/multi" -> ("""{"vectors": [[0.2, 0.1, 0.4, 0.3], [0.3, 0.4, 0.1, 0.2]], """ +
+              """"top_k": 10, "timeout_ms": 600000}"""))) {
+          val m = JobMeter(spark)(post(route, body))
+          assert(m.value.contains("\"results\":[{") && m.jobs >= 2, s"$route: ${m.jobs} jobs")
+          assert(m.groups.forall(_.startsWith("graft-timeout-")) && m.groups.distinct.size == 1,
+            s"$route: job groups ${m.groups}")
+        }
       }
     }
   }

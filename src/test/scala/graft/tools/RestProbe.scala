@@ -187,7 +187,7 @@ object RestProbe {
       for (kind <- Seq("health", "knn_exact", "knn_filtered", "knn_ann", "bm25", "hybrid",
           "fused", "match2", "get")) {
         val hot = request(kind)
-        call(hot) // first request: ANN index build, BM25 postings, codegen
+        call(hot) // first request: ANN index build, BM25 stats, codegen
         println(row(s"$kind hot", Seq.fill(reps)(call(hot))))
         println(row(s"$kind fresh", Seq.fill(reps)(call(request(kind)))))
       }
