@@ -501,7 +501,7 @@ class Collections(spark: SparkSession, dataDir: String,
 
   // ---- trained-index epochs -------------------------------------------
   //
-  // Trained ANN models (IVF centroids, PQ codebooks, the HNSW router)
+  // Trained ANN models (IVF centroids, PQ codebooks)
   // are corpus STATISTICS, stable under small batches — so they freeze
   // per EPOCH, not per content stamp: a write encodes only its own
   // delta segment against the frozen model instead of re-training and

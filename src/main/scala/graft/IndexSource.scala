@@ -3,19 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Path, Paths}
 
-/** What every ANN tier (LSH buckets, IVF cells, IVF-PQ codes, the HNSW
-  * router and graphs) builds over: one source, one maintenance route
-  * ([[Materialize.pieces]]).
+/** What every ANN tier (LSH buckets, IVF cells, IVF-PQ codes) builds
+  * over: one source, one maintenance route ([[Materialize.pieces]]).
   *
   * @param token  the `graft-derived` cache identity (the dataset dir, or
   *               a collection's identity)
   * @param name   the table or collection name, part of every artifact's
   *               kind, so two vector tables under one token never share
   *               a generation-pruning prefix
-  * @param stamp  the content stamp: files whose listing changes on every
-  *               write (a dataset table's parquet, a collection's current
-  *               points manifest) — keys the per-content memos (corpus
-  *               count, HNSW cell hashes)
   * @param model  the stamp of TRAINED models (IVF centroids, PQ
   *               codebooks): a collection's index-epoch sidecar
   *               ([[Collections.indexEpoch]]), so models freeze across
@@ -29,8 +24,8 @@ import java.nio.file.{Path, Paths}
   *               the index reads as one scan
   * @param frame  the source's rows, the training input of the models
   */
-final case class IndexSource(token: String, name: String, stamp: Seq[Path],
-    model: Seq[Path], pieces: Collections.Pieces, frame: () => DataFrame)
+final case class IndexSource(token: String, name: String, model: Seq[Path],
+    pieces: Collections.Pieces, frame: () => DataFrame)
 
 object IndexSource {
 
@@ -44,7 +39,7 @@ object IndexSource {
     val schema = Materialize.memo(s"rawschema_$table", dir, Seq(file)) {
       spark.read.parquet(file.toString).schema
     }
-    IndexSource(dir, table, Seq(file), Seq(file),
+    IndexSource(dir, table, Seq(file),
       Collections.Pieces(Seq(Collections.Piece(0, file, -1)), schema, idCol,
         Collections.Visibility(IndexedSeq.empty)),
       () => Tables.table(spark, dir, table))

@@ -28,8 +28,7 @@ object Materialize {
     * whose listing stamps the content. Trained models and dataset-dir
     * derived tables are such artifacts, clustered by `partCol` (one
     * repartition shuffle) and read back through [[readMemo]]; index
-    * pieces and HNSW cell graphs are built in batches instead
-    * ([[artifacts]]).
+    * pieces are built in batches instead ([[artifacts]]).
     *
     * BUILDER CONTRACT: after the frame is written, every localCheckpoint
     * anywhere in the builder's plan is freed (`CheckpointBlocks
@@ -80,8 +79,7 @@ object Materialize {
   /** One artifact of a batched build ([[artifacts]]): `tag` is the value
     * its rows carry in the build's [[PieceCol]]; the rest is its cache
     * identity, as in [[atPaths]]. */
-  final case class Part(tag: Int, kind: String, sources: Seq[Path],
-      extraStamp: Option[String] = None)
+  final case class Part(tag: Int, kind: String, sources: Seq[Path])
 
   /** The tag column of a batched build. */
   val PieceCol = "__piece"
@@ -100,7 +98,7 @@ object Materialize {
     * published while this one waited is not built again. */
   def artifacts(spark: SparkSession, token: String, parts: Seq[Part],
       partCol: Option[String])(build: Seq[Int] => DataFrame): Seq[Path] = {
-    val keyed = parts.map(p => p -> cacheKey(p.kind, token, p.sources, p.extraStamp))
+    val keyed = parts.map(p => p -> cacheKey(p.kind, token, p.sources))
     def missing = keyed.filterNot { case (_, k) =>
       Files.exists(derived.resolve(k).resolve("_SUCCESS"))
     }.distinctBy(_._2)
@@ -167,8 +165,8 @@ object Materialize {
     * Several dirs read as ONE relation: one scan whose read partitions
     * pack small files across dirs. `schema`, when given, is the read
     * schema — no footer job runs, and files written under a narrower
-    * one null-fill; [[pieces]] and the HNSW cell graphs pass the schema
-    * their build plan already knows. Such a read goes through
+    * one null-fill; [[pieces]] passes the schema its build plan already
+    * knows. Such a read goes through
     * [[org.apache.spark.sql.graft.ImmutableDirScan]], the scan collection
     * frames use too: published artifact dirs never change, so each is
     * listed once, and a read over more than 32 dirs runs no listing job. */
@@ -205,8 +203,8 @@ object Materialize {
   def pathStamp(p: Path): String = listingHash(p)
 
   /** Per-piece incremental materialization — the one maintenance route
-    * of every ANN index (LSH buckets, IVF cells, IVF-PQ codes, HNSW
-    * signatures): one cached artifact per (piece dir, extraSources).
+    * of every ANN index (LSH buckets, IVF cells, IVF-PQ codes): one
+    * cached artifact per (piece dir, extraSources).
     * Piece dirs are immutable (a dataset table's parquet file; a
     * collection's base buckets or flat dirs and its delta segments,
     * [[Collections.FrameManifest]]), so after a write the next use
@@ -273,11 +271,6 @@ object Materialize {
     * the same key and would serve the stale cache. Parquet writers
     * (task-UUID part files, varying encoded sizes) don't do that in
     * practice — sources here are only ever regenerated wholesale. */
-  /** `extraStamp`: an additional VALUE-derived stamp component (e.g. a
-    * per-cell content hash) appended to the file-listing stamp. It sits
-    * AFTER the `__` prefix boundary, so [[pruneStaleSiblings]] treats a
-    * same-(kind, token) entry with a different extraStamp as a stale
-    * generation and retires it like any other superseded stamp. */
   /** The (kind, token) identity prefix of a cache key. LENGTH-PREFIXED:
     * kind and the token key both admit '_' — the same char that used
     * to join them — so v3's `v3_<kind>_<token>__` was ambiguous
@@ -304,16 +297,13 @@ object Materialize {
     sb.toString
   }
 
-  private def cacheKey(kind: String, token: String,
-      sources: Seq[Path], extraStamp: Option[String] = None): String = {
-    val stamp = (sources.map { f =>
+  private def cacheKey(kind: String, token: String, sources: Seq[Path]): String =
+    keyPrefix(kind, token) + sources.map { f =>
       // fail fast: a silently-missing source would stamp a constant and
       // pin a stale cache forever (r3 ADVICE)
       require(Files.exists(f), s"Materialize($kind): missing source $f")
       listingHash(f)
-    } ++ extraStamp.map(_.replaceAll("[^A-Za-z0-9._-]", "_"))).mkString("_")
-    keyPrefix(kind, token) + stamp
-  }
+    }.mkString("_")
 
   /** Driver-side memo for the SMALL collected halves of an index (IVF
     * centroids, PQ codebooks — k×dim-scale arrays): keyed by the same
@@ -337,51 +327,6 @@ object Materialize {
     }
   }
 
-  /** Corpus row count, memoized like [[memo]] but ALSO persisted as a
-    * tiny stamp-named sidecar under `graft-derived/counts/` — the count
-    * is a property of the indexed corpus known the moment the index is
-    * materialized, so no later compile should ever pay a Spark job for
-    * it (r16 VERDICT: the adaptive ANN tiers' per-compile `count()`
-    * doubled q195). A fresh JVM reads the sidecar (zero jobs); a content
-    * change re-stamps the key, recounts once, and retires superseded
-    * sidecars of the same (kind, token). Sidecars live in their own
-    * subdirectory so [[pruneStaleSiblings]]' same-prefix sweep over the
-    * index directories never races them. */
-  def countMemo(kind: String, token: String, sources: Seq[Path])(
-      count: => Long): Long = {
-    val key = cacheKey(kind, token, sources)
-    val prefix = "cnt_" + keyPrefix(kind, token)
-    memoCache.get(prefix) match {
-      case Some((k, v)) if k == key => v.asInstanceOf[Long]
-      case _ =>
-        val dir = derived.resolve("counts")
-        val sidecar = dir.resolve(key)
-        val persisted =
-          if (Files.exists(sidecar))
-            scala.util.Try(
-              new String(Files.readAllBytes(sidecar), "UTF-8").trim.toLong).toOption
-          else None
-        val v = persisted.getOrElse {
-          val n = count
-          Files.createDirectories(dir)
-          val tmp = dir.resolve(s"$key.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(tmp, n.toString.getBytes("UTF-8"))
-          try Files.move(tmp, sidecar, StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            Files.deleteIfExists(tmp) // a racer persisted the same value
-          }
-          // retire superseded stamps of the same (kind, token) — each is
-          // ~20 bytes, but a long-lived serving process publishes forever
-          entries(dir).filter(p => p.getFileName.toString.startsWith(keyPrefix(kind, token)) &&
-            p.getFileName.toString != key && !p.getFileName.toString.contains(".tmp-"))
-            .foreach(p => Files.deleteIfExists(p))
-          n
-        }
-        memoCache.put(prefix, (key, v))
-        v
-    }
-  }
-
   /** One-time reclamation of artifacts whose KIND a code upgrade
     * retired: [[pruneStaleSiblings]] only retires same-(kind, token)
     * generations, so renaming a kind (e.g. r17's raw-code `pq*`/`ivfpq*`
@@ -400,9 +345,9 @@ object Materialize {
     })
 
   /** Reclaims everything kept for `token`, a source that no longer exists
-    * (a dropped collection): every artifact dir and count sidecar keyed by
-    * it, and its [[memo]], [[countMemo]], [[readMemo]] and listing-cache
-    * entries. In-flight temp dirs are left to the builds that own them. */
+    * (a dropped collection): every artifact dir keyed by it, and its
+    * [[memo]], [[readMemo]] and listing-cache entries. In-flight temp
+    * dirs are left to the builds that own them. */
   def reclaim(token: String): Unit = {
     def ours(name: String) = keyParts(name).exists(_._2 == tokenKey(token))
     memoCache.filterInPlace { case (_, (key, _)) => !ours(key) }
@@ -414,14 +359,13 @@ object Materialize {
         ()
       }
     }
-    (entries(derived) ++ entries(derived.resolve("counts")))
-        .filter(p => ours(p.getFileName.toString)).foreach { p =>
+    entries(derived).filter(p => ours(p.getFileName.toString)).foreach { p =>
       org.apache.spark.sql.graft.ImmutableDirScan.forget(p.toString)
       Collections.deleteRec(p)
     }
   }
 
-  /** The (kind, token key) of a v4 cache key or sidecar name —
+  /** The (kind, token key) of a v4 cache key —
     * `v4_<len>k<kind>_<len>t<token>__<stamp>`; the length prefixes make
     * the split unambiguous. None for any other name and for temp dirs. */
   private def keyParts(name: String): Option[(String, String)] = {
@@ -452,13 +396,6 @@ object Materialize {
         s.iterator().asScala.toSeq
       } finally s.close()
     }
-
-  /** Test hook: evict a countMemo's in-memory entry so specs can
-    * exercise the persisted-sidecar path (fresh-JVM simulation). */
-  private[graft] def evictCountMemo(kind: String, token: String): Unit = {
-    memoCache.remove("cnt_" + keyPrefix(kind, token))
-    ()
-  }
 
   private def listingHash(p: Path): String = {
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a local-mode `SparkSession` is built: [[local]] for the
-  * short-lived mains (Bench, Verify, Plans, QTime), the test tools and
+  * short-lived mains (Bench, Verify, Plans), the test tools and
   * the spec base; [[service]] for the long-running ones (Serve, Repl).
   * Every session it builds carries [[GraftExtensions]], the engine's one
   * session hook.

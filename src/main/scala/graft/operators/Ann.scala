@@ -128,7 +128,7 @@ object Ann {
     * bucket, so the probe's pushed `bucket IN (…)` prunes row groups in
     * the one scan over all pieces: the query neither re-hashes
     * a vector nor scans outside its Hamming ball. (The trained tiers —
-    * IVF/PQ/HNSW — take the same pieces against EPOCH-FROZEN models;
+    * IVF and IVF-PQ — take the same pieces against EPOCH-FROZEN models;
     * see [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
   def materializedIndexAt(spark: org.apache.spark.sql.SparkSession,
       src: graft.IndexSource, vecCol: String, nPlanes: Int, dim: Int): DataFrame =

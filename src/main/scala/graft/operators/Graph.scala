@@ -622,7 +622,7 @@ object Graph {
     var converged = gate.rows == 0L
     // (measured and NOT adopted: fusing two peel rounds per
     // checkpoint+count halves the sync points but doubles each plan's
-    // join depth — a QTime A/B read as a wash inside host noise, so the
+    // join depth — a min-of-reps A/B read as a wash inside host noise, so the
     // simpler one-round loop stays)
     while (!converged && it < maxIters && gate.local.isEmpty) {
       val keep = keepHint(edges.groupBy("u").agg(count(lit(1)).as("deg"))

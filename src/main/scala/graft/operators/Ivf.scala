@@ -6,7 +6,10 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) ANN index — the second scale path beside LSH
-  * (SURVEY.md §2.3 V1 "batch-built HNSW/IVF partitions", §7.1 step 8).
+  * (SURVEY.md §2.3 V1 "batch-built HNSW/IVF partitions", §7.1 step 8),
+  * and the plan `WITH (index = 'hnsw')` compiles to: route the query to
+  * its nearest cells, then an exact top-k inside them (REPOSE's
+  * distributed top-k shape).
   *
   * Shape: k-means-lite centroids (deterministic seeding, fixed Lloyd
   * iterations, all distributed aggregations) partition the vector space;
@@ -23,8 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
-  /** Coarse cells every materialized cell index trains (IVF, IVF-PQ,
-    * the partitioned HNSW router). */
+  /** Coarse cells every materialized cell index trains (IVF, IVF-PQ). */
   val Cells = 8
 
   /** Deterministic k-means: seeds = hash-spread sample, `iters` Lloyd
@@ -180,7 +182,8 @@ object Ivf {
 
   /** The `nprobe` cells nearest the query: l2² to each centroid of
     * the small in-memory table, ties broken by cell id. The one probe
-    * rule of every cell-routed tier (IVF, IVF-PQ, partitioned HNSW). */
+    * rule of every cell-routed tier (IVF — `index = 'hnsw'` too — and
+    * IVF-PQ). */
   def probeCells(centroids: Array[(Int, Array[Float])], query: Array[Float],
       nprobe: Int): Seq[Int] =
     centroids.map { case (c, cen) => (c, VectorKernels.l2Squared(query, cen)) }

@@ -585,15 +585,11 @@ object VelesqlQueries {
       recallPin(s, d, "mode = 'accurate', index = 'ivf'")
     },
 
-    // ---- V8 via the PARTITIONED HNSW graph: same recall pin as
-    // q123/q125 but through `WITH (index = 'hnsw')` — IVF-cell routing +
-    // per-cell navigable-graph walk (reference's core structure,
-    // index/hnsw/native_index.rs:230, re-expressed as a batch-built
-    // adjacency table). Calibration (PERF_r11.md, near-uniform
-    // worst-case testdata): accurate tier (nprobe=7, ef=96) → 29/30 at
-    // sf0.01 and 30/30 at sf0.1, scoring ~2.6× FEWER candidates than
-    // the ivf tier's full-cell scans (HnswSpec pins the count). Same
-    // ≥0.95 Accurate bar.
+    // ---- V8 via `WITH (index = 'hnsw')`: the reference's graph index
+    // (index/hnsw/native_index.rs:230) compiles to q125's plan — route to
+    // the 7 nearest of 8 IVF cells, exact top-k inside them — so it hits
+    // exactly what q125 hits (IndexRouteSpec pins the identical rows and
+    // plans). Same ≥0.95 Accurate bar.
     QueryDef("q195_ann_recall_hnsw", "SELECT CAST(1 AS INT) AS recall_ok") { (s, d) =>
       recallPin(s, d, "mode = 'accurate', index = 'hnsw'")
     },

@@ -919,9 +919,8 @@ class RestServer(g: Graft, port: Int = 0) {
       case ("POST", "collections" :: name :: "indexes" :: "retrain" :: Nil) =>
         // bump the trained-index epoch (Collections.retrainIndexes):
         // the next indexed query re-trains IVF centroids / PQ codebooks
-        // / the HNSW router on current content and re-encodes all
-        // buckets — the explicit drift trigger behind the epoch-frozen
-        // incremental maintenance
+        // on current content and re-encodes all buckets — the explicit
+        // drift trigger behind the epoch-frozen incremental maintenance
         val n = existingUserCollection(name)
         val epoch = g.collections.retrainIndexes(n)
         ok(s"""{"status":"ok","name":"$n","index_epoch":$epoch}""")

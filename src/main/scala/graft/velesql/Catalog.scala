@@ -125,8 +125,8 @@ class Catalog(spark: SparkSession, val dir: String) {
       if (Tables.All.contains(name)) Some(graft.IndexSource.table(spark, dir, name))
       else None // derived frames: no stable file to stamp
     else if (userCollections.exists(name))
-      userCollections.pointsRealPath(name).map(p =>
-        graft.IndexSource(graft.Collections.indexToken(dir, name), name, Seq(p),
+      userCollections.pointsRealPath(name).map(_ =>
+        graft.IndexSource(graft.Collections.indexToken(dir, name), name,
           Seq(userCollections.ensureIndexEpochFile(name)),
           userCollections.pieces(name), () => table(name)))
     else None

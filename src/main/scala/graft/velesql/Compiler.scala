@@ -1,7 +1,7 @@
 package graft.velesql
 
 import graft.functions.VectorFunctions
-import graft.operators.{Ann, Bm25, Fusion, Graph, Hnsw, Ivf, IvfPq, Knn, Pq, Quantization}
+import graft.operators.{Ann, Bm25, Fusion, Graph, Ivf, IvfPq, Knn, Pq, Quantization}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Ast._
@@ -84,8 +84,9 @@ class Compiler(
       case Some(other) => fail(s"unknown WITH mode '$other'")
     }
     // WITH (index = …) picks the structure behind a probing tier: LSH
-    // buckets (default), trained IVF cells or partitioned HNSW. On the
-    // exact scan it would be a silent no-op.
+    // buckets (default) or the trained IVF cells, which 'hnsw' also
+    // names (the same cell-routed plan). On the exact scan it would be
+    // a silent no-op.
     val index = w.get("index").map {
       case k @ ("lsh" | "ivf" | "hnsw") => k
       case other => fail(s"unknown WITH index '$other' (supported: lsh, ivf, hnsw)")
@@ -110,7 +111,7 @@ class Compiler(
     val pqConflict = quant0.contains("pq") && probe.isDefined && !index.contains("ivf")
     if (pqConflict && w.contains("quantization"))
       fail("quantization='pq' composes only with index='ivf' probing " +
-        "(the LSH buckets and HNSW graphs aren't trained with the codebooks); " +
+        "(its residual codes are trained on the IVF cells); " +
         "add index='ivf' or drop the mode for a full-codes ADC scan")
     val rerank = w.get("rerank") match {
       case Some("true") | Some("1") => true
@@ -360,49 +361,15 @@ class Compiler(
         // tier (the IVF cells never hold one)
         val dfF = (opts.probe match {
           case Some(t) if opts.index.exists(Set("ivf", "hnsw")) =>
-            // The trained IVF cells: `index = 'ivf'` probes them, and
-            // partitioned HNSW (native_index.rs:230) routes through the
-            // same centroids and nprobe, then walks an ef-bounded graph
-            // inside each probed cell instead of scanning it.
+            // The trained IVF cells: route the query to its nprobe
+            // nearest cells and score every row of them exactly
+            // (REPOSE's route-then-local-top-k). `index = 'hnsw'` is the
+            // same plan — the reference's graph (native_index.rs:230)
+            // has no Spark analogue that beats this scan on recall or
+            // time (PERF_r17_ann.md, OPTIMIZATION_r27.md).
             val src = indexSrc(s"index='${opts.index.get}'")
             val (cents, cells) = Ivf.materializedIndexAt(spark, src, vcolName, Ivf.Cells)
-            val probes = Ivf.probeCells(cents, vec.toArray, Ivf.nprobeOf(t))
-            // Corpus count for the HNSW route, persisted per content
-            // stamp (Materialize.countMemo): no Spark job on any later
-            // compile, fresh query vectors included (r16 VERDICT #1).
-            def corpusN = graft.Materialize.countMemo(
-              s"corpusn_${vcolName}_${src.name}", src.token, src.stamp)(cells.count())
-            // Above the calibration corpus (96·96) the walk never pays:
-            // its only saving is exact-kernel evals, its per-visit
-            // bookkeeping costs more, and recall at a fixed ef decays as
-            // cells grow (RecallCurve r16, PERF_r17_ann). So every HNSW
-            // tier there scans its probed cells exactly — the ivf plan —
-            // and the adjacency never builds.
-            if (opts.index.contains("ivf") || corpusN > 96L * 96L)
-              probe(cells, "cell", probes)
-            else {
-              val (_, graph) = Hnsw.materializedIndexAt(spark, src, vcolName,
-                meta.idCol, meta.metric, Ivf.Cells)
-              // walk budget per tier; accurate is the sf-scale
-              // calibration floor (PERF_r11.md: nprobe 7, ef 96 → ≥29/30)
-              val ef = t match { case "fast" => 24; case "balanced" => 48; case _ => 96 }
-              val idx = graph.as(sel.fromAlias.getOrElse(sel.from))
-              // filter-then-search: the residual predicate gates ACCEPTANCE
-              // inside the walk (navigation still crosses non-matching
-              // nodes — filtered-HNSW), so survivors all satisfy it
-              val (probedIdx, keepCol) = residualCond match {
-                case Some(c) =>
-                  (idx.withColumn("__keep", compileCond(c, idx, meta)), Some("__keep"))
-                case None => (idx, None)
-              }
-              Hnsw.walkCandidates(
-                probedIdx.where(col("cell").isin(probes: _*)),
-                vcolName, meta.idCol, meta.metric, vec, ef, keepCol,
-                // the graph is written clustered by cell, so the walk may
-                // skip its co-locating shuffle when no file can split
-                cellClusteredFiles = true)
-                .drop("cell", "neighbors", "neighbors1", "level", "__keep")
-            }
+            probe(cells, "cell", Ivf.probeCells(cents, vec.toArray, Ivf.nprobeOf(t)))
           case Some(t) =>
             // LSH Hamming-ball probe, radius per tier, calibrated on the
             // near-uniform testdata (PERF_r17_ann.md): fast r=1 ≈ 0.25,

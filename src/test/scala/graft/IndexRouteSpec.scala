@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Hnsw, Ivf, IvfPq, Knn, Pq}
+import graft.operators.{Ann, Ivf, IvfPq, Knn, Pq}
 import graft.server.RestServer
 
 import java.net.URI
@@ -113,14 +113,8 @@ class IndexRouteSpec extends SparkSpecBase {
       assert(rows(codes, idCol, "cell", "codes") ==
         rows(Pq.encodeResidual(visible, vecCol, idCol, cb, pqCents), idCol, "cell", "codes"),
         "ivfpq codes")
-      // HNSW: the graph over the visible IVF cells
-      val (_, graph) = Hnsw.materializedIndexAt(spark, src, vecCol, idCol, "cosine", Ivf.Cells)
-      val graphCols = Seq(idCol, "cell", "neighbors", "neighbors1", "level")
-      assert(rows(graph, graphCols: _*) == rows(Hnsw.buildGraph(
-        Ivf.buildIndex(visible, vecCol, cents).orderBy(idCol), vecCol, idCol, "cosine"),
-        graphCols: _*), "hnsw graph")
       if (name == "emptied") {
-        assert(exact.isEmpty && cells.isEmpty && codes.isEmpty && graph.isEmpty)
+        assert(exact.isEmpty && cells.isEmpty && codes.isEmpty)
         for (w <- Seq("mode = 'accurate'", "mode = 'accurate', index = 'ivf'",
             "mode = 'accurate', index = 'hnsw'", "quantization = 'pq'",
             "mode = 'accurate', index = 'ivf', quantization = 'pq'"))
@@ -128,6 +122,65 @@ class IndexRouteSpec extends SparkSpecBase {
             Map("q" -> q)).collect().isEmpty, w)
       } else assert(exact.size == 10)
     }
+  }
+
+  test("index = 'hnsw' and index = 'ivf' give identical rows and plans on every shape") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val helper = new AdaptiveSparkPlanHelper {}
+    val datasets = new velesql.Catalog(spark, sfDir)
+    def nodes(p: SparkPlan): Seq[String] = helper.collect(p) { case n => n.nodeName }
+    for ((name, sh) <- shapes; tier <- Seq("fast", "balanced", "accurate")) {
+      val q = functions.VectorFunctions.syntheticQuery(sh.dim)
+      val from = if (name == "dataset table") "embeddings" else s"`$name`"
+      def near(index: String): (Seq[(Long, Double)], SparkPlan) = {
+        val sql = s"SELECT ${sh.idCol}, score FROM $from WHERE vector NEAR $$q LIMIT 10 " +
+          s"WITH (mode = '$tier', index = '$index')"
+        val df = if (name == "dataset table")
+          new velesql.Compiler(spark, datasets, Map("q" -> q)).run(sql)
+        else g.sql(sql, Map("q" -> q))
+        val rows = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+        (rows, df.queryExecution.executedPlan)
+      }
+      val (ivf, ivfPlan) = near("ivf")
+      val (hnsw, hnswPlan) = near("hnsw")
+      val at = s"$name/$tier"
+      assert(hnsw == ivf, s"$at: hnsw $hnsw vs ivf $ivf")
+      assert(ivf.nonEmpty == (name != "emptied"), s"$at: $ivf")
+      assert(nodes(hnswPlan) == nodes(ivfPlan), s"$at:\n$hnswPlan\nvs\n$ivfPlan")
+      def scans(p: SparkPlan) = helper.collect(p) { case f: FileSourceScanExec => f }.size
+      assert(scans(hnswPlan) == scans(ivfPlan), s"$at: FileScan count")
+      assert(!nodes(hnswPlan).exists(_.contains("MapPartitions")) &&
+        helper.collect(hnswPlan) { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"$at: a MapPartitions or repartition in\n$hnswPlan")
+    }
+    // a collection's token is this suite's own; the dataset dir's is
+    // shared with every earlier build
+    for ((name, sh) <- shapes if name != "dataset table") {
+      val hnswKinds = derivedOf(sh.src.token).map(_.getFileName.toString)
+        .filter(_.matches("v4_\\d+khnsw.*"))
+      assert(hnswKinds.isEmpty, s"$name: hnsw artifacts $hnswKinds")
+    }
+  }
+
+  test("warm ANN compiles with fresh vectors run no Spark job") {
+    // ANN serving compiles per request (a fresh vector misses the plan
+    // memo), so a compile over a built index must schedule nothing: the
+    // index relations come from the read memo and the centroids and
+    // codebooks from the driver memo. Compile only; execution jobs are
+    // the query's.
+    val datasets = new velesql.Catalog(spark, sfDir)
+    def compile(v: Seq[Float], w: String): Unit = {
+      new velesql.Compiler(spark, datasets, Map("q" -> v)).run(
+        s"SELECT vec_id FROM embeddings WHERE vector NEAR $$q LIMIT 5 WITH ($w)")
+      ()
+    }
+    val tiers = Seq("mode = 'accurate', index = 'hnsw'", "quantization = 'pq'")
+    tiers.foreach(compile(functions.VectorFunctions.syntheticQuery(64), _))
+    val fresh = (0 until 64).map(i => (math.cos(i * 0.31) * 0.4 - 0.05).toFloat)
+    val m = JobMeter(spark)(tiers.foreach(compile(fresh, _)))
+    assert(m.jobs == 0, s"a warm compile ran ${m.jobs} Spark job(s): ${m.descriptions}")
   }
 
   test("HNSW cell graphs cached before a schema widening read null-filled") {
@@ -175,9 +228,7 @@ class IndexRouteSpec extends SparkSpecBase {
     assert((first.jobs, first.writes.size) == ((1L, 1)),
       "a fresh 4-bucket collection's first LSH build: (jobs, writes)")
     val m = Pq.defaultM(16)
-    def hnsw() = Hnsw.materializedIndexAt(spark, src, "vec", "id", "cosine", Ivf.Cells)
     IvfPq.materializedIndexAt(spark, src, "vec", "id", 16, Ivf.Cells, m, Pq.K)
-    hnsw()
     g.collections.upsert("pins", (300L until 310L).map(i => (i, vec(i, 0.37), 1))
       .toDF("id", "vec", "label"))
     for ((tier, refresh) <- Seq[(String, () => Any)](
@@ -188,21 +239,6 @@ class IndexRouteSpec extends SparkSpecBase {
       val r = JobMeter(spark)(refresh())
       assert((r.jobs, r.writes.size) == ((1L, 1)), s"$tier one-delta refresh: (jobs, writes)")
     }
-    // HNSW: the signature piece (one write job), the cell-hash aggregate
-    // (its shuffle stage and the collect) and ONE write for every cell
-    // graph the delta dirtied (buildGraph's cell shuffle and the write)
-    val h = JobMeter(spark)(hnsw())
-    assert((h.jobs, h.writes.size) == ((5L, 2)), "hnsw one-delta refresh: (jobs, writes)")
-    // a one-id upsert moves one point: at most its old and new cell rebuild
-    def graphs = derivedOf(s"${tmp}_col_pins").map(_.getFileName.toString)
-      .filter(_.contains("hnswv2")).toSet
-    val before = graphs
-    g.collections.upsert("pins", Seq((5L, vec(5L, 0.91), 1)).toDF("id", "vec", "label"))
-    Ivf.materializedIndexAt(spark, src, "vec", Ivf.Cells)
-    val one = JobMeter(spark)(hnsw())
-    val rebuilt = graphs -- before
-    assert(rebuilt.nonEmpty && rebuilt.size <= 2 && one.writes.size == 2,
-      s"rebuilt $rebuilt in ${one.writes.size - 1} graph writes")
   }
 
   test("index artifacts hold no zero-row file and at most one file per piece partition") {
@@ -227,16 +263,14 @@ class IndexRouteSpec extends SparkSpecBase {
       Ann.materializedIndexAt(spark, src, vecCol, Ann.Planes, dim)
       Ivf.materializedIndexAt(spark, src, vecCol, Ivf.Cells)
       IvfPq.materializedIndexAt(spark, src, vecCol, idCol, dim, Ivf.Cells, m, Pq.K)
-      Hnsw.materializedIndexAt(spark, src, vecCol, idCol, "cosine", Ivf.Cells)
       val partitions = src.pieces.parts.map(p =>
         p.index -> spark.read.parquet(p.dir.toString).rdd.getNumPartitions).toMap
       for (d <- derivedOf(src.token) if java.nio.file.Files.isDirectory(d)) {
         val files = Collections.children(d).filter(_.getFileName.toString.endsWith(".parquet"))
         // a piece artifact: one file per input partition of its piece; a
-        // cell graph: one file (the walk relies on it); a model: no cap
-        val name = d.getFileName.toString
-        val cap = "_p(\\d+)_".r.findFirstMatchIn(name).map(p => partitions(p.group(1).toInt))
-          .orElse(Option.when(name.contains("hnswv2"))(1))
+        // model: no cap
+        val cap = "_p(\\d+)_".r.findFirstMatchIn(d.getFileName.toString)
+          .map(p => partitions(p.group(1).toInt))
         cap.foreach(c => assert(files.size <= c, s"$d holds ${files.size} files, cap $c"))
         // an index artifact never holds a zero-row file; a model trained
         // on no rows keeps the one schema-carrying file an empty write leaves

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.operators.{Ann, Hnsw, Ivf, Knn, Pq}
+import graft.operators.{Ann, Ivf, Knn, Pq}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * across the PRODUCT's quality tiers for each index structure with the
   * exact parameters the compiler maps each tier to
   * (Compiler.scala tier match: LSH planes=6 radius 1/2/4; IVF cells=8
-  * nprobe 2/4/7; HNSW nprobe 2/4/7 × ef 24/48/96; PQ oversample 16;
+  * nprobe 2/4/7, which `index = 'hnsw'` runs too; PQ oversample 16;
   * 'perfect' = exact scan). Recall@10 over 10 held-near-cluster queries
   * (100 relevant ids); wall-time = min of 2 timed reps after a warm
   * pass, per query, averaged. Output: the markdown table committed as
@@ -103,8 +103,10 @@ object RecallCurve {
       idx.unpersist()
     }
 
-    // IVF: cells=8 (Ivf.Cells), nprobe per tier; exact
-    // scoring within probed cells (the product's ivf tier shape)
+    // IVF: cells=8 (Ivf.Cells), nprobe per tier; exact scoring within
+    // probed cells (the product's ivf tier shape). `index = 'hnsw'`
+    // compiles to the same plan, so its rows are this scan under its
+    // own label.
     val cents = {
       val t0 = System.nanoTime()
       val c = Ivf.trainCentroids(emb, "embedding", 8, iters = 2)
@@ -113,7 +115,8 @@ object RecallCurve {
     }
     val cells = Ivf.buildIndex(emb, "embedding", cents).cache()
     cells.count()
-    if (sections("ivf")) for ((tier, np) <- Seq(("fast", 2), ("balanced", 4), ("accurate", 7))) {
+    for (index <- Seq("ivf", "hnsw") if sections(index);
+        (tier, np) <- Seq(("fast", 2), ("balanced", 4), ("accurate", 7))) {
       var hits = 0L; var sec = 0.0
       queries.zipWithIndex.foreach { case (q, i) =>
         val probes = Ivf.probeCells(cents, q.toArray, np)
@@ -123,62 +126,8 @@ object RecallCurve {
             .select("vec_id").collect().map(_.getLong(0)).toSet)
         hits += ids.intersect(truth(i)).size; sec += s
       }
-      report("ivf", tier, s"cells=8 nprobe=$np", hits, sec)
-    }
-
-    // HNSW: IVF router + per-cell graph walk, (nprobe, ef) per tier
-    if (sections("hnsw")) {
-      val t0 = System.nanoTime()
-      val graph = Hnsw.buildGraph(cells, "embedding", "vec_id", "cosine", m = 8).cache()
-      graph.count()
-      println(f"BUILD hnsw-graph ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      // Above the calibration corpus (n > 96·96) the product ROUTES
-      // every hnsw tier to the per-cell exact scan over its own probe
-      // set (Compiler cost-aware routing, r17): the batch walk reads
-      // every probed row anyway, so at scale it loses on BOTH axes —
-      // the adaptive accurate walk is a strictly worse linear scan, and
-      // the fixed-ef fast/balanced walks keep the cost down while
-      // recall collapses with cell size. The 'cal-*' rows keep the
-      // unrouted walks in the table as the costs routing avoids.
-      val routed = n > 96 * 96
-      val efAcc = math.max(96, n / 96)
-      val hnswPoints =
-        (if (routed)
-          Seq(("cal-walk-fast", 2, 24), ("cal-walk-balanced", 4, 48),
-            ("cal-walk", 7, efAcc))
-        else Seq(("fast", 2, 24), ("balanced", 4, 48), ("accurate", 7, 96))) ++
-        sys.env.get("GRAFT_HNSW_EF_SWEEP").toSeq.flatMap(_ =>
-          Seq(("cal-ef256", 7, 256), ("cal-ef512", 7, 512), ("cal-ef1024", 7, 1024)))
-      for ((tier, np, ef) <- hnswPoints) {
-        var hits = 0L; var sec = 0.0
-        queries.zipWithIndex.foreach { case (q, i) =>
-          val probes = Ivf.probeCells(cents, q.toArray, np)
-          val (ids, s) = timed {
-            val walked = Hnsw.walkCandidates(
-              graph.where(col("cell").isin(probes: _*)),
-              "embedding", "vec_id", "cosine", q, ef)
-            Knn.topK(walked.drop("cell", "neighbors", "neighbors1", "level"),
-              "embedding", q, 10, "cosine", idCol = "vec_id")
-              .select("vec_id").collect().map(_.getLong(0)).toSet
-          }
-          hits += ids.intersect(truth(i)).size; sec += s
-        }
-        report("hnsw", tier, s"nprobe=$np ef=$ef", hits, sec)
-      }
-      if (routed) for ((tier, np) <- Seq(("fast", 2), ("balanced", 4), ("accurate", 7))) {
-        // the routed tiers: exact scan over each tier's probed cells
-        var hits = 0L; var sec = 0.0
-        queries.zipWithIndex.foreach { case (q, i) =>
-          val probes = Ivf.probeCells(cents, q.toArray, np)
-          val (ids, s) = timed(
-            Knn.topK(cells.where(col("cell").isin(probes: _*)),
-              "embedding", q, 10, "cosine", idCol = "vec_id")
-              .select("vec_id").collect().map(_.getLong(0)).toSet)
-          hits += ids.intersect(truth(i)).size; sec += s
-        }
-        report("hnsw", tier, s"nprobe=$np routed-cell-scan", hits, sec)
-      }
-      graph.unpersist()
+      report(index, tier,
+        if (index == "ivf") s"cells=8 nprobe=$np" else s"nprobe=$np routed-cell-scan", hits, sec)
     }
     cells.unpersist()
 
