@@ -25,10 +25,8 @@ import scala.jdk.CollectionConverters._
   */
 object Collections {
 
-  /** The cache identity of collection `name`'s index artifacts
-    * ([[IndexSource]]) under data dir `dataDir`. */
-  private[graft] def indexToken(dataDir: String, name: String): String =
-    s"${dataDir}_col_$name"
+  /** The default `generationGraceMs`, also [[Materialize.sweep]]'s. */
+  private[graft] val DefaultGraceMs = 600000L
 
   /** Built-in VelesQL catalog names a user collection must not shadow. */
   private[graft] val ReservedNames: Set[String] =
@@ -210,7 +208,7 @@ object Collections {
   *   safety shape. */
 class Collections(spark: SparkSession, dataDir: String,
     retainGenerations: Int = 2,
-    generationGraceMs: Long = 600000L,
+    generationGraceMs: Long = Collections.DefaultGraceMs,
     graceRetainMax: Int = 16) {
   import Collections.{children, deleteRec, FrameManifest}
 
@@ -273,6 +271,8 @@ class Collections(spark: SparkSession, dataDir: String,
     // parse BEFORE creating anything: an invalid schema must not leave
     // a half-created collection behind
     val parsedSchema = graphSchema.map(GraphSchema.parse)
+    // a new collection owns no artifacts, even where a deleted one sat
+    Materialize.dropUnder(indexHome(name))
     Files.createDirectories(colDir(name))
     // Jackson-built sidecar: interpolating caller-supplied idCol/
     // vectorCol/metric (REST passes them through verbatim) could inject
@@ -306,15 +306,23 @@ class Collections(spark: SparkSession, dataDir: String,
       .filter(p => Files.exists(p.resolve("meta.json")))
       .map(_.getFileName.toString).sorted
 
-  /** S1: drop (lib.rs:337-346). The collection's index artifacts and
-    * count sidecars in the derived cache, and every in-memory entry kept
-    * for it, go with it ([[Materialize.reclaim]]). */
+  /** S1: drop (lib.rs:337-346). The collection's artifact subtree and every
+    * in-memory entry kept for it go with it ([[Materialize.dropUnder]]). */
   def drop(name: String): Unit = this.synchronized {
     val dir = colDir(name)
     deleteRec(dir)
-    Materialize.reclaim(Collections.indexToken(dataDir, name))
+    Materialize.dropUnder(indexHome(name))
     org.apache.spark.sql.graft.ImmutableDirScan.forgetUnder(dir.toString)
   }
+
+  /** The collection's own index-artifact subtree, keyed by its dir. */
+  private[graft] def indexHome(name: String): Path = Materialize.home(colDir(name))
+
+  /** The keys of the collection's index artifacts ([[IndexSource.Owned]]);
+    * the meta sidecar, written once at create, dates the collection. */
+  def indexKeys(name: String): IndexSource.Owned =
+    IndexSource.Owned(indexHome(name), colDir(name), indexEpoch(name),
+      metaPath(name).toFile.lastModified)
 
   private def idColOf(name: String): String = metaOf(name)._1
 
@@ -448,11 +456,13 @@ class Collections(spark: SparkSession, dataDir: String,
     * `retain` newest `<frame>.manifest-*` files (always including the
     * one the symlink targets), delete older manifests, then delete every
     * base (`<frame>-g*`) and delta (`<frame>-d*`) data dir no retained
-    * manifest references. */
+    * manifest references. Index artifacts follow their piece dirs and
+    * epochs ([[Materialize.gcOwned]]): the same retention, grace and cap. */
   private def gcFrame(name: String, frame: String, retain: Int): Unit = {
     val dir = colDir(name)
     val current = manifestPath(name, frame)
-    val manifests = children(dir)
+    val listed = children(dir)
+    val manifests = listed
       .filter(p => p.getFileName.toString.startsWith(s"$frame.manifest-"))
       .sortBy(p => (Files.getLastModifiedTime(p).toMillis, p.getFileName.toString))
       .reverse
@@ -473,7 +483,7 @@ class Collections(spark: SparkSession, dataDir: String,
     // those would delete the just-retired base under its in-flight
     // readers. Deltas are batch-sized, so age alone bounds them.
     val cutoff = System.currentTimeMillis() - generationGraceMs
-    val (bases, deltas) = children(dir)
+    val (bases, deltas) = listed
       .filter { p =>
         val n = p.getFileName.toString
         (n.startsWith(s"$frame-g") || n.startsWith(s"$frame-d")) && !referenced.contains(n)
@@ -485,6 +495,7 @@ class Collections(spark: SparkSession, dataDir: String,
     (graced ++ deltas).filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
       .foreach(deleteRec)
     overCap.foreach(deleteRec)
+    Materialize.gcOwned(indexHome(name), dir, indexEpoch(name), generationGraceMs)
   }
 
   /** Drop every generation but the current one, for both frames — the
@@ -501,38 +512,12 @@ class Collections(spark: SparkSession, dataDir: String,
 
   // ---- trained-index epochs -------------------------------------------
   //
-  // Trained ANN models (IVF centroids, PQ codebooks)
-  // are corpus STATISTICS, stable under small batches — so they freeze
-  // per EPOCH, not per content stamp: a write encodes only its own
-  // delta segment against the frozen model instead of re-training and
-  // re-encoding the whole collection (the r11 ingest scale-killer; the
-  // reference's in-place index insert, native_index.rs:317, has the
-  // same cost shape). The epoch lives in a sidecar file whose
-  // (mtime, size) IS the Materialize stamp for every model artifact;
-  // [[retrainIndexes]] bumps it — the explicit drift trigger.
+  // Trained ANN models (IVF centroids, PQ codebooks) are corpus STATISTICS,
+  // stable under small batches, so they freeze per EPOCH, which names them
+  // ([[IndexSource.Owned]]): a write encodes only its own delta against
+  // them, like the reference's in-place insert (native_index.rs:317).
 
-  private def indexEpochPath(name: String): Path =
-    colDir(name).resolve("index_epoch")
-
-  /** The sidecar path, created at first use (epoch 0) so Materialize's
-    * missing-source fail-fast never trips on a pre-epoch collection.
-    * Written via tmp + atomic rename (like [[retrainIndexes]]): a bare
-    * create+write would let a concurrent [[indexEpoch]] reader — or a
-    * second Collections instance on the same dir — observe the empty
-    * just-created file. */
-  def ensureIndexEpochFile(name: String): Path = this.synchronized {
-    val p = indexEpochPath(name)
-    if (!Files.exists(p)) {
-      val tmp = p.resolveSibling(s"index_epoch.tmp-${java.util.UUID.randomUUID()}")
-      Files.writeString(tmp, "0")
-      try Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { // another process won the race; theirs is complete
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-      }
-    }
-    p
-  }
+  private def indexEpochPath(name: String): Path = colDir(name).resolve("index_epoch")
 
   /** Current trained-index epoch (0 until the first retrain). A
     * malformed/empty sidecar reads as 0 rather than failing the query
@@ -546,19 +531,14 @@ class Collections(spark: SparkSession, dataDir: String,
 
   /** Bump the epoch: the next indexed query re-trains every model on
     * the then-current content and re-encodes all buckets against it.
-    * Returns the new epoch. The file PADS to an epoch-dependent length:
-    * the Materialize listing stamp reads (mtime, size) only, and two
-    * bumps inside one mtime granule must still change the stamp — the
-    * mod-97 pad over a FIXED-WIDTH epoch digit field guarantees a size
-    * change for any two epochs closer than 97 apart (a variable-width
-    * field broke the invariant at digit-count boundaries: epochs 1 and
-    * 97 both measured 3 bytes), and 97 bumps cannot fit in one granule. */
+    * Returns the new epoch. Written via tmp + atomic rename, so a
+    * concurrent [[indexEpoch]] reader never sees a partial file. */
   def retrainIndexes(name: String): Long = this.synchronized {
     require(exists(name), s"collection $name does not exist")
     val next = indexEpoch(name) + 1
     val p = indexEpochPath(name)
     val tmp = p.resolveSibling(s"index_epoch.tmp-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, f"$next%020d " + "x" * (next % 97).toInt)
+    Files.writeString(tmp, next.toString)
     Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     next
@@ -651,7 +631,7 @@ class Collections(spark: SparkSession, dataDir: String,
   def edgesRealPath(name: String): Option[java.nio.file.Path] =
     manifestPath(name, "edges")
 
-  /** The content stamp of this collection's points ([[graft.IndexSource]]):
+  /** The content stamp of this collection's points (the plan memo's):
     * the RESOLVED current manifest file (every publish writes a new
     * one). None until the first write. */
   def pointsRealPath(name: String): Option[java.nio.file.Path] =

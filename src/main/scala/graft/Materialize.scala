@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import Collections.deleteRec
 
-/** Materialize a derived frame ONCE per dataset dir as parquet,
-  * optionally clustered by a key column. The cache key includes a
-  * per-file listing (path, mtime, size) of every source, so regenerated
-  * testdata rebuilds and partial rewrites are content-sensitive. At
-  * cluster scale the same derived tables become bucketed tables
+/** Materialize a derived frame ONCE as parquet under
+  * `java.io.tmpdir/graft-derived`, optionally clustered by a key column.
+  * Dataset-dir artifacts sit in the flat root, keyed by a per-file
+  * listing (path, mtime, size) of every source ([[shared]]); a
+  * collection's sit in its own subtree ([[IndexSource.Owned]], [[gcOwned]],
+  * [[dropUnder]]). At cluster scale the same derived tables become bucketed tables
   * (bucketBy + metastore) so downstream joins co-locate.
   *
   * Publication is crash/cross-process safe: builders write to a private
@@ -20,15 +22,13 @@ object Materialize {
 
   def apply(spark: SparkSession, dir: String, kind: String,
       sources: Seq[String], partCol: Option[String])(build: => DataFrame): DataFrame =
-    atPaths(spark, dir, kind,
-      sources.map(t => Paths.get(s"$dir/$t.parquet")), partCol)(build)
+    at(spark, shared(kind, dir, sources.map(t => Paths.get(s"$dir/$t.parquet"))),
+      partCol)(build)
 
-  /** Path-stamped variant: `token` is the cache identity (the dataset
-    * dir, or a collection's identity), `sources` the concrete files/dirs
-    * whose listing stamps the content. Trained models and dataset-dir
-    * derived tables are such artifacts, clustered by `partCol` (one
-    * repartition shuffle) and read back through [[readMemo]]; index
-    * pieces are built in batches instead ([[artifacts]]).
+  /** Build once at `path` and read it back through [[readMemo]]. Trained
+    * models and dataset-dir derived tables are such artifacts, clustered
+    * by `partCol` (one repartition shuffle); index pieces are built in
+    * batches instead ([[artifacts]]).
     *
     * BUILDER CONTRACT: after the frame is written, every localCheckpoint
     * anywhere in the builder's plan is freed (`CheckpointBlocks
@@ -39,21 +39,9 @@ object Materialize {
     * (e.g. a cached corpus-key table another query still reads). All
     * current builders read parquet/local relations, which is the shape
     * to keep. */
-  /** Builds are serialized PER KEY, not globally: a single object lock
-    * convoyed every materialization in the JVM behind whichever build
-    * was slowest (an index rewrite is hours at scale, and an unrelated
-    * collection's already-built artifact only needs the existence
-    * check). Same-key racers still dedup on their shared lock; the
-    * lock map grows one tiny Object per content stamp, the same rate
-    * as the cache itself. */
-  private val buildLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  def atPaths(spark: SparkSession, token: String, kind: String,
-      sources: Seq[Path], partCol: Option[String])(build: => DataFrame): DataFrame = {
-    val key = cacheKey(kind, token, sources)
-    val path = derived.resolve(key)
-    buildLocks.getOrElseUpdate(key, new Object).synchronized {
+  def at(spark: SparkSession, path: Path, partCol: Option[String])(
+      build: => DataFrame): DataFrame = {
+    lockOf(path).synchronized {
       if (!Files.exists(path.resolve("_SUCCESS"))) {
         val b = build
         // cluster AND sort by the key: tight per-row-group min/max stats
@@ -64,7 +52,7 @@ object Materialize {
           .getOrElse(b)
         writeThen(clustered, path) { tmp =>
           publish(tmp, path)
-          pruneStaleSiblings(key, kind, token, path)
+          pruneStaleSiblings(path)
         }
         // iterative builders (LPA labels, dedup components) return
         // projections over localCheckpoints — once written to parquet
@@ -76,10 +64,19 @@ object Materialize {
     readMemo(spark, Seq(path))
   }
 
+  /** Builds are serialized PER KEY, not globally: a single object lock
+    * convoyed every materialization in the JVM behind whichever build
+    * was slowest. Same-key racers still dedup on their shared lock; a
+    * dir's lock goes when a GC or drop deletes the dir. */
+  private val buildLocks =
+    scala.collection.concurrent.TrieMap.empty[String, Object]
+
+  private def lockOf(path: Path): Object =
+    buildLocks.getOrElseUpdate(path.toString, new Object)
+
   /** One artifact of a batched build ([[artifacts]]): `tag` is the value
-    * its rows carry in the build's [[PieceCol]]; the rest is its cache
-    * identity, as in [[atPaths]]. */
-  final case class Part(tag: Int, kind: String, sources: Seq[Path])
+    * its rows carry in the build's [[PieceCol]], `dir` where it publishes. */
+  final case class Part(tag: Int, dir: Path)
 
   /** The tag column of a batched build. */
   val PieceCol = "__piece"
@@ -91,46 +88,44 @@ object Materialize {
     * repartition shuffle, so a part holds at most one file per input
     * partition of its build and no zero-row file — and written once,
     * partitioned by the tag, into one temp dir; each part's subdir then
-    * publishes atomically under its own key (with `_SUCCESS`, and its own
-    * stale generations pruned), so every later use reuses it per part.
-    * Locks on the missing keys are taken in sorted key order, so two
-    * batches over overlapping keys cannot deadlock, and a key a racer
-    * published while this one waited is not built again. */
-  def artifacts(spark: SparkSession, token: String, parts: Seq[Part],
+    * publishes atomically at its own dir (with `_SUCCESS`), so every
+    * later use reuses it per part. Locks on the missing dirs are taken
+    * in sorted order, so two batches over overlapping dirs cannot
+    * deadlock, and a dir a racer published while this one waited is not
+    * built again. */
+  def artifacts(spark: SparkSession, parts: Seq[Part],
       partCol: Option[String])(build: Seq[Int] => DataFrame): Seq[Path] = {
-    val keyed = parts.map(p => p -> cacheKey(p.kind, token, p.sources))
-    def missing = keyed.filterNot { case (_, k) =>
-      Files.exists(derived.resolve(k).resolve("_SUCCESS"))
-    }.distinctBy(_._2)
-    def locked(keys: List[String])(f: => Unit): Unit = keys match {
+    def missing = parts.filterNot(p => Files.exists(p.dir.resolve("_SUCCESS")))
+      .distinctBy(_.dir)
+    def locked(dirs: List[Path])(f: => Unit): Unit = dirs match {
       case Nil => f
-      case k :: rest => buildLocks.getOrElseUpdate(k, new Object).synchronized(locked(rest)(f))
+      case d :: rest => lockOf(d).synchronized(locked(rest)(f))
     }
-    if (missing.nonEmpty) locked(missing.map(_._2).sorted.toList) {
+    if (missing.nonEmpty) locked(missing.map(_.dir).sortBy(_.toString).toList) {
       val dirty = missing
       if (dirty.nonEmpty) {
-        val b = build(dirty.map(_._1.tag))
+        val b = build(dirty.map(_.tag))
         writeThen(b.sortWithinPartitions((PieceCol +: partCol.toSeq).map(col): _*),
-            derived.resolve(dirty.head._2), Some(PieceCol)) { tmp =>
-          dirty.foreach { case (p, key) =>
+            dirty.head.dir, Some(PieceCol)) { tmp =>
+          dirty.foreach { p =>
             // a part with no rows has no subdir: it publishes empty
             val sub = Files.createDirectories(tmp.resolve(s"$PieceCol=${p.tag}"))
             Files.createFile(sub.resolve("_SUCCESS"))
-            publish(sub, derived.resolve(key))
-            pruneStaleSiblings(key, p.kind, token, derived.resolve(key))
+            publish(sub, p.dir)
+            pruneStaleSiblings(p.dir)
           }
           deleteRec(tmp)
         }
         org.apache.spark.sql.graft.CheckpointBlocks.unpersistAll(b)
       }
     }
-    keyed.map { case (_, k) => derived.resolve(k) }
+    parts.map(_.dir)
   }
 
   /** Write `df` into a private temp sibling of `path` and hand it to
     * `publish`; a failed write or publish must not strand its partial
-    * copy (prune skips `.tmp-` names by design, so nothing else ever
-    * reclaims one). */
+    * copy (every cleanup skips young `.tmp-` names: they may be a live
+    * build's). */
   private def writeThen(df: DataFrame, path: Path, partitionBy: Option[String] = None)(
       publish: Path => Unit): Unit = {
     val tmp = path.resolveSibling(
@@ -151,9 +146,8 @@ object Materialize {
     * .parquet` runs 1-2 one-task driver jobs (file listing + footer
     * schema read) per CALL — query defs that re-resolve the same derived
     * table on every execution paid that floor 3× per recall-pin leg
-    * (r11 VERDICT "job stacking"). Derived paths embed their content
-    * stamp in the directory NAME, so a cached relation can never go
-    * stale: new content ⇒ new path ⇒ new cache row.
+    * (r11 VERDICT "job stacking"). An artifact dir's NAME fixes its
+    * content, so new content ⇒ new path ⇒ new cache row.
     *
     * Keyed weakly per session, and the DataFrames are held through
     * SoftReferences: a Dataset strongly references its SparkSession, so
@@ -162,14 +156,10 @@ object Materialize {
     * the WeakHashMap self-reference trap. Soft values cost at worst a
     * re-resolve after a GC pressure spike.
     *
-    * Several dirs read as ONE relation: one scan whose read partitions
-    * pack small files across dirs. `schema`, when given, is the read
-    * schema — no footer job runs, and files written under a narrower
-    * one null-fill; [[pieces]] passes the schema its build plan already
-    * knows. Such a read goes through
-    * [[org.apache.spark.sql.graft.ImmutableDirScan]], the scan collection
-    * frames use too: published artifact dirs never change, so each is
-    * listed once, and a read over more than 32 dirs runs no listing job. */
+    * Several dirs read as ONE relation. `schema`, when given, is the read
+    * schema (no footer job; narrower files null-fill), and the read goes
+    * through [[org.apache.spark.sql.graft.ImmutableDirScan]]: published
+    * artifact dirs never change, so each is listed once. */
   private val readCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, java.lang.ref.SoftReference[DataFrame]]]()
@@ -197,39 +187,25 @@ object Materialize {
     }
   }
 
-  /** Content stamp of an arbitrary live path (used by callers whose
-    * path does NOT embed the stamp — e.g. raw dataset tables): the same
-    * (name, mtime, size) walk as [[atPaths]] keys, driver-side only. */
-  def pathStamp(p: Path): String = listingHash(p)
-
   /** Per-piece incremental materialization — the one maintenance route
-    * of every ANN index (LSH buckets, IVF cells, IVF-PQ codes): one
-    * cached artifact per (piece dir, extraSources).
-    * Piece dirs are immutable (a dataset table's parquet file; a
-    * collection's base buckets or flat dirs and its delta segments,
-    * [[Collections.FrameManifest]]), so after a write the next use
-    * builds only the new delta's piece; a fold rebuilds all of them.
-    * Every missing piece builds in ONE Spark job ([[artifacts]]). `build`
-    * receives the piece's frame read under the source's authoritative
-    * schema (null-filling columns a pre-widening file lacks) and must
-    * keep the id column.
-    *
-    * The index reads as ONE relation over every piece's artifact,
-    * under the schema of `build` over the source's current schema (known
-    * without a footer job; a piece built before a widening null-fills),
-    * minus the superseded rows: the frame's [[Collections.Visibility]]
-    * with each delta piece's artifact dir standing in for its segment's
-    * dir. Zero pieces (an emptied collection) is an empty index: `build`
-    * over an empty frame of that schema, nothing cached. */
-  def pieces(spark: SparkSession, token: String, kindFor: Int => String,
-      ps: Collections.Pieces, extraSources: Seq[Path],
+    * of every ANN index: one artifact per immutable piece dir (a dataset
+    * table's file; a collection's base dirs and delta segments), at
+    * `dirOf(piece)`, so after a write the next use builds only the
+    * delta's piece, and every missing piece builds in ONE Spark job
+    * ([[artifacts]]). `build` gets the piece read under the source's
+    * authoritative schema and must keep the id column. The index reads
+    * as ONE relation under `build`'s schema (a piece built before a
+    * widening null-fills), minus the superseded rows: the frame's
+    * [[Collections.Visibility]] with each delta's artifact dir standing
+    * in for its segment's dir. Zero pieces is an empty index. */
+  def pieces(spark: SparkSession, ps: Collections.Pieces,
+      dirOf: Collections.Piece => Path,
       partCol: Option[String])(build: DataFrame => DataFrame): DataFrame = {
     val empty = build(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ps.schema))
     if (ps.parts.isEmpty) empty
     else {
-      val dirs = artifacts(spark, token, ps.parts.map(p =>
-          Part(p.index, kindFor(p.index), (p.dir +: extraSources).distinct)), partCol) { tags =>
+      val dirs = artifacts(spark, ps.parts.map(p => Part(p.index, dirOf(p))), partCol) { tags =>
         ps.parts.filter(p => tags.contains(p.index)).map(p =>
           build(spark.read.schema(ps.schema).parquet(p.dir.toString))
             .withColumn(PieceCol, lit(p.index)))
@@ -242,50 +218,36 @@ object Materialize {
     }
   }
 
-  /** Retention for superseded index generations: building a NEW stamp of
-    * (kind, token) makes every OLDER same-prefix sibling stale — without
-    * pruning, each collection publish strands a full index copy forever
-    * (unbounded temp growth in any long-lived process; the same leak a
-    * 100 TB deployment would hit on its index store). Mirror
-    * [[Collections.publish]]'s policy: keep the newest OTHER sibling for
-    * in-flight readers (their plans resolved file lists already), delete
-    * anything older. */
-  private def pruneStaleSiblings(key: String, kind: String, token: String,
-      current: Path): Unit = {
-    val prefix = keyPrefix(kind, token)
-    val parent = current.getParent
-    if (parent == null || !Files.exists(parent)) return
-    val stale = entries(parent).filter(p => p.getFileName.toString.startsWith(prefix) &&
-      p.getFileName.toString != key && !p.getFileName.toString.contains(".tmp-"))
-    stale.sortBy(p => Files.getLastModifiedTime(p).toMillis)
-      .dropRight(1) // newest other generation survives one more build
-      .foreach(Collections.deleteRec)
-  }
+  /** Retention for superseded generations of a flat-root artifact: a
+    * NEW stamp of (kind, token) makes every OLDER same-prefix sibling
+    * stale (a regenerated dataset table). Keep the newest OTHER sibling
+    * for in-flight readers, delete anything older. Collection artifacts
+    * follow their piece dirs instead ([[gcOwned]]). */
+  private def pruneStaleSiblings(current: Path): Unit =
+    if (current.getParent == derived) keyParts(current.getFileName.toString).foreach {
+      case (kind, t) =>
+        val prefix = keyPrefix(kind, t)
+        val key = current.getFileName.toString
+        val stale = entries(derived).filter(p => p.getFileName.toString.startsWith(prefix) &&
+          p.getFileName.toString != key && !p.getFileName.toString.contains(".tmp-"))
+        stale.sortBy(p => Files.getLastModifiedTime(p).toMillis)
+          .dropRight(1) // newest other generation survives one more build
+          .foreach(deleteRec)
+    }
 
-  /** Recursive (name, mtime, size) listing folded into one hex token —
-    * content-sensitive for directories (parquet dirs report meaningless
-    * lastModified/length at the top level).
-    *
-    * Granularity assumption (r4 ADVICE, accepted): a rewrite that keeps
-    * every file's name, byte size AND millisecond mtime identical maps to
-    * the same key and would serve the stale cache. Parquet writers
-    * (task-UUID part files, varying encoded sizes) don't do that in
-    * practice — sources here are only ever regenerated wholesale. */
-  /** The (kind, token) identity prefix of a cache key. LENGTH-PREFIXED:
+  /** The (kind, token key) identity prefix of a cache key. LENGTH-PREFIXED:
     * kind and the token key both admit '_' — the same char that used
     * to join them — so v3's `v3_<kind>_<token>__` was ambiguous
     * (kind='a'/token='b_c' and kind='a_b'/token='c' shared a prefix and
     * could prune each other's LIVE generations as stale; r15 review
     * finding). The digit counts pin the boundaries unambiguously. */
-  private def keyPrefix(kind: String, token: String): String = {
-    val t = tokenKey(token)
-    s"v4_${kind.length}k${kind}_${t.length}t${t}__"
-  }
+  private def keyPrefix(kind: String, tokenKey: String): String =
+    s"v4_${kind.length}k${kind}_${tokenKey.length}t${tokenKey}__"
 
   /** `token` as a file-name segment, one-to-one: `[A-Za-z0-9.-]` stays,
     * and every other UTF-8 byte, '_' included, becomes `_` and two hex
     * digits. A lossy form would let collections `a b` and `a_b` share a
-    * token, so dropping one would reclaim the other's artifacts. */
+    * key ([[fromTokenKey]] inverts it). */
   private[graft] def tokenKey(token: String): String = {
     val sb = new StringBuilder
     token.getBytes("UTF-8").foreach { b =>
@@ -297,88 +259,125 @@ object Materialize {
     sb.toString
   }
 
-  private def cacheKey(kind: String, token: String, sources: Seq[Path]): String =
-    keyPrefix(kind, token) + sources.map { f =>
+  /** The token a [[tokenKey]] encodes; None where none does (e.g. the
+    * older, lossy keys). */
+  private[graft] def fromTokenKey(key: String): Option[String] =
+    if (!key.matches("([A-Za-z0-9.-]|_[0-9a-f]{2})*")) None
+    else Some(new String("_([0-9a-f]{2})|[^_]".r.findAllMatchIn(key).map(m =>
+      Option(m.group(1)).fold(m.matched.head.toByte)(Integer.parseInt(_, 16).toByte)).toArray,
+      "UTF-8"))
+
+  /** A flat-root artifact dir keyed by (kind, `token`, the listing of
+    * every source): dataset-dir tables change only by regeneration. */
+  private[graft] def shared(kind: String, token: String, sources: Seq[Path]): Path =
+    derived.resolve(keyPrefix(kind, tokenKey(token)) + sources.map { f =>
       // fail fast: a silently-missing source would stamp a constant and
       // pin a stale cache forever (r3 ADVICE)
       require(Files.exists(f), s"Materialize($kind): missing source $f")
-      listingHash(f)
-    }.mkString("_")
+      pathStamp(f)
+    }.mkString("_"))
+
+  /** The artifact subtree of the collection whose dir is `colDir`. */
+  private[graft] def home(colDir: Path): Path =
+    derived.resolve("c").resolve(tokenKey(colDir.toAbsolutePath.normalize.toString))
 
   /** Driver-side memo for the SMALL collected halves of an index (IVF
-    * centroids, PQ codebooks — k×dim-scale arrays): keyed by the same
-    * content stamp as [[atPaths]], so a data change invalidates both
-    * together, but the collect job runs once per stamp per JVM instead
-    * of once per query compile. This is the in-memory quantizer cache
-    * every ANN engine keeps; bounded — entries are tiny and stale
-    * stamps are dropped when a newer stamp of the same (kind, token)
-    * memoizes. */
+    * centroids, PQ codebooks — k×dim-scale arrays): ONE entry per
+    * `slot`, recomputed when `stamp` (the artifact it was collected
+    * from) changes — the in-memory quantizer cache every ANN engine
+    * keeps. */
   private val memoCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, Any)]
-  def memo[T](kind: String, token: String, sources: Seq[Path])(f: => T): T = {
-    val key = cacheKey(kind, token, sources)
-    val prefix = s"${kind}_$token"
-    memoCache.get(prefix) match {
-      case Some((k, v)) if k == key => v.asInstanceOf[T]
+  def memoAt[T](slot: String, stamp: String)(f: => T): T =
+    memoCache.get(slot) match {
+      case Some((k, v)) if k == stamp => v.asInstanceOf[T]
       case _ =>
         val v = f
-        memoCache.put(prefix, (key, v))
+        memoCache.put(slot, (stamp, v))
         v
     }
+
+  /** [[memoAt]] keyed like a [[shared]] artifact of `sources`. */
+  def memo[T](kind: String, token: String, sources: Seq[Path])(f: => T): T =
+    memoAt(s"${kind}_$token", shared(kind, token, sources).toString)(f)
+
+  /** Deletes `dir` (an artifact, or a collection's subtree) and forgets
+    * every in-memory entry kept for it or under it: [[memoAt]] slots,
+    * build locks, [[readMemo]] relations and dir listings. */
+  def dropUnder(dir: Path): Unit = {
+    def under(k: String) = k == dir.toString || k.startsWith(s"$dir/")
+    memoCache.filterInPlace { case (slot, _) => !under(slot) }
+    buildLocks.filterInPlace { case (k, _) => !under(k) }
+    readCache.synchronized(readCache.values().forEach(
+      _.filterInPlace { case (k, _) => !k.split("\n").exists(under) }))
+    org.apache.spark.sql.graft.ImmutableDirScan.forgetUnder(dir.toString)
+    deleteRec(dir)
   }
 
-  /** One-time reclamation of artifacts whose KIND a code upgrade
-    * retired: [[pruneStaleSiblings]] only retires same-(kind, token)
-    * generations, so renaming a kind (e.g. r17's raw-code `pq*`/`ivfpq*`
-    * → residual `ivfpqr*`) strands every old-kind directory — corpus-
-    * sized code tables sitting in the temp dir forever on a long-lived
-    * host. Callers name the retired-kind predicate; the sweep runs once
-    * per (note, token) per JVM and only parses v4 names (the
-    * length-prefixed grammar makes kind extraction unambiguous). */
-  private val retiredSweeps =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-  def retireKinds(token: String, note: String)(
-      pred: String => Boolean): Unit =
-    retiredSweeps.getOrElseUpdate(s"$note|$token", {
-      entries(derived).filter(p => keyParts(p.getFileName.toString).exists {
-        case (kind, t) => t == tokenKey(token) && pred(kind) }).foreach(Collections.deleteRec)
-    })
-
-  /** Reclaims everything kept for `token`, a source that no longer exists
-    * (a dropped collection): every artifact dir keyed by it, and its
-    * [[memo]], [[readMemo]] and listing-cache entries. In-flight temp
-    * dirs are left to the builds that own them. */
-  def reclaim(token: String): Unit = {
-    def ours(name: String) = keyParts(name).exists(_._2 == tokenKey(token))
-    memoCache.filterInPlace { case (_, (key, _)) => !ours(key) }
-    buildLocks.filterInPlace { case (key, _) => !ours(key) }
-    readCache.synchronized {
-      readCache.values().forEach { m =>
-        m.filterInPlace { case (key, _) => !key.split("\n").exists(d =>
-          Option(Paths.get(d).getFileName).exists(f => ours(f.toString))) }
-        ()
+  /** The one liveness rule of a collection's artifact subtree, run by
+    * its GC pass in ONE listing: an artifact
+    * `<tier>.<e<epoch>-<born>|p>[.<tokenKey(piece dir)>]`
+    * ([[IndexSource.Owned]]) lives while its piece's top-level dir under
+    * `colDir` exists and its epoch is at least `epoch - 1` (a newer one
+    * is a concurrent retrain's); a temp dir, until `graceMs` old. The
+    * piece dirs are checked AFTER the listing, so an artifact another
+    * handle built for a piece it just published is never taken for dead. */
+  private[graft] def gcOwned(home: Path, colDir: Path, epoch: Long, graceMs: Long): Unit = {
+    val cutoff = System.currentTimeMillis() - graceMs
+    val tops = scala.collection.mutable.Map.empty[String, Boolean]
+    def pieceLive(key: String) = fromTokenKey(key).map(_.takeWhile(_ != '/')).exists(top =>
+      tops.getOrElseUpdate(top,
+        scala.util.Try(Files.isDirectory(colDir.resolve(top))).getOrElse(false)))
+    entries(home).foreach { p =>
+      val n = p.getFileName.toString
+      def dead = n.split("\\.", 3) match {
+        case Array(_, mark, rest @ _*) =>
+          val epochLive = mark == "p" || mark.startsWith("e") &&
+            mark.drop(1).takeWhile(_ != '-').toLongOption.exists(_ >= epoch - 1)
+          !epochLive || rest.headOption.exists(!pieceLive(_))
+        case _ => true
       }
-    }
-    entries(derived).filter(p => ours(p.getFileName.toString)).foreach { p =>
-      org.apache.spark.sql.graft.ImmutableDirScan.forget(p.toString)
-      Collections.deleteRec(p)
+      quietly(if (if (n.contains(".tmp-")) Files.getLastModifiedTime(p).toMillis < cutoff
+        else dead) dropUnder(p))
     }
   }
+
+  /** [[sweep]], once per JVM at session start ([[SessionTuning]]). */
+  lazy val sweptOnce: Unit =
+    try sweep(derived, Collections.DefaultGraceMs) catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Deletes every entry of flat root `root` older than `graceMs` that
+    * is a retired kind (`hnswv2*`/`hnswsig2v*` graphs, raw-code
+    * `pq*`/`ivfpq<digit>*` tables, `counts/`), a v4 artifact whose token
+    * names no dir (a deleted dataset dir; any old-layout collection
+    * artifact, as `<dataDir>_col_<name>` is never a dir) or a `c/`
+    * subtree whose collection dir is gone. */
+  private[graft] def sweep(root: Path, graceMs: Long): Unit = {
+    val cutoff = System.currentTimeMillis() - graceMs
+    def gone(token: String) =
+      !fromTokenKey(token).exists(t => scala.util.Try(Files.isDirectory(Paths.get(t))).getOrElse(false))
+    def retired(kind: String) = kind.startsWith("hnswv2") || kind.startsWith("hnswsig2v") ||
+      kind.startsWith("pq") || (kind.startsWith("ivfpq") && kind.lift(5).exists(_.isDigit))
+    val garbage = entries(root).filter { p =>
+      val n = p.getFileName.toString
+      n == "counts" || keyParts(n).exists { case (kind, t) => retired(kind) || gone(t) }
+    } ++ entries(root.resolve("c")).filter(p => gone(p.getFileName.toString))
+    garbage.foreach(p => quietly(if (Files.getLastModifiedTime(p).toMillis < cutoff) deleteRec(p)))
+  }
+
+  /** `f`, skipping an entry a concurrent delete removed under it. */
+  private def quietly(f: => Unit): Unit =
+    try f catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
 
   /** The (kind, token key) of a v4 cache key —
     * `v4_<len>k<kind>_<len>t<token>__<stamp>`; the length prefixes make
     * the split unambiguous. None for any other name and for temp dirs. */
   private def keyParts(name: String): Option[(String, String)] = {
     def field(s: String, tag: Char): Option[(String, String)] = {
-      val digits = s.takeWhile(_.isDigit)
-      if (digits.isEmpty || digits.length > 4) None
-      else {
-        val len = digits.toInt
-        val after = s.drop(digits.length)
-        if (after.length > len && after.head == tag) Some(after.substring(1, 1 + len) ->
-          after.drop(1 + len))
-        else None
-      }
+      val n = s.takeWhile(_.isDigit)
+      val rest = s.drop(n.length)
+      if (n.isEmpty || n.length > 4 || rest.length <= n.toInt || rest.head != tag) None
+      else Some(rest.substring(1, 1 + n.toInt) -> rest.drop(1 + n.toInt))
     }
     if (!name.startsWith("v4_") || name.contains(".tmp-")) None
     else for {
@@ -388,16 +387,20 @@ object Materialize {
   }
 
   private def entries(dir: Path): Seq[Path] =
-    if (!Files.exists(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toSeq
-      } finally s.close()
-    }
+    if (Files.exists(dir)) Collections.children(dir) else Nil
 
-  private def listingHash(p: Path): String = {
+  /** Content stamp of a live path, the stamp of [[shared]] keys and of
+    * callers whose path does NOT embed one (e.g. raw dataset tables):
+    * its recursive (name, mtime, size) listing folded into one hex token,
+    * content-sensitive for directories (parquet dirs report meaningless
+    * lastModified/length at the top level).
+    *
+    * Granularity assumption (r4 ADVICE, accepted): a rewrite that keeps
+    * every file's name, byte size AND millisecond mtime identical maps to
+    * the same key and would serve the stale cache. Parquet writers
+    * (task-UUID part files, varying encoded sizes) don't do that in
+    * practice — sources here are only ever regenerated wholesale. */
+  def pathStamp(p: Path): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     def walk(f: Path): Unit =
       if (Files.isDirectory(f)) {
@@ -429,5 +432,4 @@ object Materialize {
     }
   }
 
-  private def deleteRec(p: Path): Unit = Collections.deleteRec(p)
 }

@@ -42,8 +42,11 @@ object SessionTuning {
     * tz-naive timestamp[us], read as TIMESTAMP (UTC instants) so
     * unix_micros/watermarks keep working; events.parquet carries
     * TIMESTAMP(NANOS), which vanilla Spark 4 rejects, so it is read as
-    * long and `Tables` re-derives the timestamp. */
-  private def session(cpus: Int, tuning: java.util.Map[String, Any]): SparkSession =
+    * long and `Tables` re-derives the timestamp. The first session of a
+    * JVM also sweeps the artifact cache once ([[Materialize.sweptOnce]]),
+    * before any query runs. */
+  private def session(cpus: Int, tuning: java.util.Map[String, Any]): SparkSession = {
+    Materialize.sweptOnce
     SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")
@@ -54,6 +57,7 @@ object SessionTuning {
       .config("spark.ui.enabled", "false")
       .config(tuning)
       .getOrCreate()
+  }
 
   /** Config map for the short-lived mains, tools and specs: sort
     * shuffle writer + tmpfs shuffle dirs. */

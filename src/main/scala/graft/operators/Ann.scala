@@ -132,8 +132,8 @@ object Ann {
     * see [[Ivf.materializedIndexAt]] and [[graft.Collections.indexEpoch]].) */
   def materializedIndexAt(spark: org.apache.spark.sql.SparkSession,
       src: graft.IndexSource, vecCol: String, nPlanes: Int, dim: Int): DataFrame =
-    graft.Materialize.pieces(spark, src.token, b => s"lsh${nPlanes}_p${b}_${src.name}",
-      src.pieces, Nil, Some("bucket"))(buildIndex(_, vecCol, nPlanes, Some(dim)))
+    src.index(spark, s"lsh$nPlanes", trained = false, Some("bucket"))(
+      buildIndex(_, vecCol, nPlanes, Some(dim)))
 
   /** ANN top-k: probe buckets within `radius`, exact-rerank candidates.
     * radius = nPlanes probes ALL buckets — honored by skipping the

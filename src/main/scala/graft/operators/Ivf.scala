@@ -134,28 +134,20 @@ object Ivf {
   private val Iters = 2
 
   /** The coarse quantizer ALONE — trained/collected/memoized per model
-    * stamp (`src.model`), WITHOUT touching the cell-assignment table.
+    * key (`src.keys`), WITHOUT touching the cell-assignment table.
     * Consumers that only route on centroids (residual PQ's encode + ADC
     * constants, [[IvfPq]]) must not pay a corpus-sized full-width cells
     * build as a side effect (r17 review finding: plain
     * `quantization='pq'` wrote a complete corpus copy it never read).
     * Collected table is k×dim-small — the in-memory quantizer cache
-    * every ANN engine keeps. `src.name` is part of the cache kind — two
-    * vector tables under one token must never share a key prefix, or
-    * generation pruning would delete one table's live model when the
-    * other rebuilds. */
+    * every ANN engine keeps. */
   def materializedCentroidsAt(spark: SparkSession, src: graft.IndexSource,
       vecCol: String, k: Int): Array[(Int, Array[Float])] = {
     import spark.implicits._
-    val kind = s"ivf${k}_centroids_${src.name}"
-    graft.Materialize.memo(kind, src.token, src.model) {
-      graft.Materialize.atPaths(spark, src.token, kind, src.model, None) {
-        trainCentroids(src.frame(), vecCol, k, Iters)
-          .toSeq.map { case (c, cen) => (c, cen.toSeq) }.toDF("cell", "centroid")
-      }.collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
-    }
+    src.model(spark, s"ivf${k}_centroids") {
+      trainCentroids(src.frame(), vecCol, k, Iters)
+        .toSeq.map { case (c, cen) => (c, cen.toSeq) }.toDF("cell", "centroid")
+    }(_.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
   }
 
   /** The IVF index of a source: the trained centroids plus the
@@ -163,20 +155,19 @@ object Ivf {
     * INDEX BUILD time (the reference builds its index at insert,
     * index/hnsw/native_index.rs:317), never inside a query: queries
     * collect the centroid table (k rows) and go straight to probe +
-    * rerank. The centroids stamp on `src.model`, so on a user collection
+    * rerank. The centroids are keyed by `src.keys`, so on a user collection
     * the model FREEZES across publishes (centroids are corpus
     * statistics, stable under small batches) and only re-trains when
     * [[graft.Collections.retrainIndexes]] bumps the epoch. The cell
-    * assignment caches per (piece dir, model stamp) and is read back
+    * assignment caches per (piece dir, model key) and is read back
     * minus each piece's superseded ids — a write encodes ONLY its own
     * delta against the frozen model, O(batch) index upkeep per write,
     * and a retrain re-encodes every piece. */
   def materializedIndexAt(spark: SparkSession, src: graft.IndexSource,
       vecCol: String, k: Int): (Array[(Int, Array[Float])], DataFrame) = {
     val centroids = materializedCentroidsAt(spark, src, vecCol, k)
-    val cells = graft.Materialize.pieces(spark, src.token,
-      b => s"ivf${k}_cells_p${b}_${src.name}", src.pieces, src.model,
-      Some("cell"))(buildIndex(_, vecCol, centroids))
+    val cells = src.index(spark, s"ivf${k}_cells", trained = true, Some("cell"))(
+      buildIndex(_, vecCol, centroids))
     (centroids, cells)
   }
 

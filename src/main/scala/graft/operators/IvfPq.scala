@@ -41,48 +41,34 @@ object IvfPq {
 
   /** The combined `(id, cell, codes)` table of a source, with the frozen
     * models it was encoded against: returns (centroids, codebooks,
-    * combined codes table). Both models stamp on `src.model` (the epoch
-    * freeze of [[Ivf.materializedIndexAt]]); the combined table
+    * combined codes table). Both models are keyed by `src.keys` (the
+    * epoch freeze of [[Ivf.materializedIndexAt]]); the combined table
     * materializes PER PIECE in one pass over the piece's file (both
     * models applied together — no collection-wide join per write), so
-    * upkeep is O(batch). `src.name` is part of the cache kind — see
-    * [[Ivf.materializedCentroidsAt]]'s pruning note. */
+    * upkeep is O(batch). */
   def materializedIndexAt(spark: SparkSession, src: graft.IndexSource,
       vecCol: String, idCol: String, dim: Int, cells: Int, m: Int, k: Int)
       : (Array[(Int, Array[Float])], Array[Array[Array[Float]]], DataFrame) = {
     import spark.implicits._
-    val name = src.name
     // centroids ONLY — the cells table is neither read by the combined
     // artifact nor by either pq query shape, and building it here made
     // every plain-pq first touch write a full-width corpus copy as a
     // side effect (r17 review finding)
     val cents = Ivf.materializedCentroidsAt(spark, src, vecCol, cells)
-    // reclaim the r16-era RAW-code artifacts this kind supersedes: the
-    // per-(kind, token) generation pruning can't see across a kind
-    // rename, so without the sweep every old codes/codebook table (full
-    // corpus-sized) sits in the temp dir forever (r17 review finding)
-    graft.Materialize.retireKinds(src.token, s"rawpq_$name")(k =>
-      k.endsWith(s"_$name") && (k.startsWith("pq") ||
-        (k.startsWith("ivfpq") && !k.startsWith("ivfpqr"))))
-    // residual codebooks: trained once per model epoch against the
-    // frozen coarse centroids, memoized like the IVF centroids
-    // (kind 'ivfpqr' — residual codes must never be served from a stale
-    // raw-code cache and vice versa)
-    val booksKind = s"ivfpqr${cells}_${m}x${k}_codebooks_$name"
-    val cb = graft.Materialize.memo(booksKind, src.token, src.model) {
-      val rows = graft.Materialize.atPaths(spark, src.token, booksKind,
-        src.model, None) {
-        Pq.trainResidual(src.frame(), vecCol, dim, cents, m, k)
-          .zipWithIndex.flatMap { case (book, i) =>
-            book.zipWithIndex.map { case (cen, j) => (i, j, cen.toSeq) }
-          }.toSeq.toDF("sub", "code", "centroid")
-      }.collect().map(r => (r.getInt(0), r.getInt(1),
+    // residual codebooks, trained once per model key against the frozen
+    // coarse centroids (kind 'ivfpqr': never a raw-code cache's)
+    val cb = src.model(spark, s"ivfpqr${cells}_${m}x${k}_codebooks") {
+      Pq.trainResidual(src.frame(), vecCol, dim, cents, m, k)
+        .zipWithIndex.flatMap { case (book, i) =>
+          book.zipWithIndex.map { case (cen, j) => (i, j, cen.toSeq) }
+        }.toSeq.toDF("sub", "code", "centroid")
+    } { df =>
+      val rows = df.collect().map(r => (r.getInt(0), r.getInt(1),
         r.getSeq[Float](2).toArray))
       Array.tabulate(m)(i => rows.filter(_._1 == i).sortBy(_._2).map(_._3))
     }
-    val combined = graft.Materialize.pieces(spark, src.token,
-      b => s"ivfpqr${cells}_${m}x${k}_codes_p${b}_$name", src.pieces,
-      src.model, Some("cell"))(Pq.encodeResidual(_, vecCol, idCol, cb, cents))
+    val combined = src.index(spark, s"ivfpqr${cells}_${m}x${k}_codes", trained = true,
+      Some("cell"))(Pq.encodeResidual(_, vecCol, idCol, cb, cents))
     (cents, cb, combined)
   }
 }

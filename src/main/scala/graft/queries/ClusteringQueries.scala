@@ -37,9 +37,8 @@ object ClusteringQueries {
     graft.Materialize.memo(s"kmeans${K}x${Iters}_embeddings", d,
       Seq(java.nio.file.Paths.get(s"$d/embeddings.parquet"))) {
       import s.implicits._
-      val model = graft.Materialize.atPaths(s, d,
-        s"kmeans${K}x${Iters}_model_embeddings",
-        Seq(java.nio.file.Paths.get(s"$d/embeddings.parquet")), None) {
+      val model = graft.Materialize(s, d, s"kmeans${K}x${Iters}_model_embeddings",
+        Seq("embeddings"), None) {
         Clustering.fit(t(s, d, "embeddings"), "embedding", "vec_id", K, Iters)
           .map { case (cid, c) => (cid, c.toArray) }.toDF("cid", "c")
       }

@@ -36,8 +36,7 @@ object VelesqlQueries {
     val qh = java.lang.Long.toHexString(
       v.map(java.lang.Float.floatToIntBits(_).toLong)
         .foldLeft(1125899906842597L)((a, b) => a * 31 + b).abs)
-    graft.Materialize.atPaths(s, d, s"recall_truth10_cos_emb_$qh",
-      Seq(java.nio.file.Paths.get(s"$d/embeddings.parquet")), None) {
+    graft.Materialize(s, d, s"recall_truth10_cos_emb_$qh", Seq("embeddings"), None) {
       graft.operators.Knn.topK(graft.Tables.table(s, d, "embeddings"),
         "embedding", v, 10, "cosine", idCol = "vec_id").select("vec_id")
     }

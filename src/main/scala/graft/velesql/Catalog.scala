@@ -112,8 +112,8 @@ class Catalog(spark: SparkSession, val dir: String) {
 
   /** The source every ANN tier builds over ([[graft.IndexSource]]):
     * a dataset table is one piece stamped on its parquet file; a USER
-    * collection stamps on its current points manifest, freezes its models
-    * on the index-epoch sidecar and carries one piece per base dir and
+    * collection keeps its artifacts in its own subtree, freezes its
+    * models per index epoch and carries one piece per base dir and
     * delta segment — the next indexed query after a write builds only
     * that write's delta piece (the reference's insert-time index update,
     * index/hnsw/native_index.rs:317, re-expressed as build-on-read).
@@ -126,8 +126,7 @@ class Catalog(spark: SparkSession, val dir: String) {
       else None // derived frames: no stable file to stamp
     else if (userCollections.exists(name))
       userCollections.pointsRealPath(name).map(_ =>
-        graft.IndexSource(graft.Collections.indexToken(dir, name), name,
-          Seq(userCollections.ensureIndexEpochFile(name)),
+        graft.IndexSource(userCollections.indexKeys(name),
           userCollections.pieces(name), () => table(name)))
     else None
 

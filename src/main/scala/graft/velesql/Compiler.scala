@@ -441,9 +441,7 @@ class Compiler(
           // nCells×m×k cross table per request would be the same
           // per-request floor the r16 count job was, and memoizing lets
           // every cached plan share one array object
-          val adcModel = graft.Materialize.memo(
-            s"ivfpqr${Ivf.Cells}_${m}x${Pq.K}_adctables_${pqSrc.name}", pqSrc.token,
-            pqSrc.model) {
+          val adcModel = pqSrc.keys.memo(s"ivfpqr${Ivf.Cells}_${m}x${Pq.K}_adctables") {
             Pq.adcModelTables(cb, cents)
           }
           // the codes columns are renamed so they cannot collide with a

@@ -27,21 +27,12 @@ class CollectionAnnSpec extends SparkSpecBase {
   }
   private val q: Seq[Float] = (0 until 16).map(d => math.cos(d * 0.7).toFloat)
 
-  /** The `graft-derived` cache token of a collection's index source. */
-  private def tokenOf(name: String): String =
-    Materialize.tokenKey(Collections.indexToken(tmp.toString, name))
-
-  /** `graft-derived` cache entries of one collection's index source. */
+  /** The artifact dirs of one collection: its own `graft-derived`
+    * subtree, temp copies excluded. */
   private def derivedOf(name: String): Set[String] = {
-    val parent = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
-    if (!java.nio.file.Files.isDirectory(parent)) Set.empty
-    else {
-      val s = java.nio.file.Files.list(parent)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString).filter(_.contains(tokenOf(name))).toSet
-      } finally s.close()
-    }
+    val home = g.collections.indexHome(name)
+    if (!java.nio.file.Files.isDirectory(home)) Set.empty
+    else Collections.children(home).map(_.toString).filterNot(_.contains(".tmp-")).toSet
   }
 
   test("probed collection search scans the materialized bucket index, pruned") {
@@ -121,17 +112,14 @@ class CollectionAnnSpec extends SparkSpecBase {
     import spark.implicits._
     g.collections.create("gc", idCol = "id", vectorCol = Some("vec"))
     // r11: the LSH index over a bucketed collection is maintained PER
-    // STORAGE PIECE (`pieces` of Ann.materializedIndexAt) — retention applies
-    // per piece: each bucket keeps its current cache plus at most the
-    // one superseded sibling
-    def pieceGens(): Map[String, Int] = {
-      // v4 key shape: v4_<len>k<kind>_<len>t<token>__<stamp>
-      val piece = s"^v4_\\d+k(lsh6_p\\d+)_gc_\\d+t${java.util.regex.Pattern.quote(tokenOf("gc"))}__.*$$".r
-      derivedOf("gc").toSeq.flatMap {
-        case piece(p) => Some(p)
-        case _ => None
-      }.groupBy(identity).view.mapValues(_.size).toMap
-    }
+    // STORAGE PIECE (`pieces` of Ann.materializedIndexAt) — an artifact
+    // lives exactly as long as the piece dir it indexes, so each live
+    // piece holds one LSH artifact and no superseded copy outlives its dir
+    def pieceGens(): Map[String, Int] =
+      derivedOf("gc").toSeq.map(java.nio.file.Paths.get(_).getFileName.toString)
+        .filter(_.startsWith("lsh6.p."))
+        .map(n => Materialize.fromTokenKey(n.stripPrefix("lsh6.p.")).get)
+        .groupBy(identity).view.mapValues(_.size).toMap
     for (round <- 1 to 3) {
       val rows = (1L to (50L * round)).map { i =>
         (i, (0 until 16).map(d => math.sin(i * 0.29 + d * 1.1).toFloat))
@@ -141,9 +129,12 @@ class CollectionAnnSpec extends SparkSpecBase {
         "WITH (mode = 'accurate')", Map("q" -> q)).collect()
     }
     val gens = pieceGens()
-    assert(gens.nonEmpty, "current piece caches must survive")
+    val dir = tmp.resolve("gc")
+    val current = g.collections.pieces("gc").parts.map(p => dir.relativize(p.dir).toString)
+    assert(current.nonEmpty && current.forall(gens.contains), "current piece caches must survive")
     gens.foreach { case (p, n) =>
-      assert(n <= 2, s"stale index generations not pruned for $p: $n")
+      assert(n == 1, s"$p holds $n LSH artifacts")
+      assert(java.nio.file.Files.isDirectory(dir.resolve(p)), s"$p's dir is gone, its index stays")
     }
   }
 
@@ -315,23 +306,20 @@ class CollectionAnnSpec extends SparkSpecBase {
       g.sql(s"SELECT id FROM $name WHERE vector NEAR $$q LIMIT 5 WITH ($w)", Map("q" -> q))
         .collect().map(_.getLong(0)).toSeq
     }
-    // no tier keeps a count sidecar: nothing under `counts/` to strand
-    val counts = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived/counts")
-    def sidecars(): Seq[String] =
-      if (!java.nio.file.Files.isDirectory(counts)) Nil
-      else {
-        val s = java.nio.file.Files.list(counts)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.map(_.getFileName.toString).filter(_.contains(tokenOf(name))).toSeq
-        } finally s.close()
-      }
+    // no tier writes outside the collection's subtree: no count
+    // sidecar under `counts/`, no flat-root entry keyed by the collection
+    val root = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
+    val key = g.collections.indexHome(name).getFileName.toString
+    def outside(): Seq[String] = Seq(root, root.resolve("counts"))
+      .filter(java.nio.file.Files.isDirectory(_))
+      .flatMap(Collections.children).map(_.getFileName.toString).filter(_.contains(key))
     create(0.53)
     tiers()
     assert(derivedOf(name).nonEmpty, "the tiers built their artifacts")
-    assert(sidecars().isEmpty, s"a tier wrote count sidecars: ${sidecars()}")
+    assert(outside().isEmpty, s"a tier wrote outside its subtree: ${outside()}")
     g.collections.drop(name)
     assert(derivedOf(name).isEmpty, s"stranded artifacts: ${derivedOf(name)}")
+    assert(!java.nio.file.Files.exists(g.collections.indexHome(name)), "the subtree is gone")
     // the same name over new rows reads the new rows on every tier
     create(0.29)
     val exact = g.sql(s"SELECT id FROM $name WHERE vector NEAR $$q LIMIT 5", Map("q" -> q))

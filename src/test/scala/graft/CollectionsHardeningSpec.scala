@@ -86,22 +86,6 @@ class CollectionsHardeningSpec extends SparkSpecBase {
     assert(c.count("idxc") == 600)
   }
 
-  test("index epoch stamp changes size across digit-count boundaries") {
-    val (c, dir) = freshStore()
-    c.create("ep")
-    // drive the epoch across the 1→2-digit boundary where the old
-    // variable-width pad collided (epoch 1 and 97 both measured 3 bytes)
-    val sizes = (1 to 120).map { _ =>
-      c.retrainIndexes("ep")
-      java.nio.file.Files.size(
-        java.nio.file.Paths.get(s"$dir/ep/index_epoch"))
-    }
-    // any two epochs closer than 97 apart must differ in size
-    sizes.sliding(96).foreach { w =>
-      assert(w.distinct.size == w.size, s"size collision inside a 96-window")
-    }
-  }
-
   test("meta.json is injection-proof for quoted idCol/metric values") {
     val (c, _) = freshStore()
     c.create("inj", idCol = """x", "buckets": 1, "y": "z""", metric = "co\"sine")

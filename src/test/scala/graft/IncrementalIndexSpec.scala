@@ -10,14 +10,13 @@ import org.apache.spark.sql.functions._
 class IncrementalIndexSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private val derivedRoot =
-    java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
-
-  private def pieceDirs(colName: String): Set[String] =
-    if (!java.nio.file.Files.exists(derivedRoot)) Set.empty
-    else Collections.children(derivedRoot).map(_.getFileName.toString)
-      .filter(n => n.contains("lsh6_p") && n.contains(s"_$colName") &&
-        !n.contains(".tmp-")).toSet
+  /** The LSH piece artifacts in the collection's own subtree. */
+  private def pieceDirs(g: Graft, colName: String): Set[String] = {
+    val home = g.collections.indexHome(colName)
+    if (!java.nio.file.Files.exists(home)) Set.empty
+    else Collections.children(home).map(_.getFileName.toString)
+      .filter(n => n.startsWith("lsh6.p.") && !n.contains(".tmp-")).toSet
+  }
 
   test("an upsert rebuilds only the touched bucket's index piece") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-incidx").toString
@@ -36,7 +35,7 @@ class IncrementalIndexSpec extends SparkSpecBase {
         .select("id").collect().map(_.getLong(0)).toSeq
 
     search() // builds all 8 pieces
-    val before = pieceDirs(colName)
+    val before = pieceDirs(g, colName)
     assert(before.size == 8, s"expected 8 piece caches, got ${before.size}: $before")
 
     // a 1-row upsert re-points exactly one storage bucket
@@ -47,10 +46,9 @@ class IncrementalIndexSpec extends SparkSpecBase {
       g.collections.table(colName).get, "vec", q, 5, "cosine", idCol = "id")
       .select("id").collect().map(_.getLong(0)).toSeq
     val got = search()
-    val after = pieceDirs(colName)
-    // 7 pieces unchanged (same cache dirs), exactly 1 new piece; the old
-    // piece of the rewritten bucket survives one cycle (Materialize
-    // retention), so the count grows by exactly 1
+    val after = pieceDirs(g, colName)
+    // every base piece unchanged (same cache dirs, kept while their dirs
+    // live), exactly 1 new piece: the delta's
     assert(before.subsetOf(after), s"untouched pieces must survive: ${before -- after}")
     assert((after -- before).size == 1,
       s"expected exactly 1 rebuilt piece, got ${(after -- before).size}")

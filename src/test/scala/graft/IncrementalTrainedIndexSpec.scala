@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
 class IncrementalTrainedIndexSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private val derivedRoot =
-    java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
-
-  private def entries(sub: String, colName: String): Set[String] =
-    if (!java.nio.file.Files.exists(derivedRoot)) Set.empty
-    else Collections.children(derivedRoot).map(_.getFileName.toString)
-      .filter(n => n.contains(sub) && n.contains(colName) &&
-        !n.contains(".tmp-")).toSet
+  /** The `tier` artifacts in the collection's own subtree. */
+  private def entries(g: Graft, tier: String, colName: String): Set[String] = {
+    val home = g.collections.indexHome(colName)
+    if (!java.nio.file.Files.exists(home)) Set.empty
+    else Collections.children(home).map(_.getFileName.toString)
+      .filter(n => n.startsWith(s"$tier.") && !n.contains(".tmp-")).toSet
+  }
 
   private def vec(i: Long): Seq[Float] =
     (0 until 16).map { d =>
@@ -48,10 +47,10 @@ class IncrementalTrainedIndexSpec extends SparkSpecBase {
     assert(run("quantization = 'pq', oversampling = 4").nonEmpty)
     assert(run("mode = 'accurate', index = 'hnsw'").nonEmpty)
 
-    val centsBefore = entries(s"ivf8_centroids_$colName", colName)
-    val booksBefore = entries(s"ivfpqr8_8x256_codebooks_$colName", colName)
-    val cellsBefore = entries("ivf8_cells_p", colName)
-    val codesBefore = entries("ivfpqr8_8x256_codes_p", colName)
+    val centsBefore = entries(g, "ivf8_centroids", colName)
+    val booksBefore = entries(g, "ivfpqr8_8x256_codebooks", colName)
+    val cellsBefore = entries(g, "ivf8_cells", colName)
+    val codesBefore = entries(g, "ivfpqr8_8x256_codes", colName)
     assert(centsBefore.size == 1, s"one frozen centroid table: $centsBefore")
     assert(booksBefore.size == 1, s"one frozen codebook table: $booksBefore")
     assert(cellsBefore.size == 8, s"8 cell-assignment pieces: $cellsBefore")
@@ -64,22 +63,22 @@ class IncrementalTrainedIndexSpec extends SparkSpecBase {
     assert(run("mode = 'accurate', index = 'hnsw'").nonEmpty)
 
     // models FROZEN: no new centroid/codebook materialization
-    assert(entries(s"ivf8_centroids_$colName", colName) == centsBefore,
+    assert(entries(g, "ivf8_centroids", colName) == centsBefore,
       "publish must not re-train centroids")
-    assert(entries(s"ivfpqr8_8x256_codebooks_$colName", colName) == booksBefore,
+    assert(entries(g, "ivfpqr8_8x256_codebooks", colName) == booksBefore,
       "publish must not re-train codebooks")
-    // encodings: exactly 1 new piece each (old piece survives one
-    // Materialize retention cycle)
-    assert(cellsBefore.subsetOf(entries("ivf8_cells_p", colName)))
-    assert((entries("ivf8_cells_p", colName) -- cellsBefore).size == 1,
-      s"expected 1 rebuilt cell piece, got ${entries("ivf8_cells_p", colName) -- cellsBefore}")
-    assert((entries("ivfpqr8_8x256_codes_p", colName) -- codesBefore).size == 1,
-      s"expected 1 rebuilt code piece, got ${entries("ivfpqr8_8x256_codes_p", colName) -- codesBefore}")
+    // encodings: exactly 1 new piece each (the delta's; every base
+    // piece's artifact stays with its dir)
+    assert(cellsBefore.subsetOf(entries(g, "ivf8_cells", colName)))
+    assert((entries(g, "ivf8_cells", colName) -- cellsBefore).size == 1,
+      s"expected 1 rebuilt cell piece, got ${entries(g, "ivf8_cells", colName) -- cellsBefore}")
+    assert((entries(g, "ivfpqr8_8x256_codes", colName) -- codesBefore).size == 1,
+      s"expected 1 rebuilt code piece, got ${entries(g, "ivfpqr8_8x256_codes", colName) -- codesBefore}")
 
     // retrain: the epoch bump re-trains the model on current content
     assert(g.collections.retrainIndexes(colName) == 1L)
     assert(run("mode = 'accurate', index = 'ivf'").nonEmpty)
-    assert((entries(s"ivf8_centroids_$colName", colName) -- centsBefore).size == 1,
+    assert((entries(g, "ivf8_centroids", colName) -- centsBefore).size == 1,
       "retrain must produce a new centroid generation")
 
     // correctness: the probed ivf results are a subset of the exact
@@ -97,34 +96,43 @@ class IncrementalTrainedIndexSpec extends SparkSpecBase {
     Collections.deleteRec(java.nio.file.Paths.get(tmp))
   }
 
-  test("retireKinds reclaims renamed-kind artifacts, spares current kinds and other tokens") {
-    // r17 review finding: pruneStaleSiblings can't see across a kind
-    // rename, so the pq*→ivfpqr* upgrade would strand every r16-era
-    // codes table in the temp dir forever without this sweep
-    java.nio.file.Files.createDirectories(derivedRoot)
-    val tok = s"sweeptok${System.nanoTime() % 100000}"
-    def mk(kind: String, token: String): java.nio.file.Path = {
-      val p = derivedRoot.resolve(
-        s"v4_${kind.length}k${kind}_${token.length}t${token}__deadbeef")
-      java.nio.file.Files.createDirectories(p)
+  test("the startup sweep deletes aged retired kinds, counts/ and orphaned keys, nothing else") {
+    // a private flat root: every retired kind, the `counts/` sidecar dir,
+    // an old-layout collection artifact (`<dir>_col_<name>` names no
+    // dir) and a subtree of a collection dir that is gone, all aged past
+    // grace, beside a current kind of a live dataset dir, another live
+    // token's artifact, a subtree of a live dir and one young orphan
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft-sweep")
+    val ds = Files.createTempDirectory("graft-sweep-ds").toString
+    val aged = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - Collections.DefaultGraceMs - 60000L)
+    def mk(name: String, old: Boolean = true): Path = {
+      val p = Files.createDirectories(root.resolve(name))
+      Files.createFile(p.resolve("part-0.parquet"))
+      if (old) Files.setLastModifiedTime(p, aged)
       p
     }
-    val old1 = mk("pq8x32_codes_p3_c1", tok)
-    val old2 = mk("ivfpq8_8x32_codes_c1", tok)
-    val cur = mk("ivfpqr8_8x256_codes_c1", tok)
-    val otherTok = mk("pq8x32_codes_p3_c1", tok + "x")
-    val otherName = mk("pq8x32_codes_p3_c2", tok)
+    def v4(kind: String, token: String): String = {
+      val t = Materialize.tokenKey(token)
+      s"v4_${kind.length}k${kind}_${t.length}t${t}__deadbeef"
+    }
+    Files.createDirectories(root.resolve("c"))
+    val garbage = Seq(
+      mk(v4("hnswv2m8s16c8_embeddings_c3", ds)), mk(v4("hnswsig2v8_embeddings", ds)),
+      mk(v4("pq8x32_codes_p0_embeddings", ds)), mk(v4("ivfpq8_8x32_codes_embeddings", ds)),
+      mk("counts"), mk(v4("lsh6_p3_docs", s"${ds}_col_docs")),
+      mk(s"c/${Materialize.tokenKey(s"$ds/gone")}"))
+    val kept = Seq(
+      mk(v4("ivfpqr8_8x256_codes_p0_embeddings", ds)),
+      mk(v4("lsh6_p0_embeddings", sfDir)),
+      mk(s"c/${Materialize.tokenKey(ds)}"),
+      mk(v4("lsh6_p3_docs", s"${ds}_col_young"), old = false))
     try {
-      Materialize.retireKinds(tok, s"spec_${System.nanoTime()}")(k =>
-        k.endsWith("_c1") && (k.startsWith("pq") ||
-          (k.startsWith("ivfpq") && !k.startsWith("ivfpqr"))))
-      assert(!java.nio.file.Files.exists(old1), "retired pq kind must be swept")
-      assert(!java.nio.file.Files.exists(old2), "retired ivfpq kind must be swept")
-      assert(java.nio.file.Files.exists(cur), "current ivfpqr kind must survive")
-      assert(java.nio.file.Files.exists(otherTok), "other tokens untouched")
-      assert(java.nio.file.Files.exists(otherName), "other collections untouched")
-    } finally Seq(cur, otherTok, otherName, old1, old2)
-      .foreach(p => if (java.nio.file.Files.exists(p)) Collections.deleteRec(p))
+      Materialize.sweep(root, Collections.DefaultGraceMs)
+      garbage.foreach(p => assert(!Files.exists(p), s"$p survived the sweep"))
+      kept.foreach(p => assert(Files.exists(p), s"$p was swept"))
+    } finally Seq(root, java.nio.file.Paths.get(ds)).foreach(Collections.deleteRec)
   }
 
   test("payload-only upsert dirties its hnsw cell (no stale graph)") {

@@ -78,13 +78,19 @@ class IndexRouteSpec extends SparkSpecBase {
     assert(s("emptied").src.pieces.parts.isEmpty && s("emptied").visible.isEmpty)
   }
 
-  /** `graft-derived` entries of a token, temp copies excluded. */
-  private def derivedOf(token: String): Seq[java.nio.file.Path] = {
-    val t = Materialize.tokenKey(token)
-    val derived = java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived")
-    Collections.children(derived).filter { p =>
+  /** The artifact dirs of a source, temp copies excluded: a dataset
+    * table's flat-root entries of its token, a collection's own subtree. */
+  private def derivedOf(src: IndexSource): Seq[java.nio.file.Path] = {
+    val (dir, ours) = src.keys match {
+      case IndexSource.Shared(token, _, _) =>
+        (java.nio.file.Paths.get(s"${sys.props("java.io.tmpdir")}/graft-derived"),
+          (n: String) => n.contains(s"t${Materialize.tokenKey(token)}__"))
+      case o: IndexSource.Owned => (o.home, (_: String) => true)
+    }
+    if (!java.nio.file.Files.isDirectory(dir)) Nil
+    else Collections.children(dir).filter { p =>
       val n = p.getFileName.toString
-      n.contains(s"t${t}__") && !n.contains(".tmp-")
+      ours(n) && !n.contains(".tmp-")
     }
   }
 
@@ -155,11 +161,11 @@ class IndexRouteSpec extends SparkSpecBase {
         helper.collect(hnswPlan) { case e: ShuffleExchangeLike => e }.isEmpty,
         s"$at: a MapPartitions or repartition in\n$hnswPlan")
     }
-    // a collection's token is this suite's own; the dataset dir's is
-    // shared with every earlier build
+    // a collection's subtree is this suite's own; the dataset dir's
+    // token is shared with every earlier build
     for ((name, sh) <- shapes if name != "dataset table") {
-      val hnswKinds = derivedOf(sh.src.token).map(_.getFileName.toString)
-        .filter(_.matches("v4_\\d+khnsw.*"))
+      val hnswKinds = derivedOf(sh.src).map(_.getFileName.toString)
+        .filter(_.startsWith("hnsw"))
       assert(hnswKinds.isEmpty, s"$name: hnsw artifacts $hnswKinds")
     }
   }
@@ -199,8 +205,9 @@ class IndexRouteSpec extends SparkSpecBase {
   test("an upsert to a flat collection rebuilds its one piece; models stay") {
     collection("flatup")
     g.collections.createIndex("flatup", "Point", "label", "range")
-    def entries(kind: String): Set[String] =
-      derivedOf(s"${tmp}_col_flatup").map(_.getFileName.toString).filter(_.contains(kind)).toSet
+    def entries(tier: String): Set[String] =
+      derivedOf(g.catalog.indexSource("flatup").get).map(_.getFileName.toString)
+        .filter(_.startsWith(s"$tier.")).toSet
     def build(): Unit = {
       val src = g.catalog.indexSource("flatup").get
       assert(src.pieces.parts.map(_.index) == Seq(0))
@@ -208,16 +215,18 @@ class IndexRouteSpec extends SparkSpecBase {
       IvfPq.materializedIndexAt(spark, src, "vec", "id", 16, Ivf.Cells, Pq.defaultM(16), Pq.K)
     }
     build()
-    val (cents, books) = (entries("ivf8_centroids_flatup"), entries("_codebooks_flatup"))
-    val (cells, codes) = (entries("ivf8_cells_p0_flatup"), entries("_codes_p0_flatup"))
+    val booksTier = s"ivfpqr8_${Pq.defaultM(16)}x${Pq.K}_codebooks"
+    val codesTier = s"ivfpqr8_${Pq.defaultM(16)}x${Pq.K}_codes"
+    val (cents, books) = (entries("ivf8_centroids"), entries(booksTier))
+    val (cells, codes) = (entries("ivf8_cells"), entries(codesTier))
     assert(Seq(cents, books, cells, codes).forall(_.size == 1))
     g.collections.upsert("flatup", Seq((7L, vec(7L, 0.9), 1)).toDF("id", "vec", "label"))
     assert(g.collections.readManifest("flatup").get.buckets == 0, "still flat")
     build()
-    assert(entries("ivf8_centroids_flatup") == cents && entries("_codebooks_flatup") == books,
+    assert(entries("ivf8_centroids") == cents && entries(booksTier) == books,
       "an upsert must not re-train the models")
-    assert((entries("ivf8_cells_p0_flatup") -- cells).size == 1, "one new cell piece")
-    assert((entries("_codes_p0_flatup") -- codes).size == 1, "one new code piece")
+    assert((entries("ivf8_cells") -- cells).size == 1, "one new cell piece")
+    assert((entries(codesTier) -- codes).size == 1, "one new code piece")
   }
 
   test("a refresh writes every missing piece in one job") {
@@ -263,14 +272,17 @@ class IndexRouteSpec extends SparkSpecBase {
       Ann.materializedIndexAt(spark, src, vecCol, Ann.Planes, dim)
       Ivf.materializedIndexAt(spark, src, vecCol, Ivf.Cells)
       IvfPq.materializedIndexAt(spark, src, vecCol, idCol, dim, Ivf.Cells, m, Pq.K)
-      val partitions = src.pieces.parts.map(p =>
-        p.index -> spark.read.parquet(p.dir.toString).rdd.getNumPartitions).toMap
-      for (d <- derivedOf(src.token) if java.nio.file.Files.isDirectory(d)) {
+      // a piece artifact: one file per input partition of its piece; a
+      // model: no cap
+      val caps = (for {
+        p <- src.pieces.parts
+        (tier, trained) <- Seq(s"lsh${Ann.Planes}" -> false, s"ivf${Ivf.Cells}_cells" -> true,
+          s"ivfpqr${Ivf.Cells}_${m}x${Pq.K}_codes" -> true)
+      } yield src.keys.piece(tier, p, trained) ->
+        spark.read.parquet(p.dir.toString).rdd.getNumPartitions).toMap
+      for (d <- derivedOf(src) if java.nio.file.Files.isDirectory(d)) {
         val files = Collections.children(d).filter(_.getFileName.toString.endsWith(".parquet"))
-        // a piece artifact: one file per input partition of its piece; a
-        // model: no cap
-        val cap = "_p(\\d+)_".r.findFirstMatchIn(d.getFileName.toString)
-          .map(p => partitions(p.group(1).toInt))
+        val cap = caps.get(d)
         cap.foreach(c => assert(files.size <= c, s"$d holds ${files.size} files, cap $c"))
         // an index artifact never holds a zero-row file; a model trained
         // on no rows keeps the one schema-carrying file an empty write leaves

@@ -35,7 +35,8 @@ class OperatorsHardeningSpec extends SparkSpecBase {
       java.nio.file.Files.writeString(p, f"$n%020d " + "x" * (n % 97))
       p
     }
-    val table = IndexSource.table(spark, sfDir, "embeddings").copy(token = token)
+    val table = IndexSource.table(spark, sfDir, "embeddings")
+    val keys = table.keys.asInstanceOf[IndexSource.Shared].copy(token = token)
     def cellsArtifacts(): Int = {
       val parent = java.nio.file.Paths.get(
         s"${sys.props("java.io.tmpdir")}/graft-derived")
@@ -49,11 +50,11 @@ class OperatorsHardeningSpec extends SparkSpecBase {
       } finally s.close()
     }
     operators.Ivf.materializedIndexAt(spark,
-      table.copy(model = table.model :+ epochFile(1)), "embedding", k = 4)
+      table.copy(keys = keys.copy(stamp = keys.stamp :+ epochFile(1))), "embedding", k = 4)
     val afterFirst = cellsArtifacts()
     assert(afterFirst >= 1)
     operators.Ivf.materializedIndexAt(spark,
-      table.copy(model = table.model :+ epochFile(2)), "embedding", k = 4)
+      table.copy(keys = keys.copy(stamp = keys.stamp :+ epochFile(2))), "embedding", k = 4)
     assert(cellsArtifacts() > afterFirst,
       "retrained model did not produce a fresh cell-assignment artifact")
   }

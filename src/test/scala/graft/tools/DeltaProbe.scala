@@ -16,8 +16,12 @@ import org.apache.spark.sql.types._
   * median of 5 after one warm-up), the FileScan count of each executed
   * plan and the Spark jobs of one hot call, plus the jobs of every LSH
   * index refresh since the previous row (the first row: the first build
-  * of the four base pieces). Then it prints both executed plans at 0 and
-  * 10 deltas.
+  * of the four base pieces), and the dirs and bytes of the collection's
+  * artifact subtree. Two last rows follow a `compact` and then a
+  * `vacuum`, both through a zero-grace handle on the same dir, so they
+  * show what the GC keeps once the grace window has passed: the index
+  * artifacts of the live pieces only. Then it prints both executed plans
+  * at 0 and 10 deltas.
   * Usage: sbt "Test/runMain graft.tools.DeltaProbe"
   */
 object DeltaProbe {
@@ -67,13 +71,33 @@ object DeltaProbe {
       (ms(2), scans(sql), JobMeter(spark)(run()).jobs)
     }
 
+    val home = g.collections.indexHome("docs")
+    def artifacts(): String = {
+      val dirs = graft.Collections.children(home).filterNot(_.getFileName.toString.contains(".tmp-"))
+      val bytes = dirs.map { d =>
+        val s = java.nio.file.Files.walk(d)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+            .map(java.nio.file.Files.size).sum
+        } finally s.close()
+      }.sum
+      s"${dirs.size} | $bytes"
+    }
     var deltas = 0
     var next = Points.toLong
     var refreshes = Seq(refresh())
     val plans = Seq.newBuilder[String]
+    def row(label: Any): Unit = {
+      val (em, es, ej) = hot(exact)
+      val (lm, ls, lj) = hot(lsh)
+      println(f"| $label | $em%.1f | $es | $ej | $lm%.1f | $ls | $lj | " +
+        s"${refreshes.mkString(", ")} | ${artifacts()} |")
+      refreshes = Nil
+    }
     println("| deltas | exact ms | exact FileScans | exact jobs | lsh ms | lsh FileScans " +
-      "| lsh jobs | refresh jobs since last row |")
-    println("|---|---|---|---|---|---|---|---|")
+      "| lsh jobs | refresh jobs since last row | artifact dirs | artifact bytes |")
+    println("|---|---|---|---|---|---|---|---|---|---|")
     for (c <- Checkpoints) {
       while (deltas < c) {
         val replaced = (0 until 30).map(_ => r.nextLong(Points.toLong))
@@ -82,15 +106,18 @@ object DeltaProbe {
         deltas += 1
         refreshes :+= refresh()
       }
-      val (em, es, ej) = hot(exact)
-      val (lm, ls, lj) = hot(lsh)
-      println(f"| $c | $em%.1f | $es | $ej | $lm%.1f | $ls | $lj | ${refreshes.mkString(", ")} |")
-      refreshes = Nil
+      row(c)
       if (c == Checkpoints.head || c == Checkpoints.last)
         for ((name, sql) <- Seq("exact kNN" -> exact, "accurate LSH" -> lsh))
           plans += s"-- $name, $c deltas:\n" +
             g.sql(sql, Map("q" -> q)).queryExecution.executedPlan.toString
     }
+    val noGrace = new graft.Collections(spark, dir, generationGraceMs = 0)
+    noGrace.compact("docs")
+    refreshes = Seq(refresh())
+    row("compact")
+    noGrace.vacuum("docs")
+    row("compact + vacuum")
     plans.result().foreach(println)
     graft.Collections.deleteRec(java.nio.file.Paths.get(dir))
   }
